@@ -415,10 +415,10 @@ private[graft] object QueriesStreaming {
     * matrix: build/merge/probe/delete × batch/stream): a CDC-style
     * takedown feed — the doc_id % 10 == 0 ids in 4 files,
     * maxFilesPerTrigger=2 ⇒ genuinely multi-batch — folds
-    * `simhashIndexDelete` per micro-batch into the stored signature
-    * index via `foreachBatchFold` (versioned snapshots: read v{n},
-    * publish v{n+1} — the read-snapshot/fold/publish contract a
-    * transactional table manages at scale). Deletion composes
+    * the batch's ids as tombstones into the stored signature index
+    * via `DeltaState` (each trigger publishes only its tombstone KEYS
+    * under the `_COMMIT` protocol; the read anti-joins them against
+    * the base — `simhashIndexDelete`'s id anti-join). Deletion composes
     * (chained anti-joins ≡ one anti-join of the union — the OpsSpec
     * law), so the final state must equal the never-ingested index,
     * proven THROUGH the consumer: the held-out % 10 == 5 batch probed
@@ -431,7 +431,8 @@ private[graft] object QueriesStreaming {
     "streaming_index_delete_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
+      import graft.streaming.DeltaState
+      import graft.streaming.DeltaState.DeltaFoldSpec
       val all = docs(s, d)
       val index0 = DedupOps.simhashIndex(
         all.filter($"doc_id" % 10 =!= 5), "text", "doc_id")
@@ -440,10 +441,13 @@ private[graft] object QueriesStreaming {
         .write.mode("overwrite").parquet(stageDir)
       val src = s.readStream.schema(s.read.parquet(stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
-      val retracted = StreamingOps.foreachBatchFold(src, index0,
-        tmpDir(s, "stream_del_state")) { (state, batch) =>
-        DedupOps.simhashIndexDelete(state, batch, "doc_id")
-      }
+      // a takedown feed adds nothing: every trigger's add dir is empty
+      val noAdds = s.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        index0.schema)
+      val retracted = DeltaState.foreachBatchDeltaFold(src, index0,
+        tmpDir(s, "stream_del_state"),
+        DeltaFoldSpec(add = _ => noAdds, del = Some(_.select($"doc_id"))))
       DedupOps.simhashNearDupIncremental(
           all.filter($"doc_id" % 10 === 5), retracted, "text", "doc_id")
         .orderBy($"doc_id")
@@ -456,27 +460,30 @@ private[graft] object QueriesStreaming {
     * documented-but-ungraded lifecycle claim of the round-9 verdict,
     * now graded): a drift-monitoring feed folds `histStateMerge` —
     * an ADDITIVE, non-idempotent fold, so any reprocessing
-    * double-counts and fails the hash — via `foreachBatchFold` in TWO
-    * separate invocations. Leg 1 sees only the first window's file,
-    * runs to completion under AvailableNow, and STOPS; the second
+    * double-counts and fails the hash — as a `DeltaState`
+    * `MergeFoldSpec` (each trigger publishes its batch's partial
+    * histogram; the read group-sums base ∪ partials) in TWO separate
+    * invocations. Leg 1 sees only the first window's file, runs to
+    * completion under AvailableNow, and STOPS; the second
     * window's file is then added and leg 2 re-invokes with
     * `resume = true` — checkpoint KEPT, so the restarted stream skips
     * the already-folded file, processes only the new one, and the
-    * versioned snapshots continue from the stored latest (the
+    * delta chain continues from the stored position (the
     * crash-safety property a 100 TB takedown/crawl feed needs: stop
     * anywhere, restart, land on the uninterrupted state). The final
     * state feeds `psiFromStates` against the stored reference window
     * and must equal q86's one-shot PSI chain (shared psiOracleSql) —
     * a re-folded file doubles bin counts, a dropped file loses them;
     * either breaks n_b and the hash. Replay-idempotence (retry of the
-    * SAME batch id) is spec-asserted in StreamingSpec via the
+    * SAME batch id) is spec-asserted in DeltaStateSpec via the
     * batchId-keyed commit protocol.
     */
   private val st11 = Q(
     "streaming_fold_resume_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
+      import graft.streaming.DeltaState
+      import graft.streaming.DeltaState.MergeFoldSpec
       val e = ev(s, d)
       def histOf(df: DataFrame) =
         LibOps.histState(df, "value", lo = 0.0, width = 25.0, nbins = 20)
@@ -490,15 +497,15 @@ private[graft] object QueriesStreaming {
         .select($"value").coalesce(1).write.mode("overwrite").parquet(stageDir)
       val schema = s.read.parquet(stageDir).schema
       def src = s.readStream.schema(schema).parquet(stageDir)
-      val fold = (state: DataFrame, batch: DataFrame) =>
-        LibOps.histStateMerge(state, histOf(batch))
-      StreamingOps.foreachBatchFold(src, emptyState, stateDir)(fold)
+      val spec = MergeFoldSpec(partial = histOf,
+        merge = df => df.groupBy($"bin").agg(sum($"n").as("n")))
+      DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec)
       // interrupt window: the ≥ Jan 24 file lands; leg 2 resumes off
       // the kept checkpoint and folds ONLY the new file
       e.filter($"ts" >= "2024-01-24 00:00:00")
         .select($"value").coalesce(1).write.mode("append").parquet(stageDir)
-      val cur = StreamingOps.foreachBatchFold(src, emptyState, stateDir,
-        resume = true)(fold)
+      val cur = DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir,
+        spec, resume = true)
       val refState = histOf(e.filter($"ts" < "2024-01-16 00:00:00"))
       LibOps.psiFromStates(refState, cur, nbins = 20).orderBy($"bin")
     },
@@ -512,12 +519,15 @@ private[graft] object QueriesStreaming {
     * simhash signature index, span digest index, per-lang KMV
     * distinct-source sketch, quality-score eval counts, and the
     * n_chars drift histogram — then the % 10 == 0 feed arrives in two
-    * micro-batches through `foreachBatchFoldMulti`, which pins each
-    * batch ONCE and folds all seven stores off the pinned copy
-    * (StreamingSpec proves the single-materialization contract with
-    * an accumulator; at 100 TB the alternative re-reads every ingest
-    * batch N-stores times). After the stream, each family is read
-    * THROUGH its consumer against the final stored states: the
+    * micro-batches through `DeltaState.foreachBatchStoreFolds`, which
+    * pins each batch ONCE and publishes all seven stores' batch-sized
+    * deltas off the pinned copy (DeltaStateSpec proves the
+    * single-materialization contract with an accumulator; at 100 TB
+    * the alternative re-reads every ingest batch N-stores times).
+    * The per-doc-fact indexes are `DeltaFoldSpec` adds; counts,
+    * histograms and the KMV sketch are `MergeFoldSpec`s whose merge is
+    * the family's own group-merge on one frame. After the stream, each
+    * family is read THROUGH its consumer against the final stored states: the
     * % 10 == 5 batch probes the minhash (stats-capped), simhash, and
     * span indexes; the KMV estimate, the AUC, and the PSI report
     * come off their states alone. One summary row per family
@@ -532,8 +542,8 @@ private[graft] object QueriesStreaming {
     "pipeline_ingest_fold",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
-      import graft.streaming.StreamingOps.FoldSpec
+      import graft.streaming.DeltaState
+      import graft.streaming.DeltaState.{DeltaFoldSpec, MergeFoldSpec, NamedDeltaStore}
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       val feed = all.filter($"doc_id" % 10 === 0)
@@ -565,35 +575,42 @@ private[graft] object QueriesStreaming {
       DedupOps.minhashIndex(corpus, "text", "doc_id")
         .write.mode("overwrite").parquet(bandDir)
       val corpusBands = s.read.parquet(bandDir)
-      val fin = StreamingOps.foreachBatchFoldMulti(src, tmpDir(s, "cap_state"),
-        Seq(
+      def groupSum(keys: String*)(vs: String*)(df: DataFrame) =
+        df.groupBy(keys.map(col): _*).agg(sum(col(vs.head)).as(vs.head),
+          vs.tail.map(v => sum(col(v)).as(v)): _*)
+      val root = tmpDir(s, "cap_state")
+      def store(name: String, init: DataFrame, spec: DeltaState.StoreFold,
+                input: Option[String] = None) =
+        NamedDeltaStore(s"$root/$name", init, spec, input)
+      val folded = DeltaState.foreachBatchStoreFolds(src, Seq(
           // mh_index and mh_stats fold off the SHARED per-trigger
-          // banding of the pinned batch (round 14 — closes the
-          // documented r10 independence trade: the derivation is
+          // banding of the pinned batch: the derivation is
           // deterministic scratch state, so stores stay independently
           // replayable while the banding runs once per trigger, not
-          // once per store)
-          FoldSpec("mh_index", corpusBands,
-            (st, banded) => DedupOps.minhashIndexMergeBands(st, banded, "doc_id"),
+          // once per store
+          store("mh_index", corpusBands,
+            DeltaFoldSpec(add = identity),
             input = Some("mh_band")),
-          FoldSpec("mh_stats", DedupOps.minhashBucketStats(corpusBands),
-            (st, banded) => DedupOps.minhashBucketStatsMerge(st,
-              DedupOps.minhashBucketStats(banded)),
+          store("mh_stats", DedupOps.minhashBucketStats(corpusBands),
+            MergeFoldSpec(partial = DedupOps.minhashBucketStats,
+              merge = groupSum("band_idx", "band_hash")("bucket_n")),
             input = Some("mh_band")),
-          FoldSpec("sh_index", DedupOps.simhashIndex(corpus, "text", "doc_id"),
-            (st, b) => DedupOps.simhashIndexMerge(st, b, "text", "doc_id")),
-          FoldSpec("span_index", DedupOps.spanIndex(corpus, "text", "doc_id"),
-            (st, b) => DedupOps.spanIndexMerge(st, b, "text", "doc_id")),
-          FoldSpec("kmv", LibOps.kmvSketch(corpus, Seq("lang"), "source"),
-            (st, b) => LibOps.kmvMerge(st,
-              LibOps.kmvSketch(b, Seq("lang"), "source"), Seq("lang"))),
-          FoldSpec("eval_counts", EvalOps.scoreCounts(labeled(corpus), "score", "y"),
-            (st, b) => EvalOps.scoreCountsMerge(st,
-              EvalOps.scoreCounts(labeled(b), "score", "y"))),
-          FoldSpec("psi_state", emptyHist,
-            (st, b) => LibOps.histStateMerge(st, hist(b)))),
+          store("sh_index", DedupOps.simhashIndex(corpus, "text", "doc_id"),
+            DeltaFoldSpec(add = DedupOps.simhashIndex(_, "text", "doc_id"))),
+          store("span_index", DedupOps.spanIndex(corpus, "text", "doc_id"),
+            MergeFoldSpec(partial = DedupOps.spanIndex(_, "text", "doc_id"),
+              merge = groupSum("fp")("occ"))),
+          store("kmv", LibOps.kmvSketch(corpus, Seq("lang"), "source"),
+            MergeFoldSpec(partial = LibOps.kmvSketch(_, Seq("lang"), "source"),
+              merge = LibOps.kmvCompact(_, Seq("lang")))),
+          store("eval_counts", EvalOps.scoreCounts(labeled(corpus), "score", "y"),
+            MergeFoldSpec(partial = b => EvalOps.scoreCounts(labeled(b), "score", "y"),
+              merge = groupSum("score")("n_pos", "n_neg"))),
+          store("psi_state", emptyHist,
+            MergeFoldSpec(partial = hist, merge = groupSum("bin")("n")))),
         shared = Seq("mh_band" ->
           ((b: DataFrame) => DedupOps.minhashIndex(b, "text", "doc_id"))))
+      def fin(name: String) = folded(s"$root/$name")
       val ingestedDocs = all.filter($"doc_id" % 10 =!= 5)
       def row(fam: String, agg: DataFrame) =
         agg.select(lit(fam).as("family"), $"m1", $"m2", $"m3")
@@ -799,8 +816,8 @@ private[graft] object QueriesStreaming {
       "doc_id % 10 <> 0", "doc_id % 10 = 0")))
 
   /** streaming_fold_delta_parity — the BATCH-SIZED state publish
-    * (round 11: the round-10 verdict's lead task — `applyFoldBatch`
-    * rewrote the ENTIRE state as v{n+1} every micro-batch, an
+    * (round 11: the round-10 verdict's lead task — the versioned-
+    * snapshot fold rewrote the ENTIRE state as v{n+1} every micro-batch, an
     * O(index) write per trigger at 100 TB; the DeltaState protocol
     * publishes each batch's ADD rows and tombstone KEYS into a
     * batchId-keyed `_COMMIT`-gated delta dir instead, O(batch) per

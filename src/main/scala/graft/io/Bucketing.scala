@@ -84,8 +84,9 @@ object Bucketing {
     * writes `outTable` with the bucket spec COPIED from the catalog —
     * the layout, and every probe's zero-exchange plan, survives by
     * construction. Writes to a NEW name because a table cannot be
-    * overwritten from its own scan (the foreachBatchFold versioning
-    * rationale); the caller swaps names / drops the old when ready.
+    * overwritten from its own scan (the rationale behind DeltaState's
+    * versioned bases); the caller swaps names / drops the old when
+    * ready.
     */
   def compactBucketed(spark: SparkSession, inTable: String, outTable: String,
                       transform: DataFrame => DataFrame = identity,

@@ -387,21 +387,9 @@ object DedupOps {
   def minhashIndexMerge(snapshotIndex: DataFrame, newDocs: DataFrame,
                         textCol: String, idCol: String,
                         shingleN: Int = 3): DataFrame =
-    minhashIndexMergeBands(snapshotIndex,
-      minhashIndex(newDocs, textCol, idCol, shingleN), idCol)
-
-  /** [[minhashIndexMerge]] for a batch whose band rows are ALREADY
-    * computed (round 14): callers that band a batch once and feed
-    * several consumers — the capstone's shared per-batch derivation,
-    * where the band index and its bucket stats fold off ONE banding
-    * pass — merge the precomputed rows directly. Identical result to
-    * [[minhashIndexMerge]] on the batch's docs (banding is
-    * deterministic); the union stays a plain per-doc-fact append.
-    */
-  def minhashIndexMergeBands(snapshotIndex: DataFrame, bandRows: DataFrame,
-                             idCol: String): DataFrame =
     snapshotIndex.select(col(idCol), col("band_idx"), col("band_hash"))
-      .unionByName(bandRows.select(col(idCol), col("band_idx"), col("band_hash")))
+      .unionByName(minhashIndex(newDocs, textCol, idCol, shingleN)
+        .select(col(idCol), col("band_idx"), col("band_hash")))
 
   /** Take deleted documents OUT of the stored [[minhashIndex]] — the
     * RETRACTION half of index maintenance ([[minhashIndexMerge]] folds

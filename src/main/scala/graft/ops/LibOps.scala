@@ -586,12 +586,21 @@ object LibOps {
     */
   def kmvMerge(state: DataFrame, other: DataFrame, keys: Seq[String],
                k: Int = 64): DataFrame = {
-    require(k >= 2, s"kmvMerge: k=$k")
     val cols = (keys :+ "__v" :+ "__h").map(col)
+    kmvCompact(state.select(cols: _*).union(other.select(cols: _*)), keys, k)
+  }
+
+  /** [[kmvMerge]] on ONE frame holding any union of KMV states: exact
+    * dedup on the member, then the k smallest per group. Because
+    * merge(merge(X) ∪ Y) ≡ merge(X ∪ Y), a streamed sketch stores each
+    * batch's sketch as a partial and resolves with this merge.
+    */
+  def kmvCompact(states: DataFrame, keys: Seq[String],
+                 k: Int = 64): DataFrame = {
+    require(k >= 2, s"kmvCompact: k=$k")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__h").asc, col("__v").asc)
-    state.select(cols: _*).union(other.select(cols: _*))
-      .groupBy((keys :+ "__v").map(col): _*).agg(first(col("__h")).as("__h"))
+    states.groupBy((keys :+ "__v").map(col): _*).agg(first(col("__h")).as("__h"))
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= k).drop("__rk")
   }

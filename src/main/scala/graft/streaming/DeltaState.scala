@@ -2,16 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 import graft.io.FsOps
 
-/** BATCH-SIZED state publishes for the streaming maintenance folds —
-  * the round-10 verdict's one remaining 100 TB cost term closed
-  * structurally. [[StreamingOps.foreachBatchFold]]'s versioned-dir
-  * protocol is exactly-once but publishes the ENTIRE folded state as
-  * `v{batchId+1}` every micro-batch: a 10-row takedown against a
-  * 100 TB index rewrites the whole index per trigger. This protocol
-  * keeps the same exactly-once commit discipline while making every
-  * per-trigger write proportional to the BATCH:
+/** The one exactly-once commit protocol for streamed state: every
+  * maintained index, sketch and aggregate folds its micro-batches in
+  * here. Each per-trigger write is proportional to the BATCH, never to
+  * the state — a 10-row takedown against a 100 TB index writes 10
+  * rows:
   *
   * {{{
   * stateDir/
@@ -45,16 +46,18 @@ import graft.io.FsOps
   *    table a delete is a rewrite anyway, the `compactBucketed`
   *    rationale), RETAINS the just-folded deltas one further cycle and
   *    keeps the last `retainBases` bases, so a concurrent reader of
-  *    the pre-compaction snapshot survives the commit — the
-  *    [[StreamingOps.applyFoldBatch]] retention story on both layers.
+  *    the pre-compaction snapshot survives the commit.
   *
   * Steady-state ingest cost is therefore O(batch) per trigger plus an
   * amortized periodic O(index) compaction — the write-side twin of the
-  * probe path's batch + matched-buckets read cost. Graded end-to-end
-  * by `streaming_fold_delta_parity` (final probed state ≡ the one-shot
-  * oracle, through delta reads AND through a compaction) and
-  * files-asserted batch-sized in DeltaStateSpec (the base's file list
-  * is byte-identical across ingest batches).
+  * probe path's batch + matched-buckets read cost. A full-state
+  * versioned snapshot per trigger is the special case
+  * `compactEvery = 1`. Graded end-to-end by `streaming_fold_delta_parity`
+  * (final probed state ≡ the one-shot oracle, through delta reads AND
+  * through a compaction) and files-asserted batch-sized in
+  * DeltaStateSpec (the base's file list is byte-identical across
+  * ingest batches); PropertySpec crashes the protocol after each of
+  * its filesystem steps and asserts the resumed state.
   */
 object DeltaState {
 
@@ -108,16 +111,15 @@ object DeltaState {
         df
       }
       // del and add are two actions over the same micro-batch frame:
-      // persist once so the source plan is scanned once, not per action
-      // (the foreachBatchFoldMulti materialize-the-pin discipline).
+      // persist once so the source plan is scanned once, not per action.
       // Skip when the caller already pinned the batch — the multi-store
       // deployment shares ONE pin across stores, and an unpersist here
       // would drop it out from under the stores still folding
       val ownPin = del.isDefined &&
-        batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+        batch.storageLevel == StorageLevel.NONE
       val pinned =
         if (ownPin)
-          batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          batch.persist(StorageLevel.MEMORY_AND_DISK)
         else batch
       try {
         del.foreach(f => checkReserved(f(pinned), "tombstone")
@@ -183,7 +185,7 @@ object DeltaState {
 
   /** Largest committed base version `m` — a snapshot incorporating
     * batches 0..m−1. Uncommitted partials from a compaction crash are
-    * invisible here (the [[StreamingOps.latestCommitted]] rule).
+    * invisible here.
     */
   private[graft] def latestBase(spark: SparkSession, stateDir: String): Long = {
     val vs = committedBases(spark, stateDir)
@@ -208,8 +210,8 @@ object DeltaState {
   }
 
   /** Publish ONE micro-batch's delta under the commit protocol
-    * (package-visible so the spec drives replay/crash/divergence cases
-    * directly — the [[StreamingOps.applyFoldBatch]] pattern):
+    * (package-visible so the specs drive replay/crash/divergence cases
+    * directly):
     *
     *  - already-committed marker, or a batch id the latest base has
     *    folded in (a replay racing a compaction that already swept the
@@ -426,9 +428,10 @@ object DeltaState {
     }
   }
 
-  /** [[StreamingOps.foreachBatchFold]] with BATCH-SIZED publishes —
-    * the streaming deployment for per-row-fact state (index merges
-    * and takedowns). Same resume contract: `resume = false` seeds
+  /** Fold a stream of maintenance batches into ONE store — the
+    * streaming deployment of the lifecycle folds (index merges and
+    * takedowns as [[DeltaFoldSpec]]s, aggregate merges as
+    * [[MergeFoldSpec]]s). `resume = false` seeds
     * `base/v0 = initState` and clears the checkpoint; `resume = true`
     * keeps both, the restarted stream skips committed files, and the
     * commit markers make replayed batches no-op. `compactEvery > 0`
@@ -454,47 +457,73 @@ object DeltaState {
   }
 
   /** One store of a multi-store delta deployment: its OWN `stateDir`
-    * (each store's commit protocol never leaves its dir — the
-    * [[StreamingOps.foreachBatchFoldMulti]] isolation rule), its v0
-    * state, and its fold shape.
+    * (each store's commit protocol never leaves its dir, so a crash
+    * between two stores' publishes redoes only the unmarked ones on
+    * replay), its v0 state, and its fold shape. `input = Some(key)`
+    * folds the `shared` per-trigger derivation registered under `key`
+    * with [[foreachBatchStoreFolds]] instead of the raw micro-batch.
     */
   final case class NamedDeltaStore(stateDir: String, init: DataFrame,
-                                   spec: StoreFold)
+                                   spec: StoreFold,
+                                   input: Option[String] = None)
 
-  /** N delta stores maintained by ONE stream in ONE pass — the
-    * batch-sized-publish twin of [[StreamingOps.foreachBatchFoldMulti]]
-    * (round 12: a production index never travels alone; its bucket
-    * STATS ride the same CDC feed, so the segment [[DeltaFoldSpec]]
-    * and its stats [[MergeFoldSpec]] must fold side-by-side without
-    * re-reading the batch per store). Each trigger pins the batch
-    * once (count materializes the cache), publishes every store's
-    * delta off the pinned copy under that store's own batchId-keyed
-    * commit protocol — a crash between publishes redoes only the
-    * unmarked stores on replay — then compacts each store on the
-    * shared `compactEvery` schedule. Resume contract as
-    * [[foreachBatchDeltaFold]]; the checkpoint lives beside the FIRST
-    * store (keep the store list's ORDER stable across resumes).
-    * Returns stateDir → resolved final state.
+  /** N delta stores maintained by ONE stream in ONE pass — a production
+    * index never travels alone: its bucket STATS ride the same CDC feed
+    * (a [[DeltaFoldSpec]] segment index beside its [[MergeFoldSpec]]
+    * stats), and the ingest capstone folds seven stores off one crawl
+    * feed. Per trigger:
     *
-    * `concurrentStores = true` (default; round 13) publishes the N
-    * stores' deltas CONCURRENTLY off the shared pinned batch — the
-    * [[StreamingOps.foreachBatchFoldMulti]] fold-pool design carried
-    * to the delta protocol: a query-scoped thread pool, each fold
-    * thread tagged with the `graft_folds` scheduler pool so a FAIR
-    * scheduler splits executor slots evenly across stores. Safe by
-    * the same isolation argument — each store's commit protocol
-    * never leaves its own dir, so a failed publish redoes alone on
-    * replay regardless of what its siblings did; `false` keeps the
-    * serialized behavior for A/B measurement (tools/FoldAB).
+    *  - the micro-batch is PINNED (persisted, then materialized by one
+    *    count) whenever more than one consumer reads it raw, so N
+    *    stores cost one batch scan — racing first-touch of an
+    *    unmaterialized cache could compute the batch once per job;
+    *  - each `shared` derivation (key → transform of the batch) is
+    *    computed off the pin, pinned and materialized ONCE, so the
+    *    stores whose `input` names it (the minhash band index and its
+    *    bucket stats over one banding pass) pay for the transform once
+    *    per trigger, not once per store. It is deterministic scratch
+    *    state: a replay re-derives it, and no store's commit depends on
+    *    it. Every key must be named by some store;
+    *  - every store publishes its delta under its own batchId-keyed
+    *    commit protocol ([[applyDeltaBatch]]), then every store compacts
+    *    on the shared `compactEvery` schedule.
+    *
+    * With more than one store the publishes run CONCURRENTLY on a
+    * query-scoped pool (built once, reused by every trigger), each pool
+    * thread tagged into the `graft_folds` scheduler pool so a FAIR
+    * scheduler splits executor slots evenly across stores. A
+    * derivation runs as a pool task and the stores naming it CHAIN on
+    * its future: independent stores start at once and the derivation
+    * hides under the same concurrency (materializing it on the trigger
+    * thread before any publish put it alone on the critical path and
+    * measurably slowed the capstone). Every derivation and publish
+    * settles before the first failure rethrows, so nothing is still
+    * running when a failed trigger tears down.
+    *
+    * Resume contract as [[foreachBatchDeltaFold]]; the checkpoint lives
+    * beside the FIRST store (keep the store list's ORDER stable across
+    * resumes). Returns stateDir → resolved final state.
     */
   def foreachBatchStoreFolds(stream: DataFrame, stores: Seq[NamedDeltaStore],
                              resume: Boolean = false,
                              compactEvery: Int = 8,
                              retainBases: Int = 2,
-                             concurrentStores: Boolean = true): Map[String, DataFrame] = {
+                             shared: Seq[(String, DataFrame => DataFrame)] = Nil)
+      : Map[String, DataFrame] = {
     require(stores.nonEmpty, "foreachBatchStoreFolds: no stores")
     require(stores.map(_.stateDir).distinct.size == stores.size,
       "foreachBatchStoreFolds: duplicate store dirs")
+    val sharedKeys = shared.map(_._1)
+    require(sharedKeys.distinct.size == sharedKeys.size,
+      "foreachBatchStoreFolds: duplicate shared-derivation keys")
+    val named = stores.flatMap(_.input).toSet
+    require(named.subsetOf(sharedKeys.toSet),
+      s"foreachBatchStoreFolds: a store names a shared derivation not in " +
+        sharedKeys.mkString("{", ",", "}"))
+    require(sharedKeys.forall(named),
+      s"foreachBatchStoreFolds: shared derivations " +
+        sharedKeys.filterNot(named).mkString("{", ",", "}") +
+        " are named by no store")
     val spark = stream.sparkSession
     val ckpt = stores.head.stateDir + "_ckpt"
     if (!resume) {
@@ -507,60 +536,62 @@ object DeltaState {
         "ids and the replay-skip would silently drop new data. The " +
         "checkpoint lives beside the FIRST store, so the store list must " +
         "keep the same ORDER (and dirs) across resumes — a reordered list " +
-        "looks for the checkpoint beside the wrong store (round-12 advice)")
-    // QUERY-scoped fold pool (the foreachBatchFoldMulti rationale:
-    // built once, reused by every trigger — constructing it per
-    // micro-batch was the measured overhead the r12 A/B removed)
-    val concurrent = concurrentStores && stores.size > 1
+        "looks for the checkpoint beside the wrong store")
+    val pinBatch = stores.count(_.input.isEmpty) + shared.size > 1
+    val concurrent = stores.size > 1
     val pool =
-      if (concurrent) java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(stores.size, 8))
-      else null
-    val ec =
-      if (concurrent) scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      else null
-    // run `f` over every store — concurrently on the fold pool when
-    // enabled, each pool thread tagged into the shared graft_folds
-    // scheduler pool (a local property is per-thread, so it must be
-    // set on the thread actually submitting the Spark jobs); ALL
-    // futures drain before the first failure rethrows, so no store is
-    // mid-publish when a failed trigger tears down (its commit
-    // protocol is crash-safe regardless — this keeps teardown orderly)
-    def forEachStore(f: NamedDeltaStore => Unit): Unit =
-      if (!concurrent) stores.foreach(f)
-      else {
-        val futs = stores.map(st => scala.concurrent.Future {
-          spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "graft_folds")
-          f(st)
-        }(ec))
-        val settled = futs.map(fu => scala.util.Try(
-          scala.concurrent.Await.result(
-            fu, scala.concurrent.duration.Duration.Inf)))
-        settled.collectFirst { case scala.util.Failure(e) => throw e }
-        ()
-      }
+      if (concurrent) Some(java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(stores.size, 8)))
+      else None
+    // a single store runs every task inline on the trigger thread
+    implicit val ec: ExecutionContext = pool match {
+      case Some(p) => ExecutionContext.fromExecutorService(p)
+      case None => ExecutionContext.parasitic
+    }
+    // a scheduler pool is a per-thread local property, so it is set on
+    // the pool thread actually submitting the Spark jobs
+    def task[T](body: => T): T = {
+      if (concurrent)
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft_folds")
+      body
+    }
+    def settle(futs: Seq[Future[Any]]): Unit =
+      futs.map(f => Try(Await.result(f, Duration.Inf)))
+        .collectFirst { case Failure(e) => throw e }
     try {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val pinned = if (stores.size > 1)
-            batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else batch
+          val pinned = if (pinBatch) batch.persist(StorageLevel.MEMORY_AND_DISK)
+            else batch
+          val derivedPins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
           try {
-            if (stores.size > 1) pinned.count()
-            forEachStore(st =>
-              applyDeltaBatch(spark, st.stateDir, batchId, pinned.toDF(), st.spec))
-          } finally if (stores.size > 1) pinned.unpersist()
+            if (pinBatch) pinned.count()
+            val derived = shared.map { case (k, f) => k -> Future(task {
+              val d = f(pinned.toDF()).persist(StorageLevel.MEMORY_AND_DISK)
+              derivedPins.synchronized(derivedPins += d)
+              d.count()
+              d
+            })}.toMap
+            def publish(st: NamedDeltaStore, in: DataFrame): Unit =
+              applyDeltaBatch(spark, st.stateDir, batchId, in, st.spec)
+            settle(derived.values.toSeq ++ stores.map(st => st.input match {
+              case None => Future(task(publish(st, pinned.toDF())))
+              case Some(k) => derived(k).map(d => task(publish(st, d)))
+            }))
+          } finally {
+            derivedPins.synchronized(derivedPins.toVector).foreach(_.unpersist())
+            if (pinBatch) pinned.unpersist()
+          }
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            forEachStore(st =>
-              st.spec.compactStore(spark, st.stateDir, retainBases))
+            settle(stores.map(st => Future(task(
+              st.spec.compactStore(spark, st.stateDir, retainBases)))))
           ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally if (pool != null) pool.shutdown()
+    } finally pool.foreach(_.shutdown())
     stores.map(st => st.stateDir -> st.spec.resolve(spark, st.stateDir)).toMap
   }
 }

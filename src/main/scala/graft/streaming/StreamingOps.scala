@@ -228,8 +228,8 @@ object StreamingOps {
     * restarted stream skips every already-probed file and publishes
     * only the new batches' outputs, so stop-anywhere/restart lands on
     * the uninterrupted output set (graded by
-    * `streaming_ingest_resume_parity` — the probe twin of the fold
-    * path's `streaming_fold_resume_parity`).
+    * `streaming_ingest_resume_parity` — the probe twin of the
+    * [[DeltaState]] fold path's `streaming_fold_resume_parity`).
     *
     * EXACTLY-ONCE output (round 11, the round-10 advice finding: the
     * previous plain `append` sink duplicated a batch's rows when a
@@ -240,8 +240,8 @@ object StreamingOps {
     * second copy, and a crash mid-write leaves a partial dir without
     * `_SUCCESS` that [[readIngestOutput]] never selects — the
     * `_spark_metadata` manifest contract of the exactly-once file
-    * sink, carried by directory-level markers like the fold
-    * protocol's versioned snapshots. The resume guard requires BOTH
+    * sink, carried by directory-level markers like
+    * [[DeltaState]]'s `_COMMIT`. The resume guard requires BOTH
     * the checkpoint and `outDir` (a kept checkpoint with a deleted
     * outDir would resume and silently lose the first leg's outputs).
     */
@@ -270,7 +270,7 @@ object StreamingOps {
 
   /** Publish ONE micro-batch's probe output under the batchId-keyed
     * layout (package-visible so the spec can drive replay/crash cases
-    * directly, the [[applyFoldBatch]] pattern): overwrite-mode into
+    * directly): overwrite-mode into
     * `outDir/b{batchId}` — replays rewrite identical bytes, partials
     * carry no `_SUCCESS`.
     */
@@ -282,8 +282,7 @@ object StreamingOps {
   /** Read the union of all COMMITTED batch outputs of a
     * [[foreachBatchIngest]] run: batchId-keyed subdirs with a
     * `_SUCCESS` marker only — an uncommitted partial from a crash is
-    * invisible, exactly as [[latestCommitted]] hides partial fold
-    * snapshots.
+    * invisible.
     */
   def readIngestOutput(spark: SparkSession, outDir: String): DataFrame = {
     val dirs = graft.io.FsOps.ls(spark, outDir)
@@ -292,350 +291,6 @@ object StreamingOps {
     require(dirs.nonEmpty,
       s"readIngestOutput: no committed batch outputs under $outDir")
     spark.read.parquet(dirs: _*)
-  }
-
-  /** One store in a maintenance-fold stream: `name` keys its
-    * versioned state subdirectory, `init` is the v0 snapshot, `fold`
-    * is the lifecycle fold (merge/delete) applied per micro-batch.
-    *
-    * `input` (round 14): `None` feeds `fold` the pinned micro-batch
-    * itself; `Some(key)` feeds it the SHARED per-batch derivation
-    * registered under `key` with [[foreachBatchFoldMulti]] — computed
-    * off the pinned batch once per trigger and pinned itself, so N
-    * stores needing the same expensive batch transform (e.g. the
-    * minhash band rows that both the band index and its bucket stats
-    * fold) pay for it once instead of once per store. Stores stay
-    * independent: the derivation is deterministic scratch state, a
-    * crash re-derives it on replay and each store's commit protocol is
-    * untouched.
-    */
-  final case class FoldSpec(name: String, init: DataFrame,
-                            fold: (DataFrame, DataFrame) => DataFrame,
-                            input: Option[String] = None)
-
-  /** A version dir counts only once its `_SUCCESS` marker exists — a
-    * crash mid-write leaves a partial `v{n}` that must never be
-    * selected as the latest snapshot (it is overwritten by the
-    * replayed batch instead).
-    */
-  private def committed(spark: SparkSession, versionDir: String): Boolean =
-    graft.io.FsOps.exists(spark, s"$versionDir/_SUCCESS")
-
-  /** Largest COMMITTED version under `stateDir` (uncommitted partials
-    * from a crash are invisible here).
-    */
-  private[graft] def latestCommitted(spark: SparkSession,
-                                     stateDir: String): Long = {
-    val vs = graft.io.FsOps.ls(spark, stateDir)
-      .map(_.split('/').last)
-      .collect { case s if s.matches("v\\d+") => s.drop(1).toLong }
-      .filter(v => committed(spark, s"$stateDir/v$v"))
-    require(vs.nonEmpty, s"foreachBatchFold: no committed snapshot under $stateDir")
-    vs.max
-  }
-
-  /** Apply ONE micro-batch's fold to a versioned state dir under the
-    * batchId-keyed commit protocol (shared by [[foreachBatchFold]] /
-    * [[foreachBatchFoldMulti]]; package-visible so the spec can drive
-    * replay/crash cases directly):
-    *
-    *  - snapshot `v{n}` = init folded with batches 0..n−1, so batch
-    *    `b` publishes `v{b+1}` from the latest committed snapshot;
-    *  - if `v{b+1}` is already committed the batch is a REPLAY
-    *    (foreachBatch retry, or restart after a crash between the
-    *    state publish and the streaming checkpoint commit) and the
-    *    fold is SKIPPED — exactly-once for any fold, including
-    *    non-idempotent additive merges;
-    *  - an UNCOMMITTED `v{b+1}` (crash mid-write) is invisible to
-    *    [[latestCommitted]] and simply overwritten by the redo;
-    *  - superseded committed snapshots are RETAINED keep-last-`retain`
-    *    and deleted only once they age out of that window AND the new
-    *    snapshot is committed (best-effort: a failed delete costs
-    *    space, never correctness). Retention is the round-10 verdict's
-    *    snapshot-isolation task: with the previous immediate delete, a
-    *    concurrent reader mid-scan of `v{n}` lost its files the moment
-    *    `v{n+1}` committed; with `retain = N`, a reader of the latest
-    *    snapshot survives `N − 1` further commits — the minimal reader
-    *    grace a versioned-dir design can offer (a real table format
-    *    tracks reader leases; a retention WINDOW is the static
-    *    approximation, sized to the longest consumer the deployment
-    *    allows). `retain = 1` restores the eager round-10 behavior.
-    */
-  private[graft] def applyFoldBatch(spark: SparkSession, stateDir: String,
-                                    batchId: Long, batch: DataFrame,
-                                    fold: (DataFrame, DataFrame) => DataFrame,
-                                    retain: Int = 2): Unit = {
-    require(retain >= 1, s"applyFoldBatch: retain must be >= 1, got $retain")
-    // keep the `retain` newest versions: after v{keep} commits, drop
-    // everything below keep − (retain − 1)
-    def dropSuperseded(keep: Long): Unit =
-      graft.io.FsOps.ls(spark, stateDir)
-        .map(_.split('/').last)
-        .collect { case s if s.matches("v\\d+") => s.drop(1).toLong }
-        .filter(_ < keep - (retain - 1)).foreach { i =>
-          try graft.io.FsOps.rm(spark, s"$stateDir/v$i")
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-    val target = s"$stateDir/v${batchId + 1}"
-    if (committed(spark, target)) {
-      // replayed batch: already folded — no-op, but still sweep any
-      // snapshot a crash-between-publish-and-delete left behind (the
-      // review-pass finding: without this, one orphaned full state
-      // copy per crash accumulates forever)
-      dropSuperseded(batchId + 1)
-      return
-    }
-    val v = latestCommitted(spark, stateDir)
-    // strict protocol invariant, not <=: v{n} = init folded with
-    // batches 0..n−1, so batch b MUST read v{b} — a state behind the
-    // checkpoint (restored from an older backup, checkpoint reused
-    // against a rolled-back dir) would otherwise fold b onto a
-    // snapshot missing batches v..b−1 and publish a committed state
-    // that silently omits them
-    require(v == batchId,
-      s"foreachBatchFold: batch $batchId expects committed v$batchId but " +
-        s"found v$v under $stateDir — state and checkpoint have diverged")
-    val cur = spark.read.parquet(s"$stateDir/v$v")
-    fold(cur, batch).write.mode("overwrite").parquet(target)
-    dropSuperseded(batchId + 1)
-  }
-
-  /** Fold a stream of MAINTENANCE batches into a stored index/state —
-    * the streaming deployment of the lifecycle FOLD ops
-    * ([[foreachBatchIngest]] streams the PROBES; this streams the
-    * merges and deletions: a crawl feed folding `minhashIndexMerge`
-    * per batch, a CDC takedown feed folding `simhashIndexDelete` /
-    * `spanIndexDelete`, a monitoring feed folding `scoreCountsMerge`).
-    * Per-batch ≡ one-shot whenever `fold` composes — true for every
-    * lifecycle fold in this repo (merge and delete laws are
-    * property-tested as chained compositions), so a stream of batches
-    * lands on exactly the state a single batch union would.
-    *
-    * State is VERSIONED under `stateDir` and KEYED BY BATCH ID:
-    * snapshot `v{n}` is init folded with batches 0..n−1, each
-    * micro-batch reads the latest `_SUCCESS`-committed snapshot and
-    * publishes `v{batchId+1}` — never overwriting the version it
-    * reads (a parquet dir cannot be rewritten from its own scan; the
-    * versioned write makes each step atomic-at-the-directory and
-    * leaves a consistent snapshot for any concurrent reader of the
-    * previous version). Because the target version is derived from
-    * the batch id, a replayed batch finds its snapshot already
-    * committed and no-ops — EXACTLY-ONCE state for additive,
-    * non-idempotent folds, not just idempotent deletes — and a crash
-    * mid-write leaves an uncommitted partial that is ignored and
-    * overwritten on redo (see [[applyFoldBatch]]). At production
-    * scale this is the poor-man's transactional table — a real
-    * deployment puts the state in a table format with snapshot
-    * isolation and retention (the same shape, managed); the op's
-    * contract (read snapshot → fold batch → publish snapshot) is
-    * format-agnostic.
-    *
-    * `resume = false` (a fresh deployment) clears `stateDir` and its
-    * checkpoint and seeds `v0 = initState`; `resume = true` KEEPS
-    * both — the streaming checkpoint skips every already-processed
-    * file, versions continue from the stored latest, and the final
-    * state equals the uninterrupted run (graded by
-    * `streaming_fold_resume_parity`; `initState` is ignored on
-    * resume).
-    *
-    * Returns the FINAL state as a read of the last committed version.
-    */
-  def foreachBatchFold(stream: DataFrame, initState: DataFrame,
-                       stateDir: String, resume: Boolean = false,
-                       retain: Int = 2)
-                      (fold: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val spark = stream.sparkSession
-    if (!resume) {
-      graft.io.FsOps.rm(spark, stateDir)
-      graft.io.FsOps.rm(spark, stateDir + "_ckpt")
-      initState.write.mode("overwrite").parquet(s"$stateDir/v0")
-    } else require(graft.io.FsOps.exists(spark, stateDir) &&
-        graft.io.FsOps.exists(spark, stateDir + "_ckpt"),
-      s"foreachBatchFold: resume=true but state or checkpoint missing under " +
-        s"$stateDir — a kept state with a lost checkpoint would renumber " +
-        "batch ids from 0 and the replay-skip would silently drop new data")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyFoldBatch(spark, stateDir, batchId, batch, fold, retain)
-        ()
-      }
-      .option("checkpointLocation", stateDir + "_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateDir/v${latestCommitted(spark, stateDir)}")
-  }
-
-  /** [[foreachBatchFold]] over MANY stores at once — the ingest
-    * capstone shape: one crawl/CDC feed maintains every index and
-    * monitoring state side-by-side (minhash band index + its bucket
-    * stats, simhash signatures, span digests, KMV sketches, eval
-    * score counts, drift histograms), with the micro-batch PINNED
-    * (persisted) before the folds so the batch is scanned ONCE per
-    * trigger and every store's fold reads the pinned copy — at 100 TB
-    * the alternative re-reads each ingest batch N-stores times. Each
-    * store keeps its own versioned snapshot dir under
-    * `stateRoot/{name}` with the same batchId-keyed commit protocol
-    * (a replayed batch no-ops per store independently, so a crash
-    * between two stores' publishes redoes only the unpublished ones).
-    *
-    * The N folds run as CONCURRENT jobs against the pinned batch
-    * (round 11 — the round-10 verdict's trigger-latency seam: the
-    * publishes used to serialize, so trigger latency summed N store
-    * writes; the folds are independent stores by construction, so
-    * they overlap to the cluster's capacity — on FIFO scheduling the
-    * jobs' tasks interleave across free slots, and a FAIR-pool
-    * deployment shares identically). The pin is MATERIALIZED once
-    * (count) before the folds are submitted: racing first-touch of an
-    * unmaterialized cache can compute the batch once per racing job,
-    * which would break the single-materialization contract the
-    * accumulator spec asserts. A fold failure fails the trigger after
-    * the others drain; the restart replays the batch and only the
-    * uncommitted stores redo — per-store exactly-once is untouched
-    * because each store's commit protocol never left its own dir.
-    *
-    * Returns name → final committed state.
-    *
-    * @param concurrentFolds false serializes the store publishes
-    *              (tools/FoldAB's same-window baseline — the round-10
-    *              behavior, kept ONLY so the concurrency win stays
-    *              measurable in isolation; production keeps the
-    *              default)
-    * @param shared named per-batch derivations (key → transform of the
-    *              pinned batch), each computed, pinned and materialized
-    *              ONCE per trigger before the folds run; a [[FoldSpec]]
-    *              whose `input` names a key folds that derivation
-    *              instead of the raw batch. Round 14: N stores sharing
-    *              one expensive batch transform (minhash banding for
-    *              index + stats) pay it once per trigger, not once per
-    *              store — contents unchanged because the derivation is
-    *              exactly the subtree each fold computed privately.
-    */
-  def foreachBatchFoldMulti(stream: DataFrame, stateRoot: String,
-                            specs: Seq[FoldSpec],
-                            resume: Boolean = false,
-                            retain: Int = 2,
-                            concurrentFolds: Boolean = true,
-                            shared: Seq[(String, DataFrame => DataFrame)] = Nil): Map[String, DataFrame] = {
-    require(specs.nonEmpty, "foreachBatchFoldMulti: no fold specs")
-    require(specs.map(_.name).distinct.size == specs.size,
-      "foreachBatchFoldMulti: duplicate spec names")
-    require(specs.forall(sp => sp.name.nonEmpty && !sp.name.contains('/')),
-      "foreachBatchFoldMulti: spec names must be non-empty path segments")
-    require(shared.map(_._1).distinct.size == shared.size,
-      "foreachBatchFoldMulti: duplicate shared-derivation keys")
-    val sharedKeys = shared.map(_._1).toSet
-    require(specs.forall(_.input.forall(sharedKeys.contains)),
-      s"foreachBatchFoldMulti: a spec references a shared derivation not in " +
-        s"${sharedKeys.mkString("{", ",", "}")}")
-    val spark = stream.sparkSession
-    def dirOf(name: String) = s"$stateRoot/$name"
-    if (!resume) {
-      graft.io.FsOps.rm(spark, stateRoot)
-      graft.io.FsOps.rm(spark, stateRoot + "_ckpt")
-      specs.foreach(sp =>
-        sp.init.write.mode("overwrite").parquet(s"${dirOf(sp.name)}/v0"))
-    } else require(graft.io.FsOps.exists(spark, stateRoot) &&
-        graft.io.FsOps.exists(spark, stateRoot + "_ckpt"),
-      s"foreachBatchFoldMulti: resume=true but state or checkpoint missing " +
-        s"under $stateRoot — a lost checkpoint renumbers batch ids and the " +
-        "replay-skip would silently drop new data")
-    // QUERY-scoped fold pool (round 12: the round-11 verdict's task 5
-    // — the executor was built inside foreachBatch, once per
-    // micro-batch; it belongs at query scope, created once and reused
-    // by every trigger)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(specs.size, 8))
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          // one batch scan feeding N folds: materialize the pin FIRST
-          // (a count over the cached plan builds the full cache), then
-          // submit the independent store folds concurrently — each
-          // reads the materialized copy, and their jobs overlap instead
-          // of serializing N publishes per trigger
-          val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // shared per-batch derivations: computed off the pinned copy
-          // and pinned themselves, so every store naming one reads a
-          // computed cache instead of re-deriving it per store. Each is
-          // materialized exactly once (an eager count — the pin's own
-          // racing-first-touch rationale); on the concurrent path that
-          // count runs as a pool task and dependent folds CHAIN on its
-          // future (no blocking barrier: independent stores start
-          // immediately, exactly as without derivations, so the
-          // derivation hides under the same concurrency the folds do —
-          // a first cut materialized it on the trigger thread before
-          // any fold was submitted, which put it alone on the critical
-          // path and measurably slowed the capstone despite the CPU
-          // saving)
-          val derivedPinned =
-            scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-          try {
-            pinned.count()
-            def derive(f: DataFrame => DataFrame): org.apache.spark.sql.DataFrame = {
-              val d = f(pinned.toDF()).persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              derivedPinned.synchronized(derivedPinned += d)
-              d.count()
-              d
-            }
-            if (!concurrentFolds) {
-              val derived = shared.map { case (k, f) => k -> derive(f) }.toMap
-              specs.foreach(sp =>
-                applyFoldBatch(spark, dirOf(sp.name), batchId,
-                  sp.input.map(derived).getOrElse(pinned.toDF()),
-                  sp.fold, retain))
-            } else {
-            implicit val iec: scala.concurrent.ExecutionContext = ec
-            def inPool[T](body: => T): T = {
-              // under a FAIR scheduler each fold's jobs land in the
-              // shared "graft_folds" pool so N stores split executor
-              // slots evenly instead of FIFO-starving the later folds;
-              // a local property is per-thread, so set it on the pool
-              // thread actually submitting the jobs (no-op under FIFO)
-              spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "graft_folds")
-              body
-            }
-            val derivedFut: Map[String, scala.concurrent.Future[org.apache.spark.sql.DataFrame]] =
-              shared.map { case (k, f) =>
-                k -> scala.concurrent.Future(inPool(derive(f)))
-              }.toMap
-            val futs = specs.map(sp => sp.input match {
-              case None => scala.concurrent.Future(inPool(
-                applyFoldBatch(spark, dirOf(sp.name), batchId, pinned.toDF(),
-                  sp.fold, retain)))
-              case Some(k) => derivedFut(k).map(d => inPool(
-                applyFoldBatch(spark, dirOf(sp.name), batchId, d,
-                  sp.fold, retain)))
-            })
-            // drain ALL futures before rethrowing the first failure:
-            // a fold still mid-publish when the trigger fails would
-            // otherwise race the teardown (its commit protocol is
-            // crash-safe regardless — this just keeps the failure
-            // path orderly)
-            val settled = futs.map(f => scala.util.Try(
-              scala.concurrent.Await.result(
-                f, scala.concurrent.duration.Duration.Inf)))
-            settled.collectFirst { case scala.util.Failure(e) => throw e }
-            }
-          } finally {
-            derivedPinned.synchronized(derivedPinned.toVector)
-              .foreach(_.unpersist())
-            pinned.unpersist()
-          }
-          ()
-        }
-        .option("checkpointLocation", stateRoot + "_ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally pool.shutdown()
-    specs.map { sp =>
-      val d = dirOf(sp.name)
-      sp.name -> spark.read.parquet(s"$d/v${latestCommitted(spark, d)}")
-    }.toMap
   }
 
   /** Stream-static enrichment join — the remaining §2.9 join path

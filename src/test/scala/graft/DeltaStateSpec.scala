@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{DeltaState, StreamingOps}
+import graft.streaming.DeltaState
 import graft.streaming.DeltaState.DeltaFoldSpec
 
 /** The batch-sized-publish protocol (round 11's lead task): delta
-  * ingest, crash/replay/divergence cases, compaction, retention, and
-  * the equivalence with the full-rewrite versioned-snapshot protocol.
+  * ingest, crash/replay/divergence cases, compaction, retention, the
+  * equivalence with the full-state rewrite fold, and the multi-store
+  * stream with its shared per-trigger derivations.
   */
 class DeltaStateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -52,26 +53,21 @@ class DeltaStateSpec extends AnyFunSuite {
     assert(baseFiles() == before, "ingest touched the base")
     val want = idx((5L until 50L) ++ (102L until 120L))
     assert(stateRows(dir) == want, "delta resolution != expected state")
-    // equivalence with the full-rewrite protocol: the same two batches
-    // through foreachBatchFold's fold shape (delete-then-union)
-    val rwDir = tmp("ds_rw")
-    (0L until 50L).map(i => (i, i * 7)).toDF("id", "sig")
-      .write.mode("overwrite").parquet(s"$rwDir/v0")
+    // equivalence with the full-state rewrite: the same fold
+    // (delete-then-union) applied in memory to the whole state, batch
+    // by batch — batch 1 retracts batch 0's adds, so the reference must
+    // see batch 0 folded before batch 1's tombstones
     val fold = (state: DataFrame, b: DataFrame) =>
       state.join(b.filter($"op" === "del").select($"id"), Seq("id"), "left_anti")
         .unionByName(b.filter($"op" === "add")
           .select($"id", ($"id" * 7).as("sig")))
-    StreamingOps.applyFoldBatch(spark, rwDir, 0L,
-      batchDf(100L until 110L, 0L until 5L), fold)
-    StreamingOps.applyFoldBatch(spark, rwDir, 1L,
-      batchDf(110L until 120L, 100L until 102L), fold)
-    val rw = spark.read
-      .parquet(s"$rwDir/v${StreamingOps.latestCommitted(spark, rwDir)}")
+    val rw = Seq(batchDf(100L until 110L, 0L until 5L),
+        batchDf(110L until 120L, 100L until 102L))
+      .foldLeft((0L until 50L).map(i => (i, i * 7)).toDF("id", "sig"))(fold)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(rw == want && stateRows(dir) == rw,
-      "delta protocol and full-rewrite protocol diverged")
+      "delta protocol and the full-state fold diverged")
     graft.io.FsOps.rm(spark, dir)
-    graft.io.FsOps.rm(spark, rwDir)
   }
 
   test("replays no-op, partials are invisible, divergence refuses loudly") {
@@ -398,8 +394,7 @@ class DeltaStateSpec extends AnyFunSuite {
     // not break the one-materialization contract — an accumulator-
     // bumping projection inside the stream counts row evaluations;
     // the pin's count() fires it once per feed row and every store's
-    // concurrent publish reads the cached copy (the
-    // foreachBatchFoldMulti proof, on the delta protocol)
+    // concurrent publish reads the cached copy
     val stage = java.nio.file.Files.createTempDirectory("ds_conc_feed").toString
     val root = java.nio.file.Files.createTempDirectory("ds_conc").toString
     val nRows = 30L
@@ -438,5 +433,115 @@ class DeltaStateSpec extends AnyFunSuite {
     graft.io.FsOps.rm(spark, stage)
     graft.io.FsOps.rm(spark, root)
     graft.io.FsOps.rm(spark, s"$root/idx_ckpt")
+  }
+
+  test("foreachBatchStoreFolds resume refuses a kept state with a lost checkpoint") {
+    // the silent-data-loss case the resume guard exists for: without
+    // the checkpoint the restarted stream renumbers batch ids from 0
+    // and the replay no-op would drop the new files' folds
+    val dir = tmp("ds_nockpt")
+    DeltaState.init(spark, dir, Seq((0L, 0L)).toDF("id", "sig"))
+    val feed = dir + "_nofeed"
+    batchDf(Seq(1L), Nil).write.mode("overwrite").parquet(feed)
+    val src = spark.readStream.schema(spark.read.parquet(feed).schema)
+      .parquet(feed)
+    val err = intercept[IllegalArgumentException] {
+      DeltaState.foreachBatchStoreFolds(src,
+        Seq(DeltaState.NamedDeltaStore(dir, spark.emptyDataFrame, spec)),
+        resume = true)
+    }
+    assert(err.getMessage.contains("checkpoint"))
+    assert(DeltaState.committedDeltas(spark, dir).isEmpty)
+    graft.io.FsOps.rm(spark, dir)
+    graft.io.FsOps.rm(spark, feed)
+  }
+
+  // a shared derivation: the batch's add rows re-keyed, the kind of
+  // transform two stores would otherwise each compute privately
+  private def addsOnly(b: DataFrame): DataFrame =
+    b.filter($"op" === "add").select($"id", $"op")
+
+  test("foreachBatchStoreFolds refuses a shared derivation no store names") {
+    // an unreferenced derivation would be computed every trigger for
+    // nobody; a store naming an unregistered key would never fold
+    val root = java.nio.file.Files.createTempDirectory("ds_shared_ref").toString
+    val init = Seq((0L, 0L)).toDF("id", "sig")
+    val src = spark.readStream.schema(batchDf(Nil, Nil).schema).parquet(root)
+    val unused = intercept[IllegalArgumentException] {
+      DeltaState.foreachBatchStoreFolds(src,
+        Seq(DeltaState.NamedDeltaStore(s"$root/a", init, spec)),
+        shared = Seq("adds" -> addsOnly _))
+    }
+    assert(unused.getMessage.contains("named by no store"))
+    val unknown = intercept[IllegalArgumentException] {
+      DeltaState.foreachBatchStoreFolds(src,
+        Seq(DeltaState.NamedDeltaStore(s"$root/a", init, spec, Some("adds"))))
+    }
+    assert(unknown.getMessage.contains("not in"))
+    // both refusals come before anything is written
+    assert(!graft.io.FsOps.exists(spark, s"$root/a"))
+    graft.io.FsOps.rm(spark, root)
+  }
+
+  test("a shared derivation that throws fails the trigger; no dependent store commits") {
+    val stage = java.nio.file.Files.createTempDirectory("ds_derive_fail_feed").toString
+    val root = java.nio.file.Files.createTempDirectory("ds_derive_fail").toString
+    batchDf(100L until 105L, Nil).coalesce(1).write.mode("overwrite").parquet(stage)
+    val src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
+    val init = Seq((0L, 0L)).toDF("id", "sig")
+    val boom = org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("derivation failed"); x
+    }
+    val stores = Seq(
+      DeltaState.NamedDeltaStore(s"$root/raw", init, spec),
+      DeltaState.NamedDeltaStore(s"$root/derived", init, spec, Some("bad")))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      DeltaState.foreachBatchStoreFolds(src, stores,
+        shared = Seq("bad" -> ((b: DataFrame) => b.select(boom($"id").as("id"), $"op"))))
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(err).exists(c => String.valueOf(c.getMessage).contains("derivation failed")),
+      s"trigger failure did not carry the derivation's error: $err")
+    assert(DeltaState.committedDeltas(spark, s"$root/derived").isEmpty,
+      "a store committed off a derivation that threw")
+    graft.io.FsOps.rm(spark, stage)
+    graft.io.FsOps.rm(spark, root)
+  }
+
+  test("a shared derivation named by two stores is evaluated once per feed row") {
+    // the derivation is pinned and materialized ONCE per trigger, and
+    // both stores' publishes chain on that computed copy — an
+    // accumulator inside the derivation counts its row evaluations
+    val stage = java.nio.file.Files.createTempDirectory("ds_derive_feed").toString
+    val root = java.nio.file.Files.createTempDirectory("ds_derive").toString
+    val nRows = 24L
+    batchDf(100L until (100L + nRows), Nil)
+      .coalesce(1).write.mode("overwrite").parquet(stage)
+    val src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
+    val acc = spark.sparkContext.longAccumulator("derivation_row_evals")
+    val bump = org.apache.spark.sql.functions.udf { (x: Long) =>
+      acc.add(1); x
+    }
+    val init = (0L until 10L).map(i => (i, i * 7)).toDF("id", "sig")
+    // add-only: a spec with tombstones pins its own input for its two
+    // writes, which would hide a derivation computed once per store
+    val addOnly = DeltaFoldSpec(add = spec.add)
+    val stores = Seq(
+      DeltaState.NamedDeltaStore(s"$root/a", init, addOnly, Some("bumped")),
+      DeltaState.NamedDeltaStore(s"$root/b", init, addOnly, Some("bumped")),
+      DeltaState.NamedDeltaStore(s"$root/raw", init, spec))
+    val fin = DeltaState.foreachBatchStoreFolds(src, stores,
+      shared = Seq("bumped" -> ((b: DataFrame) => b.select(bump($"id").as("id"), $"op"))))
+    val want = idx((0L until 10L) ++ (100L until (100L + nRows)))
+    stores.foreach { st =>
+      assert(fin(st.stateDir).collect().map(r => (r.getLong(0), r.getLong(1)))
+        .sorted.toSeq == want, s"store ${st.stateDir} != expected")
+    }
+    assert(acc.value == nRows,
+      s"derivation evaluated ${acc.value} times for $nRows rows × 2 stores " +
+        "— the once-per-trigger derivation contract broke")
+    graft.io.FsOps.rm(spark, stage)
+    graft.io.FsOps.rm(spark, root)
   }
 }

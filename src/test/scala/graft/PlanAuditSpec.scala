@@ -82,8 +82,8 @@ class PlanAuditSpec extends AnyFunSuite {
       "dedup_minhash_index_delete", "dedup_simhash_index_delete",
       "dedup_spans_index_delete", "dedup_minhash_stats_probe",
       "dedup_minhash_stats_delete",
-      // the streaming delete parity's FOLD runs eagerly inside
-      // foreachBatchFold; only its final probe-of-stored-output plan
+      // the streaming delete parity's FOLD runs eagerly inside its
+      // DeltaState stream; only its final probe-of-stored-output plan
       // (the incremental left-join tail again) is count()-prunable
       "streaming_index_delete_parity",
       // psiFromStates' spine left-joins + stat crossJoins prune under
@@ -92,7 +92,7 @@ class PlanAuditSpec extends AnyFunSuite {
       // both are noop-sink-timed anyway
       "drift_psi_incremental",
       // round 10: both new streaming-fold queries run their folds
-      // EAGERLY inside foreachBatchFold(Multi); only the post-stream
+      // EAGERLY inside their DeltaState streams; only the post-stream
       // readout plan is count()-prunable — resume-parity ends in the
       // psiFromStates tail above, and the capstone's six-row union
       // keeps its row count from the 1-row aggregates alone while the

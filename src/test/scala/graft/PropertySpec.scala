@@ -1320,4 +1320,113 @@ class PropertySpec extends AnyFunSuite {
       graft.io.FsOps.rm(spark, dir)
     }
   }
+
+  test("crash-point law: a crash after any filesystem step of the commit protocol resumes to the uninterrupted fold") {
+    // Every filesystem step of a trigger — applyDeltaBatch's del write,
+    // add write and _COMMIT touch, then compaction's delta sweep, base
+    // write and base retention delete — is a place the process can
+    // die, after which the stream replays the trigger with the SAME
+    // batch id. The store lives on CrashFs, which performs the k-th
+    // step and then throws. For every k: the state read at the crash
+    // is the state before or after the interrupted trigger (never a
+    // mix), and replaying from that trigger with the same ids lands on
+    // the uninterrupted fold. Triggers 0–1 run first (the first
+    // compaction, compactEvery = 2); the crashes hit triggers 2–3,
+    // where trigger 3's compaction sweeps the first compaction's
+    // deltas and its retention drops base v0.
+    import graft.streaming.DeltaState
+    import graft.streaming.DeltaState.{DeltaFoldSpec, MergeFoldSpec, StoreFold}
+    type DF = org.apache.spark.sql.DataFrame
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashFs].getName)
+    val compactEvery = 2
+    // states(t) = the uninterrupted state after batches 0..t−1
+    case class Law(name: String, spec: StoreFold, init: DF, batches: Seq[DF],
+                   states: Seq[Seq[(Long, Long)]], stepsUnderTest: Int)
+    // fact store: (id, sig) rows; dels retract base ids, earlier adds,
+    // absent ids and (a no-op by the strictly-older rule) same-batch adds
+    val feed = Seq(
+      (100L to 103L, Seq(0L, 1L)),
+      (104L to 105L, Seq(100L, 50L)),
+      (106L to 107L, Seq(2L, 104L, 106L)),
+      (108L to 108L, Seq(101L, 3L)))
+    val fact = Law("DeltaFoldSpec",
+      DeltaFoldSpec(
+        add = b => b.filter($"op" === "add").select($"id", ($"id" * 7).as("sig")),
+        del = Some(b => b.filter($"op" === "del").select($"id"))),
+      (0L until 10L).map(i => (i, i * 7)).toDF("id", "sig"),
+      feed.map { case (adds, dels) =>
+        (adds.map(i => (i, "add")) ++ dels.map(i => (i, "del"))).toDF("id", "op")
+      },
+      feed.scanLeft((0L until 10L).map(i => i -> i * 7).toMap) {
+        case (st, (adds, dels)) => (st -- dels) ++ adds.map(i => i -> i * 7)
+      }.map(_.toSeq.sorted),
+      // trigger 2: del, add, _COMMIT; trigger 3: the same, then the
+      // sweep of b0 and b1, the base v4 write, the delete of base v0
+      stepsUnderTest = 3 + 3 + 2 + 1 + 1)
+    // signed aggregate store: per-key sums, retractions negative, keys
+    // cancelling to zero drop
+    val initSums = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    val signed = Seq(
+      Seq((0L, 2L), (3L, 1L), (1L, -2L)),
+      Seq((3L, -1L), (4L, 5L), (1L, 1L)),
+      Seq((0L, -3L), (4L, -2L), (5L, 1L)),
+      Seq((2L, 1L), (5L, -1L), (6L, 2L)))
+    def groupSum(v: String)(df: DF) =
+      df.groupBy($"k").agg(sum(col(v)).as("n")).filter($"n" =!= 0)
+    val agg = Law("MergeFoldSpec",
+      MergeFoldSpec(partial = groupSum("w"), merge = groupSum("n")),
+      initSums.toDF("k", "n"), signed.map(_.toDF("k", "w")),
+      (0 to signed.size).map(t => (initSums ++ signed.take(t).flatten)
+        .groupBy(_._1).toSeq.map { case (k, ws) => (k, ws.map(_._2).sum) }
+        .filter(_._2 != 0).sorted),
+      // no tombstone dir: add, _COMMIT per trigger
+      stepsUnderTest = 2 + 2 + 2 + 1 + 1)
+
+    def rows(df: DF): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    Seq(fact, agg).foreach { law =>
+      def trigger(dir: String, n: Int): Unit = {
+        DeltaState.applyDeltaBatch(spark, dir, n.toLong, law.batches(n), law.spec)
+        if ((n + 1) % compactEvery == 0) law.spec.compactStore(spark, dir)
+      }
+      def state(dir: String) = rows(law.spec.resolve(spark, dir))
+      // a store that has run triggers 0–1 uninterrupted
+      def fresh(tag: String): String = {
+        val dir = s"${CrashFs.Scheme}://" + java.nio.file.Files
+          .createTempDirectory(s"crash_law_$tag").toString + "/s"
+        DeltaState.init(spark, dir, law.init)
+        (0 until 2).foreach(trigger(dir, _))
+        dir
+      }
+      val last = law.batches.size - 1
+      val counted = fresh(s"${law.name}_count")
+      CrashFs.arm(0)
+      (2 to last).foreach(trigger(counted, _))
+      assert(CrashFs.disarm() == law.stepsUnderTest,
+        s"${law.name}: the protocol's filesystem steps changed; update the law")
+      assert(state(counted) == law.states.last)
+      graft.io.FsOps.rm(spark, counted)
+      (1 to law.stepsUnderTest).foreach { k =>
+        val dir = fresh(s"${law.name}_$k")
+        var at = 2
+        CrashFs.arm(k)
+        val crashed = try {
+          (2 to last).foreach { t => at = t; trigger(dir, t) }
+          false
+        } catch { case e: Throwable if CrashFs.isCrash(e) => true }
+        finally CrashFs.disarm()
+        val what = s"${law.name}: crash after step $k (in trigger $at)"
+        assert(crashed, s"$what: no crash")
+        val atCrash = state(dir)
+        assert(atCrash == law.states(at) || atCrash == law.states(at + 1),
+          s"$what: a half-done trigger is visible")
+        // resume: the stream replays the interrupted trigger, same ids
+        (at to last).foreach(trigger(dir, _))
+        assert(state(dir) == law.states.last,
+          s"$what: resumed state != uninterrupted fold")
+        graft.io.FsOps.rm(spark, dir)
+      }
+    }
+  }
 }

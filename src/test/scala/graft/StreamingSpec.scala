@@ -282,232 +282,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("foreachBatchFold: multi-batch fold == one-shot fold; retention keeps last 2") {
-    // the streaming MAINTENANCE deployment (merge/delete folds): a
-    // 4-file / 2-per-trigger id stream folded into a stored state via
-    // anti-join deletes must land on exactly the never-ingested state
-    // (chained deletes compose), and the versioned-snapshot dir must
-    // hold ONLY the final version (eager cleanup of superseded
-    // snapshots) plus survive an empty fold result.
-    import spark.implicits._
-    val state0 = (0L until 100L).map(i => (i, i * 7)).toDF("id", "sig")
-    val stageDir = java.nio.file.Files.createTempDirectory("fold_ids").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("fold_state").toString + "/s"
-    (0L until 40L).map(Tuple1(_)).toDF("id").repartition(4)
-      .write.mode("overwrite").parquet(stageDir)
-    val src = spark.readStream.schema(spark.read.parquet(stageDir).schema)
-      .option("maxFilesPerTrigger", "2").parquet(stageDir)
-    val fin = StreamingOps.foreachBatchFold(src, state0, stateDir) {
-      (state, batch) => state.join(batch, Seq("id"), "left_anti")
-    }
-    val got = fin.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(got.toSeq == (40L until 100L).map(i => (i, i * 7)))
-    // retention (round 11): the default keep-last-2 window — the
-    // latest snapshot plus one superseded version for reader grace;
-    // everything older is swept
-    val versions = graft.io.FsOps.ls(spark, stateDir)
-      .map(_.split('/').last).filter(_.matches("v\\d+")).sorted
-    assert(versions == Seq("v1", "v2"),
-      s"retention window should hold the last 2 versions: $versions")
-    graft.io.FsOps.rm(spark, stageDir)
-    graft.io.FsOps.rm(spark, stateDir)
-    graft.io.FsOps.rm(spark, stateDir + "_ckpt")
-  }
-
-  test("applyFoldBatch: replay no-ops on additive folds; uncommitted partials are overwritten") {
-    // the round-9 advice case made structural: a foreachBatch RETRY
-    // (micro-batch replay after a crash between the state publish and
-    // the streaming checkpoint commit) must not re-apply the fold —
-    // with an ADDITIVE fold (count merge) a second application
-    // double-counts, so exactly-once is only real if the replay
-    // no-ops. And a crash MID-WRITE leaves a partial snapshot without
-    // _SUCCESS, which must be invisible to version selection and
-    // overwritten by the redo.
-    import spark.implicits._
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("fold_replay").toString + "/s"
-    val init = Seq((0, 10L), (1, 5L)).toDF("bin", "n")
-    init.write.mode("overwrite").parquet(s"$stateDir/v0")
-    val batch = Seq((0, 1L), (2, 7L)).toDF("bin", "n")
-    val fold = (state: org.apache.spark.sql.DataFrame,
-                b: org.apache.spark.sql.DataFrame) =>
-      graft.ops.LibOps.histStateMerge(state, b)
-    def stateRows() = {
-      val v = StreamingOps.latestCommitted(spark, stateDir)
-      spark.read.parquet(s"$stateDir/v$v")
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
-    }
-    // retain = 1 pins the eager round-10 window so the sweep
-    // assertions below stay exact; the retention window itself is
-    // covered by the dedicated reader-grace test
-    StreamingOps.applyFoldBatch(spark, stateDir, 0L, batch, fold, retain = 1)
-    val once = stateRows()
-    assert(once == Seq((0, 11L), (1, 5L), (2, 7L)))
-    // replay of the SAME batch id: must be a no-op (not 12/5/14)
-    StreamingOps.applyFoldBatch(spark, stateDir, 0L, batch, fold, retain = 1)
-    assert(stateRows() == once, "replayed batch re-applied an additive fold")
-    // crash mid-write: a partial v2 with data but no _SUCCESS marker
-    Seq((9, 999L)).toDF("bin", "n").write.mode("overwrite")
-      .parquet(s"$stateDir/v2")
-    graft.io.FsOps.rm(spark, s"$stateDir/v2/_SUCCESS")
-    assert(StreamingOps.latestCommitted(spark, stateDir) == 1L,
-      "uncommitted partial selected as latest snapshot")
-    // the redo of batch 1 overwrites the partial and lands correctly
-    StreamingOps.applyFoldBatch(spark, stateDir, 1L, batch, fold, retain = 1)
-    assert(stateRows() == Seq((0, 12L), (1, 5L), (2, 14L)))
-    def versions() = graft.io.FsOps.ls(spark, stateDir)
-      .map(_.split('/').last).filter(_.matches("v\\d+")).sorted
-    // orphan sweep (review-pass finding): a crash between the v2
-    // publish and the v1 delete leaves BOTH committed; the replay of
-    // batch 1 must sweep the superseded v1, not just no-op
-    Seq((9, 9L)).toDF("bin", "n").write.mode("overwrite")
-      .parquet(s"$stateDir/v1")
-    assert(versions().contains("v1"))
-    StreamingOps.applyFoldBatch(spark, stateDir, 1L, batch, fold, retain = 1)
-    assert(versions() == Seq("v2"), s"orphan not swept: ${versions()}")
-    assert(stateRows() == Seq((0, 12L), (1, 5L), (2, 14L)),
-      "replay-with-orphan changed the state")
-    // strict protocol invariant: a state BEHIND the checkpoint (v2 =
-    // batches 0..1 when batch 5 arrives) must fail loudly, not fold
-    // batch 5 onto a snapshot missing batches 2..4
-    val diverged = intercept[IllegalArgumentException] {
-      StreamingOps.applyFoldBatch(spark, stateDir, 5L, batch, fold, retain = 1)
-    }
-    assert(diverged.getMessage.contains("diverged"))
-    graft.io.FsOps.rm(spark, stateDir)
-  }
-
-  test("foreachBatchFold resume refuses a kept state with a lost checkpoint") {
-    // the silent-data-loss case the resume guard exists for: without
-    // the checkpoint the restarted stream renumbers batch ids from 0
-    // and the replay-skip would drop the new files' folds
-    import spark.implicits._
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("fold_nockpt").toString + "/s"
-    Seq((0, 1L)).toDF("bin", "n").write.mode("overwrite")
-      .parquet(s"$stateDir/v0")
-    Seq(Tuple1(0)).toDF("bin").write.mode("overwrite")
-      .parquet(stateDir + "_nofeed")
-    val src = spark.readStream
-      .schema(spark.read.parquet(stateDir + "_nofeed").schema)
-      .parquet(stateDir + "_nofeed")
-    val err = intercept[IllegalArgumentException] {
-      StreamingOps.foreachBatchFold(src, spark.emptyDataFrame, stateDir,
-        resume = true)((st, _) => st)
-    }
-    assert(err.getMessage.contains("checkpoint"))
-    graft.io.FsOps.rm(spark, stateDir)
-  }
-
-  test("foreachBatchFoldMulti: every store lands on its one-shot state off one pinned batch") {
-    // the ingest-capstone primitive: one feed, many stores — each
-    // store's chained per-batch folds must equal its one-shot fold of
-    // the whole feed (additive law), with independent versioned dirs
-    import spark.implicits._
-    val stageDir =
-      java.nio.file.Files.createTempDirectory("multi_feed").toString
-    val root =
-      java.nio.file.Files.createTempDirectory("multi_state").toString + "/r"
-    val feed = (0L until 60L).map(i => (i, (i % 7).toDouble)).toDF("id", "v")
-    feed.repartition(4).write.mode("overwrite").parquet(stageDir)
-    val src = spark.readStream.schema(spark.read.parquet(stageDir).schema)
-      .option("maxFilesPerTrigger", "2").parquet(stageDir)
-    val emptyHist = spark.range(0)
-      .select($"id".cast("int").as("bin"), $"id".as("n"))
-    val initIdx = Seq((-1L, -7L)).toDF("id", "sig")
-    val fin = StreamingOps.foreachBatchFoldMulti(src, root, Seq(
-      StreamingOps.FoldSpec("hist", emptyHist, (st, b) =>
-        graft.ops.LibOps.histStateMerge(st,
-          graft.ops.LibOps.histState(b, "v", 0.0, 1.0, 8))),
-      StreamingOps.FoldSpec("idx", initIdx, (st, b) =>
-        st.unionByName(b.select($"id", ($"id" * 7).as("sig"))))))
-    val gotHist = fin("hist").collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
-    val wantHist = graft.ops.LibOps.histState(feed, "v", 0.0, 1.0, 8)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
-    assert(gotHist == wantHist, "chained hist folds != one-shot state")
-    val gotIdx = fin("idx").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(gotIdx == ((-1L, -7L) +: (0L until 60L).map(i => (i, i * 7))),
-      "chained index folds != one-shot state")
-    // each store holds the default keep-last-2 retention window
-    Seq("hist", "idx").foreach { n =>
-      val vs = graft.io.FsOps.ls(spark, s"$root/$n")
-        .map(_.split('/').last).filter(_.matches("v\\d+")).sorted
-      assert(vs == Seq("v1", "v2"),
-        s"store $n should hold the last 2 versions: $vs")
-    }
-    graft.io.FsOps.rm(spark, stageDir)
-    graft.io.FsOps.rm(spark, root)
-    graft.io.FsOps.rm(spark, root + "_ckpt")
-  }
-
-  test("foreachBatchFoldMulti computes each micro-batch once across all folds") {
-    // the capstone's scan contract: the batch is PINNED before the
-    // folds, so N stores cost one batch materialization, not N — an
-    // accumulator-bumping projection inside the stream counts row
-    // evaluations; with the pin it fires once per feed row, without it
-    // each fold's eager state write would recompute the batch
-    import spark.implicits._
-    val stageDir =
-      java.nio.file.Files.createTempDirectory("pin_feed").toString
-    val root =
-      java.nio.file.Files.createTempDirectory("pin_state").toString + "/r"
-    val nRows = 40L
-    (0L until nRows).map(Tuple1(_)).toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(stageDir)
-    val acc = spark.sparkContext.longAccumulator("batch_row_evals")
-    val bump = org.apache.spark.sql.functions.udf { (x: Long) =>
-      acc.add(1); x
-    }
-    val src = spark.readStream.schema(spark.read.parquet(stageDir).schema)
-      .parquet(stageDir)
-      .select(bump($"id").as("id"))
-    val init = Seq((-1L, 0L)).toDF("id", "m")
-    def spec(n: String, k: Long) = StreamingOps.FoldSpec(n, init,
-      (st, b) => st.unionByName(b.select($"id", ($"id" * k).as("m"))))
-    val fin = StreamingOps.foreachBatchFoldMulti(src, root,
-      Seq(spec("a", 2), spec("b", 3), spec("c", 5)))
-    assert(fin("c").count() == nRows + 1)
-    assert(acc.value == nRows,
-      s"batch rows evaluated ${acc.value} times for $nRows rows × 3 folds " +
-        "— the pinned-batch single-scan contract is broken")
-    graft.io.FsOps.rm(spark, stageDir)
-    graft.io.FsOps.rm(spark, root)
-    graft.io.FsOps.rm(spark, root + "_ckpt")
-  }
-
-  test("fold retention: a reader of v{n} survives two further commits") {
-    // the round-10 verdict's snapshot-isolation task: dropSuperseded
-    // used to delete v{n} the moment v{n+1} committed, so a concurrent
-    // reader mid-scan lost its files. With retain = 3 a reader holding
-    // the then-latest snapshot must complete after TWO further commits,
-    // and the window must still be bounded (keep-last-3, older swept).
-    import spark.implicits._
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("fold_retain").toString + "/s"
-    val init = Seq((0, 1L)).toDF("bin", "n")
-    init.write.mode("overwrite").parquet(s"$stateDir/v0")
-    val fold = (state: org.apache.spark.sql.DataFrame,
-                b: org.apache.spark.sql.DataFrame) =>
-      graft.ops.LibOps.histStateMerge(state, b)
-    def batch(k: Int) = Seq((k, 1L)).toDF("bin", "n")
-    StreamingOps.applyFoldBatch(spark, stateDir, 0L, batch(1), fold, retain = 3)
-    // reader plans against the CURRENT latest (v1) — file listing is
-    // resolved here; a delete of v1 before collect() would break it
-    val reader = spark.read.parquet(s"$stateDir/v1")
-    StreamingOps.applyFoldBatch(spark, stateDir, 1L, batch(2), fold, retain = 3)
-    StreamingOps.applyFoldBatch(spark, stateDir, 2L, batch(3), fold, retain = 3)
-    val got = reader.collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
-    assert(got == Seq((0, 1L), (1, 1L)),
-      "reader of a superseded snapshot lost rows inside the retention window")
-    val versions = graft.io.FsOps.ls(spark, stateDir)
-      .map(_.split('/').last).filter(_.matches("v\\d+")).sorted
-    assert(versions == Seq("v1", "v2", "v3"),
-      s"retain = 3 should hold exactly the last 3 versions: $versions")
-    graft.io.FsOps.rm(spark, stateDir)
-  }
-
   test("applyIngestBatch: replays rewrite in place; partials are invisible to readIngestOutput") {
     // the round-10 advice finding made structural: the probe path's
     // sink used plain append, so a foreachBatch RETRY duplicated the
