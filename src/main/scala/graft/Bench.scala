@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
 
   /** Queries whose timed body REWRITES tables (layout writers,
@@ -82,7 +83,7 @@ object Bench {
     // warm re-pays table rewrites / streaming runs (see writePath).
     def time(fn: => Unit): Double = {
       val t0 = System.nanoTime()
-      try fn catch { case _: Throwable => }
+      fn
       (System.nanoTime() - t0) / 1e9
     }
     // Materialize through the noop sink, NOT count(): under
@@ -134,15 +135,19 @@ object Bench {
     // happens without this: read-family "warm" slower than cold).
     def hygiene(): Unit = Hygiene.clearAll(spark, blocking = true, gc = true)
     val calibPre = calibrate()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
       .map { case (name, fn) =>
-        val cold = time(exec(fn(spark, sfDir)))
+        val (cold, coldErr) = attempt(exec(fn(spark, sfDir)))
         hygiene()
-        val warm = time(exec(fn(spark, sfDir)))
+        val (warm, warmErr) = attempt(exec(fn(spark, sfDir)))
         hygiene()
-        (name, cold, warm)
+        ((name, cold, warm), coldErr.orElse(warmErr))
       }
+    val results = runs.map(_._1)
+    val failed = runs.collect { case ((name, _, _), Some(err)) => name -> err }
+    val status = runs.map { case ((name, _, _), err) =>
+      "\"" + name + "\":" + Verify.jsonString(err.getOrElse("ok")) }.mkString("{", ",", "}")
     def json(sel: ((String, Double, Double)) => (String, Double)): String =
       results.map(sel).map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
@@ -183,7 +188,7 @@ object Bench {
     // copy: all four maps, unrounded.
     def r4(v: Double): Double = math.rint(v * 10000) / 10000
     val line = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(x => (x._1, r4(x._2)))},"total_warm":$totalWarm,"queries_warm":${json(x => (x._1, r4(x._3)))},$fam,$calib,"sf":"$sfDir"}"""
-    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(x => (x._1, x._2))},"total_warm":$totalWarm,"queries_warm":${json(x => (x._1, x._3))},"queries_norm":${json(x => (x._1, norm(x._2)))},"queries_warm_norm":${json(x => (x._1, norm(x._3)))},$fam,$calib,"sf":"$sfDir"}"""
+    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(x => (x._1, x._2))},"total_warm":$totalWarm,"queries_warm":${json(x => (x._1, x._3))},"queries_norm":${json(x => (x._1, norm(x._2)))},"queries_warm_norm":${json(x => (x._1, norm(x._3)))},"status":$status,$fam,$calib,"sf":"$sfDir"}"""
     println(line)
     // belt-and-suspenders: the authoritative copy as a file, in case a
     // harness parses logs that interleave, prefix, or truncate stdout
@@ -191,5 +196,22 @@ object Bench {
       try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), fileLine)
       catch { case _: Throwable => }
     spark.stop()
+    if (failed.nonEmpty) {
+      failed.foreach { case (name, err) => System.err.println(s"Bench: $name failed: $err") }
+      sys.exit(1)
+    }
+  }
+
+  /** Time one query run. A query that throws is timed up to the throw
+    * and comes back with its exception class and message, which the
+    * bench records as the query's status and fails the run on — never
+    * a fast success.
+    */
+  private[graft] def attempt(fn: => Unit): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err = try { fn; None } catch {
+      case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}")
+    }
+    ((System.nanoTime() - t0) / 1e9, err)
   }
 }

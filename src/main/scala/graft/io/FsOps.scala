@@ -1,7 +1,11 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem + sink utilities (SURVEY.md §2.2 S7/S9): the
   * `dumbo cat/ls/exists/rm/put/get` CLI verbs (`dumbo/cmd.py`) and the
@@ -38,6 +42,37 @@ object FsOps {
     fs(spark, dest).copyFromLocalFile(new Path(local), new Path(dest))
   def get(spark: SparkSession, src: String, local: String): Unit =
     fs(spark, src).copyToLocalFile(new Path(src), new Path(local))
+
+  /** Read parquet dirs that Spark wrote, with the schema taken from one
+    * data file's footer on the driver: Spark records its row schema
+    * under `ParquetReadSupport.SPARK_METADATA_KEY` in every file it
+    * writes, so this is the schema `spark.read.parquet` would infer —
+    * without the one-task Spark job that inference launches per read.
+    * All `dirs` must share one schema (what Spark's own non-merging
+    * inference assumes too; the schema comes from the first dir).
+    * Refuses a dir without a visible data file or a footer without a
+    * Spark schema: there is no inference fallback.
+    */
+  def readParquet(spark: SparkSession, dirs: String*): DataFrame = {
+    require(dirs.nonEmpty, "FsOps.readParquet: no dirs")
+    spark.read.schema(footerSchema(spark, dirs.head)).parquet(dirs: _*)
+  }
+
+  private def footerSchema(spark: SparkSession, dir: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = fs(spark, dir).listStatus(new Path(dir))
+      .filter(s => s.isFile && Layout.isVisibleFile(s.getPath.getName))
+      .map(_.getPath).sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"FsOps.readParquet: no parquet data file under $dir"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY)
+    finally reader.close()
+    require(json != null,
+      s"FsOps.readParquet: $file carries no Spark row schema in its footer")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
 
   /** `dumbo cat | head` — sample rows without a full materialization. */
   def cat(df: DataFrame, n: Int = 20): Seq[Row] = df.limit(n).collect().toSeq

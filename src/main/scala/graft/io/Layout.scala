@@ -32,7 +32,7 @@ object Layout {
     * `000000_0`, and a suffix-based filter would count 0 bytes for the
     * whole directory and silently drop it from a compaction.
     */
-  private def isVisibleFile(name: String): Boolean =
+  private[io] def isVisibleFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
   /** Write `df` range-partitioned into `numParts` files and sorted by

@@ -40,7 +40,12 @@ import graft.io.FsOps
   *    `delete(state, del(b)) ⊎ add(b)`, the merge-after-delete order
   *    of the lifecycle ops). Tombstone sides are takedown-feed-sized,
   *    so Catalyst broadcasts the anti-join; the add dirs are one
-  *    compaction-window of batches, not the index.
+  *    compaction-window of batches, not the index. Building a resolve
+  *    runs no Spark job: it lists the dirs and reads each one's schema
+  *    from a parquet footer on the driver ([[graft.io.FsOps.readParquet]]),
+  *    where `spark.read.parquet` would launch one inference job per dir.
+  *    Each dir keeps its own footer schema, so a delta whose columns
+  *    differ from the base still fails `unionByName` loudly.
   *  - [[compact]] folds the pending deltas into a new `base/v{m'}`
   *    (one O(index) rewrite, amortized over the window — on a stored
   *    table a delete is a rewrite anyway, the `compactBucketed`
@@ -266,13 +271,12 @@ object DeltaState {
       * here scans more than base + one compaction window of deltas.
       */
     def read(spark: SparkSession): DataFrame = {
-      val base = spark.read.parquet(basePath)
+      val base = FsOps.readParquet(spark, basePath)
       require(!base.columns.exists(c => c == "__b" || c == "__db"),
         "DeltaState: state schema may not use the reserved __b/__db columns")
       val tagged = base.withColumn("__b", lit(baseVersion - 1))
       val withAdds = pending.foldLeft(tagged) { (acc, n) =>
-        acc.unionByName(spark.read
-          .parquet(s"${deltaDir(stateDir)}/b$n/add")
+        acc.unionByName(FsOps.readParquet(spark, s"${deltaDir(stateDir)}/b$n/add")
           .withColumn("__b", lit(n)))
       }
       val delDirs = pending.map(n => (n, s"${deltaDir(stateDir)}/b$n/del"))
@@ -280,7 +284,7 @@ object DeltaState {
       if (delDirs.isEmpty) withAdds.drop("__b")
       else {
         val tombs = delDirs.map { case (n, p) =>
-          spark.read.parquet(p).withColumn("__db", lit(n))
+          FsOps.readParquet(spark, p).withColumn("__db", lit(n))
         }.reduce(_ unionByName _)
         val keyCols = tombs.columns.filter(_ != "__db").toSeq
         require(keyCols.nonEmpty, "DeltaState: tombstones carry no key columns")
@@ -303,10 +307,10 @@ object DeltaState {
       */
     def mergeRead(spark: SparkSession,
                   merge: DataFrame => DataFrame): DataFrame = {
-      val base = spark.read.parquet(basePath)
+      val base = FsOps.readParquet(spark, basePath)
       if (pending.isEmpty) base
       else merge(pending.foldLeft(base) { (acc, n) =>
-        acc.unionByName(spark.read.parquet(s"${deltaDir(stateDir)}/b$n/add"))
+        acc.unionByName(FsOps.readParquet(spark, s"${deltaDir(stateDir)}/b$n/add"))
       })
     }
 
@@ -316,15 +320,15 @@ object DeltaState {
       require(pending.nonEmpty,
         s"DeltaState.overlay: no pending deltas under $stateDir — probe the " +
           "base directly (or read())")
-      val adds = pending.map(n => spark.read
-        .parquet(s"${deltaDir(stateDir)}/b$n/add").withColumn("__b", lit(n)))
+      val adds = pending.map(n => FsOps.readParquet(spark,
+        s"${deltaDir(stateDir)}/b$n/add").withColumn("__b", lit(n)))
         .reduce(_ unionByName _)
       val delDirs = pending.map(n => (n, s"${deltaDir(stateDir)}/b$n/del"))
         .filter { case (_, p) => FsOps.exists(spark, p) }
       if (delDirs.isEmpty) (adds.drop("__b"), None)
       else {
         val tombs = delDirs.map { case (n, p) =>
-          spark.read.parquet(p).withColumn("__db", lit(n))
+          FsOps.readParquet(spark, p).withColumn("__db", lit(n))
         }.reduce(_ unionByName _)
         val keyCols = tombs.columns.filter(_ != "__db").toSeq
         val l = adds.alias("l")

@@ -282,7 +282,9 @@ object StreamingOps {
   /** Read the union of all COMMITTED batch outputs of a
     * [[foreachBatchIngest]] run: batchId-keyed subdirs with a
     * `_SUCCESS` marker only — an uncommitted partial from a crash is
-    * invisible.
+    * invisible. Every `b{n}` is one [[applyIngestBatch]] write of the
+    * same probe, so one footer's schema reads them all without an
+    * inference job.
     */
   def readIngestOutput(spark: SparkSession, outDir: String): DataFrame = {
     val dirs = graft.io.FsOps.ls(spark, outDir)
@@ -290,7 +292,7 @@ object StreamingOps {
       .filter(d => graft.io.FsOps.exists(spark, s"$d/_SUCCESS"))
     require(dirs.nonEmpty,
       s"readIngestOutput: no committed batch outputs under $outDir")
-    spark.read.parquet(dirs: _*)
+    graft.io.FsOps.readParquet(spark, dirs: _*)
   }
 
   /** Stream-static enrichment join — the remaining §2.9 join path

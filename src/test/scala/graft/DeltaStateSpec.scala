@@ -435,6 +435,89 @@ class DeltaStateSpec extends AnyFunSuite {
     graft.io.FsOps.rm(spark, s"$root/idx_ckpt")
   }
 
+  // the local property Spark's stream execution sets on every job of a
+  // running streaming query (and its foreachBatch pool threads inherit)
+  private val streamJob = (p: java.util.Properties) =>
+    p.getProperty("sql.streaming.queryId") != null
+
+  test("resolve views launch no Spark job: footers are read on the driver") {
+    // ≥2 pending deltas carrying tombstones, beside an aggregate store
+    // with ≥2 pending partials — every view is only BUILT here; a
+    // schema-inferring read would launch one job per dir
+    val dir = tmp("ds_nojobs")
+    val mdir = tmp("ds_nojobs_m")
+    DeltaState.init(spark, dir, (0L until 20L).map(i => (i, i * 7)).toDF("id", "sig"))
+    DeltaState.init(spark, mdir, Seq((1L, 5L), (2L, 3L)).toDF("id", "n"))
+    Seq(batchDf(100L until 105L, Seq(1L, 2L)), batchDf(Seq(105L), Seq(100L)),
+        batchDf(Seq(106L), Seq(3L))).zipWithIndex.foreach { case (b, i) =>
+      DeltaState.applyDeltaBatch(spark, dir, i.toLong, b, spec)
+      DeltaState.applyDeltaBatch(spark, mdir, i.toLong, b, mergeSpec)
+    }
+    val sc = spark.sparkContext
+    val (views, jobs) = org.apache.spark.TestBus.jobsDuring(sc) {
+      val snap = DeltaState.snapshot(spark, dir)
+      val msnap = DeltaState.snapshot(spark, mdir)
+      assert(snap.pending.size == 3 && msnap.pending.size == 3)
+      val (adds, tombs) = snap.overlay(spark)
+      (snap.read(spark), msnap.mergeRead(spark, mergeSpec.merge), adds, tombs.get,
+        DeltaState.read(spark, dir), DeltaState.overlay(spark, dir)._1,
+        DeltaState.mergeRead(spark, mdir, mergeSpec.merge))
+    }
+    assert(jobs == 0, s"building the resolve views launched $jobs Spark jobs")
+    val want = idx((0L until 20L).filterNot(Set(1L, 2L, 3L)) ++ (101L to 106L))
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(rows(views._1) == want && rows(views._5) == want)
+    assert(rows(views._3) == idx(101L to 106L) && rows(views._6) == idx(101L to 106L))
+    assert(views._4.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 100L))
+    assert(rows(views._2) == Seq((1L, 4L), (2L, 2L), (3L, -1L)) ++ (101L to 106L).map((_, 1L)))
+    assert(rows(views._7) == rows(views._2))
+    graft.io.FsOps.rm(spark, dir)
+    graft.io.FsOps.rm(spark, mdir)
+  }
+
+  test("foreachBatchStoreFolds builds its returned map without a Spark job") {
+    val stage = java.nio.file.Files.createTempDirectory("ds_nojobs_feed").toString
+    val root = java.nio.file.Files.createTempDirectory("ds_nojobs_stream").toString
+    batchDf(100L until 105L, Seq(1L, 2L)).coalesce(1).write.mode("append").parquet(stage)
+    val src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
+    val stores = Seq(
+      DeltaState.NamedDeltaStore(s"$root/idx",
+        (0L until 10L).map(i => (i, i * 7)).toDF("id", "sig"), spec),
+      DeltaState.NamedDeltaStore(s"$root/counts", Seq((1L, 1L)).toDF("id", "n"), mergeSpec))
+    // the first leg seeds both stores (two init writes on the caller
+    // thread); the resumed leg's only caller-thread work is the map
+    DeltaState.foreachBatchStoreFolds(src, stores)
+    batchDf(Seq(105L), Seq(100L, 3L)).coalesce(1).write.mode("append").parquet(stage)
+    val sc = spark.sparkContext
+    val ((fin, jobs), streamJobs) = org.apache.spark.TestBus.jobsDuring(sc, streamJob) {
+      org.apache.spark.TestBus.jobsDuring(sc, p => !streamJob(p)) {
+        DeltaState.foreachBatchStoreFolds(src, stores, resume = true)
+      }
+    }
+    // the filter does see the stream's own jobs: its triggers ran
+    assert(streamJobs > 0, "no job carried the streaming query id")
+    assert(DeltaState.committedDeltas(spark, s"$root/idx").sorted == Seq(0L, 1L))
+    assert(jobs == 0, s"building the returned map launched $jobs Spark jobs")
+    assert(fin(s"$root/idx").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sorted.toSeq == idx((0L until 10L).filterNot(Set(1L, 2L, 3L)) ++ (101L to 105L)))
+    graft.io.FsOps.rm(spark, stage)
+    graft.io.FsOps.rm(spark, root)
+    graft.io.FsOps.rm(spark, s"$root/idx_ckpt")
+  }
+
+  test("a delta that renames a base column still refuses at read: per-dir schemas") {
+    // each dir is read with its OWN footer schema, so unionByName keeps
+    // refusing a drifted delta instead of null-filling the base's column
+    val dir = tmp("ds_rename")
+    DeltaState.init(spark, dir, Seq((0L, 0L)).toDF("id", "sig"))
+    val renamed = DeltaFoldSpec(
+      add = b => b.filter($"op" === "add").select($"id", ($"id" * 7).as("sig2")))
+    DeltaState.applyDeltaBatch(spark, dir, 0L, batchDf(Seq(10L), Nil), renamed)
+    val err = intercept[org.apache.spark.sql.AnalysisException](DeltaState.read(spark, dir))
+    assert(err.getMessage.contains("sig"), err.getMessage)
+    graft.io.FsOps.rm(spark, dir)
+  }
+
   test("foreachBatchStoreFolds resume refuses a kept state with a lost checkpoint") {
     // the silent-data-loss case the resume guard exists for: without
     // the checkpoint the restarted stream renumbers batch ids from 0

@@ -38,6 +38,45 @@ class IoFunctionsSpec extends AnyFunSuite {
     assert(!FsOps.exists(spark, tmp))
   }
 
+  test("readParquet reads a Spark-written dir exactly as spark.read.parquet infers it") {
+    val tmp = java.nio.file.Files.createTempDirectory("readpq").toString
+    def same(dir: String): Unit = {
+      val inferred = spark.read.parquet(dir)
+      val footer = FsOps.readParquet(spark, dir)
+      assert(footer.schema == inferred.schema, s"schema differs under $dir")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(footer) == rows(inferred), s"rows differ under $dir")
+    }
+    // nested struct, array, map, decimal and timestamp columns
+    val nested = s"$tmp/nested"
+    spark.range(6).select($"id",
+        struct($"id".as("a"), struct(($"id" * 2).as("c")).as("b")).as("s"),
+        array($"id", $"id" + 1).as("xs"),
+        map($"id".cast("string"), $"id" * 1.5).as("m"),
+        ($"id" / 7).cast("decimal(12,4)").as("d"),
+        timestamp_seconds($"id" * 86400).as("ts"))
+      .repartition(3).write.parquet(nested)
+    same(nested)
+    // a zero-row write still leaves one data file with the schema
+    val empty = s"$tmp/empty"
+    spark.range(6).filter($"id" < 0).select($"id", array($"id").as("xs"))
+      .write.parquet(empty)
+    same(empty)
+    // _SUCCESS (Spark), _COMMIT (the state protocol) and .crc siblings
+    // (Hadoop's checksum files) are skipped; the .crc is not parquet
+    FsOps.touch(spark, s"$nested/_COMMIT")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$nested/.a.crc"), Array[Byte](1, 2, 3))
+    assert(FsOps.exists(spark, s"$nested/_SUCCESS"))
+    same(nested)
+    // a dir with only markers refuses, naming the dir
+    val bare = s"$tmp/bare"
+    FsOps.touch(spark, s"$bare/_SUCCESS")
+    val err = intercept[IllegalArgumentException](FsOps.readParquet(spark, bare))
+    assert(err.getMessage.contains(bare))
+    FsOps.rm(spark, tmp)
+  }
+
   test("Tables.sequenceFile round-trips Text/Text pairs (S2 source parity)") {
     val dir = java.nio.file.Files.createTempDirectory("seqfile").toString + "/data"
     val in = Seq(("k1", "v1"), ("k2", "v2"), ("k3", "with spaces\tand tabs"))

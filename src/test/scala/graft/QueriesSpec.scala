@@ -28,6 +28,14 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("Bench records a throwing query's exception as its status, not a fast success") {
+    assert(Bench.attempt(())._2.isEmpty)
+    val (_, err) = Bench.attempt(throw new IllegalStateException("boom \"q\""))
+    assert(err.contains("java.lang.IllegalStateException: boom \"q\""))
+    assert(Verify.jsonString(err.get) ==
+      "\"java.lang.IllegalStateException: boom \\\"q\\\"\"")
+  }
+
   test("q01 pricing summary has the 6 (flag,status) groups") {
     val rows = Queries.queryMap("q01_pricing_summary")(spark, d).collect()
     assert(rows.length == 6)
