@@ -15,11 +15,17 @@ import graft.ops._
   * away engine-specific integer widths (DuckDB sum(int)→HUGEINT,
   * row_number→BIGINT, len→BIGINT), emit timestamps as epoch-second
   * longs (parquet ns vs Spark µs).
+  *
+  * `writes` marks a query whose every run rewrites tables (layout
+  * writers, format round-trips, index builds) or re-runs a streaming
+  * job. Its warm run re-pays that work by design, so Bench reports it
+  * in the write family, apart from the read family's warm series.
   */
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    writes: Boolean = false)
 
 object Queries {
 

@@ -1044,7 +1044,8 @@ private[graft] object QueriesDedup {
         UNION ALL
         SELECT 'delta' AS phase, q2.* FROM (${spanOracleSql(
           "doc_id % 10 <> 7", "doc_id % 10 = 5")}) q2
-      ) u ORDER BY phase, doc_id"""))
+      ) u ORDER BY phase, doc_id"""),
+    writes = true)
 
   /** dedup_minhash_index_delete — the RETRACTION half of the minhash
     * lifecycle (round 9; d02x is the fold-in half): band index built
@@ -1184,7 +1185,8 @@ private[graft] object QueriesDedup {
       Bucketing.drop(s, bandT)
       res.orderBy(col("doc_id"))
     },
-    Some(minhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")))
+    Some(minhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
+    writes = true)
 
   /** dedup_minhash_partitioned_probe — the full production fact
     * layout composed onto a LIFECYCLE index (round 11: the round-10
@@ -1247,7 +1249,8 @@ private[graft] object QueriesDedup {
       res.orderBy(col("doc_id"))
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 0 AND doc_id % 3 < 2",
-      "doc_id % 10 = 0")))
+      "doc_id % 10 = 0")),
+    writes = true)
 
   /** dedup_simhash_evolved_merge — STATE SCHEMA EVOLUTION on a stored
     * index (round 11: the round-10 verdict's task 5 — a snapshot
@@ -1298,7 +1301,8 @@ private[graft] object QueriesDedup {
              count(*) AS n_docs,
              bit_xor(simhash) AS sig_xor,
              CAST(sum(bit_count(simhash)) AS BIGINT) AS bits
-      FROM tagged GROUP BY 1 ORDER BY 1"""))
+      FROM tagged GROUP BY 1 ORDER BY 1"""),
+    writes = true)
 
   /** dedup_simhash_delta_probe — the DELTA PROTOCOL composed with the
     * EXCHANGE-FREE LAYOUT (round 11's capstone: `streaming_fold_delta_parity`
@@ -1379,7 +1383,8 @@ private[graft] object QueriesDedup {
       res.orderBy($"doc_id")
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
-      "doc_id % 10 = 5")))
+      "doc_id % 10 = 5")),
+    writes = true)
 
   /** dedup_simhash_delta_stats_probe — the probe's effective stats
     * MAINTAINED AS STORED STATE (round 12: the round-11 verdict's
@@ -1459,7 +1464,8 @@ private[graft] object QueriesDedup {
       res.orderBy($"doc_id")
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
-      "doc_id % 10 = 5")))
+      "doc_id % 10 = 5")),
+    writes = true)
 
   /** dedup_minhash_delta_probe — the round-11 capstone composition
     * (delta overlay × exchange-free bucketed probe) carried to the
@@ -1539,7 +1545,8 @@ private[graft] object QueriesDedup {
       res.orderBy($"doc_id")
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
-      "doc_id % 10 = 5")))
+      "doc_id % 10 = 5")),
+    writes = true)
 
   /** dedup_minhash_delta_stats_probe — the band family's probe cap
     * taken ENTIRELY from STORED stats (round 13: the round-12
@@ -1622,7 +1629,8 @@ private[graft] object QueriesDedup {
       res.orderBy($"doc_id")
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
-      "doc_id % 10 = 5")))
+      "doc_id % 10 = 5")),
+    writes = true)
 
   /** dedup_minhash_reshard_cutover — the RE-SHARD cutover, the hash
     * families' analog of `ann_ivf_retrain_cutover` (round 13): a
@@ -1707,7 +1715,8 @@ private[graft] object QueriesDedup {
       res.orderBy($"doc_id")
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
-      "doc_id % 10 = 5")))
+      "doc_id % 10 = 5")),
+    writes = true)
 
   /** dedup_simhash_index_delete — the RETRACTION half of the simhash
     * lifecycle (round 9; d03u is the fold-in half): signature index
@@ -1786,7 +1795,8 @@ private[graft] object QueriesDedup {
       Bucketing.drop(s, segT)
       res.orderBy(col("doc_id"))
     },
-    Some(simhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")))
+    Some(simhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
+    writes = true)
 
   /** dedup_simhash_index_compact — index COMPACTION under churn
     * (round 10: the verdict's operational-seam task — the lifecycle
@@ -1840,7 +1850,8 @@ private[graft] object QueriesDedup {
       res.orderBy(col("doc_id"))
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 0 AND doc_id % 10 <> 5",
-      "doc_id % 10 = 0")))
+      "doc_id % 10 = 0")),
+    writes = true)
 
   val qs: Seq[Q] = Seq(d01, d02, d02u, d02m, d02i, d02x, d02d, d02s, d02sd,
     d02b, d02p, d02dp, d02sp, d02rc, d03, d03i, d03u, d03d, d03b, d03c, d03e, d03p, d03sp,

@@ -58,7 +58,8 @@ private[graft] object QueriesLayout {
       SELECT r_name, count(*) AS n_nations,
              string_agg(n_name, ',' ORDER BY n_name) AS nations
       FROM nation JOIN region ON n_regionkey = r_regionkey
-      GROUP BY r_name ORDER BY r_name"""))
+      GROUP BY r_name ORDER BY r_name"""),
+    writes = true)
 
 
   /** q55 — JSON-lines sink + source round-trip (S5's remaining text
@@ -83,7 +84,8 @@ private[graft] object QueriesLayout {
     Some("""
       SELECT n_name, count(*) AS n_suppliers, round(sum(s_acctbal), 2) AS sum_bal
       FROM supplier JOIN nation ON s_nationkey = n_nationkey
-      GROUP BY n_name ORDER BY n_name"""))
+      GROUP BY n_name ORDER BY n_name"""),
+    writes = true)
 
 
   /** q56 — ORC sink + source round-trip (S5's other columnar format):
@@ -108,7 +110,8 @@ private[graft] object QueriesLayout {
     Some("""
       SELECT c_mktsegment, count(*) AS n_customers,
              round(sum(c_acctbal), 2) AS sum_bal
-      FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment"""))
+      FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    writes = true)
 
 
   /** q57 — bucketed co-located fact-fact join: orders and lineitem
@@ -159,7 +162,8 @@ private[graft] object QueriesLayout {
       Bucketing.drop(s, lT)
       res.orderBy($"o_orderpriority")
     },
-    Some(q57OracleSql))
+    Some(q57OracleSql),
+    writes = true)
 
 
   /** q57b — the bucketed join's PROBE side, measured alone: q57's
@@ -253,7 +257,8 @@ private[graft] object QueriesLayout {
              round(sum(l_quantity), 2) AS sum_qty,
              round(sum(l_extendedprice), 2) AS sum_price
       FROM lineitem WHERE l_orderkey BETWEEN 100 AND 999
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1"""),
+    writes = true)
 
 
   /** q70 — Z-order layout round-trip (Layout.ZOrder): lineitem
@@ -286,7 +291,8 @@ private[graft] object QueriesLayout {
              round(sum(l_quantity), 2) AS sum_qty
       FROM lineitem
       WHERE l_partkey BETWEEN 20 AND 150 AND l_suppkey BETWEEN 1 AND 7
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1"""),
+    writes = true)
 
 
   /** q71 — incremental aggregate maintenance (MergeOps.aggState /
@@ -350,7 +356,8 @@ private[graft] object QueriesLayout {
     },
     Some("""
       SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-      FROM documents GROUP BY lang ORDER BY lang"""))
+      FROM documents GROUP BY lang ORDER BY lang"""),
+    writes = true)
 
 
   /** q74 — Hive-partitioned layout + partition-pruned read
@@ -400,7 +407,8 @@ private[graft] object QueriesLayout {
       FROM orders
       WHERE strftime(o_orderdate, '%Y-%m') BETWEEN '1996-01' AND '1996-12'
         AND o_orderstatus = 'O'
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1"""),
+    writes = true)
 
 
   /** q75 — dynamic partition pruning over the partitioned layout: the
@@ -445,7 +453,8 @@ private[graft] object QueriesLayout {
                AS sum_price
       FROM orders
       WHERE strftime(o_orderdate, '%Y') = '1997'
-      GROUP BY 1, 2 ORDER BY 1, 2"""))
+      GROUP BY 1, 2 ORDER BY 1, 2"""),
+    writes = true)
 
 
   /** q78 — the composed production fact layout
@@ -511,7 +520,8 @@ private[graft] object QueriesLayout {
                   AS DOUBLE) AS revenue
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       WHERE strftime(o_orderdate, '%Y') = '1996'
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1"""),
+    writes = true)
 
 
   /** q76 — snapshot diff (MergeOps.diffSnapshots): the changeset that
@@ -733,7 +743,8 @@ private[graft] object QueriesLayout {
     Some("""
       SELECT word, count(*) AS cnt FROM (
         SELECT unnest(string_split(text, ' ')) AS word FROM documents) t
-      GROUP BY word ORDER BY word"""))
+      GROUP BY word ORDER BY word"""),
+    writes = true)
 
 
   /** q64 — per-group z-score outlier gate (LibOps.zscoreOutliers):

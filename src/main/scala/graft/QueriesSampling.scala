@@ -528,7 +528,8 @@ private[graft] object QueriesSampling {
     },
     Some("""
       SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-      FROM documents WHERE lang <> 'zz' GROUP BY lang ORDER BY lang"""))
+      FROM documents WHERE lang <> 'zz' GROUP BY lang ORDER BY lang"""),
+    writes = true)
 
 
   /** q79 — quantile winsorization (LibOps.winsorize): events.value

@@ -255,7 +255,8 @@ private[graft] object QueriesSim {
       Bucketing.drop(s, tbl)
       res.orderBy($"qid", $"rnk")
     },
-    Some(ivfProbeOracleSql("vec_id % 10 <> 0", "vec_id % 10 <> 7")))
+    Some(ivfProbeOracleSql("vec_id % 10 <> 0", "vec_id % 10 <> 7")),
+    writes = true)
 
   /** ann_ivf_retrain_cutover — the RETRAIN/re-shard cutover, the one
     * lifecycle event every index family documents but none graded
@@ -340,7 +341,8 @@ private[graft] object QueriesSim {
       Bucketing.drop(s, tbl2)
       res.orderBy($"qid", $"rnk")
     },
-    Some(ivfProbeOracleSql("vec_id % 10 <> 7", "vec_id % 10 <> 7")))
+    Some(ivfProbeOracleSql("vec_id % 10 <> 7", "vec_id % 10 <> 7")),
+    writes = true)
 
   private val a04 = Q(
     "ann_ivf_trained_topk",

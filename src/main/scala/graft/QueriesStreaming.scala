@@ -106,7 +106,8 @@ private[graft] object QueriesStreaming {
       s.catalog.dropTempView(sink)
       out.orderBy($"user_id", $"session_start", $"n_events")
     },
-    Some(sessionOracleSql("")))
+    Some(sessionOracleSql("")),
+    writes = true)
 
 
   /** streaming_dedup_parity — the watermark-bounded streaming dedup
@@ -137,7 +138,8 @@ private[graft] object QueriesStreaming {
     },
     Some("""
       SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-      FROM events ORDER BY event_id"""))
+      FROM events ORDER BY event_id"""),
+    writes = true)
 
 
   /** streaming_interval_parity — the stream-stream interval join
@@ -184,7 +186,8 @@ private[graft] object QueriesStreaming {
              purchase_value
       FROM c JOIN p ON user_id = p_user_id
         AND pu > cu AND pu <= cu + 86400000000
-      ORDER BY click_id, purchase_ts_s, purchase_value"""))
+      ORDER BY click_id, purchase_ts_s, purchase_value"""),
+    writes = true)
 
 
   /** streaming_tumbling_parity — the watermarked tumbling-window
@@ -221,7 +224,8 @@ private[graft] object QueriesStreaming {
     Some("""
       SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS window_start,
              event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    writes = true)
 
 
   /** streaming_static_join_parity — the stream-static enrichment path
@@ -261,7 +265,8 @@ private[graft] object QueriesStreaming {
              count(*) AS cnt,
              CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
                AS sum_value
-      FROM events GROUP BY 1 ORDER BY 1"""))
+      FROM events GROUP BY 1 ORDER BY 1"""),
+    writes = true)
 
 
   /** streaming_quality_parity — the curation path run STREAMING: the
@@ -292,7 +297,8 @@ private[graft] object QueriesStreaming {
     Some(s"""$qualityModelCtes
       SELECT doc_id, $qualityScoreSql AS score,
              coalesce($qualityScoreSql > 0, false) AS keep
-      FROM m ORDER BY doc_id"""))
+      FROM m ORDER BY doc_id"""),
+    writes = true)
 
   /** streaming_simhash_ingest_parity — the index-lifecycle INGEST
     * PROBE deployed under Structured Streaming (round 8: proving the
@@ -330,7 +336,8 @@ private[graft] object QueriesStreaming {
       StreamingOps.readIngestOutput(s, outDir).orderBy($"doc_id")
     },
     Some(QueriesDedup.simhashIncrementalSql(
-      "doc_id % 10 <> 0", "doc_id % 10 = 0")))
+      "doc_id % 10 <> 0", "doc_id % 10 = 0")),
+    writes = true)
 
   /** streaming_minhash_ingest_parity — the minhash lifecycle probe
     * deployed under Structured Streaming (round 9: the round-8
@@ -372,7 +379,8 @@ private[graft] object QueriesStreaming {
       StreamingOps.readIngestOutput(s, outDir).orderBy($"doc_id")
     },
     Some(QueriesDedup.minhashIncrementalSql(
-      "doc_id % 10 <> 0", "doc_id % 10 = 0")))
+      "doc_id % 10 <> 0", "doc_id % 10 = 0")),
+    writes = true)
 
   /** streaming_ivf_ingest_parity — the ANN lifecycle probe deployed
     * under Structured Streaming (round 9, completing the family
@@ -408,7 +416,8 @@ private[graft] object QueriesStreaming {
       }
       StreamingOps.readIngestOutput(s, outDir).orderBy($"qid", $"rnk")
     },
-    Some(QueriesSim.ivfProbeOracleSql("", "")))
+    Some(QueriesSim.ivfProbeOracleSql("", "")),
+    writes = true)
 
   /** streaming_index_delete_parity — index RETRACTION deployed under
     * Structured Streaming (round 9, closing the lifecycle×deployment
@@ -453,7 +462,8 @@ private[graft] object QueriesStreaming {
         .orderBy($"doc_id")
     },
     Some(QueriesDedup.simhashIncrementalSql(
-      "doc_id % 10 <> 0 AND doc_id % 10 <> 5", "doc_id % 10 = 5")))
+      "doc_id % 10 <> 0 AND doc_id % 10 <> 5", "doc_id % 10 = 5")),
+    writes = true)
 
   /** streaming_fold_resume_parity — RESUME-AFTER-INTERRUPT for the
     * streaming maintenance folds (round 10: the one
@@ -509,7 +519,8 @@ private[graft] object QueriesStreaming {
       val refState = histOf(e.filter($"ts" < "2024-01-16 00:00:00"))
       LibOps.psiFromStates(refState, cur, nbins = 20).orderBy($"bin")
     },
-    Some(QueriesEvents.psiOracleSql))
+    Some(QueriesEvents.psiOracleSql),
+    writes = true)
 
   /** pipeline_ingest_fold — the END-TO-END INGEST CAPSTONE (round 10):
     * one crawl feed maintains EVERY store in the engine side-by-side,
@@ -771,7 +782,8 @@ private[graft] object QueriesStreaming {
                  CAST(sum(n_b) AS BIGINT) AS sb,
                  sum(CAST(pc AS DECIMAL(18,6))) AS sc3
           FROM p) q
-      ) u ORDER BY family"""))
+      ) u ORDER BY family"""),
+    writes = true)
 
   /** streaming_ingest_resume_parity — RESUME for the PROBE path
     * (round 10: the foreachBatchIngest twin of
@@ -813,7 +825,8 @@ private[graft] object QueriesStreaming {
       StreamingOps.readIngestOutput(s, outDir).orderBy($"doc_id")
     },
     Some(QueriesDedup.simhashIncrementalSql(
-      "doc_id % 10 <> 0", "doc_id % 10 = 0")))
+      "doc_id % 10 <> 0", "doc_id % 10 = 0")),
+    writes = true)
 
   /** streaming_fold_delta_parity — the BATCH-SIZED state publish
     * (round 11: the round-10 verdict's lead task — the versioned-
@@ -894,7 +907,8 @@ private[graft] object QueriesStreaming {
         UNION ALL
         SELECT 'compact' AS phase, q2.* FROM (${QueriesDedup.simhashIncrementalSql(
           "doc_id % 10 <> 5 AND doc_id % 10 <> 7", "doc_id % 10 = 5")}) q2
-      ) u ORDER BY phase, doc_id"""))
+      ) u ORDER BY phase, doc_id"""),
+    writes = true)
 
   /** streaming_merge_fold_parity — BATCH-SIZED publishes for
     * MERGEABLE-AGGREGATE state (round 12: the round-11 verdict's
@@ -1008,7 +1022,8 @@ private[graft] object QueriesStreaming {
         UNION ALL
         SELECT 'delta' AS phase, q2.* FROM ($net) q2
       ) u ORDER BY phase, bin"""
-    })
+    },
+    writes = true)
 
   val qs: Seq[Q] = Seq(st01, st02, st03, st04, st05, st06, st07, st08, st09,
     st10, st11, st12, st13, st14, st15)

@@ -395,7 +395,8 @@ private[graft] object QueriesText {
         SELECT 'compact' AS phase, one.* FROM one
         UNION ALL
         SELECT 'delta' AS phase, one.* FROM one
-      ) u ORDER BY phase"""))
+      ) u ORDER BY phase"""),
+    writes = true)
 
   /** eval_pr_langid — the full precision/recall curve over every
     * decision threshold (EvalOps.prCurve): exact tp/fp/fn suffix sums
@@ -924,7 +925,8 @@ private[graft] object QueriesText {
       SELECT lang, count(*) AS n_docs,
              count(source) AS n_with_source,
              CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-      FROM v GROUP BY lang ORDER BY lang"""))
+      FROM v GROUP BY lang ORDER BY lang"""),
+    writes = true)
 
 
   /** pipeline_curation — the capstone composition: the full curation

@@ -185,8 +185,8 @@ object Bucketing {
 
   /** Count the visible data files under a catalog table's location —
     * the fragmentation meter [[compactBucketed]] exists to shrink
-    * (one shared definition for the compaction spec and the
-    * CompactCost harness).
+    * (one shared definition for the compaction spec and BASELINE.md's
+    * "compaction isolation" measurement).
     */
   def dataFileCount(spark: SparkSession, tableName: String): Int = {
     val loc = spark.sessionState.catalog.getTableMetadata(

@@ -317,8 +317,8 @@ object GraphOps {
             .select(col("node"), col("label")),
           dir, s"lp$i")
         rounds += labels
-        // stage() already ran the write action, so this returns
-        // immediately (ObsProbe verified the listener fires for writes)
+        // stage() already ran the write action, and an Observation's
+        // listener fires for write commands, so this returns immediately
         converged = obs.get("n_changed").asInstanceOf[Long] == 0L
       } else {
         labels = stage(upd.select(col("node"), col("label")), dir, s"lp$i")

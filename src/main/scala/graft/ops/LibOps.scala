@@ -326,7 +326,7 @@ object LibOps {
     // two) was tried and REVERTED on measurement — the replanted dv
     // subtree's exchange is not reused across the broadcast-join
     // boundary (the trendingTerms lesson), so both corpus aggregates
-    // still ran plus the extra rollup: StageProbe read +20% stage
+    // still ran plus the extra rollup: `Probe stages` read +20% stage
     // input records and +56% CPU vs this shape
     val offsets = nn.groupBy(bucketOf(v).as("bucket"))
       .agg(count(lit(1)).as("bucket_total"))

@@ -332,7 +332,7 @@ object TextOps {
     // / unigramNll plan-verified lesson), so both explodes still ran
     // plus an extra aggregate (×10 A/B: 1.54× slower). (b) cbg as a
     // window over tf — one explode by construction, but it ADDS a
-    // (doc,bg)-dictionary-sized shuffle + sort, which StageProbe
+    // (doc,bg)-dictionary-sized shuffle + sort, which `Probe stages`
     // measured as +75% stage input records and +35% CPU: re-exploding
     // the corpus is cheaper than re-shuffling the tf frame (guide §2.3
     // — shuffled bytes, not scans, are the lever). The original

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * Join beneath it), and trailing windows vanish wherever their
   * columns die with the projection. Any query listed here would be
   * mis-measured by a count()-based harness — which is why Bench
-  * materializes through the noop sink instead. Run after adding a
-  * query to see whether count()-style shortcuts would lie about it;
-  * PlanAuditSpec pins the flagged set so a new eliminable query (or a
-  * harness regression back to count()) cannot land silently.
+  * materializes through the noop sink instead. Run `Probe audit`
+  * after adding a query to see whether count()-style shortcuts would
+  * lie about it; PlanAuditSpec pins the flagged set so a new
+  * eliminable query (or a harness regression back to count()) cannot
+  * land silently.
   */
 object PlanAudit {
 
@@ -40,25 +41,5 @@ object PlanAudit {
         case e: Throwable => Some(name -> s"ERROR ${e.getClass.getSimpleName}")
       }
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val (errs, flagged) = audit(spark, d).partition(_._2.startsWith("ERROR"))
-    errs.foreach { case (n, s) => println(s"AUDIT $n $s") }
-    flagged.foreach { case (n, s) => println(s"AUDIT $n $s") }
-    // errors print but don't count: the summary line claims eliminable
-    // queries, not broken ones
-    println(s"AUDIT_DONE flagged=${flagged.size} (these queries NEED the noop-sink materialization)")
-    spark.stop()
   }
 }

@@ -36,6 +36,23 @@ class QueriesSpec extends AnyFunSuite {
       "\"java.lang.IllegalStateException: boom \\\"q\\\"\"")
   }
 
+  test("Verify.dump writes every good query and returns each throwing one") {
+    val out = java.nio.file.Files.createTempDirectory("verify_dump").toString
+    val registry: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
+      "good" -> Queries.queryMap("q01_pricing_summary"),
+      "bad" -> ((_, _) => throw new IllegalStateException("no such table")))
+    val failed = Verify.dump(spark, registry, d, out)
+    assert(failed == Seq("bad" -> "java.lang.IllegalStateException: no such table"))
+    assert(spark.read.parquet(s"$out/good").count() == 6)
+    assert(!new java.io.File(s"$out/bad").exists())
+  }
+
+  test("Bench's write family is the queries that rewrite tables or re-run streams") {
+    val (w, r) = Queries.all.partition(_.writes)
+    assert((r.size, w.size) == (183, 42))
+    assert(Queries.all.map(_.name).distinct.size == Queries.all.size)
+  }
+
   test("q01 pricing summary has the 6 (flag,status) groups") {
     val rows = Queries.queryMap("q01_pricing_summary")(spark, d).collect()
     assert(rows.length == 6)

@@ -2,24 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (guide: one per suite via
-  * lazy val; sharing across suites is safe since config is identical).
+/** One shared local session for all suites: the driver's session
+  * (`Session.local`), with quieter logs.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive TIMESTAMP(MICROS) must read as session-tz TIMESTAMP (not
-      // NTZ) so event-time ops and epoch casts keep rounds-1-5 semantics
-      // and scan-level pushdown (Tables normalizes as a fallback)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
