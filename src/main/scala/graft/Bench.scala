@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
 
@@ -9,14 +10,11 @@ object Bench {
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(',').toSet) else None
     val spark = Session.local(Session.cpus)
-    // absorb one-time JVM/classloading/scan-setup cost so per-query
-    // numbers measure the queries. Whole-stage codegen compiles per
-    // PLAN SHAPE, so warming one query does not absorb another's
-    // compile — every query is timed cold-plan, uniformly.
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("q01_pricing_summary").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => }
+    try warmUp(spark, sfDir) catch { case NonFatal(e) =>
+      System.err.println(s"Bench: $e" + Option(e.getCause).fold("")(c => s", caused by $c"))
+      spark.stop()
+      sys.exit(1)
+    }
     // cold = fresh plan (includes per-plan codegen compile); warm =
     // second run of the same query (plan/codegen caches hot — what a
     // resident cluster would see). Read-path warm is the stable basis
@@ -122,6 +120,23 @@ object Bench {
     if (failed.nonEmpty) {
       failed.foreach { case (name, err) => System.err.println(s"Bench: $name failed: $err") }
       sys.exit(1)
+    }
+  }
+
+  /** Absorb one-time JVM/classloading/scan-setup cost so per-query
+    * numbers measure the queries. Whole-stage codegen compiles per
+    * PLAN SHAPE, so warming one query does not absorb another's
+    * compile — every query is timed cold-plan, uniformly. Throws when
+    * the warm-up query fails: a session or data dir that cannot run
+    * q01 would make the calibration and every timing after it
+    * meaningless.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("sum(id)").collect()
+    val q = "q01_pricing_summary"
+    try SparkEntry.queries(q)(spark, sfDir).count()
+    catch { case NonFatal(e) =>
+      throw new IllegalStateException(s"warm-up $q failed under $sfDir", e)
     }
   }
 

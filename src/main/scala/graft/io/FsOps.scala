@@ -43,19 +43,31 @@ object FsOps {
   def get(spark: SparkSession, src: String, local: String): Unit =
     fs(spark, src).copyToLocalFile(new Path(src), new Path(local))
 
-  /** Read parquet dirs that Spark wrote, with the schema taken from one
-    * data file's footer on the driver: Spark records its row schema
-    * under `ParquetReadSupport.SPARK_METADATA_KEY` in every file it
-    * writes, so this is the schema `spark.read.parquet` would infer —
+  /** Read parquet dirs that Spark wrote as ONE relation, with the schema
+    * taken from each dir's footer on the driver: Spark records its row
+    * schema under `ParquetReadSupport.SPARK_METADATA_KEY` in every file
+    * it writes, so this is the schema `spark.read.parquet` would infer —
     * without the one-task Spark job that inference launches per read.
-    * All `dirs` must share one schema (what Spark's own non-merging
-    * inference assumes too; the schema comes from the first dir).
+    *
+    * The dirs' schemas are resolved the way `unionByName` over one scan
+    * per dir would resolve them (by name, in the first dir's column
+    * order, types widened), by analysing `unionByName` over empty local
+    * frames: no job runs, and a dir that renamed, dropped or added a
+    * column raises the same `AnalysisException` that union would. One
+    * relation instead of that union keeps the plan one scan wide: Catalyst
+    * pushes joins and filters through a union into every branch, so
+    * whatever sits above a k-way union is planned, and code-generated,
+    * k times.
+    *
     * Refuses a dir without a visible data file or a footer without a
     * Spark schema: there is no inference fallback.
     */
   def readParquet(spark: SparkSession, dirs: String*): DataFrame = {
     require(dirs.nonEmpty, "FsOps.readParquet: no dirs")
-    spark.read.schema(footerSchema(spark, dirs.head)).parquet(dirs: _*)
+    val schema = dirs.map(footerSchema(spark, _)).distinct
+      .map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
+      .reduce(_ unionByName _).schema
+    spark.read.schema(schema).parquet(dirs: _*)
   }
 
   private def footerSchema(spark: SparkSession, dir: String): StructType = {

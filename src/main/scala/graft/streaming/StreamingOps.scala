@@ -282,9 +282,10 @@ object StreamingOps {
   /** Read the union of all COMMITTED batch outputs of a
     * [[foreachBatchIngest]] run: batchId-keyed subdirs with a
     * `_SUCCESS` marker only — an uncommitted partial from a crash is
-    * invisible. Every `b{n}` is one [[applyIngestBatch]] write of the
-    * same probe, so one footer's schema reads them all without an
-    * inference job.
+    * invisible. The outputs are read as one relation without an
+    * inference job; every `b{n}`'s footer schema is resolved by name
+    * ([[graft.io.FsOps.readParquet]]), so a batch output whose columns
+    * drifted refuses instead of reading as nulls.
     */
   def readIngestOutput(spark: SparkSession, outDir: String): DataFrame = {
     val dirs = graft.io.FsOps.ls(spark, outDir)

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{Hygiene, Session, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -24,6 +25,8 @@ import scala.collection.mutable.ArrayBuffer
   *    frame (`fn()`), planning it (`executedPlan`) and executing it
   *    (noop write, which includes the write command's own planning);
   *    then totals over every stage the run completed, build included,
+  *    with the Janino compiles the run paid (driver and tasks share the
+  *    local JVM's `CodegenMetrics`; a warm codegen cache pays none),
   *    and the 15 stages with the most executor run time. This is the
   *    view `explain` cannot give: AQE picks partition counts at run time.
   *  - `audit`: the queries whose plan shrinks under `count()`
@@ -141,10 +144,12 @@ object Probe {
       // a straggler event from the last run must not land in this one
       Bridge.drainListenerBus(sc)
       done.synchronized(done.clear())
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (df, build) = timed(SparkEntry.queries(name)(spark, sfDir))
       val (_, plan) = timed(df.queryExecution.executedPlan)
       val (_, execute) = timed(df.write.format("noop").mode("overwrite").save())
       Bridge.drainListenerBus(sc)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       val snap = done.synchronized(done.toVector)
       println(f"== run $r: $name build=$build%.2f s plan=$plan%.2f s " +
         f"execute=$execute%.2f s, ${snap.size} stages")
@@ -152,7 +157,8 @@ object Probe {
       // code versions once a query has more than 15 stages
       println(f"  TOTAL run=${snap.map(_.runMs).sum}%8d ms " +
         f"cpu=${snap.map(_.cpuMs).sum}%8d ms tasks=${snap.map(_.tasks).sum}%5d " +
-        f"in=${snap.map(_.recordsIn).sum}%11d out=${snap.map(_.recordsOut).sum}%11d")
+        f"in=${snap.map(_.recordsIn).sum}%11d out=${snap.map(_.recordsOut).sum}%11d " +
+        f"compiles=$compiles%5d")
       snap.sortBy(-_.runMs).take(15).foreach { s =>
         println(f"  stage ${s.id}%3d wall=${s.wallMs}%6d ms run=${s.runMs}%6d ms " +
           f"cpu=${s.cpuMs}%6d ms tasks=${s.tasks}%3d in=${s.recordsIn}%9d " +

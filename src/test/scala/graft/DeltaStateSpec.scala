@@ -35,6 +35,14 @@ class DeltaStateSpec extends AnyFunSuite {
   private def idx(ids: Seq[Long]): Seq[(Long, Long)] =
     ids.map(i => (i, i * 7)).sorted
 
+  // the full-state rewrite of `spec`: the same fold (delete-then-union)
+  // applied in memory to the whole state, batch by batch
+  private def foldInMemory(init: DataFrame, batches: Seq[DataFrame]): Seq[(Long, Long)] =
+    batches.foldLeft(init) { (state, b) =>
+      state.join(b.filter($"op" === "del").select($"id"), Seq("id"), "left_anti")
+        .unionByName(b.filter($"op" === "add").select($"id", ($"id" * 7).as("sig")))
+    }.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
   test("delta folds land on the rewrite protocol's state; base untouched per batch") {
     val dir = tmp("ds_core")
     DeltaState.init(spark, dir, (0L until 50L).map(i => (i, i * 7)).toDF("id", "sig"))
@@ -53,18 +61,12 @@ class DeltaStateSpec extends AnyFunSuite {
     assert(baseFiles() == before, "ingest touched the base")
     val want = idx((5L until 50L) ++ (102L until 120L))
     assert(stateRows(dir) == want, "delta resolution != expected state")
-    // equivalence with the full-state rewrite: the same fold
-    // (delete-then-union) applied in memory to the whole state, batch
-    // by batch — batch 1 retracts batch 0's adds, so the reference must
-    // see batch 0 folded before batch 1's tombstones
-    val fold = (state: DataFrame, b: DataFrame) =>
-      state.join(b.filter($"op" === "del").select($"id"), Seq("id"), "left_anti")
-        .unionByName(b.filter($"op" === "add")
-          .select($"id", ($"id" * 7).as("sig")))
-    val rw = Seq(batchDf(100L until 110L, 0L until 5L),
-        batchDf(110L until 120L, 100L until 102L))
-      .foldLeft((0L until 50L).map(i => (i, i * 7)).toDF("id", "sig"))(fold)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // equivalence with the full-state rewrite — batch 1 retracts batch
+    // 0's adds, so the reference must see batch 0 folded before batch
+    // 1's tombstones
+    val rw = foldInMemory((0L until 50L).map(i => (i, i * 7)).toDF("id", "sig"),
+      Seq(batchDf(100L until 110L, 0L until 5L),
+        batchDf(110L until 120L, 100L until 102L)))
     assert(rw == want && stateRows(dir) == rw,
       "delta protocol and the full-state fold diverged")
     graft.io.FsOps.rm(spark, dir)
@@ -626,5 +628,82 @@ class DeltaStateSpec extends AnyFunSuite {
         "— the once-per-trigger derivation contract broke")
     graft.io.FsOps.rm(spark, stage)
     graft.io.FsOps.rm(spark, root)
+  }
+
+  private object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("a resolve plans one scan per delta kind, whatever the chain length") {
+    // a union of per-batch scans let Catalyst push the anti-join into
+    // every branch: one broadcast (and one job) per pending batch
+    val init = (0L until 40L).map(i => (i, i * 7)).toDF("id", "sig")
+    // (scans, broadcast exchanges) in the final adaptive plan
+    def shape(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      (plans.collect(p) { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size,
+        plans.collect(p) {
+          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b }.size)
+    }
+    val compactJobs = Seq(2, 8).map { k =>
+      val dir = tmp(s"ds_shape$k")
+      val mdir = tmp(s"ds_shape_m$k")
+      DeltaState.init(spark, dir, init)
+      DeltaState.init(spark, mdir, Seq((1L, 5L)).toDF("id", "n"))
+      // every batch adds two ids and tombstones a base id and, after
+      // the first, one of the previous batch's adds
+      val batches = (0 until k).map(i => batchDf(Seq(100L + 2 * i, 101L + 2 * i),
+        i.toLong +: (if (i > 0) Seq(99L + 2 * i) else Nil)))
+      batches.zipWithIndex.foreach { case (b, i) =>
+        DeltaState.applyDeltaBatch(spark, dir, i.toLong, b, spec)
+        DeltaState.applyDeltaBatch(spark, mdir, i.toLong, b, mergeSpec)
+      }
+      val snap = DeltaState.snapshot(spark, dir)
+      assert(snap.pending.size == k)
+      assert(shape(snap.read(spark)) == (2, 1), s"read of a $k-batch chain")
+      assert(shape(DeltaState.snapshot(spark, mdir).mergeRead(spark, mergeSpec.merge))._1 == 1,
+        s"mergeRead of a $k-batch chain")
+      val (_, jobs) = org.apache.spark.TestBus.jobsDuring(spark.sparkContext)(
+        DeltaState.compact(spark, dir))
+      assert(stateRows(dir) == foldInMemory(init, batches))
+      graft.io.FsOps.rm(spark, dir)
+      graft.io.FsOps.rm(spark, mdir)
+      jobs
+    }
+    assert(compactJobs(0) == compactJobs(1),
+      s"compacting 2 and 8 pending batches launched ${compactJobs.mkString(" and ")} jobs")
+  }
+
+  test("a store rooted under dirs named like b{n}/add and base/v{m} resolves by its own layout") {
+    // positions are read from the last path components only
+    val dir = java.nio.file.Files.createTempDirectory("ds_alias").toString +
+      "/b3/add/base/v1/store"
+    val init = (0L until 30L).map(i => (i, i * 7)).toDF("id", "sig")
+    val batches = Seq(batchDf(100L until 105L, 0L until 3L),
+      batchDf(Seq(105L), Seq(100L, 3L)), batchDf(Seq(106L), Seq(101L, 105L, 4L)))
+    DeltaState.init(spark, dir, init)
+    DeltaState.applyDeltaBatch(spark, dir, 0L, batches(0), spec)
+    DeltaState.applyDeltaBatch(spark, dir, 1L, batches(1), spec)
+    assert(stateRows(dir) == foldInMemory(init, batches.take(2)))
+    DeltaState.compact(spark, dir)
+    DeltaState.applyDeltaBatch(spark, dir, 2L, batches(2), spec)
+    assert(stateRows(dir) == foldInMemory(init, batches))
+    graft.io.FsOps.rm(spark, dir)
+  }
+
+  test("a state column named _metadata is data; positions still come from file paths") {
+    val dir = tmp("ds_metacol")
+    val named = DeltaFoldSpec(
+      add = b => b.filter($"op" === "add").select($"id", concat(lit("m"), $"id").as("_metadata")),
+      del = Some(b => b.filter($"op" === "del").select($"id")))
+    DeltaState.init(spark, dir, (0L until 10L).map(i => (i, s"m$i")).toDF("id", "_metadata"))
+    DeltaState.applyDeltaBatch(spark, dir, 0L, batchDf(Seq(10L, 11L), Seq(0L)), named)
+    DeltaState.applyDeltaBatch(spark, dir, 1L, batchDf(Seq(12L), Seq(10L, 1L)), named)
+    def rows(): Seq[(Long, String)] = DeltaState.read(spark, dir).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("_metadata"))).sorted.toSeq
+    val want = ((2L to 9L) ++ Seq(11L, 12L)).map(i => (i, s"m$i"))
+    assert(rows() == want)
+    DeltaState.compact(spark, dir)
+    assert(rows() == want)
+    graft.io.FsOps.rm(spark, dir)
   }
 }

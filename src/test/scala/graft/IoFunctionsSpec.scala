@@ -77,6 +77,27 @@ class IoFunctionsSpec extends AnyFunSuite {
     FsOps.rm(spark, tmp)
   }
 
+  test("readParquet over dirs with columns in different orders reads them by name") {
+    val tmp = java.nio.file.Files.createTempDirectory("readpq_order").toString
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$tmp/a")
+    Seq(("b", 2L)).toDF("name", "id").write.parquet(s"$tmp/b")
+    val both = FsOps.readParquet(spark, s"$tmp/a", s"$tmp/b")
+    assert(both.columns.toSeq == Seq("id", "name"))
+    assert(both.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+    FsOps.rm(spark, tmp)
+  }
+
+  test("readParquet over a dir that renamed a column refuses, naming the column") {
+    val tmp = java.nio.file.Files.createTempDirectory("readpq_rename").toString
+    Seq((1L, "a")).toDF("id", "headline").write.parquet(s"$tmp/a")
+    Seq((2L, "b")).toDF("id", "title").write.parquet(s"$tmp/b")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      FsOps.readParquet(spark, s"$tmp/a", s"$tmp/b"))
+    assert(err.getMessage.contains("headline"), err.getMessage)
+    FsOps.rm(spark, tmp)
+  }
+
   test("Tables.sequenceFile round-trips Text/Text pairs (S2 source parity)") {
     val dir = java.nio.file.Files.createTempDirectory("seqfile").toString + "/data"
     val in = Seq(("k1", "v1"), ("k2", "v2"), ("k3", "with spaces\tand tabs"))

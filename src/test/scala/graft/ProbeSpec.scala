@@ -35,6 +35,9 @@ class ProbeSpec extends AnyFunSuite {
     val tasks = """TOTAL .* tasks=\s*(\d+)""".r.findFirstMatchIn(out)
       .map(_.group(1).toInt)
     assert(tasks.exists(_ > 0), out)
+    val compiles = """TOTAL .* compiles=\s*(\S+)""".r.findFirstMatchIn(out)
+      .flatMap(_.group(1).toIntOption)
+    assert(compiles.exists(_ >= 0), out)
   }
 
   test("bad input is refused with a message naming it") {
