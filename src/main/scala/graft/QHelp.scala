@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{FsOps, Tables}
 import graft.ops._
+import graft.streaming.DeltaState
+import graft.streaming.DeltaState.DeltaFoldSpec
 
 /** Shared helpers of the per-family query registries: testdata table
-  * accessors, scratch-dir plumbing, and the oracle-SQL fragments used
-  * by more than one family. */
+  * accessors, scratch-dir plumbing, staged CDC feeds, and the
+  * oracle-SQL fragments used by more than one family. */
 private[graft] object QHelp {
 
 
@@ -212,7 +214,9 @@ private[graft] object QHelp {
 
   /** Cluster-valid scratch dir: rooted at the session's warehouse dir
     * (a shared filesystem on a real cluster — a relative local path
-    * would resolve per-node and break any read-back), keyed by PID so
+    * would resolve per-node and break any read-back; `Session.local`
+    * sets an absolute one, so the working directory never roots
+    * scratch), keyed by PID so
     * concurrent processes don't race (overwrite-while-read), while
     * staying self-overwriting within one process so bench loops don't
     * accumulate dirs without bound.
@@ -220,6 +224,70 @@ private[graft] object QHelp {
   private[graft] def tmpDir(s: SparkSession, name: String): String = {
     val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
     s"$wh/graft_tmp/${name}_${ProcessHandle.current().pid()}"
+  }
+
+
+  /** Stage a feed and run one stream leg per slice. Each slice is
+    * written to `stageDir` as ONE file (one micro-batch per leg): the
+    * first overwrites, later ones append. The stream schema is read
+    * once, from the first file's footer on the driver, so staging
+    * launches one job per slice and nothing else. After each write,
+    * `leg(stream, resume)` runs on a fresh file stream over the whole
+    * dir, with `resume = false` for the first leg only; a resumed leg
+    * keeps its checkpoint and so reads only the new file. Returns the
+    * last leg's result.
+    */
+  private[graft] def stagedLegs[T](s: SparkSession, stageDir: String,
+                                   slices: DataFrame*)
+                                  (leg: (DataFrame, Boolean) => T): T = {
+    require(slices.nonEmpty, "stagedLegs: no slices")
+    lazy val schema = FsOps.readParquet(s, stageDir).schema
+    slices.zipWithIndex.map { case (slice, i) =>
+      slice.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
+        .parquet(stageDir)
+      leg(s.readStream.schema(schema).parquet(stageDir), i > 0)
+    }.last
+  }
+
+  /** One slice of a CDC feed in the row format every delta lifecycle
+    * query stages: `op` ("add" or "del") followed by `df`'s columns,
+    * the adds being `df`'s rows with `idCol % 20 == addMod` and the
+    * dels those with `idCol % 20 == delMod`. Dels carry their payload
+    * too, so a signed fold can recompute what a retraction removes.
+    */
+  private[graft] def cdcSlice(df: DataFrame, idCol: String,
+                              addMod: Long, delMod: Long): DataFrame = {
+    def tagged(op: String, m: Long) = df.filter(col(idCol) % 20 === m)
+      .select(lit(op).as("op") +: df.columns.map(col): _*)
+    tagged("add", addMod).unionByName(tagged("del", delMod))
+  }
+
+  /** The rows of a staged CDC batch with the given `op`, without it. */
+  private[graft] def cdcRows(batch: DataFrame, op: String): DataFrame =
+    batch.filter(col("op") === op).drop("op")
+
+  /** The fact-store fold of a CDC feed: adds append `derive` of the add
+    * rows, dels tombstone the del rows' `idCol`. */
+  private[graft] def cdcFold(idCol: String)
+                            (derive: DataFrame => DataFrame): DeltaFoldSpec =
+    DeltaFoldSpec(add = b => derive(cdcRows(b, "add")),
+      del = Some(b => cdcRows(b, "del").select(col(idCol))))
+
+  /** Run `probe` on every micro-batch of `src` and keep its output as an
+    * add-only DeltaState store under `outDir`, returning the resolved
+    * output. The store's v0 base is the probe's empty output: its schema
+    * comes from analysing `probe` over an empty batch, so no job runs
+    * beyond the one that writes it. Resume contract as
+    * [[DeltaState.foreachBatchDeltaFold]].
+    */
+  private[graft] def probeFold(src: DataFrame, outDir: String,
+                               resume: Boolean = false)
+                              (probe: DataFrame => DataFrame): DataFrame = {
+    val s = src.sparkSession
+    def empty(schema: org.apache.spark.sql.types.StructType) =
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    DeltaState.foreachBatchDeltaFold(src, empty(probe(empty(src.schema)).schema),
+      outDir, DeltaFoldSpec(add = probe), resume)
   }
 
 

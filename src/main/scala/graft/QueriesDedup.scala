@@ -1021,13 +1021,10 @@ private[graft] object QueriesDedup {
         merge = df => df.groupBy(col("fp")).agg(sum(col("occ")).as("occ"))
           .filter(col("occ") =!= 0))
       val init = DedupOps.spanIndex(corpus, "text", "doc_id", n = 10)
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, feedSlice(0L, 7L), feedSlice(10L, 17L)) {
+        (src, resume) =>
+          DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec, resume)
+      }
       val batch = all.filter(col("doc_id") % 10 === 5)
       def probed(phase: String) = DedupOps.spanDedupIncremental(
           batch, spec.resolve(s, stateDir), "text", "doc_id", n = 10)
@@ -1333,7 +1330,6 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.DeltaFoldSpec
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       def segOf(df: org.apache.spark.sql.DataFrame) =
@@ -1350,24 +1346,15 @@ private[graft] object QueriesDedup {
       // recomputes the deleted docs' segment rows batch-sized
       val stageDir = tmpDir(s, "d03p_feed")
       val stateDir = tmpDir(s, "d03p_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        all.filter($"doc_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"doc_id", $"text")
-          .unionByName(all.filter($"doc_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"doc_id", $"text"))
-      val spec = DeltaFoldSpec(
-        add = b => segOf(b.filter($"op" === "add").select($"doc_id", $"text")),
-        del = Some(b => b.filter($"op" === "del").select($"doc_id")))
+      val feed = all.select($"doc_id", $"text")
+      val spec = cdcFold("doc_id")(segOf)
       // the delta store holds ONLY the overlay — its base is an empty
       // relation; the real base is the bucketed table above
       val emptySeg = segOf(all.limit(0))
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptySeg, stateDir, spec)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptySeg, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
+          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchDeltaFold(src, emptySeg, stateDir, spec, resume)
+      }
       val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
       val delDocs = all.filter($"doc_id" % 10 === 7).select($"doc_id", $"text")
       val effStats = DedupOps.simhashSegmentStatsMerge(
@@ -1411,7 +1398,7 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.{DeltaFoldSpec, MergeFoldSpec, NamedDeltaStore}
+      import graft.streaming.DeltaState.{MergeFoldSpec, NamedDeltaStore}
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       def segOf(df: org.apache.spark.sql.DataFrame) =
@@ -1424,19 +1411,11 @@ private[graft] object QueriesDedup {
       val stageDir = tmpDir(s, "d03sp_feed")
       val stateDir = tmpDir(s, "d03sp_state")
       val statsStateDir = tmpDir(s, "d03sp_stats_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        all.filter($"doc_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"doc_id", $"text")
-          .unionByName(all.filter($"doc_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"doc_id", $"text"))
-      val segSpec = DeltaFoldSpec(
-        add = b => segOf(b.filter($"op" === "add").select($"doc_id", $"text")),
-        del = Some(b => b.filter($"op" === "del").select($"doc_id")))
+      val feed = all.select($"doc_id", $"text")
+      val segSpec = cdcFold("doc_id")(segOf)
       val statsSpec = MergeFoldSpec(
-        partial = b => DedupOps.simhashSegmentStats(
-            segOf(b.filter($"op" === "add").select($"doc_id", $"text")))
-          .unionByName(DedupOps.simhashSegmentStats(
-              segOf(b.filter($"op" === "del").select($"doc_id", $"text")))
+        partial = b => DedupOps.simhashSegmentStats(segOf(cdcRows(b, "add")))
+          .unionByName(DedupOps.simhashSegmentStats(segOf(cdcRows(b, "del")))
             .select($"seg_idx", $"seg_val", (-$"bucket_n").as("bucket_n"))),
         merge = df => df.groupBy($"seg_idx", $"seg_val")
           .agg(sum($"bucket_n").as("bucket_n")).filter($"bucket_n" =!= 0))
@@ -1446,12 +1425,10 @@ private[graft] object QueriesDedup {
       val stores = Seq(
         NamedDeltaStore(stateDir, emptySeg, segSpec),
         NamedDeltaStore(statsStateDir, baseStats, statsSpec))
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchStoreFolds(src, stores)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      val fin = DeltaState.foreachBatchStoreFolds(src, stores, resume = true)
+      val fin = stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
+          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchStoreFolds(src, stores, resume)
+      }
       val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
       // the cap comes ENTIRELY from the stored, batch-folded state
       val effStats = fin(statsStateDir)
@@ -1495,7 +1472,6 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.DeltaFoldSpec
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       val bandT = s"graft_mhband_delta_${ProcessHandle.current().pid()}"
@@ -1508,24 +1484,13 @@ private[graft] object QueriesDedup {
         .write.mode("overwrite").parquet(statsDir)
       val stageDir = tmpDir(s, "d02dp_feed")
       val stateDir = tmpDir(s, "d02dp_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        all.filter($"doc_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"doc_id", $"text")
-          .unionByName(all.filter($"doc_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"doc_id", $"text"))
-      val spec = DeltaFoldSpec(
-        add = b => DedupOps.minhashIndex(
-          b.filter($"op" === "add").select($"doc_id", $"text"),
-          "text", "doc_id"),
-        del = Some(b => b.filter($"op" === "del").select($"doc_id")))
+      val feed = all.select($"doc_id", $"text")
+      val spec = cdcFold("doc_id")(DedupOps.minhashIndex(_, "text", "doc_id"))
       val emptyBands = DedupOps.minhashIndex(all.limit(0), "text", "doc_id")
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
+          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec, resume)
+      }
       val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
       val delDocs = all.filter($"doc_id" % 10 === 7).select($"doc_id", $"text")
       val overlayDocs = all.filter($"doc_id" % 10 === 0)
@@ -1574,7 +1539,7 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.{DeltaFoldSpec, MergeFoldSpec, NamedDeltaStore}
+      import graft.streaming.DeltaState.{MergeFoldSpec, NamedDeltaStore}
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       def bandsOf(df: org.apache.spark.sql.DataFrame) =
@@ -1586,19 +1551,11 @@ private[graft] object QueriesDedup {
       val stageDir = tmpDir(s, "d02sp_feed")
       val stateDir = tmpDir(s, "d02sp_state")
       val statsStateDir = tmpDir(s, "d02sp_stats_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        all.filter($"doc_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"doc_id", $"text")
-          .unionByName(all.filter($"doc_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"doc_id", $"text"))
-      val bandSpec = DeltaFoldSpec(
-        add = b => bandsOf(b.filter($"op" === "add").select($"doc_id", $"text")),
-        del = Some(b => b.filter($"op" === "del").select($"doc_id")))
+      val feed = all.select($"doc_id", $"text")
+      val bandSpec = cdcFold("doc_id")(bandsOf)
       val statsSpec = MergeFoldSpec(
-        partial = b => DedupOps.minhashBucketStats(
-            bandsOf(b.filter($"op" === "add").select($"doc_id", $"text")))
-          .unionByName(DedupOps.minhashBucketStats(
-              bandsOf(b.filter($"op" === "del").select($"doc_id", $"text")))
+        partial = b => DedupOps.minhashBucketStats(bandsOf(cdcRows(b, "add")))
+          .unionByName(DedupOps.minhashBucketStats(bandsOf(cdcRows(b, "del")))
             .select($"band_idx", $"band_hash", (-$"bucket_n").as("bucket_n"))),
         merge = df => df.groupBy($"band_idx", $"band_hash")
           .agg(sum($"bucket_n").as("bucket_n")).filter($"bucket_n" =!= 0))
@@ -1608,12 +1565,10 @@ private[graft] object QueriesDedup {
       val stores = Seq(
         NamedDeltaStore(stateDir, emptyBands, bandSpec),
         NamedDeltaStore(statsStateDir, baseStats, statsSpec))
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchStoreFolds(src, stores)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      val fin = DeltaState.foreachBatchStoreFolds(src, stores, resume = true)
+      val fin = stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
+          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchStoreFolds(src, stores, resume)
+      }
       val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
       val overlayDocs = all.filter($"doc_id" % 10 === 0)
         .select($"doc_id", $"text")
@@ -1661,7 +1616,6 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.DeltaFoldSpec
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       val pid = ProcessHandle.current().pid()
@@ -1672,24 +1626,13 @@ private[graft] object QueriesDedup {
       val base = Bucketing.table(s, gen1T)
       val stageDir = tmpDir(s, "d02rc_feed")
       val stateDir = tmpDir(s, "d02rc_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        all.filter($"doc_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"doc_id", $"text")
-          .unionByName(all.filter($"doc_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"doc_id", $"text"))
-      val spec = DeltaFoldSpec(
-        add = b => DedupOps.minhashIndex(
-          b.filter($"op" === "add").select($"doc_id", $"text"),
-          "text", "doc_id"),
-        del = Some(b => b.filter($"op" === "del").select($"doc_id")))
+      val feed = all.select($"doc_id", $"text")
+      val spec = cdcFold("doc_id")(DedupOps.minhashIndex(_, "text", "doc_id"))
       val emptyBands = DedupOps.minhashIndex(all.limit(0), "text", "doc_id")
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
+          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec, resume)
+      }
       // the RE-SHARD: gen-2 = gen-1's resolved view, re-bucketed at
       // double the count — band rows are facts, so no text is read
       // and nothing is re-shingled

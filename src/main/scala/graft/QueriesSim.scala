@@ -216,7 +216,6 @@ private[graft] object QueriesSim {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.DeltaFoldSpec
       val e = emb(s, d)
       val corpus = e.filter($"vec_id" % 10 =!= 0)
       val cb = SimOps.lowestIdCodebook(corpus, "vec_id", "embedding", 16)
@@ -227,24 +226,14 @@ private[graft] object QueriesSim {
       val base = Bucketing.table(s, tbl)
       val stageDir = tmpDir(s, "a03dp_feed")
       val stateDir = tmpDir(s, "a03dp_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        e.filter($"vec_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"vec_id", $"embedding")
-          .unionByName(e.filter($"vec_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"vec_id", $"embedding"))
-      val spec = DeltaFoldSpec(
-        add = b => SimOps.ivfIndex(
-          b.filter($"op" === "add").select($"vec_id", $"embedding"),
-          "vec_id", "embedding", cb),
-        del = Some(b => b.filter($"op" === "del").select($"vec_id")))
+      val feed = e.select($"vec_id", $"embedding")
+      val spec = cdcFold("vec_id")(
+        SimOps.ivfIndex(_, "vec_id", "embedding", cb))
       val emptyIdx = SimOps.ivfIndex(e.limit(0), "vec_id", "embedding", cb)
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, cdcSlice(feed, "vec_id", 0L, 7L),
+          cdcSlice(feed, "vec_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec, resume)
+      }
       val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
       // tombstoned vectors don't query (the oracle's probe side is the
       // net corpus — a taken-down doc has no business probing either)
@@ -288,7 +277,6 @@ private[graft] object QueriesSim {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.DeltaFoldSpec
       val e = emb(s, d)
       val corpus = e.filter($"vec_id" % 10 =!= 0)
       val cb1 = SimOps.lowestIdCodebook(corpus, "vec_id", "embedding", 16)
@@ -300,24 +288,14 @@ private[graft] object QueriesSim {
       val base = Bucketing.table(s, tbl1)
       val stageDir = tmpDir(s, "a03rc_feed")
       val stateDir = tmpDir(s, "a03rc_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        e.filter($"vec_id" % 20 === addMod)
-          .select(lit("add").as("op"), $"vec_id", $"embedding")
-          .unionByName(e.filter($"vec_id" % 20 === delMod)
-            .select(lit("del").as("op"), $"vec_id", $"embedding"))
-      val spec = DeltaFoldSpec(
-        add = b => SimOps.ivfIndex(
-          b.filter($"op" === "add").select($"vec_id", $"embedding"),
-          "vec_id", "embedding", cb1),
-        del = Some(b => b.filter($"op" === "del").select($"vec_id")))
+      val feed = e.select($"vec_id", $"embedding")
+      val spec = cdcFold("vec_id")(
+        SimOps.ivfIndex(_, "vec_id", "embedding", cb1))
       val emptyIdx = SimOps.ivfIndex(e.limit(0), "vec_id", "embedding", cb1)
-      feedSlice(0L, 7L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec)
-      feedSlice(10L, 17L).coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, cdcSlice(feed, "vec_id", 0L, 7L),
+          cdcSlice(feed, "vec_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec, resume)
+      }
       // RETRAIN: the net corpus is gen-1's own resolved view — the
       // assignment rows carry their vectors, so nothing re-reads the
       // source table

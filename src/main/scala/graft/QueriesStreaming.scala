@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{FsOps, Tables}
 import graft.ops._
 import graft.QHelp._
 
@@ -90,7 +90,7 @@ private[graft] object QueriesStreaming {
             .withColumn("ts", lit(maxSec + 7 * 24 * 3600).cast("timestamp")))
         .coalesce(1)
         .write.mode("overwrite").parquet(stageDir)
-      val src = StreamingOps.eventsStream(s, stageDir, s.read.parquet(stageDir).schema)
+      val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val sessions = StreamingOps.statefulSessions(
         s, src, gapSec = 1800, watermark = "3650 days")
       val sink = runParityStream(s, sessions, "stream_sessions")
@@ -126,7 +126,7 @@ private[graft] object QueriesStreaming {
       val stageDir = tmpDir(s, "stream_dedup_events")
       batch.write.mode("overwrite").parquet(stageDir)
       batch.write.mode("append").parquet(stageDir)
-      val src = StreamingOps.eventsStream(s, stageDir, s.read.parquet(stageDir).schema)
+      val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val deduped = StreamingOps.streamingDedup(src, watermark = "3650 days")
       val sink = runParityStream(s, deduped, "stream_dedup")
       // pin + drop the memory-sink view (same hygiene as st01)
@@ -160,7 +160,7 @@ private[graft] object QueriesStreaming {
       val stageDir = tmpDir(s, "stream_ssj_events")
       // single part file = single micro-batch (same note as st01)
       batch.coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val src = StreamingOps.eventsStream(s, stageDir, s.read.parquet(stageDir).schema)
+      val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       // parity harness: watermark pushed past the data span so no row
       // can be late-dropped; production uses the real lateness bound
       val joined = StreamingOps.clickPurchaseJoin(s,
@@ -210,7 +210,7 @@ private[graft] object QueriesStreaming {
       val batch = ev(s, d).select($"ts", $"event_type", $"value")
       val stageDir = tmpDir(s, "stream_tumbling_events")
       batch.coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val src = StreamingOps.eventsStream(s, stageDir, s.read.parquet(stageDir).schema)
+      val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val windows = StreamingOps.tumblingCounts(src, "1 hour", watermark = "2 hours")
       val sink = runParityStream(s, windows, "stream_tumbling", mode = "complete")
       // pin + drop the memory-sink view (same hygiene as st01)
@@ -245,7 +245,7 @@ private[graft] object QueriesStreaming {
       val batch = ev(s, d).select($"ts", $"event_type", $"value")
       val stageDir = tmpDir(s, "stream_static_events")
       batch.coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val src = StreamingOps.eventsStream(s, stageDir, s.read.parquet(stageDir).schema)
+      val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val dim = ev(s, d).select($"event_type").distinct()
         .withColumn("type_tier",
           when(length($"event_type") >= 6, "long").otherwise("short"))
@@ -286,7 +286,7 @@ private[graft] object QueriesStreaming {
       val batch = docs(s, d).select($"doc_id", $"text")
       val stageDir = tmpDir(s, "stream_quality_docs")
       batch.coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val src = StreamingOps.docsStream(s, stageDir, s.read.parquet(stageDir).schema)
+      val src = StreamingOps.docsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val scored = TextOps.qualityModel(src)
         .select($"doc_id", $"score", $"keep")
       val sink = runParityStream(s, scored, "stream_quality", mode = "append")
@@ -307,9 +307,10 @@ private[graft] object QueriesStreaming {
     * stream in MULTIPLE micro-batches (4 files, maxFilesPerTrigger=2),
     * each probed via foreachBatch against the STORED simhash index of
     * the corpus — the dedup_simhash_incremental pipeline per batch,
-    * outputs appended. Because the probe's per-doc output depends
-    * only on the doc and the index, micro-batch boundaries cannot
-    * change the result, so the appended union is graded against the
+    * outputs folded into an add-only DeltaState store. Because the
+    * probe's per-doc output depends only on the doc and the index,
+    * micro-batch boundaries cannot change the result, so the resolved
+    * store is graded against the
     * SAME one-shot oracle as the batch query (shared
     * simhashIncrementalSql — batch query, streaming query, and oracle
     * share one definition).
@@ -318,7 +319,6 @@ private[graft] object QueriesStreaming {
     "streaming_simhash_ingest_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
       val all = docs(s, d)
       val stageDir = tmpDir(s, "stream_sh_batch")
       all.filter($"doc_id" % 10 === 0).repartition(4)
@@ -326,14 +326,12 @@ private[graft] object QueriesStreaming {
       val idxDir = tmpDir(s, "stream_sh_index")
       DedupOps.simhashIndex(all.filter($"doc_id" % 10 =!= 0), "text", "doc_id")
         .write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
-      val src = s.readStream.schema(s.read.parquet(stageDir).schema)
+      val index = FsOps.readParquet(s, idxDir)
+      val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
-      val outDir = tmpDir(s, "stream_sh_out")
-      StreamingOps.foreachBatchIngest(src, outDir) { batch =>
+      probeFold(src, tmpDir(s, "stream_sh_out")) { batch =>
         DedupOps.simhashNearDupIncremental(batch, index, "text", "doc_id")
-      }
-      StreamingOps.readIngestOutput(s, outDir).orderBy($"doc_id")
+      }.orderBy($"doc_id")
     },
     Some(QueriesDedup.simhashIncrementalSql(
       "doc_id % 10 <> 0", "doc_id % 10 = 0")),
@@ -348,10 +346,11 @@ private[graft] object QueriesStreaming {
     * stream in multiple micro-batches (4 files,
     * maxFilesPerTrigger=2), each probed via foreachBatch against the
     * STORED band index of the corpus — dedup_minhash_incremental's
-    * pipeline per batch, outputs appended. The probe's per-doc output
-    * depends only on the doc, the index, and the corpus, so
-    * micro-batch boundaries cannot change the result: the appended
-    * union is graded against the SAME one-shot oracle as the batch
+    * pipeline per batch, outputs folded into an add-only DeltaState
+    * store. The probe's per-doc output depends only on the doc, the
+    * index, and the corpus, so micro-batch boundaries cannot change
+    * the result: the resolved store is graded against the SAME
+    * one-shot oracle as the batch
     * probe (shared minhashIncrementalSql — batch query, streaming
     * query, and oracle share one definition).
     */
@@ -359,7 +358,6 @@ private[graft] object QueriesStreaming {
     "streaming_minhash_ingest_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0)
       val stageDir = tmpDir(s, "stream_mh_batch")
@@ -368,15 +366,13 @@ private[graft] object QueriesStreaming {
       val idxDir = tmpDir(s, "stream_mh_index")
       DedupOps.minhashIndex(corpus, "text", "doc_id")
         .write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
-      val src = s.readStream.schema(s.read.parquet(stageDir).schema)
+      val index = FsOps.readParquet(s, idxDir)
+      val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
-      val outDir = tmpDir(s, "stream_mh_out")
-      StreamingOps.foreachBatchIngest(src, outDir) { batch =>
+      probeFold(src, tmpDir(s, "stream_mh_out")) { batch =>
         DedupOps.minhashNearDupIndexed(batch, index, corpus,
           "text", "doc_id")
-      }
-      StreamingOps.readIngestOutput(s, outDir).orderBy($"doc_id")
+      }.orderBy($"doc_id")
     },
     Some(QueriesDedup.minhashIncrementalSql(
       "doc_id % 10 <> 0", "doc_id % 10 = 0")),
@@ -388,17 +384,16 @@ private[graft] object QueriesStreaming {
     * micro-batches, each probed via foreachBatch against the STORED
     * IVF assignment index of the full corpus under its pinned
     * lowest-id codebook — ann_ivf_topk's probe per batch, outputs
-    * appended. Each query's top-k depends only on the query, the
-    * index, and the codebook (per-row w.r.t. its batch, the
-    * foreachBatchIngest contract), so the appended union is graded
-    * against the SAME one-shot oracle as the batch probe (shared
+    * folded into an add-only DeltaState store. Each query's top-k
+    * depends only on the query, the index, and the codebook (per-row
+    * w.r.t. its batch), so the resolved store is graded against the
+    * SAME one-shot oracle as the batch probe (shared
     * ivfProbeOracleSql).
     */
   private val st09 = Q(
     "streaming_ivf_ingest_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
       val e = emb(s, d)
       val cb = SimOps.lowestIdCodebook(e, "vec_id", "embedding", 16)
       val stageDir = tmpDir(s, "stream_ivf_queries")
@@ -407,14 +402,12 @@ private[graft] object QueriesStreaming {
       val idxDir = tmpDir(s, "stream_ivf_index")
       SimOps.ivfIndex(e, "vec_id", "embedding", cb)
         .write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
-      val src = s.readStream.schema(s.read.parquet(stageDir).schema)
+      val index = FsOps.readParquet(s, idxDir)
+      val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
-      val outDir = tmpDir(s, "stream_ivf_out")
-      StreamingOps.foreachBatchIngest(src, outDir) { batch =>
+      probeFold(src, tmpDir(s, "stream_ivf_out")) { batch =>
         SimOps.ivfTopKIndexed(batch, index, "vec_id", "embedding", cb, k = 5)
-      }
-      StreamingOps.readIngestOutput(s, outDir).orderBy($"qid", $"rnk")
+      }.orderBy($"qid", $"rnk")
     },
     Some(QueriesSim.ivfProbeOracleSql("", "")),
     writes = true)
@@ -448,7 +441,7 @@ private[graft] object QueriesStreaming {
       val stageDir = tmpDir(s, "stream_del_ids")
       all.filter($"doc_id" % 10 === 0).select($"doc_id").repartition(4)
         .write.mode("overwrite").parquet(stageDir)
-      val src = s.readStream.schema(s.read.parquet(stageDir).schema)
+      val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
       // a takedown feed adds nothing: every trigger's add dir is empty
       val noAdds = s.createDataFrame(
@@ -501,21 +494,18 @@ private[graft] object QueriesStreaming {
       val stateDir = tmpDir(s, "stream_resume_state")
       val emptyState = s.range(0)
         .select($"id".cast("int").as("bin"), $"id".as("n"))
-      // leg 1: only the Jan 16–24 window staged (single part file =
-      // single micro-batch, the st01 note); stream runs and stops
-      e.filter($"ts" >= "2024-01-16 00:00:00" && $"ts" < "2024-01-24 00:00:00")
-        .select($"value").coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
       val spec = MergeFoldSpec(partial = histOf,
         merge = df => df.groupBy($"bin").agg(sum($"n").as("n")))
-      DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec)
-      // interrupt window: the ≥ Jan 24 file lands; leg 2 resumes off
+      // leg 1: only the Jan 16–24 window staged; stream runs and stops.
+      // Interrupt window: the ≥ Jan 24 file lands; leg 2 resumes off
       // the kept checkpoint and folds ONLY the new file
-      e.filter($"ts" >= "2024-01-24 00:00:00")
-        .select($"value").coalesce(1).write.mode("append").parquet(stageDir)
-      val cur = DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir,
-        spec, resume = true)
+      val cur = stagedLegs(s, stageDir,
+          e.filter($"ts" >= "2024-01-16 00:00:00" && $"ts" < "2024-01-24 00:00:00")
+            .select($"value"),
+          e.filter($"ts" >= "2024-01-24 00:00:00").select($"value")) {
+        (src, resume) =>
+          DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec, resume)
+      }
       val refState = histOf(e.filter($"ts" < "2024-01-16 00:00:00"))
       LibOps.psiFromStates(refState, cur, nbins = 20).orderBy($"bin")
     },
@@ -561,7 +551,7 @@ private[graft] object QueriesStreaming {
       val probe = all.filter($"doc_id" % 10 === 5)
       val stageDir = tmpDir(s, "cap_feed")
       feed.repartition(2).write.mode("overwrite").parquet(stageDir)
-      val src = s.readStream.schema(s.read.parquet(stageDir).schema)
+      val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
       // the t21q digit-gated provenance label (one definition of the
       // degradation semantics would be nicer, but the gate is 3 lines
@@ -786,14 +776,14 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_ingest_resume_parity — RESUME for the PROBE path
-    * (round 10: the foreachBatchIngest twin of
-    * streaming_fold_resume_parity — with it, BOTH streaming
-    * deployments carry a graded stop-anywhere/restart property): the
-    * %20==0 half of the ingest batch is staged and probed against the
-    * stored simhash index under AvailableNow, the stream STOPS, the
-    * %20==10 half lands, and the re-invocation with `resume = true`
-    * keeps the checkpoint — only the new file is probed, its outputs
-    * append, and the union must equal the one-shot incremental over
+    * (the probe twin of streaming_fold_resume_parity — with it, BOTH
+    * streaming deployments carry a graded stop-anywhere/restart
+    * property): the %20==0 half of the ingest batch is staged and
+    * probed against the stored simhash index under AvailableNow, the
+    * stream STOPS, the %20==10 half lands, and the re-invocation with
+    * `resume = true` keeps the checkpoint — only the new file is
+    * probed, its outputs fold into the same add-only DeltaState store,
+    * and the resolved store must equal the one-shot incremental over
     * the full %10==0 batch (the shared simhashIncrementalSql chain).
     * A reprocessed first file would duplicate its rows (hash fails on
     * row count); a dropped second file loses its docs.
@@ -802,27 +792,18 @@ private[graft] object QueriesStreaming {
     "streaming_ingest_resume_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
       val all = docs(s, d)
       val idxDir = tmpDir(s, "stream_ri_index")
       DedupOps.simhashIndex(all.filter($"doc_id" % 10 =!= 0), "text", "doc_id")
         .write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
-      val stageDir = tmpDir(s, "stream_ri_batch")
+      val index = FsOps.readParquet(s, idxDir)
       val outDir = tmpDir(s, "stream_ri_out")
-      all.filter($"doc_id" % 20 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      def run(resume: Boolean): Unit =
-        StreamingOps.foreachBatchIngest(src, outDir, resume) { batch =>
+      stagedLegs(s, tmpDir(s, "stream_ri_batch"),
+          all.filter($"doc_id" % 20 === 0), all.filter($"doc_id" % 20 === 10)) {
+        (src, resume) => probeFold(src, outDir, resume) { batch =>
           DedupOps.simhashNearDupIncremental(batch, index, "text", "doc_id")
         }
-      run(resume = false)
-      all.filter($"doc_id" % 20 === 10).coalesce(1)
-        .write.mode("append").parquet(stageDir)
-      run(resume = true)
-      StreamingOps.readIngestOutput(s, outDir).orderBy($"doc_id")
+      }.orderBy($"doc_id")
     },
     Some(QueriesDedup.simhashIncrementalSql(
       "doc_id % 10 <> 0", "doc_id % 10 = 0")),
@@ -858,7 +839,6 @@ private[graft] object QueriesStreaming {
     (s, d) => {
       import s.implicits._
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.DeltaFoldSpec
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       val stageDir = tmpDir(s, "stream_delta_feed")
@@ -869,25 +849,15 @@ private[graft] object QueriesStreaming {
           .unionByName(all.filter($"doc_id" % 20 === delMod)
             .select(lit("del").as("op"), $"doc_id",
               lit(null).cast("string").as("text")))
-      val spec = DeltaFoldSpec(
-        add = b => DedupOps.simhashIndex(
-          b.filter($"op" === "add").select($"doc_id", $"text"),
-          "text", "doc_id"),
-        del = Some(b => b.filter($"op" === "del").select($"doc_id")))
-      // leg 1: only the first CDC file staged (single part file =
-      // single micro-batch, the st01 note); stream runs and stops
-      feedSlice(0L, 7L).coalesce(1)
-        .write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
+      val spec = cdcFold("doc_id")(DedupOps.simhashIndex(_, "text", "doc_id"))
       val init = DedupOps.simhashIndex(corpus, "text", "doc_id")
-      DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec)
-      // interrupt window: the second CDC file lands; leg 2 resumes off
+      // leg 1: only the first CDC file staged; stream runs and stops.
+      // Interrupt window: the second CDC file lands; leg 2 resumes off
       // the kept checkpoint and publishes ONLY the new file's delta
-      feedSlice(10L, 17L).coalesce(1)
-        .write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec,
-        resume = true)
+      stagedLegs(s, stageDir, feedSlice(0L, 7L), feedSlice(10L, 17L)) {
+        (src, resume) =>
+          DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec, resume)
+      }
       val probe = all.filter($"doc_id" % 10 === 5)
       def probed(phase: String) = DedupOps.simhashNearDupIncremental(
           probe, DeltaState.read(s, stateDir), "text", "doc_id")
@@ -958,18 +928,15 @@ private[graft] object QueriesStreaming {
       def slice(lo: String, hi: String, w: Long) =
         e.filter($"ts" >= lo && $"ts" < hi)
           .select($"value", lit(w).as("w"))
-      // leg 1: the Jan 16–24 window lands; stream runs and stops
-      slice("2024-01-16 00:00:00", "2024-01-24 00:00:00", 1L)
-        .coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec)
-      // interrupt window: batch 1 adds ≥ Jan 24 AND retracts Jan 16–20
-      slice("2024-01-24 00:00:00", "2124-01-01 00:00:00", 1L)
-        .unionByName(slice("2024-01-16 00:00:00", "2024-01-20 00:00:00", -1L))
-        .coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec,
-        resume = true)
+      // leg 1: the Jan 16–24 window lands; stream runs and stops.
+      // Interrupt window: batch 1 adds ≥ Jan 24 AND retracts Jan 16–20
+      stagedLegs(s, stageDir,
+          slice("2024-01-16 00:00:00", "2024-01-24 00:00:00", 1L),
+          slice("2024-01-24 00:00:00", "2124-01-01 00:00:00", 1L)
+            .unionByName(slice("2024-01-16 00:00:00", "2024-01-20 00:00:00", -1L))) {
+        (src, resume) =>
+          DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec, resume)
+      }
       val refState = LibOps.histState(
         e.filter($"ts" < "2024-01-16 00:00:00"), "value",
         lo = 0.0, width = 25.0, nbins = 20)

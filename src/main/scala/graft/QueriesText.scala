@@ -356,18 +356,14 @@ private[graft] object QueriesText {
         scored.filter(col("doc_id") % 10 =!= 0), "score", "y")
       def slice(m: Long, w: Long) = scored.filter(col("doc_id") % 20 === m)
         .select(col("score"), col("y"), lit(w).as("w"))
-      // leg 1: batch 0 adds; stream stops
-      slice(0L, 1L).coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val schema = s.read.parquet(stageDir).schema
-      def src = s.readStream.schema(schema).parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec)
-      // leg 2 resumes: batch 1 adds % 20 == 10 and retracts % 10 == 7
-      slice(10L, 1L)
-        .unionByName(scored.filter(col("doc_id") % 10 === 7)
-          .select(col("score"), col("y"), lit(-1L).as("w")))
-        .coalesce(1).write.mode("append").parquet(stageDir)
-      DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec,
-        resume = true)
+      // leg 1: batch 0 adds; stream stops. Leg 2 resumes: batch 1 adds
+      // % 20 == 10 and retracts % 10 == 7
+      stagedLegs(s, stageDir, slice(0L, 1L),
+          slice(10L, 1L).unionByName(scored.filter(col("doc_id") % 10 === 7)
+            .select(col("score"), col("y"), lit(-1L).as("w")))) {
+        (src, resume) =>
+          DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec, resume)
+      }
       def probed(phase: String) =
         EvalOps.aucFromCounts(spec.resolve(s, stateDir))
           .select(lit(phase).as("phase"), col("n_pos"), col("n_neg"),

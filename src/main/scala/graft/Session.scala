@@ -17,7 +17,12 @@ object Session {
     *    casts and scan-level pushdown rely on;
     *  - `GraftExtensions`: the native kernels as SQL functions. It
     *    injects functions only, no optimizer rule, so DataFrame plans
-    *    are the same with or without it.
+    *    are the same with or without it;
+    *  - the warehouse, which roots every scratch dir (`QHelp.tmpDir`,
+    *    the iterative graph ops' staging, bucketed tables), at
+    *    `graft-warehouse` under `java.io.tmpdir`: Spark's default is
+    *    `spark-warehouse` under the working directory, so a run's
+    *    scratch would depend on where it was started.
     */
   def local(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -29,6 +34,8 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.warehouse.dir", new java.io.File(
+        System.getProperty("java.io.tmpdir"), "graft-warehouse").getAbsolutePath)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -67,13 +67,10 @@ object GraphOps {
   }
 
   /** Scratch dir for a bare call (no `stageDir`): rooted at the
-    * `graft.scratch.dir` session conf when set, else the session
-    * warehouse (both must be a shared filesystem on a real cluster —
-    * a relative local path would resolve per-node and break
-    * read-back; the conf exists for deployments whose warehouse
-    * location is NOT writable — an object-store managed warehouse or
-    * read-only metastore path — where a bare iterative call would
-    * otherwise fail at its first staging write). Keyed by a UUID so
+    * session warehouse (a shared filesystem on a real cluster — a
+    * relative local path would resolve per-node and break read-back;
+    * a deployment whose warehouse is not writable passes an explicit
+    * `stageDir`). Keyed by a UUID so
     * no two calls EVER alias — not PID+counter, which collides across
     * hosts sharing one warehouse FS (pid spaces are per-host and
     * every JVM counts from 1; an overwrite mid-lineage would break a
@@ -85,9 +82,7 @@ object GraphOps {
     * the JVM's lifetime; loops wanting zero residue should still pass
     * an explicit self-overwriting `stageDir`. */
   private def autoStageDir(spark: SparkSession, name: String): String = {
-    val root = spark.conf.getOption("graft.scratch.dir")
-      .getOrElse(spark.conf.get("spark.sql.warehouse.dir"))
-      .stripSuffix("/")
+    val root = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
     val dir = s"$root/graft_tmp/graph_${name}_${java.util.UUID.randomUUID().toString.take(12)}"
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -123,13 +118,13 @@ object GraphOps {
     *              the float-rounding class the integer form removes
     * @param stageDir scratch dir for the per-iteration lineage cut
     *              (see [[stage]]); None (the default) derives one from
-    *              `graft.scratch.dir` / the session warehouse
-    *              ([[autoStageDir]]). NOTE the eager-write semantics
-    *              every iterative op here shares: the call WRITES its
-    *              staged rounds at DataFrame-construction time (not at
-    *              first action), so the scratch root must be writable
-    *              when the call is made — set `graft.scratch.dir` on
-    *              deployments whose warehouse path is read-only.
+    *              the session warehouse ([[autoStageDir]]). NOTE the
+    *              eager-write semantics every iterative op here shares:
+    *              the call WRITES its staged rounds at
+    *              DataFrame-construction time (not at first action), so
+    *              the scratch root must be writable when the call is
+    *              made — pass `stageDir` on deployments whose warehouse
+    *              path is read-only.
     *              Staging is ALWAYS on, because the unstaged plan re-evaluates
     *              the rank chain ~2^iters times (measured: 192 logical
     *              scans for 3 rounds) and a blowup must not be
@@ -225,8 +220,8 @@ object GraphOps {
     * Output: (node, label) over edge ENDPOINTS only — isolated nodes
     * are trivially their own cluster; callers join back (the
     * dedupClusters convention). Eager-write semantics: stages rounds
-    * at construction time (the [[pageRank]] stageDir note — set
-    * `graft.scratch.dir` when the warehouse path is read-only).
+    * at construction time (the [[pageRank]] stageDir note — pass
+    * `stageDir` when the warehouse path is read-only).
     */
   def minLabelPropagate(edges: DataFrame, srcCol: String, dstCol: String,
                         iters: Int, stageDir: Option[String] = None): DataFrame = {
@@ -348,8 +343,8 @@ object GraphOps {
     * All-integer in, exact counts out: hash-gradeable, no tolerance.
     *
     * Eager-write + lifetime note: like every iterative op here the
-    * call stages rounds at construction time (set `graft.scratch.dir`
-    * when the warehouse path is read-only), and — unlike the others —
+    * call stages rounds at construction time (pass `stageDir` when
+    * the warehouse path is read-only), and — unlike the others —
     * an AUTO-derived dir gets no eager round cleanup, because the
     * returned plan reads EVERY staged round (each audit row diffs a
     * consecutive pair); the dir is delete-on-exit only. Long-lived

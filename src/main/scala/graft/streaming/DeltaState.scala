@@ -10,7 +10,7 @@ import graft.io.FsOps
 
 /** The one exactly-once commit protocol for streamed state: every
   * maintained index, sketch and aggregate folds its micro-batches in
-  * here. Each per-trigger write is proportional to the BATCH, never to
+  * here, and so does every ingest probe's output (an add-only store). Each per-trigger write is proportional to the BATCH, never to
   * the state — a 10-row takedown against a 100 TB index writes 10
   * rows:
   *

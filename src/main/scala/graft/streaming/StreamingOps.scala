@@ -12,6 +12,11 @@ import org.apache.spark.sql.types.StructType
   * At scale: watermarking bounds state; the windowed aggregate state
   * store is keyed by (window, extra keys) and pruned as the watermark
   * passes window ends.
+  *
+  * Nothing here writes files. Every stream whose output persists —
+  * folded index state and per-batch ingest-probe output alike — commits
+  * through [[DeltaState]]'s one `_COMMIT` protocol; an ingest probe's
+  * output is an add-only store (`DeltaFoldSpec(add = probe)`).
   */
 object StreamingOps {
 
@@ -210,90 +215,6 @@ object StreamingOps {
         col("click_ts").cast("long").as("click_ts_s"),
         col("purchase_ts").cast("long").as("purchase_ts_s"),
         col("purchase_value"))
-  }
-
-  /** Run a batch-defined INGEST PROBE per micro-batch (foreachBatch) —
-    * how the index-lifecycle ops (the minhash/simhash/IVF
-    * `*Incremental`/`*Indexed` probes, scoreCounts folds) deploy under
-    * Structured Streaming: each micro-batch is one ingest unit probed
-    * against a STATIC stored index; results append to `outDir` as
-    * parquet. Union-of-micro-batches ≡ one-shot parity holds whenever
-    * the probe's per-row output depends only on the row and the index
-    * — true for the simhash/minhash/IVF probes, whose candidates and
-    * verification never compare incoming docs to each other — so
-    * micro-batch boundaries cannot change the result, which is what
-    * the graded streaming parity asserts. `resume = false` (a fresh
-    * deployment) clears `outDir` and its checkpoint so the invocation
-    * processes from scratch; `resume = true` KEEPS both — the
-    * restarted stream skips every already-probed file and publishes
-    * only the new batches' outputs, so stop-anywhere/restart lands on
-    * the uninterrupted output set (graded by
-    * `streaming_ingest_resume_parity` — the probe twin of the
-    * [[DeltaState]] fold path's `streaming_fold_resume_parity`).
-    *
-    * EXACTLY-ONCE output (round 11, the round-10 advice finding: the
-    * previous plain `append` sink duplicated a batch's rows when a
-    * crash landed between the parquet append and the checkpoint
-    * commit): each batch publishes to its own batchId-keyed
-    * subdirectory `outDir/b{n}` in OVERWRITE mode, so a replayed
-    * batch rewrites the identical output instead of appending a
-    * second copy, and a crash mid-write leaves a partial dir without
-    * `_SUCCESS` that [[readIngestOutput]] never selects — the
-    * `_spark_metadata` manifest contract of the exactly-once file
-    * sink, carried by directory-level markers like
-    * [[DeltaState]]'s `_COMMIT`. The resume guard requires BOTH
-    * the checkpoint and `outDir` (a kept checkpoint with a deleted
-    * outDir would resume and silently lose the first leg's outputs).
-    */
-  def foreachBatchIngest(stream: DataFrame, outDir: String,
-                         resume: Boolean = false)
-                        (probe: DataFrame => DataFrame): Unit = {
-    val spark = stream.sparkSession
-    if (!resume) {
-      graft.io.FsOps.rm(spark, outDir)
-      graft.io.FsOps.rm(spark, outDir + "_ckpt")
-    } else require(graft.io.FsOps.exists(spark, outDir + "_ckpt") &&
-        graft.io.FsOps.exists(spark, outDir),
-      s"foreachBatchIngest: resume=true but checkpoint or output missing " +
-        s"under $outDir — a kept checkpoint with a lost outDir would " +
-        "resume and silently drop the already-committed batches' outputs")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyIngestBatch(outDir, batchId, batch.toDF(), probe)
-        ()
-      }
-      .option("checkpointLocation", outDir + "_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Publish ONE micro-batch's probe output under the batchId-keyed
-    * layout (package-visible so the spec can drive replay/crash cases
-    * directly): overwrite-mode into
-    * `outDir/b{batchId}` — replays rewrite identical bytes, partials
-    * carry no `_SUCCESS`.
-    */
-  private[graft] def applyIngestBatch(outDir: String, batchId: Long,
-                                      batch: DataFrame,
-                                      probe: DataFrame => DataFrame): Unit =
-    probe(batch).write.mode("overwrite").parquet(s"$outDir/b$batchId")
-
-  /** Read the union of all COMMITTED batch outputs of a
-    * [[foreachBatchIngest]] run: batchId-keyed subdirs with a
-    * `_SUCCESS` marker only — an uncommitted partial from a crash is
-    * invisible. The outputs are read as one relation without an
-    * inference job; every `b{n}`'s footer schema is resolved by name
-    * ([[graft.io.FsOps.readParquet]]), so a batch output whose columns
-    * drifted refuses instead of reading as nulls.
-    */
-  def readIngestOutput(spark: SparkSession, outDir: String): DataFrame = {
-    val dirs = graft.io.FsOps.ls(spark, outDir)
-      .filter(_.split('/').last.matches("b\\d+"))
-      .filter(d => graft.io.FsOps.exists(spark, s"$d/_SUCCESS"))
-    require(dirs.nonEmpty,
-      s"readIngestOutput: no committed batch outputs under $outDir")
-    graft.io.FsOps.readParquet(spark, dirs: _*)
   }
 
   /** Stream-static enrichment join — the remaining §2.9 join path

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.{Hygiene, Session, SparkEntry}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
@@ -25,8 +25,9 @@ import scala.collection.mutable.ArrayBuffer
   *    frame (`fn()`), planning it (`executedPlan`) and executing it
   *    (noop write, which includes the write command's own planning);
   *    then totals over every stage the run completed, build included,
-  *    with the Janino compiles the run paid (driver and tasks share the
-  *    local JVM's `CodegenMetrics`; a warm codegen cache pays none),
+  *    with the Spark jobs the run launched and the Janino compiles it
+  *    paid (driver and tasks share the local JVM's `CodegenMetrics`; a
+  *    warm codegen cache pays none),
   *    and the 15 stages with the most executor run time. This is the
   *    view `explain` cannot give: AQE picks partition counts at run time.
   *  - `audit`: the queries whose plan shrinks under `count()`
@@ -125,7 +126,9 @@ object Probe {
     // appended from the listener-bus thread, read and cleared here:
     // every access synchronizes on the buffer
     val done = ArrayBuffer.empty[St]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
         val m = i.taskMetrics
@@ -144,6 +147,7 @@ object Probe {
       // a straggler event from the last run must not land in this one
       Bridge.drainListenerBus(sc)
       done.synchronized(done.clear())
+      jobs.set(0)
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (df, build) = timed(SparkEntry.queries(name)(spark, sfDir))
       val (_, plan) = timed(df.queryExecution.executedPlan)
@@ -158,7 +162,7 @@ object Probe {
       println(f"  TOTAL run=${snap.map(_.runMs).sum}%8d ms " +
         f"cpu=${snap.map(_.cpuMs).sum}%8d ms tasks=${snap.map(_.tasks).sum}%5d " +
         f"in=${snap.map(_.recordsIn).sum}%11d out=${snap.map(_.recordsOut).sum}%11d " +
-        f"compiles=$compiles%5d")
+        f"jobs=${jobs.get}%4d compiles=$compiles%5d")
       snap.sortBy(-_.runMs).take(15).foreach { s =>
         println(f"  stage ${s.id}%3d wall=${s.wallMs}%6d ms run=${s.runMs}%6d ms " +
           f"cpu=${s.cpuMs}%6d ms tasks=${s.tasks}%3d in=${s.recordsIn}%9d " +

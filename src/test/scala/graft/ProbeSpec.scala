@@ -38,6 +38,9 @@ class ProbeSpec extends AnyFunSuite {
     val compiles = """TOTAL .* compiles=\s*(\S+)""".r.findFirstMatchIn(out)
       .flatMap(_.group(1).toIntOption)
     assert(compiles.exists(_ >= 0), out)
+    val jobs = """TOTAL .* jobs=\s*(\S+)""".r.findFirstMatchIn(out)
+      .flatMap(_.group(1).toIntOption)
+    assert(jobs.exists(_ >= 1), out)
   }
 
   test("bad input is refused with a message naming it") {

@@ -1382,10 +1382,21 @@ class PropertySpec extends AnyFunSuite {
         .filter(_._2 != 0).sorted),
       // no tombstone dir: add, _COMMIT per trigger
       stepsUnderTest = 2 + 2 + 2 + 1 + 1)
+    // add-only fact store (an ingest probe's output): each batch
+    // appends its probe rows, nothing retracts
+    val probed = Seq(100L to 102L, 103L to 103L, 104L to 105L, 106L to 107L)
+    val ingest = Law("AddOnlyDeltaFoldSpec",
+      DeltaFoldSpec(add = b => b.select($"id", ($"id" * 7).as("sig"))),
+      Seq((0L, 0L)).toDF("id", "sig"),
+      probed.map(_.toDF("id")),
+      probed.scanLeft(Seq((0L, 0L)))((st, ids) => st ++ ids.map(i => (i, i * 7)))
+        .map(_.sorted),
+      // add, _COMMIT per trigger, then the same compaction steps
+      stepsUnderTest = 2 + 2 + 2 + 1 + 1)
 
     def rows(df: DF): Seq[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    Seq(fact, agg).foreach { law =>
+    Seq(fact, agg, ingest).foreach { law =>
       def trigger(dir: String, n: Int): Unit = {
         DeltaState.applyDeltaBatch(spark, dir, n.toLong, law.batches(n), law.spec)
         if ((n + 1) % compactEvery == 0) law.spec.compactStore(spark, dir)

@@ -24,6 +24,13 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("scratch dirs are absolute and never under the working directory") {
+    val dir = new org.apache.hadoop.fs.Path(QHelp.tmpDir(spark, "probe"))
+    assert(dir.isAbsolute && dir.toUri.getPath.startsWith("/"), dir.toString)
+    val cwd = new java.io.File(System.getProperty("user.dir")).getAbsolutePath
+    assert(!dir.toUri.getPath.startsWith(cwd), s"$dir is under $cwd")
+  }
+
   test("entry returns rows (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

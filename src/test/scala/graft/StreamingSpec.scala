@@ -282,30 +282,48 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("applyIngestBatch: replays rewrite in place; partials are invisible to readIngestOutput") {
-    // the round-10 advice finding made structural: the probe path's
-    // sink used plain append, so a foreachBatch RETRY duplicated the
-    // batch's rows. With batchId-keyed overwrite dirs a replay rewrites
-    // identical output, and a crash mid-write leaves a partial without
-    // _SUCCESS that the committed-only reader never selects.
+  test("stagedLegs writes one file per slice and launches no schema job") {
+    // the stream schema comes from the first file's footer, so the only
+    // jobs are the slice writes; legs see a fresh stream, resume after
+    // the first
     import spark.implicits._
-    val outDir =
-      java.nio.file.Files.createTempDirectory("ingest_replay").toString + "/o"
-    val probe = (b: org.apache.spark.sql.DataFrame) =>
-      b.withColumn("y", $"id" * 2)
-    val b0 = Seq(1L, 2L).toDF("id")
-    StreamingOps.applyIngestBatch(outDir, 0L, b0, probe)
-    StreamingOps.applyIngestBatch(outDir, 0L, b0, probe) // replay: no dup
-    val b1 = Seq(3L).toDF("id")
-    StreamingOps.applyIngestBatch(outDir, 1L, b1, probe)
-    // crash mid-write of batch 2: data lands but no _SUCCESS marker
-    Seq(9L).toDF("id").withColumn("y", $"id" * 2)
-      .write.mode("overwrite").parquet(s"$outDir/b2")
-    graft.io.FsOps.rm(spark, s"$outDir/b2/_SUCCESS")
-    val got = StreamingOps.readIngestOutput(spark, outDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(got == Seq((1L, 2L), (2L, 4L), (3L, 6L)),
-      s"replayed or uncommitted batches leaked into the read: $got")
-    graft.io.FsOps.rm(spark, outDir)
+    val root = java.nio.file.Files.createTempDirectory("staged_legs").toString
+    val stage = s"$root/feed"
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Boolean, Boolean)]
+    val (last, jobs) = org.apache.spark.TestBus.jobsDuring(spark.sparkContext) {
+      QHelp.stagedLegs(spark, stage, Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+          Seq((3L, "c")).toDF("id", "v")) { (src, resume) =>
+        seen += ((resume, src.isStreaming))
+        src.columns.toSeq
+      }
+    }
+    assert(jobs == 2, s"staging two slices launched $jobs jobs")
+    assert(seen.toSeq == Seq((false, true), (true, true)))
+    assert(last == Seq("id", "v"))
+    val files = new java.io.File(stage).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 2, files.map(_.getName).mkString(","))
+    graft.io.FsOps.rm(spark, root)
+  }
+
+  test("stagedLegs under an add-only fold: each resumed leg publishes only its own slice") {
+    import spark.implicits._
+    import graft.streaming.DeltaState
+    import graft.streaming.DeltaState.DeltaFoldSpec
+    val root = java.nio.file.Files.createTempDirectory("staged_fold").toString
+    val stateDir = s"$root/state"
+    val init = Seq((0L, "z")).toDF("id", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val fin = QHelp.stagedLegs(spark, s"$root/feed",
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq((3L, "c")).toDF("id", "v")) {
+      (src, resume) => DeltaState.foreachBatchDeltaFold(src, init, stateDir,
+        DeltaFoldSpec(add = _.withColumn("v", upper($"v"))), resume)
+    }
+    assert(DeltaState.committedDeltas(spark, stateDir).sorted == Seq(0L, 1L))
+    assert(rows(spark.read.parquet(s"$stateDir/delta/b0/add")) == Seq((1L, "A"), (2L, "B")))
+    assert(rows(spark.read.parquet(s"$stateDir/delta/b1/add")) == Seq((3L, "C")))
+    assert(rows(fin) == Seq((0L, "z"), (1L, "A"), (2L, "B"), (3L, "C")))
+    graft.io.FsOps.rm(spark, root)
   }
 }
