@@ -266,12 +266,10 @@ private[graft] object QHelp {
   private[graft] def cdcRows(batch: DataFrame, op: String): DataFrame =
     batch.filter(col("op") === op).drop("op")
 
-  /** The fact-store fold of a CDC feed: adds append `derive` of the add
-    * rows, dels tombstone the del rows' `idCol`. */
-  private[graft] def cdcFold(idCol: String)
-                            (derive: DataFrame => DataFrame): DeltaFoldSpec =
-    DeltaFoldSpec(add = b => derive(cdcRows(b, "add")),
-      del = Some(b => cdcRows(b, "del").select(col(idCol))))
+  /** A staged CDC batch's add rows and del rows: the `adds` and `dels`
+    * a [[graft.streaming.FoldLaw]] instance's `fold` takes. */
+  private[graft] val cdcAdds: DataFrame => DataFrame = cdcRows(_, "add")
+  private[graft] val cdcDels: DataFrame => DataFrame = cdcRows(_, "del")
 
   /** Run `probe` on every micro-batch of `src` and keep its output as an
     * add-only DeltaState store under `outDir`, returning the resolved

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{FsOps, Tables}
 import graft.ops._
 import graft.QHelp._
+import graft.streaming.FoldLaw
 
 /** Deduplication family: exact/chunk/span/incremental, MinHash+LSH,
   * SimHash, n-gram Jaccard, clustering (SURVEY.md §2.11). */
@@ -288,16 +289,16 @@ private[graft] object QueriesDedup {
 
   /** dedup_minhash_index_update — the index-MAINTENANCE half of the
     * minhash ingest lifecycle (d02i is the probe half; the exact
-    * sibling of dedup_spans_index_update): band index built over
-    * doc_id < 200, batch1 (200 ≤ id < 400) folded in via
-    * `minhashIndexMerge` — corpus signatures never recomputed — then
-    * batch2 (id ≥ 400) probed against the MERGED index, with corpus
-    * text touched only through the candidate-id semi-join. Banding is
-    * per-document, so the merged index must equal a one-shot rebuild
-    * over doc_id < 400 — which is exactly what the oracle replays
-    * (the shared minhashIncrementalSql chain split at 400). A wrong
-    * merge (dropped band row, duplicated doc) perturbs bucket sizes
-    * or candidates and fails the hash.
+    * sibling of dedup_spans_index_update): band index built over doc_id
+    * < 200, batch1 (200 ≤ id < 400) folded in by the
+    * `FoldLaw.minhashBands` merge — corpus signatures never recomputed
+    * — then batch2 (id ≥ 400) probed against the MERGED index, with
+    * corpus text touched only through the candidate-id semi-join.
+    * Banding is per-document, so the merged index must equal a one-shot
+    * rebuild over doc_id < 400 — which is exactly what the oracle
+    * replays (the shared minhashIncrementalSql chain split at 400). A
+    * wrong merge (dropped band row, duplicated doc) perturbs bucket
+    * sizes or candidates and fails the hash.
     */
   private val d02x = Q(
     "dedup_minhash_index_update",
@@ -305,9 +306,8 @@ private[graft] object QueriesDedup {
       val all = docs(s, d)
       val snapshot = DedupOps.minhashIndex(
         all.filter(col("doc_id") < 200), "text", "doc_id")
-      val merged = DedupOps.minhashIndexMerge(snapshot,
-        all.filter(col("doc_id") >= 200 && col("doc_id") < 400),
-        "text", "doc_id")
+      val merged = FoldLaw.minhashBands("text", "doc_id").merge(snapshot,
+        all.filter(col("doc_id") >= 200 && col("doc_id") < 400))
       DedupOps.minhashNearDupIndexed(all.filter(col("doc_id") >= 400),
           merged, all.filter(col("doc_id") < 400), "text", "doc_id")
         .orderBy(col("doc_id"))
@@ -475,8 +475,9 @@ private[graft] object QueriesDedup {
 
   /** dedup_simhash_index_update — the maintenance half (the
     * dedup_minhash_index_update sibling): index(<200) ⊎ batch1
-    * (200–399) via `simhashIndexMerge` (signatures are per-doc, so
-    * merge = plain union = rebuild exactly), batch2 (≥400) probed
+    * (200–399) by the `FoldLaw.simhashSignatures` merge (signatures
+    * are per-doc, so merge = plain union = rebuild exactly), batch2
+    * (≥400) probed
     * against the merged index ≡ the one-shot incremental on the
     * union — the shared simhashIncrementalSql chain split at 400.
     */
@@ -484,11 +485,9 @@ private[graft] object QueriesDedup {
     "dedup_simhash_index_update",
     (s, d) => {
       val all = docs(s, d)
-      val merged = DedupOps.simhashIndexMerge(
-        DedupOps.simhashIndex(
-          all.filter(col("doc_id") < 200), "text", "doc_id"),
-        all.filter(col("doc_id") >= 200 && col("doc_id") < 400),
-        "text", "doc_id")
+      val sigs = FoldLaw.simhashSignatures("text", "doc_id")
+      val merged = sigs.merge(sigs.derive(all.filter(col("doc_id") < 200)),
+        all.filter(col("doc_id") >= 200 && col("doc_id") < 400))
       DedupOps.simhashNearDupIncremental(all.filter(col("doc_id") >= 400),
           merged, "text", "doc_id")
         .orderBy(col("doc_id"))
@@ -914,9 +913,9 @@ private[graft] object QueriesDedup {
 
   /** dedup_spans_index_update — the index-MAINTENANCE half of the
     * span-dedup ingest lifecycle (d10i is the probe half): snapshot
-    * index over doc_id < 200, batch1 (200 ≤ id < 400) folded in via
-    * `spanIndexMerge` — corpus never rescanned — then batch2
-    * (id ≥ 400) probed against the MERGED index. Because occurrence
+    * index over doc_id < 200, batch1 (200 ≤ id < 400) folded in by
+    * the `FoldLaw.spanOccurrences` merge — corpus never rescanned —
+    * then batch2 (id ≥ 400) probed against the MERGED index. Because occurrence
     * counts are additive over disjoint doc sets, the two-step-ingest
     * output must equal one-shot batch spanDedup on the full union
     * restricted to batch2 — which is exactly what the oracle computes
@@ -928,11 +927,9 @@ private[graft] object QueriesDedup {
     "dedup_spans_index_update",
     (s, d) => {
       val all = docs(s, d)
-      val snapshot = DedupOps.spanIndex(
-        all.filter(col("doc_id") < 200), "text", "doc_id", n = 10)
-      val merged = DedupOps.spanIndexMerge(snapshot,
-        all.filter(col("doc_id") >= 200 && col("doc_id") < 400),
-        "text", "doc_id", n = 10)
+      val spans = FoldLaw.spanOccurrences("text", "doc_id", n = 10)
+      val merged = spans.merge(spans.derive(all.filter(col("doc_id") < 200)),
+        spans.derive(all.filter(col("doc_id") >= 200 && col("doc_id") < 400)))
       DedupOps.spanDedupIncremental(all.filter(col("doc_id") >= 400),
           merged, "text", "doc_id", n = 10)
         .orderBy(col("doc_id"))
@@ -940,10 +937,11 @@ private[graft] object QueriesDedup {
     Some(spanOracleSql("", "doc_id >= 400")))
 
   /** dedup_spans_index_delete — the RETRACTION half of the span
-    * lifecycle (round 9; d10u is the fold-in half): index built over
-    * doc_id < 400, the 200–399 docs then RETRACTED via
-    * `spanIndexDelete` (the signed fold — counts subtract because
-    * they are additive; digests that empty out drop), then the ≥ 400
+    * lifecycle (d10u is the fold-in half): index built over
+    * doc_id < 400, the 200–399 docs then RETRACTED by the
+    * `FoldLaw.spanOccurrences` delete (the signed fold — counts
+    * subtract because they are additive; digests that empty out
+    * drop), then the ≥ 400
     * batch probed against the retracted index. By the delete law the
     * result must equal one-shot batch spanDedup over ({<200} ∪
     * {≥400}) restricted to the batch — exactly the oracle's replay:
@@ -957,11 +955,9 @@ private[graft] object QueriesDedup {
     "dedup_spans_index_delete",
     (s, d) => {
       val all = docs(s, d)
-      val full = DedupOps.spanIndex(
-        all.filter(col("doc_id") < 400), "text", "doc_id", n = 10)
-      val retracted = DedupOps.spanIndexDelete(full,
-        all.filter(col("doc_id") >= 200 && col("doc_id") < 400),
-        "text", "doc_id", n = 10)
+      val spans = FoldLaw.spanOccurrences("text", "doc_id", n = 10)
+      val retracted = spans.delete(spans.derive(all.filter(col("doc_id") < 400)),
+        spans.derive(all.filter(col("doc_id") >= 200 && col("doc_id") < 400)))
       DedupOps.spanDedupIncremental(all.filter(col("doc_id") >= 400),
           retracted, "text", "doc_id", n = 10)
         .orderBy(col("doc_id"))
@@ -969,14 +965,11 @@ private[graft] object QueriesDedup {
     Some(spanOracleSql("doc_id < 200 OR doc_id >= 400", "doc_id >= 400")))
 
   /** dedup_spans_delta_probe — the span family's STREAMING-DELTA
-    * maintenance (round 12: with the simhash segment store, the
-    * minhash band store, and the aggregate families, every dedup
-    * index family now has its batch-sized-publish deployment — and
-    * the span index is the one whose state is a COUNT aggregate, so
-    * it rides the MergeFold protocol, not the fact protocol: a
-    * deletion is a NEGATED window-count partial, the spanIndexDelete
-    * signed fold, recomputed batch-sized from the feed's carried
-    * text). A two-batch CDC feed (stopped and RESUMED between
+    * maintenance. The span index is the dedup index whose state is a
+    * COUNT aggregate, so it folds under `FoldLaw.spanOccurrences`, a
+    * `Counted` law on the MergeFold protocol: a deletion is a NEGATED
+    * window-count partial, recomputed batch-sized from the feed's
+    * carried text. A two-batch CDC feed (stopped and RESUMED between
     * batches) publishes adds (% 10 == 0 docs' window counts) and
     * retractions (% 10 == 7 corpus docs' counts negated); each
     * trigger's publish is the batch's distinct-digest partial — the
@@ -992,38 +985,18 @@ private[graft] object QueriesDedup {
     "dedup_spans_delta_probe",
     (s, d) => {
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.MergeFoldSpec
       val all = docs(s, d)
       val corpus = all.filter(col("doc_id") % 10 =!= 0 &&
         col("doc_id") % 10 =!= 5)
       val stageDir = tmpDir(s, "d10dp_feed")
       val stateDir = tmpDir(s, "d10dp_state")
-      def feedSlice(addMod: Long, delMod: Long) =
-        all.filter(col("doc_id") % 20 === addMod)
-          .select(lit(1L).as("w"), col("doc_id"), col("text"))
-          .unionByName(all.filter(col("doc_id") % 20 === delMod)
-            .select(lit(-1L).as("w"), col("doc_id"), col("text")))
-      val spec = MergeFoldSpec(
-        partial = b => {
-          // signed window-count partial: adds' counts + retractions'
-          // counts negated — both batch-sized explodes over carried
-          // text (the spanIndexDelete shape, streamed)
-          val adds = DedupOps.spanIndex(
-            b.filter(col("w") === 1L).select(col("doc_id"), col("text")),
-            "text", "doc_id", n = 10)
-          val dels = DedupOps.spanIndex(
-            b.filter(col("w") === -1L).select(col("doc_id"), col("text")),
-            "text", "doc_id", n = 10)
-          adds.unionByName(dels.select(col("fp"), (-col("occ")).as("occ")))
-            .groupBy(col("fp")).agg(sum(col("occ")).as("occ"))
-            .filter(col("occ") =!= 0)
-        },
-        merge = df => df.groupBy(col("fp")).agg(sum(col("occ")).as("occ"))
-          .filter(col("occ") =!= 0))
-      val init = DedupOps.spanIndex(corpus, "text", "doc_id", n = 10)
-      stagedLegs(s, stageDir, feedSlice(0L, 7L), feedSlice(10L, 17L)) {
-        (src, resume) =>
-          DeltaState.foreachBatchDeltaFold(src, init, stateDir, spec, resume)
+      val feed = all.select(col("doc_id"), col("text"))
+      val spans = FoldLaw.spanOccurrences("text", "doc_id", n = 10)
+      val spec = spans.fold(cdcAdds, cdcDels)
+      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
+          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
+        DeltaState.foreachBatchDeltaFold(src, spans.derive(corpus), stateDir,
+          spec, resume)
       }
       val batch = all.filter(col("doc_id") % 10 === 5)
       def probed(phase: String) = DedupOps.spanDedupIncremental(
@@ -1045,9 +1018,9 @@ private[graft] object QueriesDedup {
     writes = true)
 
   /** dedup_minhash_index_delete — the RETRACTION half of the minhash
-    * lifecycle (round 9; d02x is the fold-in half): band index built
-    * over doc_id < 400, the 200–399 docs RETRACTED via
-    * `minhashIndexDelete` (band rows are per-doc facts — one id-keyed
+    * lifecycle (d02x is the fold-in half): band index built over
+    * doc_id < 400, the 200–399 docs RETRACTED by the
+    * `FoldLaw.minhashBands` delete (band rows are per-doc facts — one id-keyed
     * anti-join, no text touched), then the ≥ 400 batch probed against
     * the retracted index with the surviving corpus (< 200) as the
     * verification side. By the delete law this must equal the
@@ -1061,24 +1034,21 @@ private[graft] object QueriesDedup {
     "dedup_minhash_index_delete",
     (s, d) => {
       val all = docs(s, d)
-      val full = DedupOps.minhashIndex(
-        all.filter(col("doc_id") < 400), "text", "doc_id")
-      val retracted = DedupOps.minhashIndexDelete(full,
-        all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
-          .select(col("doc_id")),
-        "doc_id")
+      val bands = FoldLaw.minhashBands("text", "doc_id")
+      val retracted = bands.delete(
+        bands.derive(all.filter(col("doc_id") < 400)),
+        all.filter(col("doc_id") >= 200 && col("doc_id") < 400))
       DedupOps.minhashNearDupIndexed(all.filter(col("doc_id") >= 400),
           retracted, all.filter(col("doc_id") < 200), "text", "doc_id")
         .orderBy(col("doc_id"))
     },
     Some(minhashIncrementalSql("doc_id < 200", "doc_id >= 400")))
 
-  /** dedup_minhash_stats_probe — the STORED-bucket-stats probe shape
-    * (round 9: the round-8 verdict's one structural probe-cost nit
-    * made a graded production shape): snapshot stats built once over
-    * the < 200 index, the 200–399 batch folded into BOTH the index
-    * (minhashIndexMerge) and the stats (minhashBucketStatsMerge —
-    * counts are additive), then the ≥ 400 batch probed with
+  /** dedup_minhash_stats_probe — the STORED-bucket-stats probe shape:
+    * snapshot stats built once over the < 200 index, the 200–399 batch
+    * folded into BOTH the index (the `FoldLaw.minhashBands` merge) and
+    * the stats (the `FoldLaw.minhashBucketStats` merge — counts are
+    * additive), then the ≥ 400 batch probed with
     * `bandStats` passed — the maxBucket cap is an anti-join against
     * the stored over-cap keys, NOT a count() window over the full
     * index per probe (plan-asserted in OpsSpec: no Window over the
@@ -1094,12 +1064,11 @@ private[graft] object QueriesDedup {
       val snapshot = DedupOps.minhashIndex(
         all.filter(col("doc_id") < 200), "text", "doc_id")
       val batch1 = all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
-      val merged = DedupOps.minhashIndexMerge(snapshot, batch1,
-        "text", "doc_id")
-      val mergedStats = DedupOps.minhashBucketStatsMerge(
-        DedupOps.minhashBucketStats(snapshot),
-        DedupOps.minhashBucketStats(
-          DedupOps.minhashIndex(batch1, "text", "doc_id")))
+      val bands = FoldLaw.minhashBands("text", "doc_id")
+      val stats = FoldLaw.minhashBucketStats
+      val merged = bands.merge(snapshot, batch1)
+      val mergedStats = stats.merge(stats.derive(snapshot),
+        stats.derive(bands.derive(batch1)))
       DedupOps.minhashNearDupIndexed(all.filter(col("doc_id") >= 400),
           merged, all.filter(col("doc_id") < 400), "text", "doc_id",
           bandStats = Some(mergedStats))
@@ -1108,31 +1077,30 @@ private[graft] object QueriesDedup {
     Some(minhashIncrementalSql("doc_id < 400", "doc_id >= 400")))
 
   /** dedup_minhash_stats_delete — the stats SIGNED FOLD graded through
-    * the consumer (round 9, closing the stats symmetry: d02s grades
-    * the additive merge; this grades the retraction): full index +
-    * stats over doc_id < 400, the 200–399 docs retracted from BOTH —
-    * the index by id anti-join, the stats by
-    * `minhashBucketStatsDelete` over the removed band rows (an id
-    * semi-join slice of the index — banding is deterministic, so the
-    * slice IS what those docs contributed) — then the ≥ 400 batch
-    * probed with the retracted stats passed. Equal to the one-shot
-    * incremental against the < 200 corpus: an under-decremented stat
-    * keeps a shrunk bucket over the cap (lost candidates), a bucket
-    * kept at zero or over-decremented re-admits one — either way the
-    * candidate set moves and the hash fails.
+    * the consumer (d02s grades the additive merge; this grades the
+    * retraction): full index + stats over doc_id < 400, the 200–399
+    * docs retracted from BOTH — the index by id anti-join, the stats by
+    * the `FoldLaw.minhashBucketStats` delete of the removed band rows'
+    * stats (an id semi-join slice of the index — banding is
+    * deterministic, so the slice IS what those docs contributed) — then
+    * the ≥ 400 batch probed with the retracted stats passed. Equal to
+    * the one-shot incremental against the < 200 corpus: an
+    * under-decremented stat keeps a shrunk bucket over the cap (lost
+    * candidates), a bucket kept at zero or over-decremented re-admits
+    * one — either way the candidate set moves and the hash fails.
     */
   private val d02sd = Q(
     "dedup_minhash_stats_delete",
     (s, d) => {
       val all = docs(s, d)
-      val full = DedupOps.minhashIndex(
-        all.filter(col("doc_id") < 400), "text", "doc_id")
+      val bands = FoldLaw.minhashBands("text", "doc_id")
+      val stats = FoldLaw.minhashBucketStats
+      val full = bands.derive(all.filter(col("doc_id") < 400))
       val delIds = all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
         .select(col("doc_id"))
-      val retracted = DedupOps.minhashIndexDelete(full, delIds, "doc_id")
-      val retractedStats = DedupOps.minhashBucketStatsDelete(
-        DedupOps.minhashBucketStats(full),
-        full.join(delIds, Seq("doc_id"), "left_semi"))
+      val retracted = bands.delete(full, delIds)
+      val retractedStats = stats.delete(stats.derive(full),
+        stats.derive(full.join(delIds, Seq("doc_id"), "left_semi")))
       DedupOps.minhashNearDupIndexed(all.filter(col("doc_id") >= 400),
           retracted, all.filter(col("doc_id") < 200), "text", "doc_id",
           bandStats = Some(retractedStats))
@@ -1175,7 +1143,7 @@ private[graft] object QueriesDedup {
       val res = DedupOps.minhashNearDupIndexed(
           all.filter(col("doc_id") % 10 === 0),
           bandIndex.hint("merge"), corpus, "text", "doc_id",
-          bandStats = Some(s.read.parquet(statsDir)))
+          bandStats = Some(FsOps.readParquet(s, statsDir)))
         // pin eagerly so the pid-keyed scratch table can drop before
         // returning (the q57 hygiene); timed work includes the writes
         .localCheckpoint(true)
@@ -1186,9 +1154,9 @@ private[graft] object QueriesDedup {
     writes = true)
 
   /** dedup_minhash_partitioned_probe — the full production fact
-    * layout composed onto a LIFECYCLE index (round 11: the round-10
-    * verdict's task 7 — q78's partitioned+bucketed shape applied to
-    * the minhash band index): the corpus band index is stored
+    * layout composed onto a LIFECYCLE index (q78's
+    * partitioned+bucketed shape applied to the minhash band index):
+    * the corpus band index is stored
     * PARTITIONED on its ingest wave (doc_id % 3 stands in for the
     * ingest date — the band rows carry their doc id, so the partition
     * key derives row-locally at write time) AND BUCKETED on the raw
@@ -1201,7 +1169,7 @@ private[graft] object QueriesDedup {
     * properties asserted in ONE plan in OpsSpec), and the cap comes
     * from the stored per-wave stats group-summed over the kept waves
     * (stats are additive over disjoint doc sets — the
-    * minhashBucketStatsMerge law applied to partition pruning).
+    * `FoldLaw.minhashBucketStats` merge applied to partition pruning).
     * Equal to the one-shot incremental against the wave-0/1 corpus by
     * construction — the shared chain with the wave predicate folded
     * into the corpus split.
@@ -1228,10 +1196,8 @@ private[graft] object QueriesDedup {
       banded.groupBy(col("ingest_wave"), col("band_idx"), col("band_hash"))
         .agg(count(lit(1)).as("bucket_n"))
         .write.mode("overwrite").partitionBy("ingest_wave").parquet(statsDir)
-      val prunedStats = s.read.parquet(statsDir)
-        .filter(col("ingest_wave") < 2)
-        .groupBy(col("band_idx"), col("band_hash"))
-        .agg(sum(col("bucket_n")).as("bucket_n"))
+      val prunedStats = FoldLaw.minhashBucketStats.sum(
+        FsOps.readParquet(s, statsDir).filter(col("ingest_wave") < 2))
       val prunedIndex = Bucketing.table(s, tbl)
         .filter(col("ingest_wave") < 2).drop("ingest_wave")
       val res = DedupOps.minhashNearDupIndexed(
@@ -1275,7 +1241,7 @@ private[graft] object QueriesDedup {
       DedupOps.simhashIndex(all.filter(col("doc_id") % 10 =!= 0),
           "text", "doc_id")
         .write.mode("overwrite").parquet(oldDir)
-      val stored = s.read.parquet(oldDir)
+      val stored = FsOps.readParquet(s, oldDir)
       // the current code version indexes WITH the lang tag
       val batchTagged = DedupOps.simhashIndex(
           all.filter(col("doc_id") % 10 === 0), "text", "doc_id")
@@ -1332,35 +1298,33 @@ private[graft] object QueriesDedup {
       import graft.streaming.DeltaState
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      def segOf(df: org.apache.spark.sql.DataFrame) =
-        DedupOps.simhashSegmentIndex(
-          DedupOps.simhashIndex(df, "text", "doc_id"), "doc_id")
+      val segs = FoldLaw.simhashSegments("text", "doc_id")
+      val stats = FoldLaw.simhashSegmentStats
       val segT = s"graft_shseg_delta_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(segOf(corpus), segT, 8,
+      Bucketing.writeBucketedKeys(segs.derive(corpus), segT, 8,
         Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
       val base = Bucketing.table(s, segT)
       val statsDir = tmpDir(s, "d03p_stats")
-      DedupOps.simhashSegmentStats(base)
-        .write.mode("overwrite").parquet(statsDir)
+      stats.derive(base).write.mode("overwrite").parquet(statsDir)
       // CDC feed: adds AND dels carry text — the stats retraction
       // recomputes the deleted docs' segment rows batch-sized
       val stageDir = tmpDir(s, "d03p_feed")
       val stateDir = tmpDir(s, "d03p_state")
       val feed = all.select($"doc_id", $"text")
-      val spec = cdcFold("doc_id")(segOf)
+      val spec = segs.fold(cdcAdds, cdcDels)
       // the delta store holds ONLY the overlay — its base is an empty
       // relation; the real base is the bucketed table above
-      val emptySeg = segOf(all.limit(0))
+      val emptySeg = segs.derive(all.limit(0))
       stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
           cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchDeltaFold(src, emptySeg, stateDir, spec, resume)
       }
       val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
       val delDocs = all.filter($"doc_id" % 10 === 7).select($"doc_id", $"text")
-      val effStats = DedupOps.simhashSegmentStatsMerge(
-        DedupOps.simhashSegmentStatsDelete(
-          s.read.parquet(statsDir), segOf(delDocs)),
-        DedupOps.simhashSegmentStats(overlayAdds))
+      val effStats = stats.merge(
+        stats.delete(FsOps.readParquet(s, statsDir),
+          stats.derive(segs.derive(delDocs))),
+        stats.derive(overlayAdds))
       val res = DedupOps.simhashNearDupSegDeltaIndexed(
           all.filter($"doc_id" % 10 === 5),
           base.hint("merge"), overlayAdds, tombs, "text", "doc_id",
@@ -1374,18 +1338,18 @@ private[graft] object QueriesDedup {
     writes = true)
 
   /** dedup_simhash_delta_stats_probe — the probe's effective stats
-    * MAINTAINED AS STORED STATE (round 12: the round-11 verdict's
-    * lead task — d03p rebuilt the cap's effective stats driver-side
-    * AFTER the stream by replaying the takedown feed; a production
-    * probe must read stats that were FOLDED as the feed arrived).
-    * Same splits and oracle as d03p, but the CDC stream maintains TWO
-    * stores in one pass (`foreachBatchStoreFolds`, the batch pinned
-    * once): the segment DeltaFold store (adds = the batch's segment
-    * rows, dels = tombstone ids) and a stats MergeFold store whose
+    * MAINTAINED AS STORED STATE: d03p rebuilds the cap's effective
+    * stats driver-side AFTER the stream by replaying the takedown
+    * feed; a production probe reads stats that were FOLDED as the
+    * feed arrived. Same splits and oracle as d03p, but the CDC stream
+    * maintains TWO stores in one pass (`foreachBatchStoreFolds`, the
+    * batch pinned once): the segment store (the `FoldLaw.simhashSegments`
+    * fold: adds = the batch's segment rows, dels = tombstone ids) and
+    * a stats store (the `FoldLaw.simhashSegmentStats` fold) whose
     * per-batch PARTIAL is the adds' segment stats plus the deleted
     * docs' stats NEGATED (recomputed batch-sized from the feed's
-    * carried text — the statsDelete signed-fold shape), group-merged
-    * at read time by the additive law. The probe then takes its cap
+    * carried text), group-summed at read time by the additive law.
+    * The probe then takes its cap
     * ENTIRELY from the stored stats store — nothing is re-derived
     * from the feed — and must still equal the family's shared
     * one-shot oracle; the stats store's base file list stays
@@ -1398,33 +1362,25 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.{MergeFoldSpec, NamedDeltaStore}
+      import graft.streaming.DeltaState.NamedDeltaStore
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      def segOf(df: org.apache.spark.sql.DataFrame) =
-        DedupOps.simhashSegmentIndex(
-          DedupOps.simhashIndex(df, "text", "doc_id"), "doc_id")
+      val segs = FoldLaw.simhashSegments("text", "doc_id")
+      val stats = FoldLaw.simhashSegmentStats
       val segT = s"graft_shseg_dstats_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(segOf(corpus), segT, 8,
+      Bucketing.writeBucketedKeys(segs.derive(corpus), segT, 8,
         Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
       val base = Bucketing.table(s, segT)
       val stageDir = tmpDir(s, "d03sp_feed")
       val stateDir = tmpDir(s, "d03sp_state")
       val statsStateDir = tmpDir(s, "d03sp_stats_state")
       val feed = all.select($"doc_id", $"text")
-      val segSpec = cdcFold("doc_id")(segOf)
-      val statsSpec = MergeFoldSpec(
-        partial = b => DedupOps.simhashSegmentStats(segOf(cdcRows(b, "add")))
-          .unionByName(DedupOps.simhashSegmentStats(segOf(cdcRows(b, "del")))
-            .select($"seg_idx", $"seg_val", (-$"bucket_n").as("bucket_n"))),
-        merge = df => df.groupBy($"seg_idx", $"seg_val")
-          .agg(sum($"bucket_n").as("bucket_n")).filter($"bucket_n" =!= 0))
-      val emptySeg = segOf(all.limit(0))
+      val emptySeg = segs.derive(all.limit(0))
       // the stats store's v0 is the stats STORED at index-build time
-      val baseStats = DedupOps.simhashSegmentStats(base)
       val stores = Seq(
-        NamedDeltaStore(stateDir, emptySeg, segSpec),
-        NamedDeltaStore(statsStateDir, baseStats, statsSpec))
+        NamedDeltaStore(stateDir, emptySeg, segs.fold(cdcAdds, cdcDels)),
+        NamedDeltaStore(statsStateDir, stats.derive(base), stats.fold(
+          cdcAdds.andThen(segs.derive), cdcDels.andThen(segs.derive))))
       val fin = stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
           cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchStoreFolds(src, stores, resume)
@@ -1444,12 +1400,10 @@ private[graft] object QueriesDedup {
       "doc_id % 10 = 5")),
     writes = true)
 
-  /** dedup_minhash_delta_probe — the round-11 capstone composition
-    * (delta overlay × exchange-free bucketed probe) carried to the
-    * minhash BAND family, the array-keyed workhorse index (round 12:
-    * the round-11 verdict's task 3 — the band index had bucketed and
-    * partitioned probe shapes but still probed only fully-
-    * materialized indexes): the corpus band index lives as a BUCKETED
+  /** dedup_minhash_delta_probe — the d03p composition (delta overlay
+    * × exchange-free bucketed probe) carried to the minhash BAND
+    * family, the array-keyed workhorse index: the corpus band index
+    * lives as a BUCKETED
     * table with stored bucket stats; a two-batch CDC feed (stopped
     * and RESUMED between batches) publishes adds (% 10 == 0 docs'
     * band rows) and tombstones (% 10 == 7 corpus ids) into a
@@ -1461,8 +1415,8 @@ private[graft] object QueriesDedup {
     * joined as a second window-sized source, and verification's
     * corpus text id-restricted to candidates with the overlay docs'
     * text taken from the feed. The cap uses EFFECTIVE stats by the
-    * additive law (stored base stats − deleted docs' band rows
-    * recomputed from carried text + overlay stats). Equal to the
+    * `FoldLaw.minhashBucketStats` law (stored base stats − deleted
+    * docs' band rows recomputed from carried text + overlay stats). Equal to the
     * one-shot incremental against the never-ingested net corpus —
     * the family's shared chain, now with the 100 TB delta plan.
     */
@@ -1474,19 +1428,19 @@ private[graft] object QueriesDedup {
       import graft.streaming.DeltaState
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
+      val bands = FoldLaw.minhashBands("text", "doc_id")
+      val stats = FoldLaw.minhashBucketStats
       val bandT = s"graft_mhband_delta_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(
-        DedupOps.minhashIndex(corpus, "text", "doc_id"),
+      Bucketing.writeBucketedKeys(bands.derive(corpus),
         bandT, 8, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
       val base = Bucketing.table(s, bandT)
       val statsDir = tmpDir(s, "d02dp_stats")
-      DedupOps.minhashBucketStats(base)
-        .write.mode("overwrite").parquet(statsDir)
+      stats.derive(base).write.mode("overwrite").parquet(statsDir)
       val stageDir = tmpDir(s, "d02dp_feed")
       val stateDir = tmpDir(s, "d02dp_state")
       val feed = all.select($"doc_id", $"text")
-      val spec = cdcFold("doc_id")(DedupOps.minhashIndex(_, "text", "doc_id"))
-      val emptyBands = DedupOps.minhashIndex(all.limit(0), "text", "doc_id")
+      val spec = bands.fold(cdcAdds, cdcDels)
+      val emptyBands = bands.derive(all.limit(0))
       stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
           cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec, resume)
@@ -1495,11 +1449,10 @@ private[graft] object QueriesDedup {
       val delDocs = all.filter($"doc_id" % 10 === 7).select($"doc_id", $"text")
       val overlayDocs = all.filter($"doc_id" % 10 === 0)
         .select($"doc_id", $"text")
-      val effStats = DedupOps.minhashBucketStatsMerge(
-        DedupOps.minhashBucketStatsDelete(
-          s.read.parquet(statsDir),
-          DedupOps.minhashIndex(delDocs, "text", "doc_id")),
-        DedupOps.minhashBucketStats(overlayAdds))
+      val effStats = stats.merge(
+        stats.delete(FsOps.readParquet(s, statsDir),
+          stats.derive(bands.derive(delDocs))),
+        stats.derive(overlayAdds))
       val res = DedupOps.minhashNearDupDeltaIndexed(
           all.filter($"doc_id" % 10 === 5),
           base.hint("merge"), overlayAdds, tombs,
@@ -1514,18 +1467,18 @@ private[graft] object QueriesDedup {
     writes = true)
 
   /** dedup_minhash_delta_stats_probe — the band family's probe cap
-    * taken ENTIRELY from STORED stats (round 13: the round-12
-    * verdict's lead task — d02dp still rebuilt its effective stats
-    * driver-side AFTER the stream by replaying the takedown feed; the
-    * d03sp template applied verbatim to the array-keyed workhorse
-    * index). Same splits and oracle as d02dp, but the CDC stream
+    * taken ENTIRELY from STORED stats: d02dp rebuilds its effective
+    * stats driver-side AFTER the stream by replaying the takedown
+    * feed; this is the d03sp template on the array-keyed workhorse
+    * index. Same splits and oracle as d02dp, but the CDC stream
     * maintains TWO stores in one pass (`foreachBatchStoreFolds`, the
-    * batch pinned once): the band DeltaFold store (adds = the batch's
-    * band rows, dels = tombstone ids) and a bucket-stats MergeFold
-    * store whose per-batch PARTIAL is the adds' band rows' stats plus
-    * the deleted docs' stats NEGATED (recomputed batch-sized from the
-    * feed's carried text — banding is deterministic, so the recompute
-    * equals the stored rows' slice), group-merged at read time by the
+    * batch pinned once): the band store (the `FoldLaw.minhashBands`
+    * fold: adds = the batch's band rows, dels = tombstone ids) and a
+    * bucket-stats store (the `FoldLaw.minhashBucketStats` fold) whose
+    * per-batch PARTIAL is the adds' band rows' stats plus the deleted
+    * docs' stats NEGATED (recomputed batch-sized from the feed's
+    * carried text — banding is deterministic, so the recompute equals
+    * the stored rows' slice), group-summed at read time by the
     * additive law. The probe's cap then comes entirely from the
     * resolved stats store — nothing re-derived from the feed — and
     * must still hash-equal the family's shared one-shot oracle; the
@@ -1539,32 +1492,25 @@ private[graft] object QueriesDedup {
       import s.implicits._
       import graft.io.Bucketing
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.{MergeFoldSpec, NamedDeltaStore}
+      import graft.streaming.DeltaState.NamedDeltaStore
       val all = docs(s, d)
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      def bandsOf(df: org.apache.spark.sql.DataFrame) =
-        DedupOps.minhashIndex(df, "text", "doc_id")
+      val bands = FoldLaw.minhashBands("text", "doc_id")
+      val stats = FoldLaw.minhashBucketStats
       val bandT = s"graft_mhband_dstats_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(bandsOf(corpus), bandT, 8,
+      Bucketing.writeBucketedKeys(bands.derive(corpus), bandT, 8,
         Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
       val base = Bucketing.table(s, bandT)
       val stageDir = tmpDir(s, "d02sp_feed")
       val stateDir = tmpDir(s, "d02sp_state")
       val statsStateDir = tmpDir(s, "d02sp_stats_state")
       val feed = all.select($"doc_id", $"text")
-      val bandSpec = cdcFold("doc_id")(bandsOf)
-      val statsSpec = MergeFoldSpec(
-        partial = b => DedupOps.minhashBucketStats(bandsOf(cdcRows(b, "add")))
-          .unionByName(DedupOps.minhashBucketStats(bandsOf(cdcRows(b, "del")))
-            .select($"band_idx", $"band_hash", (-$"bucket_n").as("bucket_n"))),
-        merge = df => df.groupBy($"band_idx", $"band_hash")
-          .agg(sum($"bucket_n").as("bucket_n")).filter($"bucket_n" =!= 0))
-      val emptyBands = bandsOf(all.limit(0))
+      val emptyBands = bands.derive(all.limit(0))
       // the stats store's v0 is the stats STORED at index-build time
-      val baseStats = DedupOps.minhashBucketStats(base)
       val stores = Seq(
-        NamedDeltaStore(stateDir, emptyBands, bandSpec),
-        NamedDeltaStore(statsStateDir, baseStats, statsSpec))
+        NamedDeltaStore(stateDir, emptyBands, bands.fold(cdcAdds, cdcDels)),
+        NamedDeltaStore(statsStateDir, stats.derive(base), stats.fold(
+          cdcAdds.andThen(bands.derive), cdcDels.andThen(bands.derive))))
       val fin = stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
           cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchStoreFolds(src, stores, resume)
@@ -1620,15 +1566,15 @@ private[graft] object QueriesDedup {
       val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
       val pid = ProcessHandle.current().pid()
       val gen1T = s"graft_mhband_rc1_$pid"
-      Bucketing.writeBucketedKeys(
-        DedupOps.minhashIndex(corpus, "text", "doc_id"),
+      val bands = FoldLaw.minhashBands("text", "doc_id")
+      Bucketing.writeBucketedKeys(bands.derive(corpus),
         gen1T, 8, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
       val base = Bucketing.table(s, gen1T)
       val stageDir = tmpDir(s, "d02rc_feed")
       val stateDir = tmpDir(s, "d02rc_state")
       val feed = all.select($"doc_id", $"text")
-      val spec = cdcFold("doc_id")(DedupOps.minhashIndex(_, "text", "doc_id"))
-      val emptyBands = DedupOps.minhashIndex(all.limit(0), "text", "doc_id")
+      val spec = bands.fold(cdcAdds, cdcDels)
+      val emptyBands = bands.derive(all.limit(0))
       stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
           cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec, resume)
@@ -1662,43 +1608,40 @@ private[graft] object QueriesDedup {
     writes = true)
 
   /** dedup_simhash_index_delete — the RETRACTION half of the simhash
-    * lifecycle (round 9; d03u is the fold-in half): signature index
-    * over doc_id < 400, the 200–399 signatures RETRACTED via
-    * `simhashIndexDelete` (per-doc facts — id anti-join, 16 bytes/doc
-    * removed, no text on either side), the ≥ 400 batch probed against
-    * the retracted index ≡ the one-shot incremental against the < 200
-    * index — the shared simhashIncrementalSql chain split at
-    * (200, 400). Deletion must also update the blocking structure:
-    * a leaked signature re-enters segment buckets and can flip a
-    * bucket across the 256 cap — both failure modes break the hash.
+    * lifecycle (d03u is the fold-in half): signature index over doc_id
+    * < 400, the 200–399 signatures RETRACTED by the
+    * `FoldLaw.simhashSignatures` delete (per-doc facts — id anti-join,
+    * 16 bytes/doc removed, no text on either side), the ≥ 400 batch
+    * probed against the retracted index ≡ the one-shot incremental
+    * against the < 200 index — the shared simhashIncrementalSql chain
+    * split at (200, 400). Deletion must also update the blocking
+    * structure: a leaked signature re-enters segment buckets and can
+    * flip a bucket across the 256 cap — both failure modes break the
+    * hash.
     */
   private val d03d = Q(
     "dedup_simhash_index_delete",
     (s, d) => {
       val all = docs(s, d)
-      val full = DedupOps.simhashIndex(
-        all.filter(col("doc_id") < 400), "text", "doc_id")
-      val retracted = DedupOps.simhashIndexDelete(full,
-        all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
-          .select(col("doc_id")),
-        "doc_id")
+      val sigs = FoldLaw.simhashSignatures("text", "doc_id")
+      val retracted = sigs.delete(
+        sigs.derive(all.filter(col("doc_id") < 400)),
+        all.filter(col("doc_id") >= 200 && col("doc_id") < 400))
       DedupOps.simhashNearDupIncremental(all.filter(col("doc_id") >= 400),
           retracted, "text", "doc_id")
         .orderBy(col("doc_id"))
     },
     Some(simhashIncrementalSql("doc_id < 200", "doc_id >= 400")))
 
-  /** dedup_simhash_bucketed_probe — the round-8 verdict's
-    * documented-but-unproven 100 TB claim made a graded shape
-    * (round 9): the corpus's SEGMENT index (simhashSegmentIndex — the
-    * probe's exact blocking relation, 4 fixed-width rows/doc) is
-    * WRITTEN as a table BUCKETED on its probe key (seg_idx, seg_val),
-    * its bucket stats derived ONCE at write time and STORED beside it
-    * (round 10 — the round-9 verdict's wiring nit: the stats were
-    * recomputed per probe; now the probe READS the keys-sized stored
-    * table, and at maintenance time the stats fold with
-    * `simhashSegmentStatsMerge`/`StatsDelete` exactly as the index
-    * does — laws in OpsSpec, the graded minhash siblings d02s/d02sd),
+  /** dedup_simhash_bucketed_probe — the 100 TB probe shape graded:
+    * the corpus's SEGMENT index (simhashSegmentIndex — the probe's
+    * exact blocking relation, 4 fixed-width rows/doc) is WRITTEN as a
+    * table BUCKETED on its probe key (seg_idx, seg_val), its bucket
+    * stats derived ONCE at write time and STORED beside it (the probe
+    * READS the keys-sized stored table rather than recomputing the
+    * stats, and at maintenance time the stats fold under
+    * `FoldLaw.simhashSegmentStats` exactly as the index does — laws in
+    * OpsSpec and PropertySpec, the graded minhash siblings d02s/d02sd),
     * and the % 10 == 0 batch probed against the stored table through
     * `simhashNearDupSegIndexed` with the stored stats passed — so the
     * cap is an anti-join against a keys-sized scan, not an index-wide
@@ -1731,7 +1674,7 @@ private[graft] object QueriesDedup {
       val res = DedupOps.simhashNearDupSegIndexed(
           all.filter(col("doc_id") % 10 === 0),
           segIndex.hint("merge"), "text", "doc_id",
-          segStats = Some(s.read.parquet(statsDir)))
+          segStats = Some(FsOps.readParquet(s, statsDir)))
         // pin eagerly so the pid-keyed scratch table can drop before
         // returning (the q57 hygiene); timed work includes the writes
         .localCheckpoint(true)
@@ -1786,7 +1729,7 @@ private[graft] object QueriesDedup {
       val res = DedupOps.simhashNearDupSegIndexed(
           all.filter(col("doc_id") % 10 === 0),
           segIndex.hint("merge"), "text", "doc_id",
-          segStats = Some(s.read.parquet(statsDir)))
+          segStats = Some(FsOps.readParquet(s, statsDir)))
         .localCheckpoint(true)
       Bucketing.drop(s, tbl)
       Bucketing.drop(s, cpt)

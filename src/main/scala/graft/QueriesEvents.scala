@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops._
 import graft.QHelp._
+import graft.streaming.FoldLaw
 
 /** Events analytics: funnel, transitions, drift, attribution,
   * retention, point-in-time features. */
@@ -142,11 +143,10 @@ private[graft] object QueriesEvents {
     Some(psiOracleSql))
 
   /** drift_psi_incremental — the distribution-monitoring INGEST
-    * lifecycle (round 9: the scoreCountsMerge/spanIndexMerge law on
-    * histogram states): the reference window's histState is STORED
-    * once; the current window arrives as two batches (split at
-    * Jan 24), each partial-aggregated to its own nbins-sized state
-    * and folded with `histStateMerge` — bin counts are additive over
+    * lifecycle: the reference window's histState is STORED once; the
+    * current window arrives as two batches (split at Jan 24), each
+    * partial-aggregated to its own nbins-sized state and folded with
+    * the `FoldLaw.histBins` merge — bin counts are additive over
     * disjoint rows, so merge ≡ rebuild EXACTLY — and the PSI gate
     * recomputes from the two stored states alone (`psiFromStates`,
     * the shared tail psiReport itself delegates to). The corpus is
@@ -160,16 +160,12 @@ private[graft] object QueriesEvents {
     (s, d) => {
       import s.implicits._
       val e = ev(s, d)
-      val refState = LibOps.histState(
-        e.filter($"ts" < "2024-01-16 00:00:00"),
-        "value", lo = 0.0, width = 25.0, nbins = 20)
-      val cur = LibOps.histStateMerge(
-        LibOps.histState(
-          e.filter($"ts" >= "2024-01-16 00:00:00" && $"ts" < "2024-01-24 00:00:00"),
-          "value", lo = 0.0, width = 25.0, nbins = 20),
-        LibOps.histState(
-          e.filter($"ts" >= "2024-01-24 00:00:00"),
-          "value", lo = 0.0, width = 25.0, nbins = 20))
+      val hist = FoldLaw.histBins("value", lo = 0.0, width = 25.0, nbins = 20)
+      val refState = hist.derive(e.filter($"ts" < "2024-01-16 00:00:00"))
+      val cur = hist.merge(
+        hist.derive(
+          e.filter($"ts" >= "2024-01-16 00:00:00" && $"ts" < "2024-01-24 00:00:00")),
+        hist.derive(e.filter($"ts" >= "2024-01-24 00:00:00")))
       LibOps.psiFromStates(refState, cur, nbins = 20).orderBy($"bin")
     },
     Some(psiOracleSql))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops._
 import graft.QHelp._
+import graft.streaming.FoldLaw
 
 /** Sampling / packing / sketch family: stratified, weighted, mixture,
   * budget, curriculum, DSIR, KMV, equi-depth bins. */
@@ -771,9 +772,9 @@ private[graft] object QueriesSampling {
     * sketch state (LibOps.kmvSketch, the ~k-row/group summary behind
     * q82's estimator) stored for a corpus half, the ingest half's
     * sketch FOLDED IN with kmvMerge (k-smallest-of-distinct-union is
-    * associative ⇒ merge ≡ rebuild exactly — the spanIndexMerge law,
-    * property-tested), and the estimate read off the merged state next
-    * to the single-pass kmvDistinct over the union: the graded output
+    * associative ⇒ merge ≡ rebuild exactly, property-tested), and the
+    * estimate read off the merged state next to the single-pass
+    * kmvDistinct over the union: the graded output
     * shows n_merged = n_full on every row. The corpus is never
     * rescanned at ingest — the count-distinct sibling of the
     * exact/MinHash/semantic/span incremental-dedup family.
@@ -844,13 +845,13 @@ private[graft] object QueriesSampling {
 
 
   /** q95_kmv_shard_retract — the retraction story for the ONE family
-    * whose state cannot subtract (round 10: kmvSketch's scaladoc
-    * documented "shard the sketch" since round 8; this implements and
-    * grades it): a min-sketch discards the information a delete needs,
+    * whose state cannot subtract (the "shard the sketch" remedy
+    * kmvSketch's scaladoc documents, graded): a min-sketch discards
+    * the information a delete needs,
     * so the sharded state keeps one ~k-row sketch PER INGEST SHARD
     * (the takedown unit) and retraction becomes a shard-keyed
-    * anti-join — `kmvShardDelete` — with the estimate read off the
-    * surviving shards (`kmvEstimateSharded`). The estimate is EXACT,
+    * anti-join — the `FoldLaw.kmvShards` delete — with the estimate
+    * read off the surviving shards (`kmvEstimateSharded`). The estimate is EXACT,
     * not stacked-approximate: each of the union's k smallest hashes is
     * within its own shard's k smallest, the same identity behind
     * kmvMerge ≡ rebuild. Graded head-to-head: the retracted-state
@@ -864,10 +865,9 @@ private[graft] object QueriesSampling {
     (s, d) => {
       import s.implicits._
       val e = ev(s, d).withColumn("shard", $"event_id" % 4)
-      val state = LibOps.kmvSketchSharded(e, Seq("event_type"), "user_id",
-        "shard", 64)
-      val retracted = LibOps.kmvShardDelete(state,
-        s.range(2, 3).select($"id".as("shard")), "shard")
+      val shards = FoldLaw.kmvShards(Seq("event_type"), "user_id", "shard", 64)
+      val retracted = shards.delete(shards.derive(e),
+        s.range(2, 3).select($"id".as("shard")))
       val est = LibOps.kmvEstimateSharded(retracted, Seq("event_type"), 64)
         .select($"event_type", round($"n_distinct_est", 4).as("n_retracted"))
       val rebuild = LibOps.kmvDistinct(e.filter($"shard" =!= 2),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops._
 import graft.QHelp._
+import graft.streaming.FoldLaw
 
 /** Similarity-search family: brute/LSH/IVF/PQ ANN, MMR, hybrid RRF,
   * probe evals, cluster cards. */
@@ -126,11 +127,11 @@ private[graft] object QueriesSim {
     Some(ivfProbeOracleSql("", "")))
 
 
-  /** ann_ivf_index_update — the ANN family's ingest lifecycle
-    * (round 8; the dedup_*_index_update sibling): IVF assignment
-    * index built over the vec_id < 200 snapshot under the snapshot's
-    * pinned lowest-id codebook, the 200–399 batch folded in with
-    * `ivfIndexMerge` (per-row assignment under a FIXED codebook ⇒
+  /** ann_ivf_index_update — the ANN family's ingest lifecycle (the
+    * dedup_*_index_update sibling): IVF assignment index built over
+    * the vec_id < 200 snapshot under the snapshot's pinned lowest-id
+    * codebook, the 200–399 batch folded in with the `FoldLaw.ivfCells`
+    * merge (per-row assignment under a FIXED codebook ⇒
     * merge = plain union ≡ rebuild exactly — re-deriving the codebook
     * from the grown corpus is the RETRAIN event, by design not this
     * op), then queries probe the MERGED index via `ivfTopKIndexed` —
@@ -147,10 +148,9 @@ private[graft] object QueriesSim {
       val e = emb(s, d)
       val snap = e.filter($"vec_id" < 200)
       val cb = SimOps.lowestIdCodebook(snap, "vec_id", "embedding", 16)
-      val merged = SimOps.ivfIndexMerge(
-        SimOps.ivfIndex(snap, "vec_id", "embedding", cb),
-        e.filter($"vec_id" >= 200 && $"vec_id" < 400),
-        "vec_id", "embedding", cb)
+      val cells = FoldLaw.ivfCells("vec_id", "embedding", cb)
+      val merged = cells.merge(cells.derive(snap),
+        e.filter($"vec_id" >= 200 && $"vec_id" < 400))
       SimOps.ivfTopKIndexed(e.filter($"vec_id" < 10), merged,
           "vec_id", "embedding", cb, k = 5)
         .orderBy($"qid", $"rnk")
@@ -158,10 +158,10 @@ private[graft] object QueriesSim {
     Some(ivfProbeOracleSql("vec_id < 200", "vec_id < 400")))
 
   /** ann_ivf_index_delete — the RETRACTION half of the ANN lifecycle
-    * (round 9; a03u is the fold-in half): assignment index built over
+    * (a03u is the fold-in half): assignment index built over
     * vec_id < 400 under the pinned < 200 snapshot codebook, the
-    * 200–399 vectors then RETRACTED via `ivfIndexDelete` (assignment
-    * rows are per-vector facts — one id anti-join, embeddings never
+    * 200–399 vectors then RETRACTED by the `FoldLaw.ivfCells` delete
+    * (assignment rows are per-vector facts — one id anti-join, embeddings never
     * touched; the codebook stays pinned BY DESIGN — re-deriving it
     * from the shrunk corpus is the retrain event, which rebuilds).
     * By the delete law the probe against the retracted index must
@@ -179,10 +179,9 @@ private[graft] object QueriesSim {
       val e = emb(s, d)
       val cb = SimOps.lowestIdCodebook(
         e.filter($"vec_id" < 200), "vec_id", "embedding", 16)
-      val retracted = SimOps.ivfIndexDelete(
-        SimOps.ivfIndex(e.filter($"vec_id" < 400), "vec_id", "embedding", cb),
-        e.filter($"vec_id" >= 200 && $"vec_id" < 400).select($"vec_id"),
-        "vec_id")
+      val cells = FoldLaw.ivfCells("vec_id", "embedding", cb)
+      val retracted = cells.delete(cells.derive(e.filter($"vec_id" < 400)),
+        e.filter($"vec_id" >= 200 && $"vec_id" < 400))
       SimOps.ivfTopKIndexed(e.filter($"vec_id" < 10), retracted,
           "vec_id", "embedding", cb, k = 5)
         .orderBy($"qid", $"rnk")
@@ -220,16 +219,15 @@ private[graft] object QueriesSim {
       val corpus = e.filter($"vec_id" % 10 =!= 0)
       val cb = SimOps.lowestIdCodebook(corpus, "vec_id", "embedding", 16)
       val tbl = s"graft_ivf_delta_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(
-        SimOps.ivfIndex(corpus, "vec_id", "embedding", cb),
+      val cells = FoldLaw.ivfCells("vec_id", "embedding", cb)
+      Bucketing.writeBucketedKeys(cells.derive(corpus),
         tbl, 8, Seq("cell"), Seq("cell"))
       val base = Bucketing.table(s, tbl)
       val stageDir = tmpDir(s, "a03dp_feed")
       val stateDir = tmpDir(s, "a03dp_state")
       val feed = e.select($"vec_id", $"embedding")
-      val spec = cdcFold("vec_id")(
-        SimOps.ivfIndex(_, "vec_id", "embedding", cb))
-      val emptyIdx = SimOps.ivfIndex(e.limit(0), "vec_id", "embedding", cb)
+      val spec = cells.fold(cdcAdds, cdcDels)
+      val emptyIdx = cells.derive(e.limit(0))
       stagedLegs(s, stageDir, cdcSlice(feed, "vec_id", 0L, 7L),
           cdcSlice(feed, "vec_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec, resume)
@@ -282,16 +280,15 @@ private[graft] object QueriesSim {
       val cb1 = SimOps.lowestIdCodebook(corpus, "vec_id", "embedding", 16)
       val pid = ProcessHandle.current().pid()
       val tbl1 = s"graft_ivf_rc_gen1_$pid"
-      Bucketing.writeBucketedKeys(
-        SimOps.ivfIndex(corpus, "vec_id", "embedding", cb1),
+      val cells1 = FoldLaw.ivfCells("vec_id", "embedding", cb1)
+      Bucketing.writeBucketedKeys(cells1.derive(corpus),
         tbl1, 8, Seq("cell"), Seq("cell"))
       val base = Bucketing.table(s, tbl1)
       val stageDir = tmpDir(s, "a03rc_feed")
       val stateDir = tmpDir(s, "a03rc_state")
       val feed = e.select($"vec_id", $"embedding")
-      val spec = cdcFold("vec_id")(
-        SimOps.ivfIndex(_, "vec_id", "embedding", cb1))
-      val emptyIdx = SimOps.ivfIndex(e.limit(0), "vec_id", "embedding", cb1)
+      val spec = cells1.fold(cdcAdds, cdcDels)
+      val emptyIdx = cells1.derive(e.limit(0))
       stagedLegs(s, stageDir, cdcSlice(feed, "vec_id", 0L, 7L),
           cdcSlice(feed, "vec_id", 10L, 17L)) { (src, resume) =>
         DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec, resume)

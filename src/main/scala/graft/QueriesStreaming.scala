@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.{FsOps, Tables}
 import graft.ops._
 import graft.QHelp._
+import graft.streaming.FoldLaw
 
 /** Structured-Streaming parity family (watermarked windows, state ops). */
 private[graft] object QueriesStreaming {
@@ -413,14 +414,14 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_index_delete_parity — index RETRACTION deployed under
-    * Structured Streaming (round 9, closing the lifecycle×deployment
-    * matrix: build/merge/probe/delete × batch/stream): a CDC-style
-    * takedown feed — the doc_id % 10 == 0 ids in 4 files,
-    * maxFilesPerTrigger=2 ⇒ genuinely multi-batch — folds
-    * the batch's ids as tombstones into the stored signature index
-    * via `DeltaState` (each trigger publishes only its tombstone KEYS
-    * under the `_COMMIT` protocol; the read anti-joins them against
-    * the base — `simhashIndexDelete`'s id anti-join). Deletion composes
+    * Structured Streaming (closing the lifecycle×deployment matrix:
+    * build/merge/probe/delete × batch/stream): a CDC-style takedown
+    * feed — the doc_id % 10 == 0 ids in 4 files, maxFilesPerTrigger=2 ⇒
+    * genuinely multi-batch — folds the batch's ids as tombstones into
+    * the stored signature index via `DeltaState` (each trigger
+    * publishes only its tombstone KEYS under the `_COMMIT` protocol;
+    * the read anti-joins them against the base — the
+    * `FoldLaw.simhashSignatures` id anti-join). Deletion composes
     * (chained anti-joins ≡ one anti-join of the union — the OpsSpec
     * law), so the final state must equal the never-ingested index,
     * proven THROUGH the consumer: the held-out % 10 == 5 batch probed
@@ -459,13 +460,11 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_fold_resume_parity — RESUME-AFTER-INTERRUPT for the
-    * streaming maintenance folds (round 10: the one
-    * documented-but-ungraded lifecycle claim of the round-9 verdict,
-    * now graded): a drift-monitoring feed folds `histStateMerge` —
-    * an ADDITIVE, non-idempotent fold, so any reprocessing
-    * double-counts and fails the hash — as a `DeltaState`
-    * `MergeFoldSpec` (each trigger publishes its batch's partial
-    * histogram; the read group-sums base ∪ partials) in TWO separate
+    * streaming maintenance folds: a drift-monitoring feed folds the
+    * `FoldLaw.histBins` histogram — an ADDITIVE, non-idempotent fold,
+    * so any reprocessing double-counts and fails the hash — as a
+    * `DeltaState` `MergeFoldSpec` (each trigger publishes its batch's
+    * partial histogram; the read group-sums base ∪ partials) in TWO separate
     * invocations. Leg 1 sees only the first window's file, runs to
     * completion under AvailableNow, and STOPS; the second
     * window's file is then added and leg 2 re-invokes with
@@ -486,16 +485,13 @@ private[graft] object QueriesStreaming {
     (s, d) => {
       import s.implicits._
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.MergeFoldSpec
       val e = ev(s, d)
-      def histOf(df: DataFrame) =
-        LibOps.histState(df, "value", lo = 0.0, width = 25.0, nbins = 20)
+      val hist = FoldLaw.histBins("value", lo = 0.0, width = 25.0, nbins = 20)
       val stageDir = tmpDir(s, "stream_resume_feed")
       val stateDir = tmpDir(s, "stream_resume_state")
       val emptyState = s.range(0)
         .select($"id".cast("int").as("bin"), $"id".as("n"))
-      val spec = MergeFoldSpec(partial = histOf,
-        merge = df => df.groupBy($"bin").agg(sum($"n").as("n")))
+      val spec = hist.foldAdds(identity)
       // leg 1: only the Jan 16–24 window staged; stream runs and stops.
       // Interrupt window: the ≥ Jan 24 file lands; leg 2 resumes off
       // the kept checkpoint and folds ONLY the new file
@@ -506,13 +502,13 @@ private[graft] object QueriesStreaming {
         (src, resume) =>
           DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec, resume)
       }
-      val refState = histOf(e.filter($"ts" < "2024-01-16 00:00:00"))
+      val refState = hist.derive(e.filter($"ts" < "2024-01-16 00:00:00"))
       LibOps.psiFromStates(refState, cur, nbins = 20).orderBy($"bin")
     },
     Some(QueriesEvents.psiOracleSql),
     writes = true)
 
-  /** pipeline_ingest_fold — the END-TO-END INGEST CAPSTONE (round 10):
+  /** pipeline_ingest_fold — the END-TO-END INGEST CAPSTONE:
     * one crawl feed maintains EVERY store in the engine side-by-side,
     * proving the lifecycle folds compose in a single deployment
     * rather than only one-per-query. The corpus (doc_id % 10 ∉ {0,5})
@@ -525,9 +521,10 @@ private[graft] object QueriesStreaming {
     * deltas off the pinned copy (DeltaStateSpec proves the
     * single-materialization contract with an accumulator; at 100 TB
     * the alternative re-reads every ingest batch N-stores times).
-    * The per-doc-fact indexes are `DeltaFoldSpec` adds; counts,
-    * histograms and the KMV sketch are `MergeFoldSpec`s whose merge is
-    * the family's own group-merge on one frame. After the stream, each
+    * The per-doc-fact indexes fold under `FoldLaw.PerDoc` and the
+    * counts and histograms under `FoldLaw.Counted`, all add-only; the
+    * KMV sketch is a `MergeFoldSpec` whose merge is its own k-smallest
+    * compaction. After the stream, each
     * family is read THROUGH its consumer against the final stored states: the
     * % 10 == 5 batch probes the minhash (stats-capped), simhash, and
     * span indexes; the KMV estimate, the AUC, and the PSI report
@@ -561,24 +558,19 @@ private[graft] object QueriesStreaming {
         TextOps.qualityModel(df).select(col("score"),
           (when(sfx.rlike("^[0-9]+$"), sfx.cast("int")) % 2 === 0).as("y"))
       }
-      def hist(df: DataFrame) =
-        LibOps.histState(df, "n_chars", lo = 0.0, width = 32.0, nbins = 20)
       val emptyHist = s.range(0)
         .select($"id".cast("int").as("bin"), $"id".as("n"))
-      // ONE corpus banding pass for the two minhash seeds (round 14,
-      // guide §1.2): mh_index's v0 and mh_stats's v0 each derived
-      // minhashIndex(corpus) — the signature pass over 80% of the
-      // docs, twice. Staged once, both seeds read the same band rows
-      // (lossless parquet round-trip, deterministic banding — the
-      // published v0 states are row-identical to the private
-      // derivations they replace)
+      // ONE corpus banding pass for the two minhash seeds: staged
+      // once, both seeds read the same band rows (lossless parquet
+      // round-trip, deterministic banding)
       val bandDir = tmpDir(s, "cap_mh_band")
       DedupOps.minhashIndex(corpus, "text", "doc_id")
         .write.mode("overwrite").parquet(bandDir)
-      val corpusBands = s.read.parquet(bandDir)
-      def groupSum(keys: String*)(vs: String*)(df: DataFrame) =
-        df.groupBy(keys.map(col): _*).agg(sum(col(vs.head)).as(vs.head),
-          vs.tail.map(v => sum(col(v)).as(v)): _*)
+      val corpusBands = FsOps.readParquet(s, bandDir)
+      val sigs = FoldLaw.simhashSignatures("text", "doc_id")
+      val spans = FoldLaw.spanOccurrences("text", "doc_id")
+      val evalCounts = FoldLaw.scoreCounts("score", "y")
+      val hist = FoldLaw.histBins("n_chars", lo = 0.0, width = 32.0, nbins = 20)
       val root = tmpDir(s, "cap_state")
       def store(name: String, init: DataFrame, spec: DeltaState.StoreFold,
                 input: Option[String] = None) =
@@ -592,23 +584,17 @@ private[graft] object QueriesStreaming {
           store("mh_index", corpusBands,
             DeltaFoldSpec(add = identity),
             input = Some("mh_band")),
-          store("mh_stats", DedupOps.minhashBucketStats(corpusBands),
-            MergeFoldSpec(partial = DedupOps.minhashBucketStats,
-              merge = groupSum("band_idx", "band_hash")("bucket_n")),
+          store("mh_stats", FoldLaw.minhashBucketStats.derive(corpusBands),
+            FoldLaw.minhashBucketStats.foldAdds(identity),
             input = Some("mh_band")),
-          store("sh_index", DedupOps.simhashIndex(corpus, "text", "doc_id"),
-            DeltaFoldSpec(add = DedupOps.simhashIndex(_, "text", "doc_id"))),
-          store("span_index", DedupOps.spanIndex(corpus, "text", "doc_id"),
-            MergeFoldSpec(partial = DedupOps.spanIndex(_, "text", "doc_id"),
-              merge = groupSum("fp")("occ"))),
+          store("sh_index", sigs.derive(corpus), sigs.foldAdds(identity)),
+          store("span_index", spans.derive(corpus), spans.foldAdds(identity)),
           store("kmv", LibOps.kmvSketch(corpus, Seq("lang"), "source"),
             MergeFoldSpec(partial = LibOps.kmvSketch(_, Seq("lang"), "source"),
               merge = LibOps.kmvCompact(_, Seq("lang")))),
-          store("eval_counts", EvalOps.scoreCounts(labeled(corpus), "score", "y"),
-            MergeFoldSpec(partial = b => EvalOps.scoreCounts(labeled(b), "score", "y"),
-              merge = groupSum("score")("n_pos", "n_neg"))),
-          store("psi_state", emptyHist,
-            MergeFoldSpec(partial = hist, merge = groupSum("bin")("n")))),
+          store("eval_counts", evalCounts.derive(labeled(corpus)),
+            evalCounts.foldAdds(labeled)),
+          store("psi_state", emptyHist, hist.foldAdds(identity))),
         shared = Seq("mh_band" ->
           ((b: DataFrame) => DedupOps.minhashIndex(b, "text", "doc_id"))))
       def fin(name: String) = folded(s"$root/$name")
@@ -643,7 +629,7 @@ private[graft] object QueriesStreaming {
           .select($"n_pos".cast("double").as("m1"),
             $"n_neg".cast("double").as("m2"), $"auc".as("m3")))
       val ps = row("psi",
-        LibOps.psiFromStates(hist(corpus), fin("psi_state"), nbins = 20)
+        LibOps.psiFromStates(hist.derive(corpus), fin("psi_state"), nbins = 20)
           .agg(sum($"n_a").cast("double").as("m1"),
             sum($"n_b").cast("double").as("m2"),
             sum($"psi_contrib".cast("decimal(18,6)")).cast("double").as("m3")))
@@ -849,8 +835,9 @@ private[graft] object QueriesStreaming {
           .unionByName(all.filter($"doc_id" % 20 === delMod)
             .select(lit("del").as("op"), $"doc_id",
               lit(null).cast("string").as("text")))
-      val spec = cdcFold("doc_id")(DedupOps.simhashIndex(_, "text", "doc_id"))
-      val init = DedupOps.simhashIndex(corpus, "text", "doc_id")
+      val sigs = FoldLaw.simhashSignatures("text", "doc_id")
+      val spec = sigs.fold(cdcAdds, cdcDels)
+      val init = sigs.derive(corpus)
       // leg 1: only the first CDC file staged; stream runs and stops.
       // Interrupt window: the second CDC file lands; leg 2 resumes off
       // the kept checkpoint and publishes ONLY the new file's delta
@@ -881,21 +868,15 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_merge_fold_parity — BATCH-SIZED publishes for
-    * MERGEABLE-AGGREGATE state (round 12: the round-11 verdict's
-    * task 2 — DeltaState covered per-row-fact indexes only; keyed
-    * aggregates (histograms, score counts, bucket stats) kept the
-    * versioned-snapshot protocol, whose per-trigger publish is
-    * state-sized because the state IS the aggregate. The MergeFold
-    * protocol publishes each batch's PARTIAL-aggregate rows instead —
-    * batch-sized — and group-merges on read/compact by the additive
-    * law the repo's histStateMerge/scoreCountsMerge/statsMerge ops
-    * already prove). Graded on the drift-monitoring family WITH
-    * RETRACTION: the n-chars... value histogram's current window
-    * arrives as a CDC feed — batch 0 adds the Jan 16–24 window
-    * (+1-weighted rows), the stream STOPS, batch 1 resumes off the
-    * kept checkpoint, adds the ≥ Jan 24 window AND RETRACTS the
-    * Jan 16–20 slice (−1-weighted partials, the histStateDelete
-    * signed fold — a mis-ingested shard withdrawn). The PSI gate
+    * MERGEABLE-AGGREGATE state: the MergeFold protocol publishes each
+    * batch's PARTIAL-aggregate rows — batch-sized — and group-sums on
+    * read/compact under the `FoldLaw.histBins` law (`Counted`).
+    * Graded on the drift-monitoring family WITH RETRACTION: the value
+    * histogram's current window arrives as a CDC feed — batch 0 adds
+    * the Jan 16–24 window (+1-weighted rows), the stream STOPS, batch
+    * 1 resumes off the kept checkpoint, adds the ≥ Jan 24 window AND
+    * RETRACTS the Jan 16–20 slice (−1-weighted rows — a mis-ingested
+    * shard withdrawn). The PSI gate
     * against the stored reference window is probed TWICE — resolved
     * from base + partial deltas, then again after `compactStore`
     * folded the chain into a new merged base — and both phases must
@@ -910,19 +891,13 @@ private[graft] object QueriesStreaming {
     (s, d) => {
       import s.implicits._
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.MergeFoldSpec
       val e = ev(s, d)
       val stageDir = tmpDir(s, "stream_mf_feed")
       val stateDir = tmpDir(s, "stream_mf_state")
-      // the histState binning (lo=0, width=25, nbins=20), weighted so
-      // a retraction is a negated partial
-      val bin = least(greatest(floor($"value".cast("double") / 25.0),
-        lit(0.0)), lit(19.0)).cast("int").as("bin")
-      val spec = MergeFoldSpec(
-        partial = b => b.filter($"value".isNotNull).select(bin, $"w")
-          .groupBy($"bin").agg(sum($"w").as("n")).filter($"n" =!= 0),
-        merge = df => df.groupBy($"bin").agg(sum($"n").as("n"))
-          .filter($"n" =!= 0))
+      val hist = FoldLaw.histBins("value", lo = 0.0, width = 25.0, nbins = 20)
+      // each feed row is one signed contribution to its bin
+      val spec = hist.foldSigned(_.filter($"value".isNotNull).select(
+        LibOps.histBin($"value", 0.0, 25.0, 20).as("bin"), $"w".as("n")))
       val emptyState = s.range(0)
         .select($"id".cast("int").as("bin"), $"id".as("n"))
       def slice(lo: String, hi: String, w: Long) =
@@ -937,9 +912,7 @@ private[graft] object QueriesStreaming {
         (src, resume) =>
           DeltaState.foreachBatchDeltaFold(src, emptyState, stateDir, spec, resume)
       }
-      val refState = LibOps.histState(
-        e.filter($"ts" < "2024-01-16 00:00:00"), "value",
-        lo = 0.0, width = 25.0, nbins = 20)
+      val refState = hist.derive(e.filter($"ts" < "2024-01-16 00:00:00"))
       def probed(phase: String) =
         LibOps.psiFromStates(refState, spec.resolve(s, stateDir), nbins = 20)
           .withColumn("phase", lit(phase))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops._
 import graft.QHelp._
+import graft.streaming.FoldLaw
 
 /** Text-analysis family: quality, langid, BM25, BPE, LM scores,
   * trending/PMI (SURVEY.md §2.11). */
@@ -269,11 +270,10 @@ private[graft] object QueriesText {
              END AS auc
       FROM w"""))
 
-  /** eval_auc_incremental — the eval layer's INGEST-LIFECYCLE shape
-    * (round 8: the spanIndexMerge/kmvMerge law extended to
-    * monitoring): the corpus arrives as two batches (doc_id parity),
-    * each partial-aggregated to its scoreCounts state, folded with
-    * `scoreCountsMerge` (class counts are additive over disjoint row
+  /** eval_auc_incremental — the eval layer's INGEST-LIFECYCLE shape:
+    * the corpus arrives as two batches (doc_id parity), each
+    * partial-aggregated to its scoreCounts state, folded with the
+    * `FoldLaw.scoreCounts` merge (class counts are additive over disjoint row
     * sets, so merge ≡ rebuild EXACTLY — dropped 0/0 groups are
     * additive zeros), and AUC recomputed from the merged state alone
     * (`aucFromCounts`) — the corpus is never rescanned at monitoring
@@ -287,11 +287,10 @@ private[graft] object QueriesText {
     "eval_auc_incremental",
     (s, d) => {
       val scored = langEnScored(s, d, Seq("doc_id"))
-      val cA = EvalOps.scoreCounts(
-        scored.filter(col("doc_id") % 2 === 0), "score", "y")
-      val cB = EvalOps.scoreCounts(
-        scored.filter(col("doc_id") % 2 =!= 0), "score", "y")
-      val merged = EvalOps.aucFromCounts(EvalOps.scoreCountsMerge(cA, cB))
+      val counts = FoldLaw.scoreCounts("score", "y")
+      val merged = EvalOps.aucFromCounts(counts.merge(
+          counts.derive(scored.filter(col("doc_id") % 2 === 0)),
+          counts.derive(scored.filter(col("doc_id") % 2 =!= 0))))
         .select(col("n_pos"), col("n_neg"), col("auc").as("auc_merged"))
       val full = EvalOps.aucReport(langEnScored(s, d), "score", "y")
         .select(col("auc").as("auc_full"))
@@ -316,12 +315,11 @@ private[graft] object QueriesText {
              END AS auc_full
       FROM w"""))
 
-  /** eval_auc_merge_fold — the MergeFold protocol on the EVAL family
-    * (round 12: with the drift histogram (`streaming_merge_fold_parity`)
-    * and the segment bucket stats (`dedup_simhash_delta_stats_probe`),
-    * this is the third aggregate family inheriting the batch-sized
-    * publish — the round-11 verdict's "one generalization, three
-    * families inherit it"). The corpus scoreCounts state is the v0
+  /** eval_auc_merge_fold — the MergeFold protocol on the EVAL family,
+    * folded under the `FoldLaw.scoreCounts` law (the drift histogram
+    * of `streaming_merge_fold_parity` and the segment bucket stats of
+    * `dedup_simhash_delta_stats_probe` are the other `Counted` stream
+    * folds). The corpus scoreCounts state is the v0
     * base; a CDC feed of SCORED rows (score, y, ±1 weight — the
     * monitoring deployment scores at ingest) arrives in two
     * micro-batches with a stop/resume between them: batch 0 adds the
@@ -339,21 +337,17 @@ private[graft] object QueriesText {
     "eval_auc_merge_fold",
     (s, d) => {
       import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.MergeFoldSpec
       val scored = langEnScored(s, d, Seq("doc_id"))
       val stageDir = tmpDir(s, "t21m_feed")
       val stateDir = tmpDir(s, "t21m_state")
-      val spec = MergeFoldSpec(
-        partial = b => b.filter(col("score").isNotNull && col("y").isNotNull)
-          .groupBy(col("score"))
-          .agg(sum(when(col("y"), col("w")).otherwise(0L)).as("n_pos"),
-            sum(when(col("y"), 0L).otherwise(col("w"))).as("n_neg"))
-          .filter(col("n_pos") =!= 0 || col("n_neg") =!= 0),
-        merge = df => df.groupBy(col("score"))
-          .agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg"))
-          .filter(col("n_pos") =!= 0 || col("n_neg") =!= 0))
-      val init = EvalOps.scoreCounts(
-        scored.filter(col("doc_id") % 10 =!= 0), "score", "y")
+      val counts = FoldLaw.scoreCounts("score", "y")
+      // each feed row is one signed contribution to its score's class
+      val spec = counts.foldSigned(
+        _.filter(col("score").isNotNull && col("y").isNotNull)
+          .select(col("score"),
+            when(col("y"), col("w")).otherwise(0L).as("n_pos"),
+            when(col("y"), 0L).otherwise(col("w")).as("n_neg")))
+      val init = counts.derive(scored.filter(col("doc_id") % 10 =!= 0))
       def slice(m: Long, w: Long) = scored.filter(col("doc_id") % 20 === m)
         .select(col("score"), col("y"), lit(w).as("w"))
       // leg 1: batch 0 adds; stream stops. Leg 2 resumes: batch 1 adds

@@ -59,6 +59,10 @@ object FsOps {
     * whatever sits above a k-way union is planned, and code-generated,
     * k times.
     *
+    * A dir written with `partitionBy` is read through its first
+    * partition dir's footer; the partition columns are discovered from
+    * the paths, as `spark.read.parquet` discovers them.
+    *
     * Refuses a dir without a visible data file or a footer without a
     * Spark schema: there is no inference fallback.
     */
@@ -70,11 +74,19 @@ object FsOps {
     spark.read.schema(schema).parquet(dirs: _*)
   }
 
+  /** The first visible data file directly under `dir`, else under its
+    * first `col=value` partition dir that has one. */
+  private def firstDataFile(spark: SparkSession, dir: Path): Option[Path] = {
+    val (files, dirs) = fs(spark, dir.toString).listStatus(dir)
+      .filter(s => Layout.isVisibleFile(s.getPath.getName)).partition(_.isFile)
+    files.map(_.getPath).sortBy(_.getName).headOption.orElse(
+      dirs.map(_.getPath).filter(_.getName.contains('=')).sortBy(_.getName)
+        .iterator.flatMap(firstDataFile(spark, _)).nextOption())
+  }
+
   private def footerSchema(spark: SparkSession, dir: String): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = fs(spark, dir).listStatus(new Path(dir))
-      .filter(s => s.isFile && Layout.isVisibleFile(s.getPath.getName))
-      .map(_.getPath).sortBy(_.getName).headOption
+    val file = firstDataFile(spark, new Path(dir))
       .getOrElse(throw new IllegalArgumentException(
         s"FsOps.readParquet: no parquet data file under $dir"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))

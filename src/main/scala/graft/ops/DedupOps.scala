@@ -366,101 +366,18 @@ object DedupOps {
           col(textCol), shingleN, NumHashes).as("minhash_sig")),
       idCol, cols => array(cols: _*))
 
-  /** Roll an ingested batch INTO the stored [[minhashIndex]] — the
-    * index-MAINTENANCE half of the minhash ingest lifecycle
-    * ([[minhashNearDupIndexed]] is the probe half; the exact template
-    * of [[spanIndexMerge]]): banding is per-document, so for doc sets
-    * with distinct ids  index(A) ⊎ bands(B) = index(A ∪ B)  exactly —
-    * a plain union, no aggregate at all (span occurrence counts had
-    * to re-sum; band rows are already per-doc facts). The corpus is
-    * never rescanned: each fold costs one BATCH-sized signature pass,
-    * so a daily ingest can chain merges forever with
-    * `merged ≡ minhashIndex(everything)` at every step — graded
-    * through the consumer by `dedup_minhash_index_update` (a batch
-    * probed against a merged index reproduces the one-shot
-    * incremental on the union).
-    *
-    * Ids must be unique across ingests (the standard warehouse
-    * contract — a re-ingested id would double its band rows exactly
-    * as re-unioning the doc into a rebuild would).
-    */
-  def minhashIndexMerge(snapshotIndex: DataFrame, newDocs: DataFrame,
-                        textCol: String, idCol: String,
-                        shingleN: Int = 3): DataFrame =
-    snapshotIndex.select(col(idCol), col("band_idx"), col("band_hash"))
-      .unionByName(minhashIndex(newDocs, textCol, idCol, shingleN)
-        .select(col(idCol), col("band_idx"), col("band_hash")))
-
-  /** Take deleted documents OUT of the stored [[minhashIndex]] — the
-    * RETRACTION half of index maintenance ([[minhashIndexMerge]] folds
-    * batches in; this removes them: takedowns, opt-outs, re-crawls).
-    * Band rows are per-document facts, so deletion is one id-keyed
-    * anti-join:  delete(index(A ∪ B), ids(B)) = index(A)  exactly —
-    * no band recomputation, no corpus scan on either side (the
-    * deleted side needs only ids, not text). Chained folds compose:
-    * merge-then-delete ≡ never-ingested (property-tested in OpsSpec),
-    * and the graded `dedup_minhash_index_delete` proves it through
-    * the consumer — a probe against the retracted index reproduces
-    * the one-shot incremental on the corpus WITHOUT the deleted docs.
-    *
-    * Scale shape: the deleted-ids side of an anti-join broadcasts
-    * when batch-sized (the routine case) and shuffles fixed-width ids
-    * otherwise; the index is rewritten once per retraction event,
-    * which is how a takedown over 100 TB must work — the alternative
-    * is a full corpus re-shingle.
-    */
-  def minhashIndexDelete(snapshotIndex: DataFrame, deletedIds: DataFrame,
-                         idCol: String): DataFrame =
-    // no .distinct() on the deleted side: anti-join is
-    // duplicate-insensitive (the minhashNearDupIndexed semi-join note)
-    snapshotIndex.join(deletedIds.select(col(idCol)), Seq(idCol), "left_anti")
-
   /** Per-bucket membership counts of a [[minhashIndex]] — the stored
     * SIDE STATS that make the probe's `maxBucket` cap a join against
     * a keys-sized table instead of a count() window over the entire
-    * index per ingest batch (round-9: the one structural probe-cost
-    * nit of the round-8 verdict). One (band_idx, band_hash, bucket_n)
-    * row per distinct band bucket; sizes are ADDITIVE over disjoint
-    * doc sets, so the stats fold under [[minhashBucketStatsMerge]] /
-    * [[minhashBucketStatsDelete]] exactly as the index does under its
-    * own merge/delete — build once, maintain forever, never re-window.
+    * index per ingest batch. One (band_idx, band_hash, bucket_n) row
+    * per distinct band bucket; sizes are ADDITIVE over disjoint doc
+    * sets, so the stats fold under `FoldLaw.minhashBucketStats`
+    * (graft.streaming) exactly as the index does under its own
+    * law — build once, maintain forever, never re-window.
     */
   def minhashBucketStats(bandIndex: DataFrame): DataFrame =
     bandIndex.groupBy(col("band_idx"), col("band_hash"))
       .agg(count(lit(1)).as("bucket_n"))
-
-  /** Fold the stats of an ingested batch's band rows into the stored
-    * [[minhashBucketStats]]: counts are additive over disjoint doc
-    * sets, so  stats(A) ⊎ stats(B) group-summed = stats(A ∪ B)
-    * exactly. One keys-sized union-aggregate — the index itself is
-    * never re-scanned (the [[spanIndexMerge]] cost shape, on a table
-    * that is already ≤ the index).
-    */
-  def minhashBucketStatsMerge(stats: DataFrame,
-                              batchStats: DataFrame): DataFrame =
-    stats.select(col("band_idx"), col("band_hash"), col("bucket_n"))
-      .unionByName(batchStats
-        .select(col("band_idx"), col("band_hash"), col("bucket_n")))
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(sum(col("bucket_n")).as("bucket_n"))
-
-  /** Retract deleted documents' band rows from the stored
-    * [[minhashBucketStats]] — the signed fold ([[spanIndexDelete]]'s
-    * law on the stats table): subtract the removed rows' per-bucket
-    * counts, drop buckets that empty out. `removedBandRows` is the
-    * deleted docs' slice of the index (an id semi-join against the
-    * stored index, or a recompute from the deleted docs' text — same
-    * rows either way, banding is deterministic).
-    */
-  def minhashBucketStatsDelete(stats: DataFrame,
-                               removedBandRows: DataFrame): DataFrame =
-    stats.select(col("band_idx"), col("band_hash"), col("bucket_n"))
-      .unionByName(minhashBucketStats(removedBandRows)
-        .select(col("band_idx"), col("band_hash"),
-          (-col("bucket_n")).as("bucket_n")))
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(sum(col("bucket_n")).as("bucket_n"))
-      .filter(col("bucket_n") > 0)
 
   /** [[minhashNearDupIncremental]]'s probe half against a PREBUILT
     * [[minhashIndex]]: candidates are incoming×index band-key matches
@@ -546,9 +463,9 @@ object DedupOps {
   }
 
   /** [[minhashNearDupIndexed]] against a BUCKETED base plus a
-    * DeltaState OVERLAY — the round-11 capstone composition
-    * ([[simhashNearDupSegDeltaIndexed]]) carried to the array-keyed
-    * WORKHORSE index (round 12): the band index stays in its bucketed
+    * DeltaState OVERLAY — the [[simhashNearDupSegDeltaIndexed]]
+    * composition carried to the array-keyed WORKHORSE index: the band
+    * index stays in its bucketed
     * layout while a CDC feed's adds/tombstones live as a delta chain,
     * and the probe pushes the candidate join below the union by hand
     * — batch bands ⋈ bucketed base with ZERO index-side exchange (the
@@ -564,12 +481,12 @@ object DedupOps {
     *
     * `bandStats` must be the stats of the EFFECTIVE index (base stats
     * − tombstoned docs' band rows + overlay's — the
-    * [[minhashBucketStatsMerge]]/[[minhashBucketStatsDelete]] folds,
-    * every input batch-or-keys-sized), so the cap equals capping the
-    * resolved index: probe-through-delta ≡ probe-of-resolved-state
-    * (OpsSpec). Ids must be unique across corpus ∪ overlay adds (the
-    * [[minhashIndexMerge]] contract — a re-ingested id would verify
-    * against both text versions).
+    * `FoldLaw.minhashBucketStats` merge and delete, every input
+    * batch-or-keys-sized), so the cap equals capping the resolved
+    * index: probe-through-delta ≡ probe-of-resolved-state (OpsSpec).
+    * Ids must be unique across corpus ∪ overlay adds (the per-doc
+    * fold contract — a re-ingested id would verify against both text
+    * versions).
     */
   def minhashNearDupDeltaIndexed(incoming: DataFrame, baseBandIndex: DataFrame,
                                  overlayBandRows: DataFrame,
@@ -885,27 +802,6 @@ object DedupOps {
                    idCol: String): DataFrame =
     simhash(corpus, textCol, idCol)
 
-  /** Roll an ingested batch INTO the stored [[simhashIndex]] — the
-    * maintenance half ([[simhashNearDupIncremental]] is the probe
-    * half): signatures are per-document, so for doc sets with
-    * distinct ids  index(A) ⊎ sig(B) = index(A ∪ B)  exactly — a
-    * plain union, the [[minhashIndexMerge]] law. Each fold costs one
-    * batch-sized signature pass; the corpus is never rescanned.
-    */
-  def simhashIndexMerge(snapshotIndex: DataFrame, newDocs: DataFrame,
-                        textCol: String, idCol: String): DataFrame =
-    snapshotIndex.select(col(idCol), col("simhash"))
-      .unionByName(simhash(newDocs, textCol, idCol))
-
-  /** Take deleted documents OUT of the stored [[simhashIndex]] — the
-    * retraction half ([[minhashIndexDelete]]'s law): signatures are
-    * per-document facts, so  delete(index(A ∪ B), ids(B)) = index(A)
-    * exactly, one id-keyed anti-join, no text on either side.
-    */
-  def simhashIndexDelete(snapshotIndex: DataFrame, deletedIds: DataFrame,
-                         idCol: String): DataFrame =
-    snapshotIndex.join(deletedIds.select(col(idCol)), Seq(idCol), "left_anti")
-
   /** The stored SEGMENT index of a corpus snapshot — the
     * [[simhashIndex]] pre-exploded to its 4×16-bit blocking rows
     * (idCol, simhash, seg_idx INT, seg_val BIGINT), i.e. the exact
@@ -927,33 +823,11 @@ object DedupOps {
     * additive over disjoint doc sets, so the probe's `maxBucket` cap
     * becomes an anti-join against the (rare) over-cap keys instead of
     * a count() window over the full index per ingest batch. Maintain
-    * with [[simhashSegmentStatsMerge]] / [[simhashSegmentStatsDelete]].
+    * under `FoldLaw.simhashSegmentStats` (graft.streaming).
     */
   def simhashSegmentStats(segIndex: DataFrame): DataFrame =
     segIndex.groupBy(col("seg_idx"), col("seg_val"))
       .agg(count(lit(1)).as("bucket_n"))
-
-  /** stats(A) ⊎ stats(B) group-summed = stats(A ∪ B) — the
-    * [[minhashBucketStatsMerge]] law on segment buckets. */
-  def simhashSegmentStatsMerge(stats: DataFrame,
-                               batchStats: DataFrame): DataFrame =
-    stats.select(col("seg_idx"), col("seg_val"), col("bucket_n"))
-      .unionByName(batchStats
-        .select(col("seg_idx"), col("seg_val"), col("bucket_n")))
-      .groupBy(col("seg_idx"), col("seg_val"))
-      .agg(sum(col("bucket_n")).as("bucket_n"))
-
-  /** Signed fold of the deleted docs' segment rows out of the stats —
-    * the [[minhashBucketStatsDelete]] law on segment buckets. */
-  def simhashSegmentStatsDelete(stats: DataFrame,
-                                removedSegRows: DataFrame): DataFrame =
-    stats.select(col("seg_idx"), col("seg_val"), col("bucket_n"))
-      .unionByName(simhashSegmentStats(removedSegRows)
-        .select(col("seg_idx"), col("seg_val"),
-          (-col("bucket_n")).as("bucket_n")))
-      .groupBy(col("seg_idx"), col("seg_val"))
-      .agg(sum(col("bucket_n")).as("bucket_n"))
-      .filter(col("bucket_n") > 0)
 
   /** Incremental SimHash near-dup: score an INCOMING batch against a
     * corpus snapshot's [[simhashIndex]] without re-pairing the corpus
@@ -1043,7 +917,7 @@ object DedupOps {
 
   /** [[simhashNearDupSegIndexed]] against a BUCKETED base plus a
     * DeltaState OVERLAY — the probe shape that makes the delta-publish
-    * protocol and the exchange-free layout COMPOSE (round 11): a probe
+    * protocol and the exchange-free layout COMPOSE: a probe
     * of `DeltaState.read`'s resolved union would reshuffle the base
     * (a union has no bucketed distribution), so this op pushes the
     * candidate join below the union by hand — the batch joins the
@@ -1058,8 +932,8 @@ object DedupOps {
     *
     * `segStats` must be the stats of the EFFECTIVE index (base stats
     * with the tombstoned rows' stats subtracted and the overlay's
-    * added — the [[simhashSegmentStatsMerge]]/[[simhashSegmentStatsDelete]]
-    * folds, every input batch-or-keys-sized), so the `maxBucket` cap
+    * added — the `FoldLaw.simhashSegmentStats` merge and delete,
+    * every input batch-or-keys-sized), so the `maxBucket` cap
     * equals capping the resolved index: probe-through-delta ≡
     * probe-of-resolved-state exactly (OpsSpec), and the graded
     * `dedup_simhash_delta_probe` holds it to the family's shared
@@ -1392,65 +1266,4 @@ object DedupOps {
     val dup = wins.join(hot, "fp").select(col(idCol), col("pos"))
     spanReport(newDocs, dup, textCol, idCol, n)
   }
-
-  /** Roll an ingested batch INTO the stored [[spanIndex]] — the index
-    * MAINTENANCE half of the ingest lifecycle ([[spanDedupIncremental]]
-    * is the probe half): index(corpus) ⊎ windows(batch) =
-    * index(corpus ∪ batch), exactly, because occurrence counts are
-    * additive over disjoint doc sets (property-tested in OpsSpec).
-    * Without this op every ingest would pay a full-corpus index
-    * rebuild; with it the snapshot index is built once and each batch
-    * folds in at O(|batch windows| + |index|).
-    *
-    * Scale shape: the batch explode runs over the batch only; the
-    * merge is ONE digest-keyed partial-aggregated sum over two
-    * pre-aggregated fixed-width inputs (fp BINARY(16), occ BIGINT —
-    * ~24 bytes/row), i.e. the cheapest possible union-aggregate. The
-    * corpus is never rescanned; chained merges stay exact (the
-    * identity composes), so a daily ingest can fold batches forever
-    * and `merged ≡ spanIndex(everything)` holds at every step — the
-    * graded `dedup_spans_index_update` proves it THROUGH the consumer:
-    * a second batch probed against a merged index reproduces one-shot
-    * batch [[spanDedup]] on the full union.
-    */
-  def spanIndexMerge(snapshotIndex: DataFrame, newDocs: DataFrame,
-                     textCol: String, idCol: String,
-                     n: Int = 10): DataFrame =
-    snapshotIndex.select(col("fp"), col("occ"))
-      .unionByName(spanIndex(newDocs, textCol, idCol, n))
-      .groupBy(col("fp")).agg(sum(col("occ")).as("occ"))
-
-  /** Take deleted documents OUT of the stored [[spanIndex]] — the
-    * retraction half of span-index maintenance, and the one family
-    * where deletion is a SIGNED fold rather than an id anti-join: the
-    * index holds occurrence COUNTS, not per-doc rows, so removing a
-    * doc means decrementing every window digest it contributed.
-    * Because counts are additive over disjoint doc sets (the
-    * [[spanIndexMerge]] law), the negated fold is exact:
-    * delete(merge(index(A), B), B) = index(A), with digests whose
-    * count reaches zero dropped — property-tested in OpsSpec, and
-    * graded through the consumer by `dedup_spans_index_delete`
-    * (delete-then-probe ≡ rebuild-without-the-docs).
-    *
-    * Unlike the per-doc-fact families the deleted docs' TEXT is
-    * required (their window digests must be recomputed — the index
-    * cannot say which digests a given id contributed), but that is a
-    * DELETED-BATCH-sized explode, never a corpus rescan: retraction
-    * cost is O(|deleted docs| windows) + one digest-keyed fold over
-    * two pre-aggregated fixed-width inputs.
-    *
-    * Contrast KMV ([[LibOps.kmvSketch]]): a min-sketch keeps only the
-    * k smallest hashes, so it CANNOT subtract — a deleted doc may own
-    * sketch entries whose replacements were discarded at build time.
-    * KMV's retraction event is a REBUILD over the surviving corpus
-    * (the IVF retrain precedent), documented there.
-    */
-  def spanIndexDelete(snapshotIndex: DataFrame, deletedDocs: DataFrame,
-                      textCol: String, idCol: String,
-                      n: Int = 10): DataFrame =
-    snapshotIndex.select(col("fp"), col("occ"))
-      .unionByName(spanIndex(deletedDocs, textCol, idCol, n)
-        .select(col("fp"), (-col("occ")).as("occ")))
-      .groupBy(col("fp")).agg(sum(col("occ")).as("occ"))
-      .filter(col("occ") > 0)
 }

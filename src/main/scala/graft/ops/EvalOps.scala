@@ -95,28 +95,6 @@ object EvalOps {
           .as("auc"))): _*)
   }
 
-  /** Fold one [[scoreCounts]] state into another — the eval layer's
-    * ingest-lifecycle shape (the spanIndexMerge/kmvMerge law family):
-    * class counts are additive over disjoint row sets, so
-    * merge(scoreCounts(A), scoreCounts(B)) = scoreCounts(A ⊎ B)
-    * EXACTLY — the groups scoreCounts drops (NULL score, no labeled
-    * rows) are additive zeros, so the drop commutes with the merge.
-    * A monitoring pipeline stores the distinct-score state
-    * (vocabulary-small: integer scores × keys) and folds each day's
-    * batch in; AUC / PR / calibration recompute from the state alone
-    * ([[aucFromCounts]]) — the corpus is NEVER rescanned. The merge
-    * itself is one score-keyed partial-aggregated sum over two
-    * state-sized inputs, the cheapest union-aggregate.
-    */
-  def scoreCountsMerge(a: DataFrame, b: DataFrame,
-                       keys: Seq[String] = Nil): DataFrame = {
-    val groupCols = (keys :+ "score").map(col)
-    a.select(groupCols :+ col("n_pos") :+ col("n_neg"): _*)
-      .unionByName(b.select(groupCols :+ col("n_pos") :+ col("n_neg"): _*))
-      .groupBy(groupCols: _*)
-      .agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg"))
-  }
-
   /** AUC from a stored/merged [[scoreCounts]] state (the public face
     * of the shared rank-sum tail): aucReport ≡
     * aucFromCounts(scoreCounts(df)) by construction — one definition

@@ -118,40 +118,28 @@ object LibOps {
     * bins; absent bin = 0) — the distribution-monitoring family's
     * ingest-lifecycle state (the [[kmvSketch]]/scoreCounts pattern for
     * DISTRIBUTIONS): build once per reference window, fold ingest
-    * batches in with [[histStateMerge]], and every drift gate
-    * ([[psiFromStates]], quantiles, winsorize bounds) reads the
-    * nbins-sized state alone — the corpus is never rescanned at
+    * batches in under `FoldLaw.histBins` (graft.streaming), and every
+    * drift gate ([[psiFromStates]], quantiles, winsorize bounds) reads
+    * the nbins-sized state alone — the corpus is never rescanned at
     * monitoring time. Bin counts are additive over disjoint row sets,
-    * so merge ≡ rebuild EXACTLY, and [[histStateDelete]]'s signed
-    * fold retracts a batch exactly (the spanIndex laws — this is the
-    * one monitoring state where retraction subtracts cleanly; KMV
-    * documents rebuild instead).
+    * so merge ≡ rebuild EXACTLY, and the law's signed fold retracts a
+    * batch exactly (the spanIndex laws — this is the one monitoring
+    * state where retraction subtracts cleanly; KMV documents rebuild
+    * instead).
     */
   def histState(df: DataFrame, value: String, lo: Double, width: Double,
                 nbins: Int): DataFrame = {
     require(width > 0 && nbins > 0, s"histState: width=$width nbins=$nbins")
-    val v = col(value).cast("double")
-    val bin = least(greatest(floor((v - lo) / width), lit(0.0)),
-      lit(nbins - 1.0))
-    df.filter(v.isNotNull).groupBy(bin.cast("int").as("bin"))
+    df.filter(col(value).cast("double").isNotNull)
+      .groupBy(histBin(col(value), lo, width, nbins).as("bin"))
       .agg(count(lit(1)).as("n"))
   }
 
-  /** state(A) ⊎ state(B) group-summed = state(A ∪ B) — one
-    * nbins-sized union-aggregate; chained folds compose. */
-  def histStateMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("bin"), col("n"))
-      .unionByName(b.select(col("bin"), col("n")))
-      .groupBy(col("bin")).agg(sum(col("n")).as("n"))
-
-  /** Signed fold: retract a batch's state from the stored state
-    * (bins that empty out DROP — the sparse convention treats absent
-    * as zero, so the drop is exact). */
-  def histStateDelete(state: DataFrame, removed: DataFrame): DataFrame =
-    state.select(col("bin"), col("n"))
-      .unionByName(removed.select(col("bin"), (-col("n")).as("n")))
-      .groupBy(col("bin")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0)
+  /** The [[histState]] bin of `value`: fixed-width bins from `lo`,
+    * clamped to [0, nbins − 1]. */
+  def histBin(value: Column, lo: Double, width: Double, nbins: Int): Column =
+    least(greatest(floor((value.cast("double") - lo) / width), lit(0.0)),
+      lit(nbins - 1.0)).cast("int")
 
   /** [[psiReport]]'s tail over two PREBUILT [[histState]]s — ONE
     * definition of the PSI arithmetic (the inline caller delegates
@@ -553,11 +541,11 @@ object LibOps {
     * and cannot be recovered from the state. Deleting documents from
     * the corpus is therefore a REBUILD over the survivors (one corpus
     * pass — the IVF codebook-retrain precedent; contrast
-    * [[graft.ops.DedupOps.spanIndexDelete]], whose counts subtract).
-    * Deployments needing cheap retraction keep the state SHARDED by
-    * ingest unit instead — [[kmvSketchSharded]] / [[kmvShardDelete]] /
-    * [[kmvEstimateSharded]] (round 10): dropping a shard is an
-    * anti-join, and the estimate off the surviving shards stays exact.
+    * the span index, whose counts subtract). Deployments needing
+    * cheap retraction keep the state SHARDED by ingest unit instead —
+    * [[kmvSketchSharded]] / [[kmvEstimateSharded]]: dropping a shard
+    * is an anti-join, and the estimate off the surviving shards stays
+    * exact.
     */
   def kmvSketch(df: DataFrame, keys: Seq[String], value: String,
                 k: Int = 64): DataFrame = {
@@ -580,8 +568,8 @@ object LibOps {
   /** Fold one KMV state into another (ingest maintenance): union,
     * exact dedup on the member, re-take the k smallest per group.
     * k-smallest-of-distinct-union is associative and commutative, so
-    * merge ≡ rebuild EXACTLY and chained merges compose — the
-    * spanIndexMerge law, property-tested. Inputs are ~k-row/group
+    * merge ≡ rebuild EXACTLY and chained merges compose —
+    * property-tested. Inputs are ~k-row/group
     * states; the merge never touches a corpus.
     */
   def kmvMerge(state: DataFrame, other: DataFrame, keys: Seq[String],
@@ -620,13 +608,13 @@ object LibOps {
           .otherwise(lit((k - 1).toDouble) / col("__hk")))
       .drop("__n", "__hk")
 
-  /** SHARDED KMV state — the retraction story [[kmvSketch]] documents
-    * but (through round 9) did not implement: a plain min-sketch
-    * cannot subtract, so deleting documents forces a full-corpus
-    * rebuild. Keeping one sketch PER INGEST SHARD (per-batch, per-day,
-    * per-source — whatever the takedown unit is) makes retraction an
-    * id anti-join again: drop the affected shards' rows
-    * ([[kmvShardDelete]]) and re-read the estimate off the survivors
+  /** SHARDED KMV state — the retraction story [[kmvSketch]] documents:
+    * a plain min-sketch cannot subtract, so deleting documents forces
+    * a full-corpus rebuild. Keeping one sketch PER INGEST SHARD
+    * (per-batch, per-day, per-source — whatever the takedown unit is)
+    * makes retraction an id anti-join again: drop the affected shards'
+    * rows (the `FoldLaw.kmvShards` delete, graft.streaming) and re-read
+    * the estimate off the survivors
     * ([[kmvEstimateSharded]]). The estimate stays EXACT, not
     * approximate-on-top-of-approximate: each of the union's k
     * smallest hashes is necessarily within its own shard's k
@@ -644,16 +632,6 @@ object LibOps {
   def kmvSketchSharded(df: DataFrame, keys: Seq[String], value: String,
                        shardCol: String, k: Int = 64): DataFrame =
     kmvSketch(df, shardCol +: keys, value, k)
-
-  /** Retract whole shards from a [[kmvSketchSharded]] state — one
-    * shard-keyed anti-join, no member hashing on either side (the
-    * [[graft.ops.DedupOps.minhashIndexDelete]] law, at shard
-    * granularity: the sketch's unit of deletion is the shard, which
-    * is exactly the unit a takedown/re-crawl retires).
-    */
-  def kmvShardDelete(state: DataFrame, deletedShards: DataFrame,
-                     shardCol: String): DataFrame =
-    state.join(deletedShards.select(col(shardCol)), Seq(shardCol), "left_anti")
 
   /** The [[kmvDistinct]] estimator off a SHARDED state: exact-dedup
     * the member strings across shards (a member present in many

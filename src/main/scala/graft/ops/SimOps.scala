@@ -327,42 +327,6 @@ object SimOps {
     corpus.select(col(idCol), col(embCol))
       .withColumn("cell", cellArgmax(col(embCol), codebook))
 
-  /** Roll an ingested batch INTO the stored [[ivfIndex]] — the
-    * maintenance half of the ANN ingest lifecycle ([[ivfTopKIndexed]]
-    * is the probe half): under the SAME pinned codebook, assignment
-    * is per-row, so  index(A) ⊎ assign(B) = index(A ∪ B)  exactly — a
-    * plain union (the [[DedupOps.minhashIndexMerge]] law). Each fold
-    * costs one batch-sized assignment pass; the corpus is never
-    * re-assigned. The codebook parameter is REQUIRED, not defaulted,
-    * because the law holds only while the codebook is pinned —
-    * re-deriving it from the grown corpus is the RETRAIN event, which
-    * rebuilds the index by definition (the standard IVF deployment
-    * model: retrain rarely, fold ingests daily).
-    */
-  def ivfIndexMerge(snapshotIndex: DataFrame, newDocs: DataFrame,
-                    idCol: String, embCol: String,
-                    codebook: Array[Array[Double]]): DataFrame =
-    snapshotIndex.select(col(idCol), col(embCol), col("cell"))
-      .unionByName(ivfIndex(newDocs, idCol, embCol, codebook))
-
-  /** Take deleted vectors OUT of the stored [[ivfIndex]] — the
-    * retraction half of ANN index maintenance (takedowns/opt-outs at
-    * 100 TB must not force a re-assignment of the corpus): assignment
-    * rows are per-vector facts under the pinned codebook, so
-    * delete(index(A ∪ B), ids(B)) = index(A)  exactly — one id-keyed
-    * anti-join, embeddings never touched (the
-    * [[DedupOps.minhashIndexDelete]] law). Graded through the
-    * consumer by `ann_ivf_index_delete`: a probe against the
-    * retracted index reproduces [[ivfTopK]] over the surviving corpus
-    * with the same pinned codebook. The codebook itself is unchanged
-    * by deletion BY DESIGN — re-deriving it from the shrunk corpus is
-    * the RETRAIN event, which rebuilds the index (the
-    * [[ivfIndexMerge]] contract, symmetric for grows and shrinks).
-    */
-  def ivfIndexDelete(snapshotIndex: DataFrame, deletedIds: DataFrame,
-                     idCol: String): DataFrame =
-    snapshotIndex.join(deletedIds.select(col(idCol)), Seq(idCol), "left_anti")
-
   /** [[ivfTopK]]'s probe half against a PREBUILT [[ivfIndex]]: the
     * queries pick their nprobe best cells against the same pinned
     * codebook and re-rank exactly inside them — the corpus-side

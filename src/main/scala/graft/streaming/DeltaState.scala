@@ -80,7 +80,7 @@ object DeltaState {
     * (per-row-fact state: adds are state rows, deletes are tombstone
     * keys) and [[MergeFoldSpec]] (mergeable-AGGREGATE state: each
     * batch publishes partial-aggregate rows and the read group-merges
-    * them — round 12's generalization). Both share the same delta-dir
+    * them). Both share the same delta-dir
     * layout, replay/divergence rules, compaction retention, and
     * streaming deployment; they differ only in what a delta row MEANS
     * at resolve time.
@@ -104,11 +104,13 @@ object DeltaState {
     * retracts — maps it to tombstone KEY rows (the key columns are the
     * tombstone schema; an id anti-join is every lifecycle delete in
     * this repo). Folds expressible this way are exactly the per-doc-
-    * fact indexes (minhash/simhash/span band rows, KMV shards): their
-    * merges are unions of batch-derived rows and their deletes are
-    * key anti-joins, which is what makes the batch-sized publish
-    * possible at all. Aggregate-shaped state (histograms, score
-    * counts) uses [[MergeFoldSpec]] instead.
+    * fact indexes (minhash bands, simhash signatures and segments,
+    * IVF cells, KMV shards — the [[FoldLaw.PerDoc]] instances, whose
+    * `fold` builds this spec): their merges are unions of
+    * batch-derived rows and their deletes are key anti-joins, which
+    * is what makes the batch-sized publish possible at all.
+    * Aggregate-shaped state (span occurrences, stats, histograms,
+    * score counts) uses [[MergeFoldSpec]] instead.
     */
   final case class DeltaFoldSpec(add: DataFrame => DataFrame,
                                  del: Option[DataFrame => DataFrame] = None)
@@ -149,30 +151,28 @@ object DeltaState {
       compact(spark, stateDir, retainBases)
   }
 
-  /** The MERGEABLE-AGGREGATE generalization (round 12): state whose
-    * rows are group-keyed PARTIAL aggregates under a group-merge the
-    * repo's fold laws already prove associative — histogram bin
-    * counts (histStateMerge), per-score class counts
-    * (scoreCountsMerge), bucket stats (simhashSegmentStatsMerge /
-    * minhashBucketStatsMerge). `partial` maps a micro-batch to its
-    * partial rows (SIGNED, when the fold retracts: a deletion is a
-    * negated partial — the histStateDelete/statsDelete shape), and
-    * `merge` group-merges any union of partial rows into an
-    * equivalent minimal set (group-sum + drop-zero for counts). The
-    * per-trigger publish is `partial(batch)` — batch-sized — where
-    * the versioned-snapshot protocol rewrote the whole aggregate per
-    * trigger; [[StoreFold.resolve]] is `merge(base ∪ pending
-    * partials)` and compaction folds the chain into a merged base.
+  /** The MERGEABLE-AGGREGATE store: state whose rows are group-keyed
+    * PARTIAL aggregates under an associative group-merge — histogram
+    * bin counts, per-score class counts, bucket stats, span
+    * occurrences (the [[FoldLaw.Counted]] instances, whose `fold`
+    * builds this spec), and the KMV sketch's k-smallest compaction.
+    * `partial` maps a micro-batch to its partial rows (SIGNED, when
+    * the fold retracts: a deletion is a negated partial), and `merge`
+    * group-merges any union of partial rows into an equivalent minimal
+    * set. The per-trigger publish is `partial(batch)` — batch-sized;
+    * [[StoreFold.resolve]] is `merge(base ∪ pending partials)` and
+    * compaction folds the chain into a merged base.
     *
-    * Contract on `merge` (the law the repo's merge ops satisfy):
-    * `merge(merge(X) ∪ Y) ≡ merge(X ∪ Y)` for any row multisets X, Y
-    * — group-sum with a drop-ZERO filter qualifies (a dropped
-    * zero-sum group contributes nothing to any later sum); a
-    * drop-negative filter does NOT (it would forget an early
-    * retraction a later add should cancel against), so signed folds
-    * filter `=!= 0`, which equals the statsDelete `> 0` convention
-    * whenever the feed never retracts more than it added. `initState`
-    * must itself be a valid merged state (any stored aggregate is).
+    * Contract on `merge`: `merge(merge(X) ∪ Y) ≡ merge(X ∪ Y)` for
+    * any row multisets X, Y. A group-sum that drops the groups whose
+    * counts are all zero qualifies (a dropped zero group contributes
+    * nothing to any later sum) and is the one drop rule
+    * [[FoldLaw.Counted.sum]] applies. Dropping negative groups does
+    * NOT qualify: it would forget an early retraction a later add
+    * should cancel against. Whenever every retracted row was ingested
+    * first, no group goes negative, so `=!= 0` keeps exactly the
+    * groups above zero. `initState` must itself be a valid merged
+    * state (any stored aggregate is).
     */
   final case class MergeFoldSpec(partial: DataFrame => DataFrame,
                                  merge: DataFrame => DataFrame)

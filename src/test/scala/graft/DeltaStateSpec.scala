@@ -16,7 +16,7 @@ class DeltaStateSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString + "/s"
+    TestSpark.tmpDir(name) + "/s"
 
   // a per-doc-fact "index": (id, sig) rows; adds derive sig from the
   // batch, dels tombstone by id — the simhash/minhash/span fold shape
@@ -202,7 +202,7 @@ class DeltaStateSpec extends AnyFunSuite {
     // window: 9 single-file micro-batches through the DEFAULTS must
     // leave the base advanced past v0 and the pending chain shorter
     // than the batch count — an unbounded default would leave all 9
-    val stage = java.nio.file.Files.createTempDirectory("ds_bound_feed").toString
+    val stage = TestSpark.tmpDir("ds_bound_feed")
     val dir = tmp("ds_bound")
     (0 until 9).foreach(i =>
       batchDf(Seq(100L + i), Nil).coalesce(1).write.mode("append").parquet(stage))
@@ -237,7 +237,7 @@ class DeltaStateSpec extends AnyFunSuite {
   test("MergeFold: batch-sized partial publishes resolve to the sequential merge fold") {
     // the round-12 generalization: aggregate state (group-keyed counts)
     // publishes per-batch PARTIAL rows; resolve group-merges — must
-    // equal folding histStateMerge-style sequentially, and the base
+    // equal folding the group-sum in sequentially, and the base
     // file list stays byte-identical across ingest batches (the
     // DeltaStateSpec write-side bar, now on the aggregate protocol)
     val dir = tmp("ds_merge")
@@ -282,8 +282,8 @@ class DeltaStateSpec extends AnyFunSuite {
     // its per-key stats (MergeFoldSpec) fold off ONE stream in one
     // pass; the stats resolved from STORED state must equal stats
     // recomputed from the resolved index — the dedup stats-store bar
-    val stage = java.nio.file.Files.createTempDirectory("ds_multi_feed").toString
-    val root = java.nio.file.Files.createTempDirectory("ds_multi").toString
+    val stage = TestSpark.tmpDir("ds_multi_feed")
+    val root = TestSpark.tmpDir("ds_multi")
     val idxDir = s"$root/idx"
     val statsDir = s"$root/stats"
     val feed1 = batchDf(100L until 105L, Seq(1L))
@@ -323,7 +323,7 @@ class DeltaStateSpec extends AnyFunSuite {
   }
 
   test("foreachBatchDeltaFold streams multi-batch, resumes, and compacts on schedule") {
-    val stage = java.nio.file.Files.createTempDirectory("ds_feed").toString
+    val stage = TestSpark.tmpDir("ds_feed")
     val dir = tmp("ds_stream")
     val feed1 = batchDf(100L until 110L, Seq(1L))
     val feed2 = batchDf(110L until 115L, Seq(100L))
@@ -397,8 +397,8 @@ class DeltaStateSpec extends AnyFunSuite {
     // bumping projection inside the stream counts row evaluations;
     // the pin's count() fires it once per feed row and every store's
     // concurrent publish reads the cached copy
-    val stage = java.nio.file.Files.createTempDirectory("ds_conc_feed").toString
-    val root = java.nio.file.Files.createTempDirectory("ds_conc").toString
+    val stage = TestSpark.tmpDir("ds_conc_feed")
+    val root = TestSpark.tmpDir("ds_conc")
     val nRows = 30L
     batchDf(100L until (100L + nRows - 2), Seq(1L, 2L))
       .coalesce(1).write.mode("overwrite").parquet(stage)
@@ -478,8 +478,8 @@ class DeltaStateSpec extends AnyFunSuite {
   }
 
   test("foreachBatchStoreFolds builds its returned map without a Spark job") {
-    val stage = java.nio.file.Files.createTempDirectory("ds_nojobs_feed").toString
-    val root = java.nio.file.Files.createTempDirectory("ds_nojobs_stream").toString
+    val stage = TestSpark.tmpDir("ds_nojobs_feed")
+    val root = TestSpark.tmpDir("ds_nojobs_stream")
     batchDf(100L until 105L, Seq(1L, 2L)).coalesce(1).write.mode("append").parquet(stage)
     val src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
     val stores = Seq(
@@ -549,7 +549,7 @@ class DeltaStateSpec extends AnyFunSuite {
   test("foreachBatchStoreFolds refuses a shared derivation no store names") {
     // an unreferenced derivation would be computed every trigger for
     // nobody; a store naming an unregistered key would never fold
-    val root = java.nio.file.Files.createTempDirectory("ds_shared_ref").toString
+    val root = TestSpark.tmpDir("ds_shared_ref")
     val init = Seq((0L, 0L)).toDF("id", "sig")
     val src = spark.readStream.schema(batchDf(Nil, Nil).schema).parquet(root)
     val unused = intercept[IllegalArgumentException] {
@@ -569,8 +569,8 @@ class DeltaStateSpec extends AnyFunSuite {
   }
 
   test("a shared derivation that throws fails the trigger; no dependent store commits") {
-    val stage = java.nio.file.Files.createTempDirectory("ds_derive_fail_feed").toString
-    val root = java.nio.file.Files.createTempDirectory("ds_derive_fail").toString
+    val stage = TestSpark.tmpDir("ds_derive_fail_feed")
+    val root = TestSpark.tmpDir("ds_derive_fail")
     batchDf(100L until 105L, Nil).coalesce(1).write.mode("overwrite").parquet(stage)
     val src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
     val init = Seq((0L, 0L)).toDF("id", "sig")
@@ -598,8 +598,8 @@ class DeltaStateSpec extends AnyFunSuite {
     // the derivation is pinned and materialized ONCE per trigger, and
     // both stores' publishes chain on that computed copy — an
     // accumulator inside the derivation counts its row evaluations
-    val stage = java.nio.file.Files.createTempDirectory("ds_derive_feed").toString
-    val root = java.nio.file.Files.createTempDirectory("ds_derive").toString
+    val stage = TestSpark.tmpDir("ds_derive_feed")
+    val root = TestSpark.tmpDir("ds_derive")
     val nRows = 24L
     batchDf(100L until (100L + nRows), Nil)
       .coalesce(1).write.mode("overwrite").parquet(stage)
@@ -675,7 +675,7 @@ class DeltaStateSpec extends AnyFunSuite {
 
   test("a store rooted under dirs named like b{n}/add and base/v{m} resolves by its own layout") {
     // positions are read from the last path components only
-    val dir = java.nio.file.Files.createTempDirectory("ds_alias").toString +
+    val dir = TestSpark.tmpDir("ds_alias") +
       "/b3/add/base/v1/store"
     val init = (0L until 30L).map(i => (i, i * 7)).toDF("id", "sig")
     val batches = Seq(batchDf(100L until 105L, 0L until 3L),

@@ -24,7 +24,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   }
 
   test("FsOps exists/ls/rm + writeParquet with overwrite and delinputs") {
-    val tmp = java.nio.file.Files.createTempDirectory("fsops").toString
+    val tmp = TestSpark.tmpDir("fsops")
     val in = s"$tmp/in"; val out = s"$tmp/out"
     Seq((1, "x")).toDF("k", "v").write.parquet(in)
     assert(FsOps.exists(spark, in))
@@ -39,7 +39,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   }
 
   test("readParquet reads a Spark-written dir exactly as spark.read.parquet infers it") {
-    val tmp = java.nio.file.Files.createTempDirectory("readpq").toString
+    val tmp = TestSpark.tmpDir("readpq")
     def same(dir: String): Unit = {
       val inferred = spark.read.parquet(dir)
       val footer = FsOps.readParquet(spark, dir)
@@ -63,6 +63,13 @@ class IoFunctionsSpec extends AnyFunSuite {
     spark.range(6).filter($"id" < 0).select($"id", array($"id").as("xs"))
       .write.parquet(empty)
     same(empty)
+    // a partitionBy write: the schema comes from the first partition
+    // dir's footer, the partition column from the paths
+    val parted = s"$tmp/parted"
+    spark.range(9).select($"id", ($"id" % 3).as("wave"), ($"id" * 0.5).as("v"))
+      .write.partitionBy("wave").parquet(parted)
+    same(parted)
+    assert(FsOps.readParquet(spark, parted).filter($"wave" < 2).count() == 6)
     // _SUCCESS (Spark), _COMMIT (the state protocol) and .crc siblings
     // (Hadoop's checksum files) are skipped; the .crc is not parquet
     FsOps.touch(spark, s"$nested/_COMMIT")
@@ -78,7 +85,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   }
 
   test("readParquet over dirs with columns in different orders reads them by name") {
-    val tmp = java.nio.file.Files.createTempDirectory("readpq_order").toString
+    val tmp = TestSpark.tmpDir("readpq_order")
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$tmp/a")
     Seq(("b", 2L)).toDF("name", "id").write.parquet(s"$tmp/b")
     val both = FsOps.readParquet(spark, s"$tmp/a", s"$tmp/b")
@@ -89,7 +96,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   }
 
   test("readParquet over a dir that renamed a column refuses, naming the column") {
-    val tmp = java.nio.file.Files.createTempDirectory("readpq_rename").toString
+    val tmp = TestSpark.tmpDir("readpq_rename")
     Seq((1L, "a")).toDF("id", "headline").write.parquet(s"$tmp/a")
     Seq((2L, "b")).toDF("id", "title").write.parquet(s"$tmp/b")
     val err = intercept[org.apache.spark.sql.AnalysisException](
@@ -99,7 +106,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   }
 
   test("Tables.sequenceFile round-trips Text/Text pairs (S2 source parity)") {
-    val dir = java.nio.file.Files.createTempDirectory("seqfile").toString + "/data"
+    val dir = TestSpark.tmpDir("seqfile") + "/data"
     val in = Seq(("k1", "v1"), ("k2", "v2"), ("k3", "with spaces\tand tabs"))
       .toDF("key", "value")
     graft.io.Tables.writeSequenceFile(in, dir)
@@ -109,7 +116,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   }
 
   test("Tables.autoInput sniffs parquet / sequencefile / text by magic bytes (S3)") {
-    val base = java.nio.file.Files.createTempDirectory("auto").toString
+    val base = TestSpark.tmpDir("auto")
     Seq((1L, "x")).toDF("id", "s").write.parquet(s"$base/pq")
     graft.io.Tables.writeSequenceFile(Seq(("k", "v")).toDF("key", "value"), s"$base/seq")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/plain.txt"), "line1\nline2\n")
@@ -131,7 +138,7 @@ class IoFunctionsSpec extends AnyFunSuite {
   test("writeParquet passes the compression codec through (S5 -compressoutput)") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     for (codec <- Seq("zstd", "snappy")) {
-      val out = java.nio.file.Files.createTempDirectory(s"pq_$codec").toString + "/out"
+      val out = TestSpark.tmpDir(s"pq_$codec") + "/out"
       FsOps.writeParquet(spark, df, out, compression = Some(codec))
       val parts = FsOps.ls(spark, out).filter(_.endsWith(".parquet"))
       assert(parts.nonEmpty && parts.forall(_.contains(s".$codec.")),

@@ -374,27 +374,27 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("spanIndexMerge: fold-in ≡ full rebuild, and chained merges compose (property)") {
-    // the additivity contract: spanIndexMerge(spanIndex(A), B) has
-    // exactly spanIndex(A ∪ B)'s rows — occurrence counts are additive
-    // over disjoint doc sets. Checked on the real table at two split
-    // points AND as a two-step chain (corpus + batch1 + batch2), the
-    // daily-ingest shape the graded query exercises via its consumer.
+    // the additivity contract: the FoldLaw.spanOccurrences merge of
+    // spanIndex(A) and spanIndex(B) has exactly spanIndex(A ∪ B)'s
+    // rows — occurrence counts are additive over disjoint doc sets.
+    // Checked on the real table at two split points AND as a two-step
+    // chain (corpus + batch1 + batch2), the daily-ingest shape the
+    // graded query exercises via its consumer.
     val docs = graft.io.Tables.documents(spark, TestSpark.Sf0001)
+    val spans = graft.streaming.FoldLaw.spanOccurrences("text", "doc_id")
     def rows(ix: org.apache.spark.sql.DataFrame): Seq[String] =
       ix.select(hex(col("fp")), col("occ")).collect()
         .map(_.toString).sorted.toSeq
     for (cut <- Seq(100L, 250L)) {
-      val merged = DedupOps.spanIndexMerge(
-        DedupOps.spanIndex(docs.filter($"doc_id" < cut), "text", "doc_id"),
-        docs.filter($"doc_id" >= cut), "text", "doc_id")
+      val merged = spans.merge(spans.derive(docs.filter($"doc_id" < cut)),
+        spans.derive(docs.filter($"doc_id" >= cut)))
       val rebuilt = DedupOps.spanIndex(docs, "text", "doc_id")
       assert(rows(merged) == rows(rebuilt), s"cut=$cut: merge != rebuild")
     }
-    val chained = DedupOps.spanIndexMerge(
-      DedupOps.spanIndexMerge(
-        DedupOps.spanIndex(docs.filter($"doc_id" < 150), "text", "doc_id"),
-        docs.filter($"doc_id" >= 150 && $"doc_id" < 300), "text", "doc_id"),
-      docs.filter($"doc_id" >= 300), "text", "doc_id")
+    val chained = spans.merge(
+      spans.merge(spans.derive(docs.filter($"doc_id" < 150)),
+        spans.derive(docs.filter($"doc_id" >= 150 && $"doc_id" < 300))),
+      spans.derive(docs.filter($"doc_id" >= 300)))
     assert(rows(chained) == rows(DedupOps.spanIndex(docs, "text", "doc_id")),
       "chained merges must compose exactly")
   }
@@ -406,24 +406,22 @@ class OpsSpec extends AnyFunSuite {
     // exact split (a merged index probed by a later batch must
     // reproduce the one-shot incremental on the union).
     val docs = graft.io.Tables.documents(spark, TestSpark.Sf0001)
+    val bands = graft.streaming.FoldLaw.minhashBands("text", "doc_id")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val rebuilt = rows(DedupOps.minhashIndex(docs, "text", "doc_id"))
     for (cut <- Seq(100L, 250L)) {
-      val merged = DedupOps.minhashIndexMerge(
-        DedupOps.minhashIndex(docs.filter($"doc_id" < cut), "text", "doc_id"),
-        docs.filter($"doc_id" >= cut), "text", "doc_id")
+      val merged = bands.merge(bands.derive(docs.filter($"doc_id" < cut)),
+        docs.filter($"doc_id" >= cut))
       assert(rows(merged) == rebuilt, s"cut=$cut: merge != rebuild")
     }
-    val chained = DedupOps.minhashIndexMerge(
-      DedupOps.minhashIndexMerge(
-        DedupOps.minhashIndex(docs.filter($"doc_id" < 150), "text", "doc_id"),
-        docs.filter($"doc_id" >= 150 && $"doc_id" < 300), "text", "doc_id"),
-      docs.filter($"doc_id" >= 300), "text", "doc_id")
+    val chained = bands.merge(
+      bands.merge(bands.derive(docs.filter($"doc_id" < 150)),
+        docs.filter($"doc_id" >= 150 && $"doc_id" < 300)),
+      docs.filter($"doc_id" >= 300))
     assert(rows(chained) == rebuilt, "chained merges must compose exactly")
-    val mergedAt400 = DedupOps.minhashIndexMerge(
-      DedupOps.minhashIndex(docs.filter($"doc_id" < 200), "text", "doc_id"),
-      docs.filter($"doc_id" >= 200 && $"doc_id" < 400), "text", "doc_id")
+    val mergedAt400 = bands.merge(bands.derive(docs.filter($"doc_id" < 200)),
+      docs.filter($"doc_id" >= 200 && $"doc_id" < 400))
     val viaIndex = DedupOps.minhashNearDupIndexed(
       docs.filter($"doc_id" >= 400), mergedAt400,
       docs.filter($"doc_id" < 400), "text", "doc_id")
@@ -467,32 +465,32 @@ class OpsSpec extends AnyFunSuite {
       "indexed probe must read corpus text exactly once (verification)")
     assert(probe.queryExecution.executedPlan.toString
       .contains("mh_index.parquet"), "probe must read the stored index")
-    val merge = DedupOps.minhashIndexMerge(storedIdx, batch, "text", "doc_id")
+    val merge = graft.streaming.FoldLaw.minhashBands("text", "doc_id")
+      .merge(storedIdx, batch)
     assert(corpusScans(merge) == 0, "index merge must never read corpus")
     graft.io.FsOps.rm(spark, dir)
   }
 
   test("simhashIndexMerge: fold-in ≡ rebuild; merged-index probe ≡ one-shot; corpus text untouched") {
-    // signatures are per-document, so the merge law is the
-    // minhashIndexMerge one (plain union ≡ rebuild); and because
+    // signatures are per-document, so the merge law is the minhash
+    // bands' one (FoldLaw.PerDoc: plain union ≡ rebuild); and because
     // Hamming verification needs only the signatures, a probe against
     // a STORED index must not scan corpus text AT ALL — the strongest
     // never-rescan contract in the dedup family, asserted on the plan.
     val docs = graft.io.Tables.documents(spark, TestSpark.Sf0001)
+    val sigs = graft.streaming.FoldLaw.simhashSignatures("text", "doc_id")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val rebuilt = rows(DedupOps.simhashIndex(docs, "text", "doc_id"))
     for (cut <- Seq(100L, 250L)) {
-      val merged = DedupOps.simhashIndexMerge(
-        DedupOps.simhashIndex(docs.filter($"doc_id" < cut), "text", "doc_id"),
-        docs.filter($"doc_id" >= cut), "text", "doc_id")
+      val merged = sigs.merge(sigs.derive(docs.filter($"doc_id" < cut)),
+        docs.filter($"doc_id" >= cut))
       assert(rows(merged) == rebuilt, s"cut=$cut: merge != rebuild")
     }
     val viaMerged = DedupOps.simhashNearDupIncremental(
       docs.filter($"doc_id" >= 400),
-      DedupOps.simhashIndexMerge(
-        DedupOps.simhashIndex(docs.filter($"doc_id" < 200), "text", "doc_id"),
-        docs.filter($"doc_id" >= 200 && $"doc_id" < 400), "text", "doc_id"),
+      sigs.merge(sigs.derive(docs.filter($"doc_id" < 200)),
+        docs.filter($"doc_id" >= 200 && $"doc_id" < 400)),
       "text", "doc_id")
     val oneShot = DedupOps.simhashNearDupIncremental(
       docs.filter($"doc_id" >= 400),
@@ -531,9 +529,9 @@ class OpsSpec extends AnyFunSuite {
       df.collect().map(_.toString).sorted.toSeq
     val cb = SimOps.lowestIdCodebook(
       e.filter($"vec_id" < 200), "vec_id", "embedding", 16)
-    val merged = SimOps.ivfIndexMerge(
-      SimOps.ivfIndex(e.filter($"vec_id" < 200), "vec_id", "embedding", cb),
-      e.filter($"vec_id" >= 200), "vec_id", "embedding", cb)
+    val cells = graft.streaming.FoldLaw.ivfCells("vec_id", "embedding", cb)
+    val merged = cells.merge(cells.derive(e.filter($"vec_id" < 200)),
+      e.filter($"vec_id" >= 200))
     assert(rows(merged) == rows(SimOps.ivfIndex(e, "vec_id", "embedding", cb)),
       "merge != rebuild")
     val q = e.filter($"vec_id" < 10)
@@ -628,8 +626,11 @@ class OpsSpec extends AnyFunSuite {
     for ((label, df) <- Seq(
         "probe" -> DedupOps.spanDedupIncremental(
           batch, storedIdx, "text", "doc_id", n = 3),
-        "merge" -> DedupOps.spanIndexMerge(
-          storedIdx, batch, "text", "doc_id", n = 3))) {
+        "merge" -> {
+          val spans =
+            graft.streaming.FoldLaw.spanOccurrences("text", "doc_id", n = 3)
+          spans.merge(storedIdx, spans.derive(batch))
+        })) {
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -2990,8 +2991,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("index retraction: delete ≡ rebuild-without for every family; merge-then-delete round-trips") {
-    // the round-8 verdict's missing lifecycle half: every index family
-    // can now take documents OUT. Checked as the exact law —
+    // the lifecycle's retraction half: every index family can take
+    // documents OUT, through its FoldLaw instance. Checked as the exact law —
     // delete(index(A ∪ B), B) = index(A) — and as the round-trip a
     // real takedown performs: fold a batch in, retract it, land back
     // on the never-ingested snapshot. Per-doc-fact families (minhash
@@ -3005,58 +3006,55 @@ class OpsSpec extends AnyFunSuite {
     val a = docs.filter($"doc_id" < 200)
     val b = docs.filter($"doc_id" >= 200 && $"doc_id" < 400)
     val bIds = b.select($"doc_id")
+    import graft.streaming.FoldLaw
     // minhash: law + round-trip
+    val bands = FoldLaw.minhashBands("text", "doc_id")
     val mhA = rows(DedupOps.minhashIndex(a, "text", "doc_id"))
-    assert(rows(DedupOps.minhashIndexDelete(
+    assert(rows(bands.delete(
       DedupOps.minhashIndex(docs.filter($"doc_id" < 400), "text", "doc_id"),
-      bIds, "doc_id")) == mhA, "minhash delete != rebuild-without")
-    assert(rows(DedupOps.minhashIndexDelete(
-      DedupOps.minhashIndexMerge(
-        DedupOps.minhashIndex(a, "text", "doc_id"), b, "text", "doc_id"),
-      bIds, "doc_id")) == mhA, "minhash merge-then-delete != snapshot")
+      bIds)) == mhA, "minhash delete != rebuild-without")
+    assert(rows(bands.delete(bands.merge(bands.derive(a), b), bIds)) == mhA,
+      "minhash merge-then-delete != snapshot")
     // simhash: law + round-trip
+    val sigs = FoldLaw.simhashSignatures("text", "doc_id")
     val shA = rows(DedupOps.simhashIndex(a, "text", "doc_id"))
-    assert(rows(DedupOps.simhashIndexDelete(
+    assert(rows(sigs.delete(
       DedupOps.simhashIndex(docs.filter($"doc_id" < 400), "text", "doc_id"),
-      bIds, "doc_id")) == shA, "simhash delete != rebuild-without")
-    assert(rows(DedupOps.simhashIndexDelete(
-      DedupOps.simhashIndexMerge(
-        DedupOps.simhashIndex(a, "text", "doc_id"), b, "text", "doc_id"),
-      bIds, "doc_id")) == shA, "simhash merge-then-delete != snapshot")
+      bIds)) == shA, "simhash delete != rebuild-without")
+    assert(rows(sigs.delete(sigs.merge(sigs.derive(a), b), bIds)) == shA,
+      "simhash merge-then-delete != snapshot")
     // span: signed fold (needs deleted TEXT, not just ids) + round-trip
+    val spans = FoldLaw.spanOccurrences("text", "doc_id")
     def spanRows(ix: org.apache.spark.sql.DataFrame): Seq[String] =
       ix.select(hex(col("fp")), col("occ")).collect()
         .map(_.toString).sorted.toSeq
     val spA = spanRows(DedupOps.spanIndex(a, "text", "doc_id"))
-    assert(spanRows(DedupOps.spanIndexDelete(
+    assert(spanRows(spans.delete(
       DedupOps.spanIndex(docs.filter($"doc_id" < 400), "text", "doc_id"),
-      b, "text", "doc_id")) == spA, "span delete != rebuild-without")
-    assert(spanRows(DedupOps.spanIndexDelete(
-      DedupOps.spanIndexMerge(
-        DedupOps.spanIndex(a, "text", "doc_id"), b, "text", "doc_id"),
-      b, "text", "doc_id")) == spA, "span merge-then-delete != snapshot")
+      spans.derive(b))) == spA, "span delete != rebuild-without")
+    assert(spanRows(spans.delete(
+      spans.merge(spans.derive(a), spans.derive(b)), spans.derive(b))) == spA,
+      "span merge-then-delete != snapshot")
     // IVF: law + round-trip under the pinned codebook
     val e = graft.io.Tables.embeddings(spark, TestSpark.Sf0001)
     val ea = e.filter($"vec_id" < 200)
     val eb = e.filter($"vec_id" >= 200 && $"vec_id" < 400)
     val cb = SimOps.lowestIdCodebook(ea, "vec_id", "embedding", 16)
+    val cells = FoldLaw.ivfCells("vec_id", "embedding", cb)
     val ivfA = rows(SimOps.ivfIndex(ea, "vec_id", "embedding", cb))
-    assert(rows(SimOps.ivfIndexDelete(
+    assert(rows(cells.delete(
       SimOps.ivfIndex(e.filter($"vec_id" < 400), "vec_id", "embedding", cb),
-      eb.select($"vec_id"), "vec_id")) == ivfA,
+      eb.select($"vec_id"))) == ivfA,
       "ivf delete != rebuild-without")
-    assert(rows(SimOps.ivfIndexDelete(
-      SimOps.ivfIndexMerge(
-        SimOps.ivfIndex(ea, "vec_id", "embedding", cb),
-        eb, "vec_id", "embedding", cb),
-      eb.select($"vec_id"), "vec_id")) == ivfA,
+    assert(rows(cells.delete(cells.merge(cells.derive(ea), eb),
+      eb.select($"vec_id"))) == ivfA,
       "ivf merge-then-delete != snapshot")
   }
 
   test("bucket stats: additive merge/delete laws; stats-capped probe ≡ window probe, no index-wide window") {
-    // the round-8 verdict's probe-cost nit closed: bucket sizes are a
-    // static property of the index, additive under merge and signed
-    // under delete — so a probe passing stored stats must (a) return
+    // bucket sizes are a static property of the index, additive under
+    // merge and signed under delete (FoldLaw.Counted) — so a probe
+    // passing stored stats must (a) return
     // exactly what the window path returns and (b) plan WITHOUT any
     // window over the index (the cap becomes an anti-join against the
     // rare over-cap keys).
@@ -3068,14 +3066,16 @@ class OpsSpec extends AnyFunSuite {
     val ixA = DedupOps.minhashIndex(a, "text", "doc_id")
     val ixB = DedupOps.minhashIndex(b, "text", "doc_id")
     val ixAll = DedupOps.minhashIndex(docs, "text", "doc_id")
+    val mhStats = graft.streaming.FoldLaw.minhashBucketStats
+    val shStatsLaw = graft.streaming.FoldLaw.simhashSegmentStats
     // merge law: stats(A) ⊎ stats(B) = stats(A ∪ B)
-    assert(rows(DedupOps.minhashBucketStatsMerge(
+    assert(rows(mhStats.merge(
       DedupOps.minhashBucketStats(ixA), DedupOps.minhashBucketStats(ixB)))
       == rows(DedupOps.minhashBucketStats(ixAll)),
       "minhash stats merge != rebuild")
-    // delete law: stats(A ∪ B) ⊖ bands(B) = stats(A)
-    assert(rows(DedupOps.minhashBucketStatsDelete(
-      DedupOps.minhashBucketStats(ixAll), ixB))
+    // delete law: stats(A ∪ B) ⊖ stats(bands(B)) = stats(A)
+    assert(rows(mhStats.delete(
+      DedupOps.minhashBucketStats(ixAll), mhStats.derive(ixB)))
       == rows(DedupOps.minhashBucketStats(ixA)),
       "minhash stats delete != rebuild-without")
     // simhash segment stats: same two laws
@@ -3085,12 +3085,12 @@ class OpsSpec extends AnyFunSuite {
       DedupOps.simhashIndex(b, "text", "doc_id"), "doc_id")
     val sgAll = DedupOps.simhashSegmentIndex(
       DedupOps.simhashIndex(docs, "text", "doc_id"), "doc_id")
-    assert(rows(DedupOps.simhashSegmentStatsMerge(
+    assert(rows(shStatsLaw.merge(
       DedupOps.simhashSegmentStats(sgA), DedupOps.simhashSegmentStats(sgB)))
       == rows(DedupOps.simhashSegmentStats(sgAll)),
       "simhash stats merge != rebuild")
-    assert(rows(DedupOps.simhashSegmentStatsDelete(
-      DedupOps.simhashSegmentStats(sgAll), sgB))
+    assert(rows(shStatsLaw.delete(
+      DedupOps.simhashSegmentStats(sgAll), shStatsLaw.derive(sgB)))
       == rows(DedupOps.simhashSegmentStats(sgA)),
       "simhash stats delete != rebuild-without")
     // probe equivalence + plan contract, with a maxBucket LOW enough
@@ -3120,8 +3120,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("histState: merge ≡ rebuild, chains compose, delete retracts exactly, psiFromStates ≡ psiReport") {
-    // the distribution-monitoring lifecycle's laws (the
-    // scoreCountsMerge pattern on histogram bins): counts additive
+    // the distribution-monitoring lifecycle's laws (FoldLaw.histBins,
+    // the score-counts pattern on histogram bins): counts additive
     // over disjoint rows, signed fold retracts a batch exactly
     // (emptied bins drop — sparse-state convention), and the stored-
     // state PSI equals the inline two-sample report (shared tail).
@@ -3131,18 +3131,17 @@ class OpsSpec extends AnyFunSuite {
     val a = e.filter($"event_id" % 3 === 0)
     val b = e.filter($"event_id" % 3 === 1)
     val c = e.filter($"event_id" % 3 === 2)
+    val hist = graft.streaming.FoldLaw.histBins("value", 0.0, 25.0, 20)
     def st(df: org.apache.spark.sql.DataFrame) =
       LibOps.histState(df, "value", 0.0, 25.0, 20)
     val all = rows(st(e))
-    assert(rows(LibOps.histStateMerge(
-      LibOps.histStateMerge(st(a), st(b)), st(c))) == all,
+    assert(rows(hist.merge(hist.merge(st(a), st(b)), st(c))) == all,
       "chained state merges != rebuild")
-    assert(rows(LibOps.histStateDelete(st(e), st(c)))
+    assert(rows(hist.delete(st(e), st(c)))
       == rows(st(e.filter($"event_id" % 3 =!= 2))),
       "state delete != rebuild-without")
     // round-trip: fold in, retract, land on the original
-    assert(rows(LibOps.histStateDelete(
-      LibOps.histStateMerge(st(a), st(b)), st(b))) == rows(st(a)),
+    assert(rows(hist.delete(hist.merge(st(a), st(b)), st(b))) == rows(st(a)),
       "merge-then-delete != original state")
     // PSI through the consumer: stored states ≡ inline report
     assert(rows(LibOps.psiFromStates(st(a), st(b), 20))
@@ -3380,10 +3379,10 @@ class OpsSpec extends AnyFunSuite {
       val base = graft.io.Bucketing.table(spark, tbl)
       val overlayAdds = DedupOps.minhashIndex(addDocs, "text", "doc_id")
       val tombs = delDocs.select($"doc_id")
-      val effStats = DedupOps.minhashBucketStatsMerge(
-        DedupOps.minhashBucketStatsDelete(
-          DedupOps.minhashBucketStats(base),
-          DedupOps.minhashIndex(delDocs, "text", "doc_id")),
+      val stats = graft.streaming.FoldLaw.minhashBucketStats
+      val effStats = stats.merge(
+        stats.delete(DedupOps.minhashBucketStats(base),
+          stats.derive(DedupOps.minhashIndex(delDocs, "text", "doc_id"))),
         DedupOps.minhashBucketStats(overlayAdds))
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -3618,9 +3617,10 @@ class OpsSpec extends AnyFunSuite {
       val base = graft.io.Bucketing.table(spark, tbl)
       val overlayAdds = segOf(addDocs)
       val tombs = delDocs.select($"doc_id")
-      val effStats = DedupOps.simhashSegmentStatsMerge(
-        DedupOps.simhashSegmentStatsDelete(
-          DedupOps.simhashSegmentStats(base), segOf(delDocs)),
+      val stats = graft.streaming.FoldLaw.simhashSegmentStats
+      val effStats = stats.merge(
+        stats.delete(DedupOps.simhashSegmentStats(base),
+          stats.derive(segOf(delDocs))),
         DedupOps.simhashSegmentStats(overlayAdds))
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -15,7 +15,7 @@ class PartitionPruningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("filters on partition columns prune partitions at the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
+    val tmp = TestSpark.tmpDir("docs_part")
     val docs = graft.io.Tables.documents(spark, TestSpark.Sf0001)
     docs.write.partitionBy("lang").mode("overwrite").parquet(tmp)
     val q = spark.read.parquet(tmp).filter(col("lang") === "en")

@@ -664,9 +664,11 @@ class PropertySpec extends AnyFunSuite {
       val batch = rows.filter(_._2 == 1).map(r => (r._1, r._3))
         .toDF("doc_id", "text")
       val all = rows.map(r => (r._1, r._3)).toDF("doc_id", "text")
-      val merged = DedupOps.spanIndexMerge(
+      val spans =
+        graft.streaming.FoldLaw.spanOccurrences("text", "doc_id", n = 3)
+      val merged = spans.merge(
           DedupOps.spanIndex(corpus, "text", "doc_id", n = 3),
-          batch, "text", "doc_id", n = 3)
+          spans.derive(batch))
         .select(hex(col("fp")), col("occ"))
         .collect().map(_.toString).sorted.toSeq
       val rebuilt = DedupOps.spanIndex(all, "text", "doc_id", n = 3)
@@ -760,7 +762,7 @@ class PropertySpec extends AnyFunSuite {
       // auto-staged default above — both go through the parquet
       // round-trip since round 8 (the unstaged path is unreachable);
       // the BigInt reference is what pins the round-trip's VALUES
-      val dir = java.nio.file.Files.createTempDirectory("pr_stage").toString
+      val dir = TestSpark.tmpDir("pr_stage")
       val staged = GraphOps.pageRank(df, "src", "dst", "w", iters = 3,
           stageDir = Some(dir))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -861,7 +863,7 @@ class PropertySpec extends AnyFunSuite {
       // k >= |nodes| guarantees convergence: equals brute-force CC.
       // staged — unstaged the chain re-derives ~2^k subtrees (each
       // round references its predecessor twice), unusable past k ~ 5
-      val dir = java.nio.file.Files.createTempDirectory("lp_stage").toString
+      val dir = TestSpark.tmpDir("lp_stage")
       val conv = GraphOps.minLabelPropagate(df, "a", "b",
           iters = nodes.size, stageDir = Some(dir))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -877,7 +879,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("scoreCountsMerge: merge == rebuild, chains compose, aucFromCounts == aucReport") {
-    // the eval layer's spanIndexMerge law: class counts are additive
+    // the eval layer's additive law (FoldLaw.scoreCounts, a Counted
+    // instance like the span occurrences): class counts are additive
     // over disjoint row sets, so folding a batch's scoreCounts into a
     // stored state equals rebuilding from the union — checked on
     // random (group, score, label) data as states (row-compare), as a
@@ -893,8 +896,9 @@ class PropertySpec extends AnyFunSuite {
       val b = df.filter($"id" % 2 =!= 0 && $"id" < 40)
       val c = df.filter($"id" % 2 =!= 0 && $"id" >= 40)
       val full = EvalOps.scoreCounts(df, "score", "y")
-      val merged = EvalOps.scoreCountsMerge(
-        EvalOps.scoreCountsMerge(
+      val law = graft.streaming.FoldLaw.scoreCounts("score", "y")
+      val merged = law.merge(
+        law.merge(
           EvalOps.scoreCounts(a, "score", "y"),
           EvalOps.scoreCounts(b, "score", "y")),
         EvalOps.scoreCounts(c, "score", "y"))
@@ -903,10 +907,10 @@ class PropertySpec extends AnyFunSuite {
         rows(EvalOps.aucReport(df, "score", "y")),
         "AUC from merged state != one-shot aucReport")
       val keyedFull = EvalOps.scoreCounts(df, "score", "y", Seq("grp"))
-      val keyedMerged = EvalOps.scoreCountsMerge(
+      val keyedLaw = graft.streaming.FoldLaw.scoreCounts("score", "y", Seq("grp"))
+      val keyedMerged = keyedLaw.merge(
         EvalOps.scoreCounts(a, "score", "y", Seq("grp")),
-        EvalOps.scoreCounts(df.filter($"id" % 2 =!= 0), "score", "y", Seq("grp")),
-        Seq("grp"))
+        EvalOps.scoreCounts(df.filter($"id" % 2 =!= 0), "score", "y", Seq("grp")))
       assert(rows(keyedMerged) == rows(keyedFull), "keyed merge != rebuild")
     }
   }
@@ -1019,7 +1023,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("KMV sketch state: merge == rebuild, chains compose, estimate == kmvDistinct") {
-    // the spanIndexMerge law family for the count-distinct index:
+    // the merge ≡ rebuild law for the count-distinct index:
     // k-smallest-of-distinct-union is associative, so folding a batch
     // sketch into a stored state equals rebuilding from the union —
     // compared on the exact state rows AND the exact estimates.
@@ -1064,7 +1068,8 @@ class PropertySpec extends AnyFunSuite {
     samples(gen, 5).foreach { data =>
       val rows = data.map { case (sh, (g, v)) => (sh.toLong, s"g$g", v) }
       val df = rows.toDF("shard", "g", "v")
-      val st = LibOps.kmvSketchSharded(df, Seq("g"), "v", "shard", k)
+      val shards = graft.streaming.FoldLaw.kmvShards(Seq("g"), "v", "shard", k)
+      val st = shards.derive(df)
       def estOf(state: org.apache.spark.sql.DataFrame) =
         LibOps.kmvEstimateSharded(state, Seq("g"), k)
           .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
@@ -1074,8 +1079,7 @@ class PropertySpec extends AnyFunSuite {
       // full-state estimate == the unsharded one-pass estimator
       assert(estOf(st) == directOf(df))
       // drop shard 1 == rebuild over the survivors
-      val retracted = LibOps.kmvShardDelete(st,
-        Seq(1L).toDF("shard"), "shard")
+      val retracted = shards.delete(st, Seq(1L).toDF("shard"))
       assert(estOf(retracted) ==
         directOf(df.filter(org.apache.spark.sql.functions.col("shard") =!= 1L)),
         s"shard retraction != rebuild-without on $rows")
@@ -1160,8 +1164,7 @@ class PropertySpec extends AnyFunSuite {
       add = b => b.filter($"op" === "add").select($"id", ($"id" * 7).as("sig")),
       del = Some(b => b.filter($"op" === "del").select($"id")))
     samples(seqGen, 6).zipWithIndex.foreach { case ((nBase, batches, compactAt), ci) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"ds_law_$ci").toString + "/s"
+      val dir = TestSpark.tmpDir(s"ds_law_$ci") + "/s"
       var next = 100L
       val base = (0L until nBase.toLong).map(i => (i, i * 7))
       DeltaState.init(spark, dir, base.toDF("id", "sig"))
@@ -1209,8 +1212,7 @@ class PropertySpec extends AnyFunSuite {
       add = b => b.filter($"op" === "add").select($"id", ($"id" * 7).as("sig")),
       del = Some(b => b.filter($"op" === "del").select($"id")))
     samples(seqGen, 5).zipWithIndex.foreach { case ((nBase, batches), ci) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"ov_law_$ci").toString + "/s"
+      val dir = TestSpark.tmpDir(s"ov_law_$ci") + "/s"
       var next = 100L
       val base = (0L until nBase.toLong).map(i => (i, i * 7))
       DeltaState.init(spark, dir, base.toDF("id", "sig"))
@@ -1260,8 +1262,7 @@ class PropertySpec extends AnyFunSuite {
       partial = b => b.groupBy($"k").agg(sum($"w").as("n")).filter($"n" =!= 0),
       merge = df => df.groupBy($"k").agg(sum($"n").as("n")).filter($"n" =!= 0))
     samples(seqGen, 6).zipWithIndex.foreach { case ((nBase, batches, compactAt), ci) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"mf_law_$ci").toString + "/s"
+      val dir = TestSpark.tmpDir(s"mf_law_$ci") + "/s"
       val base = (0L until nBase.toLong).map(k => (k, k + 1))
       DeltaState.init(spark, dir, base.toDF("k", "n"))
       var ref = base.toMap
@@ -1300,8 +1301,7 @@ class PropertySpec extends AnyFunSuite {
     val seqGen = Gen.listOfN(3,
       Gen.listOfN(6, Gen.zip(Gen.choose(0L, 2L), Gen.choose(0L, 50L))))
     samples(seqGen, 4).zipWithIndex.foreach { case (batches, ci) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"mf_kmv_$ci").toString + "/s"
+      val dir = TestSpark.tmpDir(s"mf_kmv_$ci") + "/s"
       DeltaState.init(spark, dir, Seq.empty[(Long, Long)].toDF("g", "v"))
       var all = Seq.empty[(Long, Long)]
       batches.zipWithIndex.foreach { case (pairs, bi) =>
@@ -1404,8 +1404,8 @@ class PropertySpec extends AnyFunSuite {
       def state(dir: String) = rows(law.spec.resolve(spark, dir))
       // a store that has run triggers 0–1 uninterrupted
       def fresh(tag: String): String = {
-        val dir = s"${CrashFs.Scheme}://" + java.nio.file.Files
-          .createTempDirectory(s"crash_law_$tag").toString + "/s"
+        val dir =
+          s"${CrashFs.Scheme}://" + TestSpark.tmpDir(s"crash_law_$tag") + "/s"
         DeltaState.init(spark, dir, law.init)
         (0 until 2).foreach(trigger(dir, _))
         dir
@@ -1437,6 +1437,110 @@ class PropertySpec extends AnyFunSuite {
         assert(state(dir) == law.states.last,
           s"$what: resumed state != uninterrupted fold")
         graft.io.FsOps.rm(spark, dir)
+      }
+    }
+  }
+
+  test("fold laws: every FoldLaw instance merges ≡ rebuild, composes, retracts, and stream-folds on random corpora") {
+    // Each instance runs on a random corpus split into units (two rows
+    // each, one KMV shard per unit): A is the stored state, B and C are
+    // ingests, D0 ⊆ A and D1 ⊆ B are retractions. Any side may be
+    // empty. Per instance: merge(A, B) ≡ build(A ∪ B); chained merges
+    // compose; delete(merge(A, B), B) ≡ build(A); and applyDeltaBatch
+    // with the law's fold over the CDC batches (adds B, dels D0) then
+    // (adds C, dels D1) resolves, before and after compaction, to
+    // build over the net corpus (A − D0) ∪ (B − D1) ∪ C.
+    import org.apache.spark.sql.DataFrame
+    import graft.streaming.{DeltaState, FoldLaw}
+    val unitGen = Gen.zip(Gen.choose(0, 2), Gen.oneOf(false, true))
+    val rowGen = Gen.zip(
+      Gen.choose(1, 8).flatMap(Gen.listOfN(_, Gen.choose(0, 4))),
+      Gen.listOfN(3, Gen.choose(-2, 2)),
+      Gen.choose(-10, 110), Gen.choose(0L, 4L), Gen.oneOf(false, true),
+      Gen.choose(0, 1), Gen.choose(0, 6))
+    val caseGen = Gen.choose(0, 8).flatMap(n =>
+      Gen.zip(Gen.listOfN(n, unitGen), Gen.listOfN(2 * n, rowGen)))
+    val random = samples(caseGen, 2)
+    val (units0, rows0) = random.find(_._1.nonEmpty).get
+    val cases = random ++ Seq(
+      (units0.map { case (p, d) => (1 + p % 2, d) }, rows0), // A empty
+      (units0.map { case (_, d) => (0, d) }, rows0))         // B, C empty
+    def canon(df: DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col).toSeq: _*).collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.map("%02x".format(_)).mkString
+        case xs: scala.collection.Seq[_] => xs.mkString("[", ",", "]")
+        case x => String.valueOf(x)
+      }.mkString("|")).sorted.toSeq
+    val cb = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0),
+      Array(0.0, 0.0, 1.0), Array(-1.0, -1.0, 0.5))
+    val bands = FoldLaw.minhashBands("text", "doc_id")
+    val segs = FoldLaw.simhashSegments("text", "doc_id")
+    val perDoc: Seq[(String, FoldLaw.PerDoc)] = Seq(
+      "minhashBands" -> bands,
+      "simhashSignatures" -> FoldLaw.simhashSignatures("text", "doc_id"),
+      "simhashSegments" -> segs,
+      "ivfCells" -> FoldLaw.ivfCells("doc_id", "emb", cb),
+      "kmvShards" -> FoldLaw.kmvShards(Seq("grp"), "member", "shard", k = 3))
+    // (name, law, the law's input rows from corpus rows)
+    val counted: Seq[(String, FoldLaw.Counted, DataFrame => DataFrame)] = Seq(
+      ("spanOccurrences", FoldLaw.spanOccurrences("text", "doc_id", n = 3), identity),
+      ("minhashBucketStats", FoldLaw.minhashBucketStats, bands.derive),
+      ("simhashSegmentStats", FoldLaw.simhashSegmentStats, segs.derive),
+      ("histBins", FoldLaw.histBins("value", 0.0, 25.0, 4), identity),
+      ("scoreCounts", FoldLaw.scoreCounts("score", "y"), identity))
+    cases.zipWithIndex.foreach { case ((units, rows), ci) =>
+      val df = rows.zipWithIndex.map { case ((ws, emb, v, sc, y, g, m), i) =>
+        val (part, del) = units(i / 2)
+        (i.toLong, ws.map(w => s"t$w").mkString(" "), emb.map(_.toDouble),
+          v.toDouble, sc, y, s"g$g", s"m$m", (i / 2).toLong, part, del)
+      }.toDF("doc_id", "text", "emb", "value", "score", "y", "grp", "member",
+        "shard", "part", "del").localCheckpoint()
+      def part(p: Int) = df.filter($"part" === p)
+      val (a, b, c) = (part(0), part(1), part(2))
+      val (d0, d1) = (a.filter($"del"), b.filter($"del"))
+      val net = df.filter(!($"del" && $"part" < 2))
+      def cdc(adds: DataFrame, dels: DataFrame) =
+        adds.withColumn("op", lit("add"))
+          .unionByName(dels.withColumn("op", lit("del")))
+      val addRows = (x: DataFrame) => x.filter($"op" === "add").drop("op")
+      val delRows = (x: DataFrame) => x.filter($"op" === "del").drop("op")
+      // the stream fold over the two CDC batches, read before and
+      // after compaction
+      def streamed(name: String, init: DataFrame,
+                   spec: DeltaState.StoreFold): Seq[Seq[String]] = {
+        val dir = TestSpark.tmpDir(s"fold_law_${name}_$ci") + "/s"
+        DeltaState.init(spark, dir, init)
+        DeltaState.applyDeltaBatch(spark, dir, 0L, cdc(b, d0), spec)
+        DeltaState.applyDeltaBatch(spark, dir, 1L, cdc(c, d1), spec)
+        val before = canon(spec.resolve(spark, dir))
+        spec.compactStore(spark, dir)
+        Seq(before, canon(spec.resolve(spark, dir)))
+      }
+      perDoc.foreach { case (name, law) =>
+        val what = s"case $ci $name"
+        val all = canon(law.derive(df))
+        assert(canon(law.merge(law.derive(a), b.unionByName(c))) == all,
+          s"$what: merge != rebuild")
+        assert(canon(law.merge(law.merge(law.derive(a), b), c)) == all,
+          s"$what: chained merges != rebuild")
+        assert(canon(law.delete(law.merge(law.derive(a), b), b)) ==
+          canon(law.derive(a)), s"$what: merge-then-delete != never ingested")
+        assert(streamed(name, law.derive(a), law.fold(addRows, delRows))
+          .forall(_ == canon(law.derive(net))), s"$what: stream fold != rebuild")
+      }
+      counted.foreach { case (name, law, in) =>
+        val what = s"case $ci $name"
+        def st(x: DataFrame) = law.derive(in(x))
+        val all = canon(st(df))
+        assert(canon(law.merge(st(a), st(b.unionByName(c)))) == all,
+          s"$what: merge != rebuild")
+        assert(canon(law.merge(law.merge(st(a), st(b)), st(c))) == all,
+          s"$what: chained merges != rebuild")
+        assert(canon(law.delete(law.merge(st(a), st(b)), st(b))) ==
+          canon(st(a)), s"$what: merge-then-delete != never ingested")
+        assert(streamed(name, st(a),
+            law.fold(addRows.andThen(in), delRows.andThen(in)))
+          .forall(_ == canon(st(net))), s"$what: stream fold != rebuild")
       }
     }
   }

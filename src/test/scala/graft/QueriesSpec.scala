@@ -44,14 +44,14 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("Bench's warm-up throws on a missing data dir, naming the dir and the query") {
-    val missing = java.nio.file.Files.createTempDirectory("bench_warm").toString + "/no_sf"
+    val missing = TestSpark.tmpDir("bench_warm") + "/no_sf"
     val err = intercept[IllegalStateException](Bench.warmUp(spark, missing))
     assert(err.getMessage.contains(missing), err.getMessage)
     assert(err.getMessage.contains("q01_pricing_summary"), err.getMessage)
   }
 
   test("Verify.dump writes every good query and returns each throwing one") {
-    val out = java.nio.file.Files.createTempDirectory("verify_dump").toString
+    val out = TestSpark.tmpDir("verify_dump")
     val registry: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
       "good" -> Queries.queryMap("q01_pricing_summary"),
       "bad" -> ((_, _) => throw new IllegalStateException("no such table")))

@@ -15,7 +15,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming tumbling counts equal batch tumbling counts") {
     val batchDf = graft.io.Tables.events(spark, d)
     // FileStreamSource needs a directory, not a single parquet file
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       dir.resolve("events.parquet"))
@@ -34,7 +34,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming session windows equal batch session windows") {
-    val dir = java.nio.file.Files.createTempDirectory("events_session")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_session"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       dir.resolve("events.parquet"))
@@ -56,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("flatMapGroupsWithState sessionization matches batch sessions (closed set)") {
-    val dir = java.nio.file.Files.createTempDirectory("events_fsess")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_fsess"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       dir.resolve("events.parquet"))
@@ -90,7 +90,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static join enriches every batch row (state-less)") {
-    val dir = java.nio.file.Files.createTempDirectory("events_static")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_static"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       dir.resolve("events.parquet"))
@@ -122,7 +122,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming dedup emits each duplicated event exactly once") {
     import org.apache.spark.sql.functions._
     // the same file delivered twice = every event is a duplicate
-    val dir = java.nio.file.Files.createTempDirectory("events_dup")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_dup"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"), dir.resolve("a.parquet"))
     java.nio.file.Files.copy(
@@ -144,7 +144,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-stream interval join equals the batch interval join") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("events_ssj")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_ssj"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       dir.resolve("events.parquet"))
@@ -183,7 +183,7 @@ class StreamingSpec extends AnyFunSuite {
     // (late events used to move last-seen backward and split sessions)
     val src = graft.io.Tables.events(spark, d)
     val cut = src.agg(expr("percentile(cast(ts as long), 0.5)")).collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("events_late")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_late"))
     val newer = src.filter(col("ts").cast("long") >= cut)
     val older = src.filter(col("ts").cast("long") < cut)
     newer.coalesce(1).write.mode("append").parquet(dir.toString)
@@ -218,7 +218,7 @@ class StreamingSpec extends AnyFunSuite {
     // three single-file micro-batches (mtime-ordered): user 1 active,
     // then user 2 far ahead (advances the watermark past user 1's idle
     // horizon -> eviction), then user 1 returns
-    val dir = java.nio.file.Files.createTempDirectory("events_evict").toString
+    val dir = TestSpark.tmpDir("events_evict")
     val base = 1700000000L
     def write(rows: (Long, Long)*): Unit = {
       rows.toSeq.toDF("user_id", "sec")
@@ -254,7 +254,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful mapGroupsWithState tracks per-user counts") {
-    val dir = java.nio.file.Files.createTempDirectory("events_state")
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("events_state"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       dir.resolve("events.parquet"))
@@ -287,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
     // jobs are the slice writes; legs see a fresh stream, resume after
     // the first
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("staged_legs").toString
+    val root = TestSpark.tmpDir("staged_legs")
     val stage = s"$root/feed"
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Boolean, Boolean)]
     val (last, jobs) = org.apache.spark.TestBus.jobsDuring(spark.sparkContext) {
@@ -310,7 +310,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.DeltaState
     import graft.streaming.DeltaState.DeltaFoldSpec
-    val root = java.nio.file.Files.createTempDirectory("staged_fold").toString
+    val root = TestSpark.tmpDir("staged_fold")
     val stateDir = s"$root/state"
     val init = Seq((0L, "z")).toDF("id", "v")
     def rows(df: org.apache.spark.sql.DataFrame) =
