@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.{FsOps, Tables}
+import graft.io.{Bucketing, FsOps, Tables}
 import graft.ops._
-import graft.streaming.DeltaState
-import graft.streaming.DeltaState.DeltaFoldSpec
+import graft.streaming.{DeltaState, FoldLaw}
+import graft.streaming.DeltaState.{DeltaFoldSpec, NamedDeltaStore, StoreFold}
 
 /** Shared helpers of the per-family query registries: testdata table
   * accessors, scratch-dir plumbing, staged CDC feeds, and the
@@ -270,6 +270,121 @@ private[graft] object QHelp {
     * a [[graft.streaming.FoldLaw]] instance's `fold` takes. */
   private[graft] val cdcAdds: DataFrame => DataFrame = cdcRows(_, "add")
   private[graft] val cdcDels: DataFrame => DataFrame = cdcRows(_, "del")
+
+  /** The CDC feed of an index-lifecycle query, folded into its
+    * DeltaState stores. The feed is `src`'s `id` and `payload` columns
+    * as two [[cdcSlice]]s: adds `id % 20 == 0` with dels `== 7`, then
+    * adds `== 10` with dels `== 17`. [[stagedLegs]] stages them under
+    * `<tag>_feed` and runs one leg per slice, the second resumed, and
+    * every batch folds into each `(init, fold)` store through
+    * [[DeltaState.foreachBatchStoreFolds]] (with two stores the batch is
+    * pinned once). The stores live under `<tag>_state` and
+    * `<tag>_stats_state`. Returns each store's dir and resolved final
+    * state, in order.
+    */
+  private[graft] def cdcLegs(s: SparkSession, tag: String, src: DataFrame,
+                             id: String, payload: String)
+                            (stores: (DataFrame, StoreFold)*): Seq[(String, DataFrame)] = {
+    require(stores.size <= 2, "cdcLegs: a feed folds into one or two stores")
+    val feed = src.select(col(id), col(payload))
+    val named = stores.zip(Seq("state", "stats_state")).map {
+      case ((init, fold), name) => NamedDeltaStore(tmpDir(s, s"${tag}_$name"), init, fold)
+    }
+    val fin = stagedLegs(s, tmpDir(s, s"${tag}_feed"), cdcSlice(feed, id, 0L, 7L),
+        cdcSlice(feed, id, 10L, 17L)) { (stream, resume) =>
+      DeltaState.foreachBatchStoreFolds(stream, named, resume)
+    }
+    named.map(st => st.stateDir -> fin(st.stateDir))
+  }
+
+  /** How a delta index's bucket stats follow its CDC feed. Both start as
+    * `law.derive` of the built base table. */
+  private[graft] sealed trait IndexStats
+
+  /** Stored once beside the base. After the stream the probe's stats
+    * replay the feed: stored − the deleted docs' stats, recomputed from
+    * their carried payload, + the overlay adds' stats. */
+  private[graft] final case class ReplayedStats(law: FoldLaw.Counted) extends IndexStats
+
+  /** Folded as a second store from the same feed; the probe reads it as
+    * resolved. */
+  private[graft] final case class FoldedStats(law: FoldLaw.Counted) extends IndexStats
+
+  /** What a [[deltaIndex]] probe sees: the bucketed `base` table, the
+    * overlay store's resolved `adds` and pending `tombs` (both
+    * batch-sized), and the effective bucket `stats` when the index
+    * keeps them. `gen2(rows, buckets)` writes `rows` as the scenario's
+    * second-generation table, bucketed on the same keys, and returns
+    * it; the scenario drops it with the base.
+    */
+  private[graft] final class DeltaIndex(val base: DataFrame, val adds: DataFrame,
+                                        val tombs: Option[DataFrame],
+                                        val stats: Option[DataFrame], id: String,
+                                        val gen2: (DataFrame, Int) => DataFrame) {
+    /** The resolved index over `cols`: base ∖ tombs ∪ adds. */
+    def resolved(cols: String*): DataFrame = {
+      val live = tombs.fold(base)(t => base.join(t.select(col(id)), Seq(id), "left_anti"))
+      live.select(cols.map(col): _*).unionByName(adds.select(cols.map(col): _*))
+    }
+  }
+
+  /** The delta-index lifecycle: the one script every bucketed
+    * delta-probe and cutover query runs. An instance supplies its
+    * `tag`, the `src` table its CDC feed is cut from ([[cdcLegs]]), the
+    * `corpus` the index is built over, the per-doc `law` with the
+    * feed's `payload` column, the bucket `keys`, optional `stats`, and
+    * the `probe`.
+    *
+    * `law.derive(corpus)` is written as a table bucketed 8 ways on
+    * `keys` (and sorted on them), and the feed folds into an overlay
+    * store whose own base is empty: the bucketed table is the real base
+    * and is never rewritten, so a probe joins it with no index-side
+    * exchange. The probe's result is pinned with `localCheckpoint` so
+    * that every table the scenario wrote can be dropped before it
+    * returns; the drops run in a `finally`, so a leg or probe that
+    * throws leaves no table behind either.
+    */
+  private[graft] def deltaIndex(s: SparkSession, tag: String, src: DataFrame,
+                                corpus: DataFrame, law: FoldLaw.PerDoc,
+                                payload: String, keys: Seq[String],
+                                stats: Option[IndexStats] = None)
+                               (probe: DeltaIndex => DataFrame): DataFrame = {
+    val pid = ProcessHandle.current().pid()
+    val tables = scala.collection.mutable.ArrayBuffer.empty[String]
+    def write(rows: DataFrame, name: String, buckets: Int): DataFrame = {
+      tables += s"graft_${name}_$pid"
+      Bucketing.writeBucketedKeys(rows, tables.last, buckets, keys, keys)
+      Bucketing.table(s, tables.last)
+    }
+    // bucket stats count index rows, so each row a batch's adds or dels
+    // derive contributes +1 or −1: one signed aggregate per trigger
+    def signed(st: FoldLaw.Counted, docs: DataFrame, w: Long) =
+      law.derive(docs).select(st.keys.map(col) ++ st.counts.map(lit(w).as(_)): _*)
+    try {
+      val base = write(law.derive(corpus), tag, 8)
+      val statsDir = tmpDir(s, s"${tag}_stats")
+      stats.collect { case ReplayedStats(st) =>
+        st.derive(base).write.mode("overwrite").parquet(statsDir)
+      }
+      val statsStore = stats.collect { case FoldedStats(st) =>
+        st.derive(base) -> st.foldSigned(b =>
+          signed(st, cdcAdds(b), 1L).unionByName(signed(st, cdcDels(b), -1L)))
+      }
+      val stores = cdcLegs(s, tag, src, law.id, payload)(
+        (law.derive(src.limit(0)) -> law.fold(cdcAdds, cdcDels)) +: statsStore.toSeq: _*)
+      val (adds, tombs) = DeltaState.overlay(s, stores.head._1)
+      val effStats = stats.map {
+        case ReplayedStats(st) =>
+          // the feed's dels are the ids with id % 10 == 7
+          val dels = src.filter(col(law.id) % 10 === 7).select(col(law.id), col(payload))
+          st.merge(st.delete(FsOps.readParquet(s, statsDir), st.derive(law.derive(dels))),
+            st.derive(adds))
+        case FoldedStats(_) => stores(1)._2
+      }
+      probe(new DeltaIndex(base, adds, tombs, effStats, law.id,
+        write(_, s"${tag}_gen2", _))).localCheckpoint(true)
+    } finally tables.foreach(Bucketing.drop(s, _))
+  }
 
   /** Run `probe` on every micro-batch of `src` and keep its output as an
     * add-only DeltaState store under `outDir`, returning the resolved

@@ -25,27 +25,24 @@ private[graft] object QueriesDedup {
 
 
   /** dedup_minhash — MinHash(32)+LSH(8x4) near-dup with exact Jaccard
-    * verification of candidates. Graded projection (round 4, was
-    * rows-only): (doc_id, is_dup, dup_jaccard) — the VERIFIED outputs,
-    * which are SQL-checkable even though the xxhash64 signatures are
-    * not. The oracle computes ground truth as the UNPRUNED exact
-    * 3-gram Jaccard over all shared-shingle pairs — unlike d04 it
-    * applies NO maxDF stop-shingle pruning, because the engine's
-    * verification (array_intersect over full shingle sets) is
-    * unpruned too; a pruned oracle would understate the Jaccard of a
-    * pair sharing a hot shingle and silently diverge (review-pass
-    * finding, round 4). Affordable because the fixture's max shingle
-    * document frequency is 25 (sf0.1; 9/7 at smaller sfs) — the
-    * inverted-index join stays tiny. The parity claim is doc-level:
-    * is_dup ≡ "has an exact-Jaccard >= 0.8 partner". That holds
-    * because LSH recall over the TRUE >= 0.8 pairs is MEASURED TOTAL
-    * on this fixture at every sf (tools/Probe, round 4: 28/25/256
-    * ground-truth pairs, 0 missed — the fixed seeded family makes
-    * this deterministic), and the corpus' pair-Jaccard distribution
-    * has a structural gap (nothing in (0.14, 0.8) at any sf) so a dup
-    * doc's best candidate is always a verified >= 0.8 pair.
-    * dup_jaccard is NULL for non-dups: their best candidate may be a
-    * sub-threshold pair LSH legitimately missed.
+    * verification of candidates. Graded projection: (doc_id, is_dup,
+    * dup_jaccard) — the VERIFIED outputs, which are SQL-checkable even
+    * though the xxhash64 signatures are not. The oracle computes ground
+    * truth as the UNPRUNED exact 3-gram Jaccard over all shared-shingle
+    * pairs — unlike d04 it applies NO maxDF stop-shingle pruning, because
+    * the engine's verification (array_intersect over full shingle sets)
+    * is unpruned too; a pruned oracle would understate the Jaccard of a
+    * pair sharing a hot shingle and silently diverge. Affordable because
+    * the fixture's max shingle document frequency is 25 (sf0.1; 9/7 at
+    * smaller sfs) — the inverted-index join stays tiny. The parity claim
+    * is doc-level: is_dup ≡ "has an exact-Jaccard >= 0.8 partner". That
+    * holds because LSH recall over the TRUE >= 0.8 pairs is MEASURED
+    * TOTAL on this fixture at every sf (28/25/256 ground-truth pairs, 0
+    * missed — the fixed seeded family makes this deterministic), and the
+    * corpus' pair-Jaccard distribution has a structural gap (nothing in
+    * (0.14, 0.8) at any sf) so a dup doc's best candidate is always a
+    * verified >= 0.8 pair. dup_jaccard is NULL for non-dups: their best
+    * candidate may be a sub-threshold pair LSH legitimately missed.
     */
   /** The doc-level MinHash oracle: ground truth as the UNPRUNED exact
     * 3-gram Jaccard over all shared-shingle pairs (see d02's doc).
@@ -89,16 +86,15 @@ private[graft] object QueriesDedup {
   private val d02 = Q(
     "dedup_minhash",
     // maxBucket=256 ACTIVE — the graded instance IS the production
-    // default (round-7 verdict task 3: the config users copy must be
-    // the graded one; the uncapped shape is quadratic in copies —
-    // BASELINE.md measures 140 s at ×100 where the cap holds 20 s at
-    // ×300). The xxhash64 band hashes are not SQL-derivable, so this
-    // doc-level oracle cannot replay the drop itself; parity holds
-    // because (a) on the graded fixtures NO band bucket exceeds 256
-    // (capped ≡ uncapped output, asserted in OpsSpec at sf0.001/0.01)
-    // so the measured-total-recall + Jaccard-gap argument carries
-    // over unchanged, and (b) the cap's dropping behavior is
-    // structurally hash-graded by dedup_minhash_mirror (every
+    // default (the config users copy must be the graded one; the uncapped
+    // shape is quadratic in copies — BASELINE.md measures 140 s at ×100
+    // where the cap holds 20 s at ×300). The xxhash64 band hashes are not
+    // SQL-derivable, so this doc-level oracle cannot replay the drop
+    // itself; parity holds because (a) on the graded fixtures NO band
+    // bucket exceeds 256 (capped ≡ uncapped output, asserted in OpsSpec
+    // at sf0.001/0.01) so the measured-total-recall + Jaccard-gap
+    // argument carries over unchanged, and (b) the cap's dropping
+    // behavior is structurally hash-graded by dedup_minhash_mirror (every
     // intermediate replayed, cap active) and pinned by OpsSpec's
     // 600-identical-doc fixture. A fixture regen that mass-duplicates
     // past 256 flips (a): the mirror still grades, and
@@ -111,15 +107,14 @@ private[graft] object QueriesDedup {
     Some(minhashDocLevelOracle))
 
 
-  /** dedup_minhash_uncapped — the AUDIT instance (round-7 verdict
-    * task 3 companion): identical pipeline to dedup_minhash but with
-    * the bucket cap disabled, so NO candidate bucket is ever dropped
-    * and doc-level parity against the exact-Jaccard oracle is
-    * regen-proof — if a fixture regen mass-duplicates a bucket past
-    * 256, THIS query keeps grading truth while the capped production
-    * instance is allowed to (visibly) diverge from it. Not a bench
-    * headline: its uncapped shape is quadratic in copies by design
-    * (that is what it audits).
+  /** dedup_minhash_uncapped — the AUDIT instance, dedup_minhash's
+    * companion: identical pipeline to dedup_minhash but with the bucket
+    * cap disabled, so NO candidate bucket is ever dropped and doc-level
+    * parity against the exact-Jaccard oracle is regen-proof — if a
+    * fixture regen mass-duplicates a bucket past 256, THIS query keeps
+    * grading truth while the capped production instance is allowed to
+    * (visibly) diverge from it. Not a bench headline: its uncapped shape
+    * is quadratic in copies by design (that is what it audits).
     */
   private val d02u = Q(
     "dedup_minhash_uncapped",
@@ -133,17 +128,16 @@ private[graft] object QueriesDedup {
 
   /** dedup_minhash_mirror — MinHash+LSH on the engine-portable
     * md5-derived family (MinHashSigMd5), graded as a FULL STRUCTURAL
-    * MIRROR with the maxBucket=256 cap ACTIVE. Closes round-6 queue
-    * item (4): d02's xxhash64 band hashes made the bucket cap
-    * un-mirrorable, so its graded instance runs uncapped and its
-    * parity claim is doc-level (measured-total recall + the corpus'
-    * Jaccard gap). Here every intermediate is replayed by the oracle —
-    * 31-bit universal-hash signature values over md5_number_lower
-    * bases, raw-4-tuple band buckets, the over-cap drop, the distinct
-    * candidate pair set, exact-Jaccard verification over shingle
-    * string sets, and the per-doc aggregate — so parity is structural:
-    * a fixture regen that creates a >256-doc bucket changes both
-    * sides identically. d02 stays graded as the fast-family
+    * MIRROR with the maxBucket=256 cap ACTIVE. d02's xxhash64 band hashes
+    * made the bucket cap un-mirrorable, so its graded instance runs
+    * uncapped and its parity claim is doc-level (measured-total recall +
+    * the corpus' Jaccard gap). Here every intermediate is replayed by the
+    * oracle — 31-bit universal-hash signature values over
+    * md5_number_lower bases, raw-4-tuple band buckets, the over-cap drop,
+    * the distinct candidate pair set, exact-Jaccard verification over
+    * shingle string sets, and the per-doc aggregate — so parity is
+    * structural: a fixture regen that creates a >256-doc bucket changes
+    * both sides identically. d02 stays graded as the fast-family
     * production path.
     */
   private val d02m = Q(
@@ -316,17 +310,16 @@ private[graft] object QueriesDedup {
 
 
   /** dedup_simhash — 64-bit SimHash + 16-bit-segment blocking. FULL
-    * mirror oracle (round 4, was rows-only): the per-word hash is the
-    * low 64 bits of MD5 — bit-for-bit DuckDB's `md5_number_lower` —
-    * so the oracle replays the entire operator exactly: word hashes,
-    * the 64 vote sums, the >= 0 tie rule, AND the engine's own
-    * candidate structure — 4x16-bit segment blocking WITH the
-    * maxBucket=256 over-cap bucket drop (review-pass hardening: an
-    * all-pairs oracle would silently diverge the day a fixture grows a
-    * >256-doc segment bucket; mirroring the cap makes parity
-    * structural, not measured). DuckDB's `>>` on BIGINT is arithmetic
-    * like Spark's shiftright, so `(simhash >> s*16) & 65535` extracts
-    * identical segments from the signed signatures. Signatures
+    * mirror oracle: the per-word hash is the low 64 bits of MD5 —
+    * bit-for-bit DuckDB's `md5_number_lower` — so the oracle replays the
+    * entire operator exactly: word hashes, the 64 vote sums, the >= 0 tie
+    * rule, AND the engine's own candidate structure — 4x16-bit segment
+    * blocking WITH the maxBucket=256 over-cap bucket drop (review-pass
+    * hardening: an all-pairs oracle would silently diverge the day a
+    * fixture grows a >256-doc segment bucket; mirroring the cap makes
+    * parity structural, not measured). DuckDB's `>>` on BIGINT is
+    * arithmetic like Spark's shiftright, so `(simhash >> s*16) & 65535`
+    * extracts identical segments from the signed signatures. Signatures
     * reassemble as signed BIGINT (bit 63 = -2^63) to match Spark's
     * LongType without UBIGINT/HUGEINT schema drift.
     */
@@ -451,14 +444,13 @@ private[graft] object QueriesDedup {
       LEFT JOIN near ON d.doc_id = near.id_new
       ORDER BY d.doc_id"""
 
-  /** dedup_simhash_incremental — the SimHash ingest probe (round 8:
-    * the one dedup modality that still lacked an incremental shape):
-    * the doc_id % 10 == 0 batch scored against the snapshot's
-    * simhashIndex. Candidates are incoming×index segment matches only
-    * (index-side bucket cap), and verification is bit_count(xor) over
-    * the two SIGNATURES — the probe never touches corpus text at all
-    * (16 bytes/doc of state; plan-asserted in OpsSpec), the strongest
-    * never-rescan contract in the family.
+  /** dedup_simhash_incremental — the SimHash ingest probe: the doc_id %
+    * 10 == 0 batch scored against the snapshot's simhashIndex. Candidates
+    * are incoming×index segment matches only (index-side bucket cap), and
+    * verification is bit_count(xor) over the two SIGNATURES — the probe
+    * never touches corpus text at all (16 bytes/doc of state;
+    * plan-asserted in OpsSpec), the strongest never-rescan contract in
+    * the family.
     */
   private val d03i = Q(
     "dedup_simhash_incremental",
@@ -822,17 +814,15 @@ private[graft] object QueriesDedup {
     * in both engines), same integer-width casts, double-division
     * coverage rounded to 6 on both sides.
     */
-  /** The full span-dedup oracle chain, parameterized by the
-    * hot-filter universe and output predicates (the
-    * minhashIncrementalSql one-definition idiom; round 9, was four
-    * hand-kept copies): `hotPred` restricts which docs' windows count
-    * toward the ≥2 occurrence bound (empty = all — the full-corpus
-    * and maintained-index graders, whose union IS everything;
-    * non-empty = the retraction grader, where deleted docs must stop
-    * counting), `outPred` restricts dup/output rows to the graded
-    * batch (empty = whole corpus). Serves d10 / d10i / d10u /
-    * d10d, which by the additive-count laws differ ONLY in these
-    * predicates.
+  /** The full span-dedup oracle chain, parameterized by the hot-filter
+    * universe and output predicates (the minhashIncrementalSql
+    * one-definition idiom): `hotPred` restricts which docs' windows count
+    * toward the ≥2 occurrence bound (empty = all — the full-corpus and
+    * maintained-index graders, whose union IS everything; non-empty = the
+    * retraction grader, where deleted docs must stop counting), `outPred`
+    * restricts dup/output rows to the graded batch (empty = whole
+    * corpus). Serves d10 / d10i / d10u / d10d, which by the
+    * additive-count laws differ ONLY in these predicates.
     */
   private[graft] def spanOracleSql(hotPred: String, outPred: String): String = {
     def where(alias: String, pred: String): String =
@@ -888,16 +878,15 @@ private[graft] object QueriesDedup {
     Some(spanOracleSql("", "")))
 
 
-  /** dedup_spans_incremental — ingest-vs-corpus span dedup (round-7
-    * verdict task 6): the docs with doc_id ≥ 250 arrive as a batch and
-    * probe the snapshot's spanIndex (doc_id < 250 — the ~24-byte/
-    * distinct-n-gram digest index, NOT corpus text). A batch window is
-    * duplicated iff snapshot occ + batch occ ≥ 2, which is exactly
-    * batch spanDedup over the union restricted to batch docs (additive
-    * counting; property-tested in OpsSpec). Oracle mirrors the full
-    * chain: windows over ALL docs, union-wide hot filter, dup/output
-    * restricted to the batch — same 0-based starts, same
-    * gaps-and-islands merge, same casts and rounding as d10.
+  /** dedup_spans_incremental — ingest-vs-corpus span dedup: the docs with
+    * doc_id ≥ 250 arrive as a batch and probe the snapshot's spanIndex
+    * (doc_id < 250 — the ~24-byte/ distinct-n-gram digest index, NOT
+    * corpus text). A batch window is duplicated iff snapshot occ + batch
+    * occ ≥ 2, which is exactly batch spanDedup over the union restricted
+    * to batch docs (additive counting; property-tested in OpsSpec).
+    * Oracle mirrors the full chain: windows over ALL docs, union-wide hot
+    * filter, dup/output restricted to the batch — same 0-based starts,
+    * same gaps-and-islands merge, same casts and rounding as d10.
     */
   private val d10i = Q(
     "dedup_spans_incremental",
@@ -964,47 +953,39 @@ private[graft] object QueriesDedup {
     },
     Some(spanOracleSql("doc_id < 200 OR doc_id >= 400", "doc_id >= 400")))
 
-  /** dedup_spans_delta_probe — the span family's STREAMING-DELTA
-    * maintenance. The span index is the dedup index whose state is a
-    * COUNT aggregate, so it folds under `FoldLaw.spanOccurrences`, a
-    * `Counted` law on the MergeFold protocol: a deletion is a NEGATED
-    * window-count partial, recomputed batch-sized from the feed's
-    * carried text. A two-batch CDC feed (stopped and RESUMED between
-    * batches) publishes adds (% 10 == 0 docs' window counts) and
-    * retractions (% 10 == 7 corpus docs' counts negated); each
-    * trigger's publish is the batch's distinct-digest partial — the
-    * stored index is never rewritten on the ingest path. The
-    * % 10 == 5 batch probes the resolved state TWICE — delta-resolved
-    * and post-compaction — and both phases must equal one-shot batch
-    * spanDedup over the net union (window counts over % 10 ≠ 7 docs,
-    * output % 10 == 5 — the family's shared parameterized oracle). A
-    * double-applied partial, a leaked retraction, or a digest kept at
-    * zero perturbs the hot set and fails the hash.
+  /** The corpus every delta-lifecycle query indexes: the docs that are
+    * neither fed as adds (% 10 == 0) nor probed (% 10 == 5). */
+  private def deltaCorpus(all: DataFrame): DataFrame =
+    all.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
+
+  /** dedup_spans_delta_probe — streaming-delta maintenance of the span
+    * index, whose state is a count aggregate: it folds under
+    * `FoldLaw.spanOccurrences`, a `Counted` law on the MergeFold
+    * protocol, where a deletion is a negated window-count partial
+    * recomputed from the feed's carried text. The two-leg CDC feed
+    * ([[QHelp.cdcLegs]]: adds % 10 == 0, retractions % 10 == 7)
+    * publishes each trigger's distinct-digest partial; the stored index
+    * is never rewritten on the ingest path. The % 10 == 5 batch probes
+    * the state twice, delta-resolved and after compaction, and both
+    * phases must equal one-shot spanDedup over the net corpus (window
+    * counts over % 10 ≠ 7 docs, output % 10 == 5: the family's shared
+    * oracle). A double-applied partial, a leaked retraction or a digest
+    * kept at zero moves the hot set and fails the hash.
     */
   private val d10dp = Q(
     "dedup_spans_delta_probe",
     (s, d) => {
-      import graft.streaming.DeltaState
       val all = docs(s, d)
-      val corpus = all.filter(col("doc_id") % 10 =!= 0 &&
-        col("doc_id") % 10 =!= 5)
-      val stageDir = tmpDir(s, "d10dp_feed")
-      val stateDir = tmpDir(s, "d10dp_state")
-      val feed = all.select(col("doc_id"), col("text"))
       val spans = FoldLaw.spanOccurrences("text", "doc_id", n = 10)
       val spec = spans.fold(cdcAdds, cdcDels)
-      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
-          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchDeltaFold(src, spans.derive(corpus), stateDir,
-          spec, resume)
-      }
-      val batch = all.filter(col("doc_id") % 10 === 5)
-      def probed(phase: String) = DedupOps.spanDedupIncremental(
-          batch, spec.resolve(s, stateDir), "text", "doc_id", n = 10)
+      val Seq((stateDir, delta)) = cdcLegs(s, "d10dp", all, "doc_id", "text")(
+        spans.derive(deltaCorpus(all)) -> spec)
+      def probed(phase: String, state: DataFrame) = DedupOps.spanDedupIncremental(
+          all.filter(col("doc_id") % 10 === 5), state, "text", "doc_id", n = 10)
         .withColumn("phase", lit(phase))
-      val viaDeltas = probed("delta").localCheckpoint(true)
+      val viaDeltas = probed("delta", delta).localCheckpoint(true)
       spec.compactStore(s, stateDir)
-      viaDeltas.unionByName(probed("compact"))
+      viaDeltas.unionByName(probed("compact", spec.resolve(s, stateDir)))
         .orderBy(col("phase"), col("doc_id"))
     },
     Some(s"""
@@ -1109,22 +1090,20 @@ private[graft] object QueriesDedup {
     Some(minhashIncrementalSql("doc_id < 200", "doc_id >= 400")))
 
   /** dedup_minhash_bucketed_probe — the minhash band index in its
-    * production LAYOUT (round 10: the d03b pattern ported to the
-    * minhash family — its scaladoc has claimed "at 100 TB the corpus
-    * bands live bucketed on (band_idx, band_hash)" since round 8;
-    * this makes the claim a graded shape): the corpus band index
-    * WRITTEN as a table BUCKETED on its probe key — band_hash is the
-    * raw ARRAY<BIGINT> band tuple, which Spark hash-partitions and
-    * orders natively, so the layout needs no derived scalar key —
-    * with its bucket stats derived once at write time and stored
-    * beside it, and the % 10 == 0 batch probed through
-    * `minhashNearDupIndexed` with the stored stats passed: the cap is
-    * an anti-join against a keys-sized scan, and the candidate join
-    * plans with ZERO exchange on the index side straight off the
-    * bucketed scan (OpsSpec asserts no index-side Exchange; `merge`
-    * hint keeps the scale plan where small-SF Catalyst would
-    * broadcast). Same output as the inline-index probe by
-    * construction, so the oracle is d02i's exact chain.
+    * production LAYOUT (the d03b pattern ported to the minhash family, so
+    * that "at 100 TB the corpus bands live bucketed on (band_idx,
+    * band_hash)" is a graded shape): the corpus band index WRITTEN as a
+    * table BUCKETED on its probe key — band_hash is the raw ARRAY<BIGINT>
+    * band tuple, which Spark hash-partitions and orders natively, so the
+    * layout needs no derived scalar key — with its bucket stats derived
+    * once at write time and stored beside it, and the % 10 == 0 batch
+    * probed through `minhashNearDupIndexed` with the stored stats passed:
+    * the cap is an anti-join against a keys-sized scan, and the candidate
+    * join plans with ZERO exchange on the index side straight off the
+    * bucketed scan (OpsSpec asserts no index-side Exchange; `merge` hint
+    * keeps the scale plan where small-SF Catalyst would broadcast). Same
+    * output as the inline-index probe by construction, so the oracle is
+    * d02i's exact chain.
     */
   private val d02b = Q(
     "dedup_minhash_bucketed_probe",
@@ -1186,9 +1165,8 @@ private[graft] object QueriesDedup {
       Bucketing.writePartitionedBucketedKeys(banded, tbl,
         Seq("ingest_wave"), 8, Seq("band_idx", "band_hash"),
         Seq("band_idx", "band_hash"))
-      // per-wave stats stored at write time, PARTITIONED on the same
-      // wave key as the index (round 12: the round-11 verdict's task 8
-      // — the layout story uniform across index and stats): the pruned
+      // per-wave stats stored at write time, PARTITIONED on the same wave
+      // key as the index (one layout across index and stats): the pruned
       // slice's stats are a keys-sized group-sum of the kept waves
       // (additive law), and the wave predicate prunes stats partition
       // directories at planning time exactly as it prunes the index's
@@ -1216,21 +1194,20 @@ private[graft] object QueriesDedup {
     writes = true)
 
   /** dedup_simhash_evolved_merge — STATE SCHEMA EVOLUTION on a stored
-    * index (round 11: the round-10 verdict's task 5 — a snapshot
-    * written by an older code version must fold without a silent
-    * wrong answer): the corpus signature index is stored WITHOUT the
-    * `lang` provenance column a later code version adds, then merged
-    * with a tagged ingest batch through `Tables.evolveTo` — legacy
-    * rows align to the wide schema with typed-NULL tags (the
-    * mergeSchema semantics; a plain strict union would refuse, a
-    * positional union would silently misalign), while a type change
-    * or a dropped stored column refuses loudly (IoFunctionsSpec). The
-    * merged state is graded DIRECTLY, per provenance tag: row count,
-    * bit_xor of the signatures (order-independent and exact — one
-    * perturbed signature flips it), and the summed signature
-    * popcount. The oracle replays the d03 signature chain and mirrors
-    * the NULL-tag rule, so a leaked legacy tag, a dropped legacy row,
-    * or a signature moved by the alignment all fail the hash.
+    * index (a snapshot written by an older code version must fold without
+    * a silent wrong answer): the corpus signature index is stored WITHOUT
+    * the `lang` provenance column a later code version adds, then merged
+    * with a tagged ingest batch through `Tables.evolveTo` — legacy rows
+    * align to the wide schema with typed-NULL tags (the mergeSchema
+    * semantics; a plain strict union would refuse, a positional union
+    * would silently misalign), while a type change or a dropped stored
+    * column refuses loudly (IoFunctionsSpec). The merged state is graded
+    * DIRECTLY, per provenance tag: row count, bit_xor of the signatures
+    * (order-independent and exact — one perturbed signature flips it),
+    * and the summed signature popcount. The oracle replays the d03
+    * signature chain and mirrors the NULL-tag rule, so a leaked legacy
+    * tag, a dropped legacy row, or a signature moved by the alignment all
+    * fail the hash.
     */
   private val d03e = Q(
     "dedup_simhash_evolved_merge",
@@ -1267,341 +1244,124 @@ private[graft] object QueriesDedup {
       FROM tagged GROUP BY 1 ORDER BY 1"""),
     writes = true)
 
-  /** dedup_simhash_delta_probe — the DELTA PROTOCOL composed with the
-    * EXCHANGE-FREE LAYOUT (round 11's capstone: `streaming_fold_delta_parity`
-    * makes the ingest write batch-sized; this makes the PROBE of that
-    * state keep the bucketed plan — probing `DeltaState.read`'s
-    * resolved union would reshuffle the base, because a union carries
-    * no bucketed distribution): the corpus segment index lives as a
-    * BUCKETED table with its stats stored at write time; a two-batch
-    * CDC feed (stopped and RESUMED between batches) publishes adds
-    * (% 10 == 0 docs' segment rows) and tombstones (% 10 == 7 corpus
-    * ids) into a DeltaState overlay store — the base table is never
-    * rewritten. The % 10 == 5 batch then probes through
-    * `simhashNearDupSegDeltaIndexed`: candidate join straight off the
-    * bucketed base scan (zero index-side exchange — OpsSpec asserts
-    * it on this exact shape), tombstoned corpus candidates dropped by
-    * a candidate-sized id anti-join, the overlay joined as a second
-    * window-sized candidate source, and the cap driven by EFFECTIVE
-    * stats folded batch/keys-sized (stored base stats − the deleted
-    * docs' segment rows, recomputed from the feed's carried text —
-    * never an index scan — + the overlay's). Equal to the one-shot
-    * incremental against the never-ingested net corpus (% 10 ∉ {5,7})
-    * — the shared chain, the same bar st14's resolved-read probe
-    * meets, now with the 100 TB plan.
+  /** The simhash segment index as a delta index ([[QHelp.deltaIndex]]):
+    * the [[deltaCorpus]] bucketed on (seg_idx, seg_val), an overlay
+    * that adds the % 10 == 0 docs and tombstones the % 10 == 7 ids, and
+    * the % 10 == 5 batch probed through `simhashNearDupSegDeltaIndexed`.
+    * The candidate join runs straight off the bucketed base scan
+    * (OpsSpec asserts zero index-side exchange on this shape; probing
+    * `DeltaState.read`'s union would reshuffle the base, because a
+    * union carries no bucketed distribution), tombstoned candidates
+    * drop by a candidate-sized id anti-join, the overlay joins as a
+    * second window-sized candidate source, and the cap takes the
+    * effective `stats`. Equal to the one-shot incremental against the
+    * net corpus (% 10 ∉ {5, 7}), the family's shared chain.
     */
+  private def simhashDeltaProbe(tag: String, stats: IndexStats)
+      : (SparkSession, String) => DataFrame = (s, d) => {
+    val all = docs(s, d)
+    deltaIndex(s, tag, all, deltaCorpus(all), FoldLaw.simhashSegments("text", "doc_id"),
+        "text", Seq("seg_idx", "seg_val"), Some(stats)) { ix =>
+      DedupOps.simhashNearDupSegDeltaIndexed(all.filter(col("doc_id") % 10 === 5),
+        ix.base.hint("merge"), ix.adds, ix.tombs, "text", "doc_id", segStats = ix.stats.get)
+    }.orderBy(col("doc_id"))
+  }
+
+  /** dedup_simhash_delta_probe — [[simhashDeltaProbe]] with the segment
+    * stats stored at build time and replayed after the stream: stored −
+    * the deleted docs' stats, recomputed from the feed's carried text
+    * and never from an index scan, + the overlay's. */
   private val d03p = Q(
     "dedup_simhash_delta_probe",
-    (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
-      val all = docs(s, d)
-      val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      val segs = FoldLaw.simhashSegments("text", "doc_id")
-      val stats = FoldLaw.simhashSegmentStats
-      val segT = s"graft_shseg_delta_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(segs.derive(corpus), segT, 8,
-        Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
-      val base = Bucketing.table(s, segT)
-      val statsDir = tmpDir(s, "d03p_stats")
-      stats.derive(base).write.mode("overwrite").parquet(statsDir)
-      // CDC feed: adds AND dels carry text — the stats retraction
-      // recomputes the deleted docs' segment rows batch-sized
-      val stageDir = tmpDir(s, "d03p_feed")
-      val stateDir = tmpDir(s, "d03p_state")
-      val feed = all.select($"doc_id", $"text")
-      val spec = segs.fold(cdcAdds, cdcDels)
-      // the delta store holds ONLY the overlay — its base is an empty
-      // relation; the real base is the bucketed table above
-      val emptySeg = segs.derive(all.limit(0))
-      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
-          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchDeltaFold(src, emptySeg, stateDir, spec, resume)
-      }
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      val delDocs = all.filter($"doc_id" % 10 === 7).select($"doc_id", $"text")
-      val effStats = stats.merge(
-        stats.delete(FsOps.readParquet(s, statsDir),
-          stats.derive(segs.derive(delDocs))),
-        stats.derive(overlayAdds))
-      val res = DedupOps.simhashNearDupSegDeltaIndexed(
-          all.filter($"doc_id" % 10 === 5),
-          base.hint("merge"), overlayAdds, tombs, "text", "doc_id",
-          segStats = effStats)
-        .localCheckpoint(true)
-      Bucketing.drop(s, segT)
-      res.orderBy($"doc_id")
-    },
+    simhashDeltaProbe("d03p", ReplayedStats(FoldLaw.simhashSegmentStats)),
     Some(simhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
       "doc_id % 10 = 5")),
     writes = true)
 
-  /** dedup_simhash_delta_stats_probe — the probe's effective stats
-    * MAINTAINED AS STORED STATE: d03p rebuilds the cap's effective
-    * stats driver-side AFTER the stream by replaying the takedown
-    * feed; a production probe reads stats that were FOLDED as the
-    * feed arrived. Same splits and oracle as d03p, but the CDC stream
-    * maintains TWO stores in one pass (`foreachBatchStoreFolds`, the
-    * batch pinned once): the segment store (the `FoldLaw.simhashSegments`
-    * fold: adds = the batch's segment rows, dels = tombstone ids) and
-    * a stats store (the `FoldLaw.simhashSegmentStats` fold) whose
-    * per-batch PARTIAL is the adds' segment stats plus the deleted
-    * docs' stats NEGATED (recomputed batch-sized from the feed's
-    * carried text), group-summed at read time by the additive law.
-    * The probe then takes its cap
-    * ENTIRELY from the stored stats store — nothing is re-derived
-    * from the feed — and must still equal the family's shared
-    * one-shot oracle; the stats store's base file list stays
-    * byte-identical across ingest batches (DeltaStateSpec's
-    * write-side bar, asserted on the MergeFold protocol there).
-    */
+  /** dedup_simhash_delta_stats_probe — [[simhashDeltaProbe]] with the
+    * segment stats maintained as stored state: the stream folds a
+    * second store whose per-trigger partial is the batch's signed
+    * segment counts, and the cap comes entirely from that store, with
+    * nothing re-derived from the feed. DeltaStateSpec asserts that such
+    * a store's base file list stays byte-identical across ingest
+    * batches. */
   private val d03sp = Q(
     "dedup_simhash_delta_stats_probe",
-    (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.NamedDeltaStore
-      val all = docs(s, d)
-      val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      val segs = FoldLaw.simhashSegments("text", "doc_id")
-      val stats = FoldLaw.simhashSegmentStats
-      val segT = s"graft_shseg_dstats_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(segs.derive(corpus), segT, 8,
-        Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
-      val base = Bucketing.table(s, segT)
-      val stageDir = tmpDir(s, "d03sp_feed")
-      val stateDir = tmpDir(s, "d03sp_state")
-      val statsStateDir = tmpDir(s, "d03sp_stats_state")
-      val feed = all.select($"doc_id", $"text")
-      val emptySeg = segs.derive(all.limit(0))
-      // the stats store's v0 is the stats STORED at index-build time
-      val stores = Seq(
-        NamedDeltaStore(stateDir, emptySeg, segs.fold(cdcAdds, cdcDels)),
-        NamedDeltaStore(statsStateDir, stats.derive(base), stats.fold(
-          cdcAdds.andThen(segs.derive), cdcDels.andThen(segs.derive))))
-      val fin = stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
-          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchStoreFolds(src, stores, resume)
-      }
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      // the cap comes ENTIRELY from the stored, batch-folded state
-      val effStats = fin(statsStateDir)
-      val res = DedupOps.simhashNearDupSegDeltaIndexed(
-          all.filter($"doc_id" % 10 === 5),
-          base.hint("merge"), overlayAdds, tombs, "text", "doc_id",
-          segStats = effStats)
-        .localCheckpoint(true)
-      Bucketing.drop(s, segT)
-      res.orderBy($"doc_id")
-    },
+    simhashDeltaProbe("d03sp", FoldedStats(FoldLaw.simhashSegmentStats)),
     Some(simhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
       "doc_id % 10 = 5")),
     writes = true)
 
-  /** dedup_minhash_delta_probe — the d03p composition (delta overlay
-    * × exchange-free bucketed probe) carried to the minhash BAND
-    * family, the array-keyed workhorse index: the corpus band index
-    * lives as a BUCKETED
-    * table with stored bucket stats; a two-batch CDC feed (stopped
-    * and RESUMED between batches) publishes adds (% 10 == 0 docs'
-    * band rows) and tombstones (% 10 == 7 corpus ids) into a
-    * DeltaState overlay store — the base table is never rewritten.
-    * The % 10 == 5 batch probes through `minhashNearDupDeltaIndexed`:
-    * candidate join straight off the bucketed base scan (zero
-    * index-side exchange — OpsSpec asserts it on this exact shape),
-    * tombstoned candidates dropped candidate-sized, the overlay
-    * joined as a second window-sized source, and verification's
-    * corpus text id-restricted to candidates with the overlay docs'
-    * text taken from the feed. The cap uses EFFECTIVE stats by the
-    * `FoldLaw.minhashBucketStats` law (stored base stats − deleted
-    * docs' band rows recomputed from carried text + overlay stats). Equal to the
-    * one-shot incremental against the never-ingested net corpus —
-    * the family's shared chain, now with the 100 TB delta plan.
+  /** The minhash band index as a delta index: the [[simhashDeltaProbe]]
+    * scenario on the array-keyed family, bucketed on (band_idx,
+    * band_hash) and probed through `minhashNearDupDeltaIndexed`. The
+    * candidate join runs straight off the bucketed base scan (OpsSpec
+    * asserts zero index-side exchange on this shape), tombstoned
+    * candidates drop candidate-sized, the overlay joins as a second
+    * source, and verification reads corpus text only for candidate ids,
+    * with the overlay docs' text taken from the feed. Equal to the
+    * one-shot incremental against the net corpus.
     */
+  private def minhashDeltaProbe(tag: String, stats: IndexStats)
+      : (SparkSession, String) => DataFrame = (s, d) => {
+    val all = docs(s, d)
+    val corpus = deltaCorpus(all)
+    deltaIndex(s, tag, all, corpus, FoldLaw.minhashBands("text", "doc_id"), "text",
+        Seq("band_idx", "band_hash"), Some(stats)) { ix =>
+      DedupOps.minhashNearDupDeltaIndexed(all.filter(col("doc_id") % 10 === 5),
+        ix.base.hint("merge"), ix.adds, ix.tombs, corpus,
+        all.filter(col("doc_id") % 10 === 0).select(col("doc_id"), col("text")),
+        "text", "doc_id", bandStats = ix.stats.get)
+    }.orderBy(col("doc_id"))
+  }
+
+  /** dedup_minhash_delta_probe — [[minhashDeltaProbe]] with the bucket
+    * stats stored at build time and replayed after the stream (the
+    * `FoldLaw.minhashBucketStats` law: stored − the deleted docs' band
+    * stats recomputed from carried text + the overlay's). */
   private val d02dp = Q(
     "dedup_minhash_delta_probe",
-    (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
-      val all = docs(s, d)
-      val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      val bands = FoldLaw.minhashBands("text", "doc_id")
-      val stats = FoldLaw.minhashBucketStats
-      val bandT = s"graft_mhband_delta_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(bands.derive(corpus),
-        bandT, 8, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val base = Bucketing.table(s, bandT)
-      val statsDir = tmpDir(s, "d02dp_stats")
-      stats.derive(base).write.mode("overwrite").parquet(statsDir)
-      val stageDir = tmpDir(s, "d02dp_feed")
-      val stateDir = tmpDir(s, "d02dp_state")
-      val feed = all.select($"doc_id", $"text")
-      val spec = bands.fold(cdcAdds, cdcDels)
-      val emptyBands = bands.derive(all.limit(0))
-      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
-          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec, resume)
-      }
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      val delDocs = all.filter($"doc_id" % 10 === 7).select($"doc_id", $"text")
-      val overlayDocs = all.filter($"doc_id" % 10 === 0)
-        .select($"doc_id", $"text")
-      val effStats = stats.merge(
-        stats.delete(FsOps.readParquet(s, statsDir),
-          stats.derive(bands.derive(delDocs))),
-        stats.derive(overlayAdds))
-      val res = DedupOps.minhashNearDupDeltaIndexed(
-          all.filter($"doc_id" % 10 === 5),
-          base.hint("merge"), overlayAdds, tombs,
-          corpus, overlayDocs, "text", "doc_id",
-          bandStats = effStats)
-        .localCheckpoint(true)
-      Bucketing.drop(s, bandT)
-      res.orderBy($"doc_id")
-    },
+    minhashDeltaProbe("d02dp", ReplayedStats(FoldLaw.minhashBucketStats)),
     Some(minhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
       "doc_id % 10 = 5")),
     writes = true)
 
-  /** dedup_minhash_delta_stats_probe — the band family's probe cap
-    * taken ENTIRELY from STORED stats: d02dp rebuilds its effective
-    * stats driver-side AFTER the stream by replaying the takedown
-    * feed; this is the d03sp template on the array-keyed workhorse
-    * index. Same splits and oracle as d02dp, but the CDC stream
-    * maintains TWO stores in one pass (`foreachBatchStoreFolds`, the
-    * batch pinned once): the band store (the `FoldLaw.minhashBands`
-    * fold: adds = the batch's band rows, dels = tombstone ids) and a
-    * bucket-stats store (the `FoldLaw.minhashBucketStats` fold) whose
-    * per-batch PARTIAL is the adds' band rows' stats plus the deleted
-    * docs' stats NEGATED (recomputed batch-sized from the feed's
-    * carried text — banding is deterministic, so the recompute equals
-    * the stored rows' slice), group-summed at read time by the
-    * additive law. The probe's cap then comes entirely from the
-    * resolved stats store — nothing re-derived from the feed — and
-    * must still hash-equal the family's shared one-shot oracle; the
-    * stats store's base file list stays byte-identical across ingest
-    * batches (the DeltaStateSpec write-side bar, asserted on the
-    * MergeFold protocol there).
-    */
+  /** dedup_minhash_delta_stats_probe — [[minhashDeltaProbe]] with the
+    * bucket stats folded as a second store from the same feed (banding
+    * is deterministic, so the deleted docs' recomputed band rows equal
+    * the stored ones); the cap comes entirely from the resolved store. */
   private val d02sp = Q(
     "dedup_minhash_delta_stats_probe",
-    (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
-      import graft.streaming.DeltaState.NamedDeltaStore
-      val all = docs(s, d)
-      val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      val bands = FoldLaw.minhashBands("text", "doc_id")
-      val stats = FoldLaw.minhashBucketStats
-      val bandT = s"graft_mhband_dstats_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(bands.derive(corpus), bandT, 8,
-        Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val base = Bucketing.table(s, bandT)
-      val stageDir = tmpDir(s, "d02sp_feed")
-      val stateDir = tmpDir(s, "d02sp_state")
-      val statsStateDir = tmpDir(s, "d02sp_stats_state")
-      val feed = all.select($"doc_id", $"text")
-      val emptyBands = bands.derive(all.limit(0))
-      // the stats store's v0 is the stats STORED at index-build time
-      val stores = Seq(
-        NamedDeltaStore(stateDir, emptyBands, bands.fold(cdcAdds, cdcDels)),
-        NamedDeltaStore(statsStateDir, stats.derive(base), stats.fold(
-          cdcAdds.andThen(bands.derive), cdcDels.andThen(bands.derive))))
-      val fin = stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
-          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchStoreFolds(src, stores, resume)
-      }
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      val overlayDocs = all.filter($"doc_id" % 10 === 0)
-        .select($"doc_id", $"text")
-      // the cap comes ENTIRELY from the stored, batch-folded state
-      val effStats = fin(statsStateDir)
-      val res = DedupOps.minhashNearDupDeltaIndexed(
-          all.filter($"doc_id" % 10 === 5),
-          base.hint("merge"), overlayAdds, tombs,
-          corpus, overlayDocs, "text", "doc_id",
-          bandStats = effStats)
-        .localCheckpoint(true)
-      Bucketing.drop(s, bandT)
-      res.orderBy($"doc_id")
-    },
+    minhashDeltaProbe("d02sp", FoldedStats(FoldLaw.minhashBucketStats)),
     Some(minhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
       "doc_id % 10 = 5")),
     writes = true)
 
-  /** dedup_minhash_reshard_cutover — the RE-SHARD cutover, the hash
-    * families' analog of `ann_ivf_retrain_cutover` (round 13): a
-    * growing index eventually outgrows its bucket count, and the
-    * bucket layout is frozen at write time — changing it means
-    * rebuilding the table. The structural difference from IVF
-    * retrain, and the reason this is its own graded event: band rows
-    * are pure per-doc FACTS under a fixed hash family, so the
-    * re-shard is a LAYOUT-only rebuild — the new generation is
-    * written straight from the OLD generation's resolved view (base ∖
-    * tombs ∪ overlay adds) with zero re-shingling, no text read, no
-    * signature recomputed; IVF's retrain had to re-derive state
-    * because its parameters (the codebook) changed, a re-shard
-    * changes none. Gen-1 (8 buckets) + its CDC delta chain serve
-    * while gen-2 lands at DOUBLE the bucket count with fresh stats
-    * derived from the same resolved rows (keys-sized group-count —
-    * the build-once stats contract); the probe then cuts over to
-    * gen-2 and must hash-equal the family's shared one-shot oracle on
-    * the net corpus. OpsSpec grades the two-generation window (gen-1
-    * answers and files undisturbed through the rebuild and the
-    * cutover probe). At 100 TB: the re-shard costs one index-sized
-    * shuffle-and-write — never a corpus pass — and readers swap a
-    * table name.
+  /** dedup_minhash_reshard_cutover — the re-shard cutover, the hash
+    * families' analog of `ann_ivf_retrain_cutover`. A bucket layout is
+    * frozen at write time, so a grown index changes its bucket count by
+    * rebuilding the table. Band rows are per-doc facts under a fixed
+    * hash family, so the re-shard is a layout-only rebuild: gen-2 is
+    * written straight from gen-1's resolved view (base ∖ tombs ∪ overlay
+    * adds) at double the bucket count, with no text read and nothing
+    * re-shingled; IVF's retrain must re-derive its state because its
+    * codebook changes, and a re-shard changes no parameter. The cutover
+    * probe runs against gen-2 with stats derived from its own rows and
+    * must hash-equal the family's one-shot oracle on the net corpus.
+    * OpsSpec grades the two-generation window: gen-1's answers and
+    * files are undisturbed through the rebuild and the cutover probe.
     */
   private val d02rc = Q(
     "dedup_minhash_reshard_cutover",
     (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
       val all = docs(s, d)
-      val corpus = all.filter($"doc_id" % 10 =!= 0 && $"doc_id" % 10 =!= 5)
-      val pid = ProcessHandle.current().pid()
-      val gen1T = s"graft_mhband_rc1_$pid"
-      val bands = FoldLaw.minhashBands("text", "doc_id")
-      Bucketing.writeBucketedKeys(bands.derive(corpus),
-        gen1T, 8, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val base = Bucketing.table(s, gen1T)
-      val stageDir = tmpDir(s, "d02rc_feed")
-      val stateDir = tmpDir(s, "d02rc_state")
-      val feed = all.select($"doc_id", $"text")
-      val spec = bands.fold(cdcAdds, cdcDels)
-      val emptyBands = bands.derive(all.limit(0))
-      stagedLegs(s, stageDir, cdcSlice(feed, "doc_id", 0L, 7L),
-          cdcSlice(feed, "doc_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchDeltaFold(src, emptyBands, stateDir, spec, resume)
-      }
-      // the RE-SHARD: gen-2 = gen-1's resolved view, re-bucketed at
-      // double the count — band rows are facts, so no text is read
-      // and nothing is re-shingled
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      val netBands = tombs.fold(base.select($"doc_id", $"band_idx", $"band_hash"))(
-          t => base.join(t.select($"doc_id"), Seq("doc_id"), "left_anti")
-            .select($"doc_id", $"band_idx", $"band_hash"))
-        .unionByName(overlayAdds.select($"doc_id", $"band_idx", $"band_hash"))
-      val gen2T = s"graft_mhband_rc2_$pid"
-      Bucketing.writeBucketedKeys(netBands, gen2T, 16,
-        Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val gen2 = Bucketing.table(s, gen2T)
-      // the CUTOVER: plain indexed probe against gen-2, cap from the
-      // new generation's own build-time stats
-      val netCorpusText = all.filter($"doc_id" % 10 =!= 5 && $"doc_id" % 10 =!= 7)
-      val res = DedupOps.minhashNearDupIndexed(
-          all.filter($"doc_id" % 10 === 5), gen2, netCorpusText,
-          "text", "doc_id",
-          bandStats = Some(DedupOps.minhashBucketStats(gen2)))
-        .localCheckpoint(true)
-      Bucketing.drop(s, gen1T)
-      Bucketing.drop(s, gen2T)
-      res.orderBy($"doc_id")
+      deltaIndex(s, "d02rc", all, deltaCorpus(all), FoldLaw.minhashBands("text", "doc_id"),
+          "text", Seq("band_idx", "band_hash")) { ix =>
+        val gen2 = ix.gen2(ix.resolved("doc_id", "band_idx", "band_hash"), 16)
+        DedupOps.minhashNearDupIndexed(all.filter(col("doc_id") % 10 === 5), gen2,
+          all.filter(col("doc_id") % 10 =!= 5 && col("doc_id") % 10 =!= 7),
+          "text", "doc_id", bandStats = Some(DedupOps.minhashBucketStats(gen2)))
+      }.orderBy(col("doc_id"))
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 5 AND doc_id % 10 <> 7",
       "doc_id % 10 = 5")),
@@ -1684,24 +1444,22 @@ private[graft] object QueriesDedup {
     Some(simhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
     writes = true)
 
-  /** dedup_simhash_index_compact — index COMPACTION under churn
-    * (round 10: the verdict's operational-seam task — the lifecycle
-    * composed with the layout family): the stored segment index grows
-    * by FOUR append-mode merge folds (`appendBucketedKeys` — each
+  /** dedup_simhash_index_compact — index COMPACTION under churn (the
+    * lifecycle composed with the layout family): the stored segment index
+    * grows by FOUR append-mode merge folds (`appendBucketedKeys` — each
     * wave lands its rows in the right buckets without rewriting the
     * table, at the cost of one file per bucket per wave), then
-    * `compactBucketed` rewrites it one-file-per-bucket with the
-    * bucket spec copied from the catalog AND a RETRACTION folded into
-    * the same single pass (the % 10 == 5 docs anti-joined out — on a
-    * stored table a delete is a rewrite anyway, so compaction is when
-    * it is free). The % 10 == 0 batch probed against the compacted
-    * table through the stored-stats path must equal the one-shot
-    * incremental against the never-ingested corpus (the shared chain
-    * with BOTH slices excluded): a row lost in the rewrite, a leaked
-    * retracted doc, or a bucket mis-assignment all move the candidate
-    * set and fail the hash. OpsSpec separately asserts the file-count
-    * collapse and that the compacted table still probes bucketed with
-    * zero index-side exchange.
+    * `compactBucketed` rewrites it one-file-per-bucket with the bucket
+    * spec copied from the catalog AND a RETRACTION folded into the same
+    * single pass (the % 10 == 5 docs anti-joined out — on a stored table
+    * a delete is a rewrite anyway, so compaction is when it is free). The
+    * % 10 == 0 batch probed against the compacted table through the
+    * stored-stats path must equal the one-shot incremental against the
+    * never-ingested corpus (the shared chain with BOTH slices excluded):
+    * a row lost in the rewrite, a leaked retracted doc, or a bucket
+    * mis-assignment all move the candidate set and fail the hash. OpsSpec
+    * separately asserts the file-count collapse and that the compacted
+    * table still probes bucketed with zero index-side exchange.
     */
   private val d03c = Q(
     "dedup_simhash_index_compact",

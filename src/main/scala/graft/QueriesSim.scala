@@ -71,16 +71,15 @@ private[graft] object QueriesSim {
     * re-rank inside them.
     */
   /** The full IVF-flat probe oracle chain, parameterized by the
-    * codebook-source and corpus predicates (the
-    * minhashIncrementalSql one-definition idiom; round 9, was two
-    * hand-kept copies): replays the deterministic lowest-id codebook,
+    * codebook-source and corpus predicates (the minhashIncrementalSql
+    * one-definition idiom): replays the deterministic lowest-id codebook,
     * per-vector argmax assignment (ties to the higher cell, like
-    * CellArgmax), 2-best-cell probing for the vec_id < 10 queries,
-    * and exact in-cell re-rank. Serves a03 (inline, full corpus),
-    * a03u (fold-in maintenance: merged index ≡ rebuild on the union),
-    * a03d (retraction: deleted index ≡ rebuild on the survivors), and
-    * the streaming ingest parity — which by the per-row-assignment
-    * laws differ ONLY in these predicates.
+    * CellArgmax), 2-best-cell probing for the vec_id < 10 queries, and
+    * exact in-cell re-rank. Serves a03 (inline, full corpus), a03u
+    * (fold-in maintenance: merged index ≡ rebuild on the union), a03d
+    * (retraction: deleted index ≡ rebuild on the survivors), and the
+    * streaming ingest parity — which by the per-row-assignment laws
+    * differ ONLY in these predicates.
     */
   private[graft] def ivfProbeOracleSql(cbPred: String,
                                        corpusPred: String): String = {
@@ -189,132 +188,68 @@ private[graft] object QueriesSim {
     Some(ivfProbeOracleSql("vec_id < 200", "vec_id < 200")))
 
 
-  /** ann_ivf_delta_probe — the delta-overlay × exchange-free
-    * composition on the ANN family (round 12: with the simhash
-    * segment, minhash band, and span stores, every probe-able index
-    * family now has its batch-sized-publish deployment): the corpus
-    * assignment index (pinned lowest-id codebook of the % 10 ≠ 0
-    * snapshot) lives as a table BUCKETED on `cell`; a two-batch CDC
-    * feed (stopped and RESUMED between batches) publishes adds
-    * (% 10 == 0 vectors assigned under the SAME pinned codebook —
-    * assignment is per-row, so delta ≡ resolved exactly) and
-    * tombstones (% 10 == 7 takedown ids) into a DeltaState overlay —
-    * the base table is never rewritten, and the codebook stays pinned
-    * BY DESIGN (re-deriving it is the retrain event). Queries probe
-    * through `ivfTopKDeltaIndexed`: candidate join straight off the
-    * bucketed base scan (zero index-side exchange — OpsSpec asserts
-    * it), tombstoned candidates dropped candidate-sized AFTER the
-    * join, the overlay broadcast as a second source, one shared
-    * re-rank. Equal to the one-shot replay over the net corpus
-    * (% 10 ≠ 7) under the snapshot codebook — the family's shared
-    * parameterized oracle.
+  /** ann_ivf_delta_probe — the delta-index scenario
+    * ([[QHelp.deltaIndex]]) on the ANN family: the assignment index of
+    * the % 10 ≠ 0 corpus under its pinned lowest-id codebook, bucketed
+    * on `cell`, with an overlay that adds the % 10 == 0 vectors under
+    * the same codebook (assignment is per-row, so delta ≡ resolved
+    * exactly) and tombstones the % 10 == 7 ids. The codebook stays
+    * pinned by design; re-deriving it is the retrain event. Queries
+    * probe through `ivfTopKDeltaIndexed`: the candidate join runs
+    * straight off the bucketed base scan (OpsSpec asserts zero
+    * index-side exchange), tombstoned candidates drop candidate-sized
+    * after the join, and the overlay is broadcast as a second source
+    * into one shared re-rank. Equal to the one-shot replay over the net
+    * corpus (% 10 ≠ 7) under the snapshot codebook, the family's shared
+    * oracle.
     */
   private val a03dp = Q(
     "ann_ivf_delta_probe",
     (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
       val e = emb(s, d)
-      val corpus = e.filter($"vec_id" % 10 =!= 0)
+      val corpus = e.filter(col("vec_id") % 10 =!= 0)
       val cb = SimOps.lowestIdCodebook(corpus, "vec_id", "embedding", 16)
-      val tbl = s"graft_ivf_delta_${ProcessHandle.current().pid()}"
-      val cells = FoldLaw.ivfCells("vec_id", "embedding", cb)
-      Bucketing.writeBucketedKeys(cells.derive(corpus),
-        tbl, 8, Seq("cell"), Seq("cell"))
-      val base = Bucketing.table(s, tbl)
-      val stageDir = tmpDir(s, "a03dp_feed")
-      val stateDir = tmpDir(s, "a03dp_state")
-      val feed = e.select($"vec_id", $"embedding")
-      val spec = cells.fold(cdcAdds, cdcDels)
-      val emptyIdx = cells.derive(e.limit(0))
-      stagedLegs(s, stageDir, cdcSlice(feed, "vec_id", 0L, 7L),
-          cdcSlice(feed, "vec_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec, resume)
-      }
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      // tombstoned vectors don't query (the oracle's probe side is the
-      // net corpus — a taken-down doc has no business probing either)
-      val res = SimOps.ivfTopKDeltaIndexed(
-          e.filter($"vec_id" < 10 && $"vec_id" % 10 =!= 7),
-          base, overlayAdds, tombs, "vec_id", "embedding", cb, k = 5)
-        .localCheckpoint(true)
-      Bucketing.drop(s, tbl)
-      res.orderBy($"qid", $"rnk")
+      deltaIndex(s, "a03dp", e, corpus, FoldLaw.ivfCells("vec_id", "embedding", cb),
+          "embedding", Seq("cell")) { ix =>
+        // taken-down vectors do not query either: the oracle's probe
+        // side is the net corpus
+        SimOps.ivfTopKDeltaIndexed(e.filter(col("vec_id") < 10 && col("vec_id") % 10 =!= 7),
+          ix.base, ix.adds, ix.tombs, "vec_id", "embedding", cb, k = 5)
+      }.orderBy(col("qid"), col("rnk"))
     },
     Some(ivfProbeOracleSql("vec_id % 10 <> 0", "vec_id % 10 <> 7")),
     writes = true)
 
-  /** ann_ivf_retrain_cutover — the RETRAIN/re-shard cutover, the one
-    * lifecycle event every index family documents but none graded
-    * until round 13 (the round-12 verdict's task 4). Every ivfIndex
-    * maintenance law holds only while the codebook is PINNED;
-    * re-deriving it from the drifted corpus is the retrain event,
-    * which rebuilds the index by definition. This grades that event
-    * end-to-end: gen-1 = bucketed [[SimOps.ivfIndex]] under codebook
-    * cb1 + a CDC delta chain (adds %10==0, takedowns %10==7 — the
-    * a03dp feed verbatim); the RETRAIN derives cb2 from the NET
-    * corpus — read straight off gen-1's resolved view (base ∖ tombs ∪
-    * overlay adds; the assignment rows carry their vectors, so no
-    * second corpus source exists anywhere) — and rebuilds into a
-    * FRESH bucketed table while gen-1 still stands (the
-    * two-generation window: OpsSpec asserts gen-1's probe answers
+  /** ann_ivf_retrain_cutover — the retrain cutover. Every ivfCells
+    * maintenance law holds only while the codebook is pinned;
+    * re-deriving it from the drifted corpus is the retrain event, which
+    * rebuilds the index by definition. Gen-1 is the a03dp scenario
+    * verbatim. The retrain derives cb2 from the net corpus, read
+    * straight off gen-1's resolved view (base ∖ tombs ∪ overlay adds;
+    * the assignment rows carry their vectors, so no second corpus
+    * source exists), and rebuilds into a fresh bucketed table while
+    * gen-1 still stands (OpsSpec asserts that gen-1's probe answers
     * byte-identically through the rebuild). The graded result is the
-    * cutover probe: [[SimOps.ivfTopKIndexed]] against gen-2 under
-    * cb2, which must hash-equal the one-shot oracle under the NEW
-    * codebook over the net corpus — a leaked old-codebook assignment,
-    * a tombstoned vector surviving into gen-2, or a cb2 drawn from
-    * the wrong corpus all break the hash. At 100 TB this is the
-    * standard blue/green index deployment: the O(corpus) rebuild runs
-    * beside the serving generation, readers cut over by swapping a
-    * table name, and the old generation retires only after the cut.
+    * cutover probe, `ivfTopKIndexed` against gen-2 under cb2, which must
+    * hash-equal the one-shot oracle under the new codebook over the net
+    * corpus: a leaked old-codebook assignment, a tombstoned vector
+    * surviving into gen-2 or a cb2 drawn from the wrong corpus all
+    * break the hash.
     */
   private val a03rc = Q(
     "ann_ivf_retrain_cutover",
     (s, d) => {
-      import s.implicits._
-      import graft.io.Bucketing
-      import graft.streaming.DeltaState
       val e = emb(s, d)
-      val corpus = e.filter($"vec_id" % 10 =!= 0)
+      val corpus = e.filter(col("vec_id") % 10 =!= 0)
       val cb1 = SimOps.lowestIdCodebook(corpus, "vec_id", "embedding", 16)
-      val pid = ProcessHandle.current().pid()
-      val tbl1 = s"graft_ivf_rc_gen1_$pid"
-      val cells1 = FoldLaw.ivfCells("vec_id", "embedding", cb1)
-      Bucketing.writeBucketedKeys(cells1.derive(corpus),
-        tbl1, 8, Seq("cell"), Seq("cell"))
-      val base = Bucketing.table(s, tbl1)
-      val stageDir = tmpDir(s, "a03rc_feed")
-      val stateDir = tmpDir(s, "a03rc_state")
-      val feed = e.select($"vec_id", $"embedding")
-      val spec = cells1.fold(cdcAdds, cdcDels)
-      val emptyIdx = cells1.derive(e.limit(0))
-      stagedLegs(s, stageDir, cdcSlice(feed, "vec_id", 0L, 7L),
-          cdcSlice(feed, "vec_id", 10L, 17L)) { (src, resume) =>
-        DeltaState.foreachBatchDeltaFold(src, emptyIdx, stateDir, spec, resume)
-      }
-      // RETRAIN: the net corpus is gen-1's own resolved view — the
-      // assignment rows carry their vectors, so nothing re-reads the
-      // source table
-      val (overlayAdds, tombs) = DeltaState.overlay(s, stateDir)
-      val netVecs = tombs.fold(base.select($"vec_id", $"embedding"))(t =>
-          base.join(t.select($"vec_id"), Seq("vec_id"), "left_anti")
-            .select($"vec_id", $"embedding"))
-        .unionByName(overlayAdds.select($"vec_id", $"embedding"))
-      val cb2 = SimOps.lowestIdCodebook(netVecs, "vec_id", "embedding", 16)
-      // rebuild gen-2 into its OWN table while gen-1 still stands
-      val tbl2 = s"graft_ivf_rc_gen2_$pid"
-      Bucketing.writeBucketedKeys(
-        SimOps.ivfIndex(netVecs, "vec_id", "embedding", cb2),
-        tbl2, 8, Seq("cell"), Seq("cell"))
-      // the CUTOVER: the probe swings to gen-2 under the new codebook
-      val res = SimOps.ivfTopKIndexed(
-          e.filter($"vec_id" < 10 && $"vec_id" % 10 =!= 7),
-          Bucketing.table(s, tbl2), "vec_id", "embedding", cb2, k = 5)
-        .localCheckpoint(true)
-      Bucketing.drop(s, tbl1)
-      Bucketing.drop(s, tbl2)
-      res.orderBy($"qid", $"rnk")
+      deltaIndex(s, "a03rc", e, corpus, FoldLaw.ivfCells("vec_id", "embedding", cb1),
+          "embedding", Seq("cell")) { ix =>
+        val net = ix.resolved("vec_id", "embedding")
+        val cb2 = SimOps.lowestIdCodebook(net, "vec_id", "embedding", 16)
+        SimOps.ivfTopKIndexed(e.filter(col("vec_id") < 10 && col("vec_id") % 10 =!= 7),
+          ix.gen2(SimOps.ivfIndex(net, "vec_id", "embedding", cb2), 8),
+          "vec_id", "embedding", cb2, k = 5)
+      }.orderBy(col("qid"), col("rnk"))
     },
     Some(ivfProbeOracleSql("vec_id % 10 <> 7", "vec_id % 10 <> 7")),
     writes = true)

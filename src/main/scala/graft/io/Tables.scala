@@ -79,13 +79,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
-  /** Multiple `-input` paths → one dataset (SURVEY.md §2.2 S6):
-    * dumbo unions repeated -input dirs; we union by name so differing
-    * column orders across sources are safe.
-    */
-  def multiInput(spark: SparkSession, paths: Seq[String]): DataFrame =
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-
   /** SequenceFile source (SURVEY.md §2.2 S2): dumbo's default binary
     * input — Text key/value pairs read via the Hadoop API into a
     * (key, value) string DataFrame. Parquet remains the engine's
@@ -156,14 +149,13 @@ object Tables {
   def readEvolved(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 
-  /** Align a STORED state/index written by an older code version to
-    * the schema the current code expects — the [[readEvolved]]
-    * treatment for the versioned-state dirs (round 11, verdict task 5:
-    * a v-old snapshot must fold/probe without a silent wrong answer).
-    * Columns added since the state was written fill with typed NULLs
-    * (the mergeSchema semantics — downstream code sees one stable wide
-    * schema and treats NULL as "unknown provenance", exactly what a
-    * legacy row is); anything else degrades LOUDLY:
+  /** Align a STORED state/index written by an older code version to the
+    * schema the current code expects — the [[readEvolved]] treatment for
+    * the versioned-state dirs (a v-old snapshot must fold/probe without a
+    * silent wrong answer). Columns added since the state was written fill
+    * with typed NULLs (the mergeSchema semantics — downstream code sees
+    * one stable wide schema and treats NULL as "unknown provenance",
+    * exactly what a legacy row is); anything else degrades LOUDLY:
     *
     *  - a stored column whose type changed is a refusal (a silent cast
     *    could flip hash/sign semantics — e.g. an INT signature widened

@@ -18,15 +18,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object JoinOps {
 
-  /** J1 tagged equi-join. `broadcastPrimary = true` encodes dumbo's
-    * small-primary assumption explicitly; AQE may still override.
-    */
-  def taggedJoin(secondary: DataFrame, primary: DataFrame, keys: Seq[String],
-                 how: String = "inner", broadcastPrimary: Boolean = true): DataFrame = {
-    val dim = if (broadcastPrimary) broadcast(primary) else primary
-    secondary.join(dim, keys, how)
-  }
-
   /** J2 MultiMapper: one logical job, per-source mapper. dumbo dispatches
     * on the task's input path; we apply each source's transform and union
     * by name — each branch keeps its own pushdown/pruning.
@@ -37,14 +28,6 @@ object JoinOps {
   /** C9 path tagging (`-addpath`): key each row with its input file. */
   def withInputPath(df: DataFrame, as: String = "input_path"): DataFrame =
     df.withColumn(as, input_file_name())
-
-  /** J3 secondary sort: partition on group keys only, order values by
-    * subkeys within the group — dumbo's KeyFieldBasedPartitioner idiom.
-    * Returned co-located + sorted, ready for per-partition streaming.
-    */
-  def secondarySort(df: DataFrame, groupKeys: Seq[String], subKeys: Seq[Column]): DataFrame =
-    df.repartition(groupKeys.map(col): _*)
-      .sortWithinPartitions(groupKeys.map(col) ++ subKeys: _*)
 
   /** Backward as-of join: for each left row, the single latest right
     * row with `right.tsCol <= left.tsCol` (inclusive) on the same keys;

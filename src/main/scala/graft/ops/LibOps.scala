@@ -287,9 +287,8 @@ object LibOps {
     // fetched eagerly (the approxQuantileCuts pattern), which lets the
     // bucket expression be pure literals in BOTH consumers below; the
     // old formulation instead checkpointed the D-sized distinct-value
-    // table to share it, an RDD pin a library caller could never
-    // release (the leak class the round-5 advice flagged on
-    // approxQuantileCuts)
+    // table to share it, an RDD pin a library caller could never release
+    // (the leak class approxQuantileCuts had)
     val statsRow = nn.agg(count(lit(1)), min(v), max(v)).head()
     val total = statsRow.getLong(0)
     // empty/all-NULL column: lo/hi degenerate to a constant — every
@@ -310,7 +309,7 @@ object LibOps {
     // count — never the distinct-value groupBy), so the D-sized
     // aggregate above is consumed exactly once and nothing needs a
     // checkpoint; the tiny window is the only unpartitioned one.
-    // NOTE (round 13): a dv→offsets rollup (one corpus pass instead of
+    // NOTE: a dv→offsets rollup (one corpus pass instead of
     // two) was tried and REVERTED on measurement — the replanted dv
     // subtree's exchange is not reused across the broadcast-join
     // boundary (the trendingTerms lesson), so both corpus aggregates
@@ -432,8 +431,8 @@ object LibOps {
     require(probs.nonEmpty && probs.forall(p => p > 0 && p <= 1),
       s"approxQuantileCuts: probs must be in (0, 1], got $probs")
     require(buckets > 0, s"approxQuantileCuts: buckets=$buckets")
-    // the stats frame became driver literals in round 6, so only the
-    // histogram's own columns can still collide
+    // the stats frame is driver literals, so only the histogram's own
+    // columns can collide
     (Seq("__bkt", "__cnt", "__cum") ++
         probs.indices.map(i => s"cut_$i")).foreach(c =>
       require(!df.columns.contains(c),
@@ -472,8 +471,7 @@ object LibOps {
   /** Deterministic KMV (k-minimum-values) distinct-count sketch — the
     * approxQuantileCuts argument applied to COUNT DISTINCT: HLL
     * (`approx_count_distinct`) is engine-specific and ungradeable
-    * (which is why the old q32 HLL row could never be oracled and was
-    * retired in round 6); KMV over a
+    * (which is why an HLL row cannot be oracled); KMV over a
     * portable hash is pure deterministic arithmetic, so any engine
     * replays the estimate bit-for-bit. Estimator: normalize the md5
     * of each distinct value into (0,1]; with h_(k) the k-th smallest
@@ -817,8 +815,7 @@ object LibOps {
     * `Hygiene.clearAll` (what Bench/Verify run) or session end, so
     * ONLY opt in from a harness that controls hygiene (the graded q67
     * does — the approxQuantileCuts/distinctValueCum leak class must
-    * never be a default a library embedder silently inherits;
-    * round-7 verdict task 4 flipped this default). A pin-free
+    * never be a default a library embedder silently inherits). A pin-free
     * single-pass window formulation was measured too (diff = 0,
     * tools/Probe): it shuffles full corpus rows where this shape only
     * ever exchanges keys-sized stats — the wrong trade at 100 TB.
@@ -874,11 +871,4 @@ object LibOps {
     */
   def observed(df: DataFrame, name: String, metrics: Seq[Column]): DataFrame =
     df.observe(name, metrics.head, metrics.tail: _*)
-
-  /** C6 `identityreducer`: partition by key and sort within partitions —
-    * the shuffle-as-an-operator dumbo exposes. Spark equivalent keeps
-    * the co-location reusable by later per-partition logic.
-    */
-  def identityReduce(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.repartition(keys.map(col): _*).sortWithinPartitions(keys.map(col): _*)
 }

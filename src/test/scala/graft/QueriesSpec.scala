@@ -137,4 +137,43 @@ class QueriesSpec extends AnyFunSuite {
     val events = graft.io.Tables.events(spark, d).count()
     assert(total == events)
   }
+
+  test("deltaIndex drops every table it wrote, gen-2 too, when the probe throws") {
+    import org.apache.spark.sql.functions.col
+    val all = graft.io.Tables.documents(spark, d)
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables
+    var written = Set.empty[String]
+    val err = intercept[IllegalStateException] {
+      QHelp.deltaIndex(spark, "qh_throw", all, all.filter(col("doc_id") % 10 =!= 0),
+          graft.streaming.FoldLaw.minhashBands("text", "doc_id"), "text",
+          Seq("band_idx", "band_hash")) { ix =>
+        ix.gen2(ix.resolved("doc_id", "band_idx", "band_hash"), 16)
+        written = tables -- before
+        throw new IllegalStateException("probe failed")
+      }
+    }
+    assert(err.getMessage == "probe failed")
+    assert(written.size == 2, written)
+    assert((tables & written).isEmpty, tables & written)
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    assert(written.forall(t => !new java.io.File(s"$wh/$t").exists()))
+  }
+
+  test("DeltaIndex.resolved is base minus tombstones union adds, with and without tombstones") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").withColumn("x", lit(0))
+    val adds = Seq((2L, "b2"), (4L, "d")).toDF("id", "v").withColumn("x", lit(1))
+    val tombs = Seq(2L, 3L).toDF("id")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def resolved(t: Option[DataFrame]) = rows(new QHelp.DeltaIndex(base, adds, t, None, "id",
+      (_, _) => fail("no gen-2")).resolved("id", "v"))
+    assert(resolved(None) ==
+      rows(base.select("id", "v").union(adds.select("id", "v"))))
+    assert(resolved(Some(tombs)) == rows(base.join(tombs, Seq("id"), "left_anti")
+      .select("id", "v").union(adds.select("id", "v"))))
+    assert(resolved(Some(tombs)) == Seq("[1,a]", "[2,b2]", "[4,d]"))
+  }
 }
