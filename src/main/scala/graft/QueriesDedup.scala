@@ -961,10 +961,10 @@ private[graft] object QueriesDedup {
   /** dedup_spans_delta_probe — streaming-delta maintenance of the span
     * index, whose state is a count aggregate: it folds under
     * `FoldLaw.spanOccurrences`, a `Counted` law on the MergeFold
-    * protocol, where a deletion is a negated window-count partial
-    * recomputed from the feed's carried text. The two-leg CDC feed
+    * protocol, where a deletion's windows are recomputed from the
+    * feed's carried text and count −1 each. The two-leg CDC feed
     * ([[QHelp.cdcLegs]]: adds % 10 == 0, retractions % 10 == 7)
-    * publishes each trigger's distinct-digest partial; the stored index
+    * publishes each trigger's signed per-digest partial; the stored index
     * is never rewritten on the ingest path. The % 10 == 5 batch probes
     * the state twice, delta-resolved and after compaction, and both
     * phases must equal one-shot spanDedup over the net corpus (window
@@ -977,7 +977,12 @@ private[graft] object QueriesDedup {
     (s, d) => {
       val all = docs(s, d)
       val spans = FoldLaw.spanOccurrences("text", "doc_id", n = 10)
-      val spec = spans.fold(cdcAdds, cdcDels)
+      // each window of a batch's adds or dels contributes +1 or −1 to
+      // its digest's count: one signed aggregate per trigger
+      def signed(docs: DataFrame, w: Long) = DedupOps.spanWindows(docs, "text", "doc_id", 10)
+        .select(col("fp"), lit(w).as("occ"))
+      val spec = spans.foldSigned(b =>
+        signed(cdcAdds(b), 1L).unionByName(signed(cdcDels(b), -1L)))
       val Seq((stateDir, delta)) = cdcLegs(s, "d10dp", all, "doc_id", "text")(
         spans.derive(deltaCorpus(all)) -> spec)
       def probed(phase: String, state: DataFrame) = DedupOps.spanDedupIncremental(
@@ -1111,23 +1116,17 @@ private[graft] object QueriesDedup {
       import graft.io.Bucketing
       val all = docs(s, d)
       val corpus = all.filter(col("doc_id") % 10 =!= 0)
-      val bandT = s"graft_mhband_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(
-        DedupOps.minhashIndex(corpus, "text", "doc_id"),
-        bandT, 8, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val bandIndex = Bucketing.table(s, bandT)
-      val statsDir = tmpDir(s, "d02b_stats")
-      DedupOps.minhashBucketStats(bandIndex)
-        .write.mode("overwrite").parquet(statsDir)
-      val res = DedupOps.minhashNearDupIndexed(
+      scratch(s) { sc =>
+        val bandIndex = Bucketing.write(DedupOps.minhashIndex(corpus, "text", "doc_id"),
+          sc.table("mhband"), 8, Seq("band_idx", "band_hash"))
+        val statsDir = tmpDir(s, "d02b_stats")
+        DedupOps.minhashBucketStats(bandIndex)
+          .write.mode("overwrite").parquet(statsDir)
+        DedupOps.minhashNearDupIndexed(
           all.filter(col("doc_id") % 10 === 0),
           bandIndex.hint("merge"), corpus, "text", "doc_id",
           bandStats = Some(FsOps.readParquet(s, statsDir)))
-        // pin eagerly so the pid-keyed scratch table can drop before
-        // returning (the q57 hygiene); timed work includes the writes
-        .localCheckpoint(true)
-      Bucketing.drop(s, bandT)
-      res.orderBy(col("doc_id"))
+      }.orderBy(col("doc_id"))
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
     writes = true)
@@ -1159,35 +1158,29 @@ private[graft] object QueriesDedup {
       import graft.io.Bucketing
       val all = docs(s, d)
       val corpus = all.filter(col("doc_id") % 10 =!= 0)
-      val tbl = s"graft_mhband_part_${ProcessHandle.current().pid()}"
       val banded = DedupOps.minhashIndex(corpus, "text", "doc_id")
         .withColumn("ingest_wave", col("doc_id") % 3)
-      Bucketing.writePartitionedBucketedKeys(banded, tbl,
-        Seq("ingest_wave"), 8, Seq("band_idx", "band_hash"),
-        Seq("band_idx", "band_hash"))
-      // per-wave stats stored at write time, PARTITIONED on the same wave
-      // key as the index (one layout across index and stats): the pruned
-      // slice's stats are a keys-sized group-sum of the kept waves
-      // (additive law), and the wave predicate prunes stats partition
-      // directories at planning time exactly as it prunes the index's
-      val statsDir = tmpDir(s, "d02p_stats")
-      banded.groupBy(col("ingest_wave"), col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("bucket_n"))
-        .write.mode("overwrite").partitionBy("ingest_wave").parquet(statsDir)
-      val prunedStats = FoldLaw.minhashBucketStats.sum(
-        FsOps.readParquet(s, statsDir).filter(col("ingest_wave") < 2))
-      val prunedIndex = Bucketing.table(s, tbl)
-        .filter(col("ingest_wave") < 2).drop("ingest_wave")
-      val res = DedupOps.minhashNearDupIndexed(
+      scratch(s) { sc =>
+        val index = Bucketing.write(banded, sc.table("mhband_part"), 8,
+          Seq("band_idx", "band_hash"), partitionBy = Seq("ingest_wave"))
+        // per-wave stats stored at write time, PARTITIONED on the same
+        // wave key as the index (one layout across index and stats): the
+        // pruned slice's stats are a keys-sized group-sum of the kept
+        // waves (additive law), and the wave predicate prunes stats
+        // partition directories at planning time exactly as it prunes
+        // the index's
+        val statsDir = tmpDir(s, "d02p_stats")
+        banded.groupBy(col("ingest_wave"), col("band_idx"), col("band_hash"))
+          .agg(count(lit(1)).as("bucket_n"))
+          .write.mode("overwrite").partitionBy("ingest_wave").parquet(statsDir)
+        val prunedStats = FoldLaw.minhashBucketStats.sum(
+          FsOps.readParquet(s, statsDir).filter(col("ingest_wave") < 2))
+        DedupOps.minhashNearDupIndexed(
           all.filter(col("doc_id") % 10 === 0),
-          prunedIndex.hint("merge"),
+          index.filter(col("ingest_wave") < 2).drop("ingest_wave").hint("merge"),
           corpus.filter(col("doc_id") % 3 < 2), "text", "doc_id",
           bandStats = Some(prunedStats))
-        // pin eagerly so the pid-keyed scratch table can drop before
-        // returning (the q57 hygiene); timed work includes the writes
-        .localCheckpoint(true)
-      Bucketing.drop(s, tbl)
-      res.orderBy(col("doc_id"))
+      }.orderBy(col("doc_id"))
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 0 AND doc_id % 3 < 2",
       "doc_id % 10 = 0")),
@@ -1418,28 +1411,23 @@ private[graft] object QueriesDedup {
     (s, d) => {
       import graft.io.Bucketing
       val all = docs(s, d)
-      val segT = s"graft_shseg_${ProcessHandle.current().pid()}"
-      Bucketing.writeBucketedKeys(
-        DedupOps.simhashSegmentIndex(
-          DedupOps.simhashIndex(
-            all.filter(col("doc_id") % 10 =!= 0), "text", "doc_id"),
-          "doc_id"),
-        segT, 8, Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
-      val segIndex = Bucketing.table(s, segT)
-      // stats stored at write time (one aggregate pass, amortized over
-      // every later probe), read back keys-sized for the cap
-      val statsDir = tmpDir(s, "d03b_stats")
-      DedupOps.simhashSegmentStats(segIndex)
-        .write.mode("overwrite").parquet(statsDir)
-      val res = DedupOps.simhashNearDupSegIndexed(
+      scratch(s) { sc =>
+        val segIndex = Bucketing.write(
+          DedupOps.simhashSegmentIndex(
+            DedupOps.simhashIndex(
+              all.filter(col("doc_id") % 10 =!= 0), "text", "doc_id"),
+            "doc_id"),
+          sc.table("shseg"), 8, Seq("seg_idx", "seg_val"))
+        // stats stored at write time (one aggregate pass, amortized over
+        // every later probe), read back keys-sized for the cap
+        val statsDir = tmpDir(s, "d03b_stats")
+        DedupOps.simhashSegmentStats(segIndex)
+          .write.mode("overwrite").parquet(statsDir)
+        DedupOps.simhashNearDupSegIndexed(
           all.filter(col("doc_id") % 10 === 0),
           segIndex.hint("merge"), "text", "doc_id",
           segStats = Some(FsOps.readParquet(s, statsDir)))
-        // pin eagerly so the pid-keyed scratch table can drop before
-        // returning (the q57 hygiene); timed work includes the writes
-        .localCheckpoint(true)
-      Bucketing.drop(s, segT)
-      res.orderBy(col("doc_id"))
+      }.orderBy(col("doc_id"))
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
     writes = true)
@@ -1466,32 +1454,27 @@ private[graft] object QueriesDedup {
     (s, d) => {
       import graft.io.Bucketing
       val all = docs(s, d)
-      val pid = ProcessHandle.current().pid()
-      val tbl = s"graft_shseg_churn_$pid"
-      val cpt = s"graft_shseg_compact_$pid"
       val keys = Seq("seg_idx", "seg_val")
       def segOf(pred: Column) = DedupOps.simhashSegmentIndex(
         DedupOps.simhashIndex(all.filter(pred), "text", "doc_id"), "doc_id")
       val ingested = col("doc_id") % 10 =!= 0
-      Bucketing.writeBucketedKeys(
-        segOf(ingested && col("doc_id") % 4 === 0), tbl, 8, keys, keys)
-      (1 to 3).foreach(i => Bucketing.appendBucketedKeys(
-        segOf(ingested && col("doc_id") % 4 === i), tbl, 8, keys, keys))
-      Bucketing.compactBucketed(s, tbl, cpt,
-        df => df.join(all.filter(col("doc_id") % 10 === 5)
-          .select(col("doc_id")), Seq("doc_id"), "left_anti"))
-      val segIndex = Bucketing.table(s, cpt)
-      val statsDir = tmpDir(s, "d03c_stats")
-      DedupOps.simhashSegmentStats(segIndex)
-        .write.mode("overwrite").parquet(statsDir)
-      val res = DedupOps.simhashNearDupSegIndexed(
+      scratch(s) { sc =>
+        val (tbl, cpt) = (sc.table("shseg_churn"), sc.table("shseg_compact"))
+        Bucketing.write(segOf(ingested && col("doc_id") % 4 === 0), tbl, 8, keys)
+        (1 to 3).foreach(i => Bucketing.appendBucketedKeys(
+          segOf(ingested && col("doc_id") % 4 === i), tbl, 8, keys))
+        Bucketing.compactBucketed(s, tbl, cpt,
+          df => df.join(all.filter(col("doc_id") % 10 === 5)
+            .select(col("doc_id")), Seq("doc_id"), "left_anti"))
+        val segIndex = s.table(cpt)
+        val statsDir = tmpDir(s, "d03c_stats")
+        DedupOps.simhashSegmentStats(segIndex)
+          .write.mode("overwrite").parquet(statsDir)
+        DedupOps.simhashNearDupSegIndexed(
           all.filter(col("doc_id") % 10 === 0),
           segIndex.hint("merge"), "text", "doc_id",
           segStats = Some(FsOps.readParquet(s, statsDir)))
-        .localCheckpoint(true)
-      Bucketing.drop(s, tbl)
-      Bucketing.drop(s, cpt)
-      res.orderBy(col("doc_id"))
+      }.orderBy(col("doc_id"))
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 0 AND doc_id % 10 <> 5",
       "doc_id % 10 = 0")),

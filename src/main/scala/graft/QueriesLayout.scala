@@ -11,30 +11,6 @@ import graft.QHelp._
 private[graft] object QueriesLayout {
 
 
-  /** Remove q57b scratch dirs left by JVMs that no longer exist: the
-    * pid-keyed convention is what makes concurrent runs race-free, and
-    * this dead-pid sweep is what keeps it from growing without bound
-    * (two bucketed copies of the two largest tables per JVM otherwise
-    * accumulate forever). A LIVE pid's dirs are never touched — the
-    * race fix stands.
-    */
-  private def sweepDeadQ57bScratch(s: SparkSession): Unit = {
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
-    val root = s"$wh/graft_tmp"
-    try {
-      if (graft.io.FsOps.exists(s, root))
-        graft.io.FsOps.ls(s, root)
-          .filter(_.split('/').last.startsWith("q57b_"))
-          .foreach { dir =>
-            val pid = dir.split('_').last
-            val alive = pid.toLongOption
-              .exists(p => ProcessHandle.of(p).isPresent)
-            if (!alive) graft.io.FsOps.rm(s, dir)
-          }
-    } catch { case _: Throwable => } // sweep is best-effort hygiene
-  }
-
-
   /** q45 — CSV sink + source round-trip (S1/S5 text formats for real):
     * nation written to CSV with header, read back with an explicit
     * schema, joined and aggregated — proves the text codec path is
@@ -139,28 +115,19 @@ private[graft] object QueriesLayout {
     (s, d) => {
       import s.implicits._
       import graft.io.Bucketing
-      val pid = ProcessHandle.current().pid()
-      val oT = s"graft_b_orders_$pid"
-      val lT = s"graft_b_lineitem_$pid"
-      Bucketing.writeBucketed(
-        ord(s, d).select($"o_orderkey", $"o_orderpriority"),
-        oT, 16, "o_orderkey", Seq("o_orderkey"))
-      Bucketing.writeBucketed(
-        li(s, d).select($"l_orderkey", $"l_extendedprice", $"l_discount"),
-        lT, 16, "l_orderkey", Seq("l_orderkey"))
-      val res = Bucketing.table(s, oT).hint("merge")
-        .join(Bucketing.table(s, lT), $"o_orderkey" === $"l_orderkey")
-        .groupBy($"o_orderpriority")
-        .agg(count(lit(1)).as("n_items"),
-             round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2)
-               .as("revenue"))
-        // pin the 5-row result eagerly so the pid-suffixed scratch
-        // tables can be dropped before returning (no warehouse leak
-        // across runs); the timed work still includes write+join.
-        .localCheckpoint(true)
-      Bucketing.drop(s, oT)
-      Bucketing.drop(s, lT)
-      res.orderBy($"o_orderpriority")
+      scratch(s) { sc =>
+        val o = Bucketing.write(ord(s, d).select($"o_orderkey", $"o_orderpriority"),
+          sc.table("b_orders"), 16, Seq("o_orderkey"))
+        val l = Bucketing.write(
+          li(s, d).select($"l_orderkey", $"l_extendedprice", $"l_discount"),
+          sc.table("b_lineitem"), 16, Seq("l_orderkey"))
+        o.hint("merge")
+          .join(l, $"o_orderkey" === $"l_orderkey")
+          .groupBy($"o_orderpriority")
+          .agg(count(lit(1)).as("n_items"),
+               round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2)
+                 .as("revenue"))
+      }.orderBy($"o_orderpriority")
     },
     Some(q57OracleSql),
     writes = true)
@@ -175,8 +142,9 @@ private[graft] object QueriesLayout {
     * both carry the pid — catalogs are per-JVM, and the pid-keyed path
     * is the graft_tmp convention that makes concurrent JVMs unable to
     * overwrite each other's files mid-read; like every other graft_tmp
-    * scratch write (q58/q70/q72), the cost is per-JVM dirs that
-    * accumulate until swept) and every subsequent run is the pure probe:
+    * scratch write (q58/q70/q72), the cost is per-JVM dirs that stay
+    * until `Session.local` sweeps dead pids' scratch in a later JVM)
+    * and every subsequent run is the pure probe:
     * bucket-layout scans feeding an SMJ with zero shuffle exchanges.
     * Cold therefore includes the one-time build — the amortization
     * story stated honestly — and warm IS the join. At 100 TB this is
@@ -200,20 +168,14 @@ private[graft] object QueriesLayout {
       val oT = s"graft_b57p_orders_${pid}_$tag"
       val lT = s"graft_b57p_lineitem_${pid}_$tag"
       if (!s.catalog.tableExists(oT) || !s.catalog.tableExists(lT)) {
-        // one-time build is also the hygiene point: reclaim scratch
-        // left by dead JVMs before adding this one's
-        sweepDeadQ57bScratch(s)
-        Bucketing.writeBucketed(
-          ord(s, d).select($"o_orderkey", $"o_orderpriority"),
-          oT, 16, "o_orderkey", Seq("o_orderkey"),
-          Some(tmpDir(s, s"q57b_orders_$tag")))
-        Bucketing.writeBucketed(
+        Bucketing.write(ord(s, d).select($"o_orderkey", $"o_orderpriority"),
+          oT, 16, Seq("o_orderkey"), path = Some(tmpDir(s, s"q57b_orders_$tag")))
+        Bucketing.write(
           li(s, d).select($"l_orderkey", $"l_extendedprice", $"l_discount"),
-          lT, 16, "l_orderkey", Seq("l_orderkey"),
-          Some(tmpDir(s, s"q57b_lineitem_$tag")))
+          lT, 16, Seq("l_orderkey"), path = Some(tmpDir(s, s"q57b_lineitem_$tag")))
       }
-      Bucketing.table(s, oT).hint("merge")
-        .join(Bucketing.table(s, lT), $"o_orderkey" === $"l_orderkey")
+      s.table(oT).hint("merge")
+        .join(s.table(lT), $"o_orderkey" === $"l_orderkey")
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
              round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2)
@@ -458,7 +420,7 @@ private[graft] object QueriesLayout {
 
 
   /** q78 — the composed production fact layout
-    * (Bucketing.writePartitionedBucketed): orders PARTITIONED by year
+    * (`Bucketing.write` with `partitionBy`): orders PARTITIONED by year
     * AND BUCKETED by orderkey, joined to bucketed lineitem through a
     * year predicate. The two physical levers compose in one plan — the
     * partition filter prunes 6 of 7 year directories at planning time,
@@ -480,37 +442,29 @@ private[graft] object QueriesLayout {
     (s, d) => {
       import s.implicits._
       import graft.io.Bucketing
-      val pid = ProcessHandle.current().pid()
-      val oT = s"graft_pb_orders_$pid"
-      val lT = s"graft_pb_lineitem_$pid"
-      Bucketing.writePartitionedBucketed(
-        ord(s, d)
-          .withColumn("o_year", date_format($"o_orderdate", "yyyy"))
-          .select($"o_orderkey", $"o_orderpriority", $"o_year"),
-        oT, Seq("o_year"), 16, "o_orderkey", Seq("o_orderkey"))
-      Bucketing.writeBucketed(
-        li(s, d).select($"l_orderkey", $"l_extendedprice", $"l_discount"),
-        lT, 16, "l_orderkey", Seq("l_orderkey"))
-      val res = Bucketing.table(s, oT)
-        .filter($"o_year" === "1996")
-        .hint("merge")
-        .join(Bucketing.table(s, lT), $"o_orderkey" === $"l_orderkey")
-        .groupBy($"o_orderpriority")
-        // exact-decimal revenue (q59/q71's practice): both inputs are
-        // 2-decimal doubles, so the decimal casts are exact and the
-        // product/sum never depend on partial-aggregation order —
-        // round(sum(double),2) could flip a .005 boundary per engine
-        .agg(count(lit(1)).as("n_items"),
-             round(sum($"l_extendedprice".cast("decimal(18,2)") *
-                 (expr("CAST(1 AS DECIMAL(3,2))") -
-                  $"l_discount".cast("decimal(6,4)"))), 2)
-               .cast("double").as("revenue"))
-        // pin eagerly so the pid-suffixed scratch tables drop before
-        // returning (q57's hygiene)
-        .localCheckpoint(true)
-      Bucketing.drop(s, oT)
-      Bucketing.drop(s, lT)
-      res.orderBy($"o_orderpriority")
+      scratch(s) { sc =>
+        val o = Bucketing.write(
+          ord(s, d)
+            .withColumn("o_year", date_format($"o_orderdate", "yyyy"))
+            .select($"o_orderkey", $"o_orderpriority", $"o_year"),
+          sc.table("pb_orders"), 16, Seq("o_orderkey"), partitionBy = Seq("o_year"))
+        val l = Bucketing.write(
+          li(s, d).select($"l_orderkey", $"l_extendedprice", $"l_discount"),
+          sc.table("pb_lineitem"), 16, Seq("l_orderkey"))
+        o.filter($"o_year" === "1996")
+          .hint("merge")
+          .join(l, $"o_orderkey" === $"l_orderkey")
+          .groupBy($"o_orderpriority")
+          // exact-decimal revenue (q59/q71's practice): both inputs are
+          // 2-decimal doubles, so the decimal casts are exact and the
+          // product/sum never depend on partial-aggregation order —
+          // round(sum(double),2) could flip a .005 boundary per engine
+          .agg(count(lit(1)).as("n_items"),
+               round(sum($"l_extendedprice".cast("decimal(18,2)") *
+                   (expr("CAST(1 AS DECIMAL(3,2))") -
+                    $"l_discount".cast("decimal(6,4)"))), 2)
+                 .cast("double").as("revenue"))
+      }.orderBy($"o_orderpriority")
     },
     Some("""
       SELECT o_orderpriority, count(*) AS n_items,
@@ -824,8 +778,8 @@ private[graft] object QueriesLayout {
       import s.implicits._
       // pin = true: the Bench/Verify harness runs Hygiene.clearAll, so
       // the graded instance keeps the fast no-recompute plan; the
-      // library DEFAULT is pin = false (safe for embedders — round-7
-      // verdict task 4)
+      // library DEFAULT is pin = false (safe for embedders, whose
+      // sessions run no such hygiene)
       LibOps.robustOutliers(ev(s, d), Seq("event_type"), "value", 3.75,
           pin = true)
         .groupBy($"event_type")
@@ -1099,8 +1053,8 @@ private[graft] object QueriesLayout {
 
   /** q51 — conversion funnel (event-sequence analytics): users who
     * signed up, then clicked within 24h of first signup, then purchased
-    * within 24h of that first qualifying click. Since round 6 this
-    * delegates to the generalized `TimeOps.funnel` (per-user
+    * within 24h of that first qualifying click. It delegates to the
+    * generalized `TimeOps.funnel` (per-user
     * min-aggregates chained by co-partitioned user equi-joins; q87
     * grades the op's native schema on a different step chain) and
     * keeps this query's original stage-label output contract.

@@ -98,13 +98,16 @@ private[graft] object QueriesOps {
   private val q28 = Q(
     "q28_grouping_sets",
     (s, d) => {
+      // the returned frame is analysed, so it keeps the view's plan
+      // after the view itself is dropped
       ord(s, d).createOrReplaceTempView("orders_v")
-      s.sql("""
+      try s.sql("""
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
                round(sum(o_totalprice), 2) AS sum_price
         FROM orders_v
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""")
+      finally s.catalog.dropTempView("orders_v")
     },
     Some("""
       SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -170,8 +173,8 @@ private[graft] object QueriesOps {
       GROUP BY n_name ORDER BY n_name"""))
 
 
-  // q32_approx_sketches (HLL distinct + approx percentile) was retired
-  // in round 6: both capabilities now have DETERMINISTIC graded
+  // q32_approx_sketches (HLL distinct + approx percentile) is retired:
+  // both capabilities have DETERMINISTIC graded
   // counterparts — q82_kmv_distinct for the distinct sketch and
   // q81/q83 for histogram quantiles — so the engine-native
   // convenience ops (LibOps.approxCountDistinctByKey,

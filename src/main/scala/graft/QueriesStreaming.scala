@@ -11,48 +11,6 @@ import graft.streaming.FoldLaw
 private[graft] object QueriesStreaming {
 
 
-  /** Shared harness for the streaming_* parity queries: run `stream`
-    * into a memory sink under AvailableNow, await completion, return
-    * the sink name (caller projects, pins, and drops the view). Two
-    * parity-harness confs are scoped to the run and restored after:
-    *
-    *  - state partitions sized to harness volume (2; each shuffle
-    *    partition is a full set of state-store instances whose
-    *    load/commit cost is per-batch overhead — production sizes this
-    *    to state volume instead);
-    *  - no-data micro-batches OFF: every graded stream emits eagerly
-    *    inside its data batch (inner interval join, first-sight dedup,
-    *    sentinel-closed sessions), so the trailing watermark-advance
-    *    batch produces zero rows and only pays state-store commits.
-    *
-    * Together measured 9.1 s -> 1.9 s on streaming_interval_parity at
-    * sf0.1 local[32]. Production streams with timeout-driven emission
-    * (session closes on idle) need no-data batches ON — that is the
-    * default this helper restores.
-    */
-  private def runParityStream(s: SparkSession,
-                              stream: DataFrame, prefix: String,
-                              mode: String = "append"): String = {
-    val sink = s"${prefix}_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = stream.writeStream
-        .format("memory").queryName(sink).outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    sink
-  }
-
-
   // ------------------------------------------------------ streaming (graded)
 
   /** streaming_sessions_parity — the custom streaming sessionizer
@@ -94,18 +52,12 @@ private[graft] object QueriesStreaming {
       val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val sessions = StreamingOps.statefulSessions(
         s, src, gapSec = 1800, watermark = "3650 days")
-      val sink = runParityStream(s, sessions, "stream_sessions")
-      // pin the result, then drop the memory-sink view so repeated
-      // invocations (Bench runs every query twice) don't accumulate
-      // in-memory result tables for the life of the session
-      val out = s.table(sink)
+      scratch(s)(_.sink(sessions)
         // defense in depth: sentinel sessions never close, hence never
         // emit — but a future sentinel tweak must not leak rows
         .filter($"session_start" <= maxSec)
-        .select($"user_id", $"session_start", $"n_events")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out.orderBy($"user_id", $"session_start", $"n_events")
+        .select($"user_id", $"session_start", $"n_events"))
+        .orderBy($"user_id", $"session_start", $"n_events")
     },
     Some(sessionOracleSql("")),
     writes = true)
@@ -129,13 +81,9 @@ private[graft] object QueriesStreaming {
       batch.write.mode("append").parquet(stageDir)
       val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val deduped = StreamingOps.streamingDedup(src, watermark = "3650 days")
-      val sink = runParityStream(s, deduped, "stream_dedup")
-      // pin + drop the memory-sink view (same hygiene as st01)
-      val out = s.table(sink)
-        .select($"event_id", $"user_id", $"ts".cast("long").as("ts_s"))
-        .localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out.orderBy($"event_id")
+      scratch(s)(_.sink(deduped)
+        .select($"event_id", $"user_id", $"ts".cast("long").as("ts_s")))
+        .orderBy($"event_id")
     },
     Some("""
       SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
@@ -168,11 +116,8 @@ private[graft] object QueriesStreaming {
         src.filter($"event_type" === "click"),
         src.filter($"event_type" === "purchase"),
         intervalHours = 24, watermark = "3650 days")
-      val sink = runParityStream(s, joined, "stream_ssj")
-      // pin + drop the memory-sink view (same hygiene as st01)
-      val out = s.table(sink).localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out.orderBy($"click_id", $"purchase_ts_s", $"purchase_value")
+      scratch(s)(_.sink(joined))
+        .orderBy($"click_id", $"purchase_ts_s", $"purchase_value")
     },
     Some("""
       WITH c AS (
@@ -213,14 +158,10 @@ private[graft] object QueriesStreaming {
       batch.coalesce(1).write.mode("overwrite").parquet(stageDir)
       val src = StreamingOps.eventsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val windows = StreamingOps.tumblingCounts(src, "1 hour", watermark = "2 hours")
-      val sink = runParityStream(s, windows, "stream_tumbling", mode = "complete")
-      // pin + drop the memory-sink view (same hygiene as st01)
-      val out = s.table(sink)
+      scratch(s)(_.sink(windows, mode = "complete")
         .select($"window_start", $"event_type", $"cnt",
-          round($"sum_value", 2).as("sum_value"))
-        .localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out.orderBy($"window_start", $"event_type")
+          round($"sum_value", 2).as("sum_value")))
+        .orderBy($"window_start", $"event_type")
     },
     Some("""
       SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS window_start,
@@ -255,10 +196,7 @@ private[graft] object QueriesStreaming {
         .agg(count(lit(1)).as("cnt"),
           round(sum($"value".cast("decimal(18,6)")), 2).cast("double")
             .as("sum_value"))
-      val sink = runParityStream(s, enriched, "stream_static", mode = "complete")
-      val out = s.table(sink).localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out.orderBy($"type_tier")
+      scratch(s)(_.sink(enriched, mode = "complete")).orderBy($"type_tier")
     },
     Some("""
       SELECT CASE WHEN len(event_type) >= 6 THEN 'long' ELSE 'short' END
@@ -290,10 +228,7 @@ private[graft] object QueriesStreaming {
       val src = StreamingOps.docsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
       val scored = TextOps.qualityModel(src)
         .select($"doc_id", $"score", $"keep")
-      val sink = runParityStream(s, scored, "stream_quality", mode = "append")
-      val out = s.table(sink).localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out.orderBy($"doc_id")
+      scratch(s)(_.sink(scored)).orderBy($"doc_id")
     },
     Some(s"""$qualityModelCtes
       SELECT doc_id, $qualityScoreSql AS score,
@@ -302,9 +237,9 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_simhash_ingest_parity — the index-lifecycle INGEST
-    * PROBE deployed under Structured Streaming (round 8: proving the
-    * lifecycle ops compose with the streaming ingest path, not just
-    * batch): the incoming docs (doc_id % 10 == 0) arrive as a file
+    * PROBE deployed under Structured Streaming (proving the lifecycle
+    * ops compose with the streaming ingest path, not just batch): the
+    * incoming docs (doc_id % 10 == 0) arrive as a file
     * stream in MULTIPLE micro-batches (4 files, maxFilesPerTrigger=2),
     * each probed via foreachBatch against the STORED simhash index of
     * the corpus — the dedup_simhash_incremental pipeline per batch,
@@ -339,9 +274,8 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_minhash_ingest_parity — the minhash lifecycle probe
-    * deployed under Structured Streaming (round 9: the round-8
-    * verdict's remaining stream-deployment task — st07 graded the
-    * simhash probe; this one carries the family's heavier contract,
+    * deployed under Structured Streaming (st07 grades the simhash
+    * probe; this one carries the family's heavier contract,
     * a VERIFYING probe whose corpus text is touched only through the
     * candidate-id semi-join): the incoming docs arrive as a file
     * stream in multiple micro-batches (4 files,
@@ -380,8 +314,8 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_ivf_ingest_parity — the ANN lifecycle probe deployed
-    * under Structured Streaming (round 9, completing the family
-    * sweep): QUERY vectors arrive as a file stream in multiple
+    * under Structured Streaming (the third family after st07/st08):
+    * QUERY vectors arrive as a file stream in multiple
     * micro-batches, each probed via foreachBatch against the STORED
     * IVF assignment index of the full corpus under its pinned
     * lowest-id codebook — ann_ivf_topk's probe per batch, outputs
@@ -796,9 +730,9 @@ private[graft] object QueriesStreaming {
     writes = true)
 
   /** streaming_fold_delta_parity — the BATCH-SIZED state publish
-    * (round 11: the round-10 verdict's lead task — the versioned-
-    * snapshot fold rewrote the ENTIRE state as v{n+1} every micro-batch, an
-    * O(index) write per trigger at 100 TB; the DeltaState protocol
+    * (a versioned-snapshot fold would rewrite the ENTIRE state as
+    * v{n+1} every micro-batch, an O(index) write per trigger at
+    * 100 TB; the DeltaState protocol
     * publishes each batch's ADD rows and tombstone KEYS into a
     * batchId-keyed `_COMMIT`-gated delta dir instead, O(batch) per
     * trigger, with a periodic compaction folding the chain into a new

@@ -22,7 +22,8 @@ object Session {
     *    the iterative graph ops' staging, bucketed tables), at
     *    `graft-warehouse` under `java.io.tmpdir`: Spark's default is
     *    `spark-warehouse` under the working directory, so a run's
-    *    scratch would depend on where it was started.
+    *    scratch would depend on where it was started;
+    *  - once per JVM, [[sweepDeadScratch]] over that warehouse.
     */
   def local(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -38,7 +39,35 @@ object Session {
         System.getProperty("java.io.tmpdir"), "graft-warehouse").getAbsolutePath)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    if (swept.compareAndSet(false, true)) sweepDeadScratch(s)
     s
+  }
+
+  private val swept = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Remove the pid-keyed scratch of JVMs that no longer exist: every
+    * dir directly under `<warehouse>/graft_tmp`, and every `graft_*`
+    * dir directly under `<warehouse>` (managed scratch tables), whose
+    * name ends in `_<pid>` — or `_<pid>_ckpt`, the stream checkpoint
+    * DeltaState keeps beside a store — for a pid with no live process.
+    * Keying scratch by pid keeps concurrent JVMs from overwriting each
+    * other's files mid-read; this sweep keeps it from growing without
+    * bound, as a JVM that exits (or is killed) leaves its dirs behind.
+    * A live pid's dirs and names without a numeric suffix are never
+    * touched. Best-effort: a failure leaves the scratch in place.
+    */
+  private[graft] def sweepDeadScratch(s: SparkSession): Unit = {
+    import graft.io.FsOps
+    val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+    def dead(dir: String) =
+      dir.split('/').last.stripSuffix("_ckpt").split('_').last.toLongOption
+        .exists(p => !ProcessHandle.of(p).isPresent)
+    def under(root: String) =
+      if (FsOps.exists(s, root)) FsOps.ls(s, root) else Nil
+    try (under(s"$wh/graft_tmp") ++
+        under(wh).filter(_.split('/').last.startsWith("graft_")))
+      .filter(dead).foreach(FsOps.rm(s, _))
+    catch { case _: Exception => }
   }
 
   /** Cores for an entry point's session: `SPARK_GRAFT_CPUS`, default 4. */

@@ -13,40 +13,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one shuffle at WRITE time and amortizes it over every subsequent
   * join/aggregation on the bucket key; the break-even is one read.
   *
-  * Bucket-sorted output (`sortBy`) additionally lets the merge join
-  * skip its per-partition sort when each bucket holds one file.
+  * Every table is bucket-sorted on its bucket keys (`sortBy`), which
+  * additionally lets the merge join skip its per-partition sort when
+  * each bucket holds one file.
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed (optionally bucket-sorted) managed
-    * parquet table. Overwrites any previous version; the table lives
-    * under `spark.sql.warehouse.dir` (shared FS on a real cluster).
+  /** Write `df` as a managed parquet table bucketed `buckets` ways on
+    * `keys` and sorted on them within each bucket, and return it read
+    * back from the catalog (which carries the bucket spec — a plain
+    * `read.parquet` of the files would lose it). Overwrites any
+    * previous version.
+    *
+    * A composite `keys` tuple is the layout for indexes whose probe
+    * joins on a key tuple (the simhash segment index on
+    * (seg_idx, seg_val)): hash-partitioning on the full tuple
+    * satisfies the join's required distribution straight off the scan,
+    * so only the batch-sized probe side shuffles.
+    *
+    * `partitionBy` adds Hive partitioning on a pruning key (date,
+    * ingest wave): the two levers compose, so a predicate on the
+    * partition column prunes whole directories at planning time and
+    * the surviving slice still joins exchange-free off the buckets
+    * (q78 on a fact table, `dedup_minhash_partitioned_probe` on a
+    * lifecycle index; BucketingSpec and OpsSpec assert both plan
+    * properties at once).
+    *
+    * `path` makes the table EXTERNAL: its files land under the caller's
+    * dir and the caller owns their lifecycle — [[drop]] removes only
+    * the catalog entry. Without it the table lives under
+    * `spark.sql.warehouse.dir` (a shared FS on a real cluster).
     */
-  def writeBucketed(df: DataFrame, table: String, numBuckets: Int,
-                    bucketCol: String, sortCols: Seq[String] = Nil,
-                    path: Option[String] = None): Unit =
-    writeBucketedKeys(df, table, numBuckets, Seq(bucketCol), sortCols, path)
-
-  /** [[writeBucketed]] with a COMPOSITE bucket key — the layout for
-    * indexes whose probe joins on a key tuple (e.g. the simhash
-    * segment index on (seg_idx, seg_val)): hash-partitioning on the
-    * full tuple satisfies the join's required distribution straight
-    * off the scan, so every probe joins with zero exchange on the
-    * index side while only the (batch-sized) probe side shuffles.
-    */
-  def writeBucketedKeys(df: DataFrame, table: String, numBuckets: Int,
-                        bucketCols: Seq[String], sortCols: Seq[String] = Nil,
-                        path: Option[String] = None): Unit = {
-    require(bucketCols.nonEmpty, "writeBucketedKeys: no bucket columns")
-    // an explicit path makes the table EXTERNAL: files land under the
-    // caller's chosen dir (q57b uses pid-keyed graft_tmp scratch, with
-    // a dead-pid sweep bounding accumulation) and the CALLER owns
-    // their lifecycle — DROP TABLE removes only the catalog entry
-    val w0 = df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    val w = path.fold(w0)(p => w0.option("path", p))
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
+  def write(df: DataFrame, table: String, buckets: Int, keys: Seq[String],
+            partitionBy: Seq[String] = Nil,
+            path: Option[String] = None): DataFrame = {
+    require(keys.nonEmpty, "Bucketing.write: no bucket columns")
+    val w = df.write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, keys.head, keys.tail: _*)
+      .sortBy(keys.head, keys.tail: _*)
+    val wp = if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)
+    path.fold(wp)(p => wp.option("path", p)).saveAsTable(table)
+    df.sparkSession.table(table)
   }
 
   /** Append-mode fold write into an existing bucketed table — the
@@ -60,12 +67,11 @@ object Bucketing {
     * spec (Spark rejects a mismatch at write time).
     */
   def appendBucketedKeys(df: DataFrame, table: String, numBuckets: Int,
-                         bucketCols: Seq[String],
-                         sortCols: Seq[String] = Nil): Unit = {
+                         bucketCols: Seq[String]): Unit = {
     require(bucketCols.nonEmpty, "appendBucketedKeys: no bucket columns")
-    val w = df.write.mode("append").format("parquet")
+    df.write.mode("append").format("parquet")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
+      .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(table)
   }
 
@@ -83,19 +89,23 @@ object Bucketing {
     * each task holds exactly one bucket → ONE file per bucket), and
     * writes `outTable` with the bucket spec COPIED from the catalog —
     * the layout, and every probe's zero-exchange plan, survives by
-    * construction. Writes to a NEW name because a table cannot be
-    * overwritten from its own scan (the rationale behind DeltaState's
-    * versioned bases); the caller swaps names / drops the old when
-    * ready.
+    * construction. [[write]] sorts on the bucket keys, so a table
+    * sorted on other columns is refused rather than silently re-sorted.
+    * Writes to a NEW name because a table cannot be overwritten from
+    * its own scan (the rationale behind DeltaState's versioned bases);
+    * the caller swaps names / drops the old when ready.
     */
   def compactBucketed(spark: SparkSession, inTable: String, outTable: String,
-                      transform: DataFrame => DataFrame = identity,
-                      path: Option[String] = None): Unit = {
+                      transform: DataFrame => DataFrame = identity): Unit = {
     import org.apache.spark.sql.functions.col
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(inTable))
     val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"compactBucketed: table $inTable has no bucket spec"))
+    require(spec.sortColumnNames == spec.bucketColumnNames,
+      s"compactBucketed: table $inTable is sorted on " +
+        s"[${spec.sortColumnNames.mkString(", ")}], not on its bucket columns " +
+        s"[${spec.bucketColumnNames.mkString(", ")}]")
     // keep the source's bucket-grouped scan: the scan already satisfies
     // the repartition's distribution, so the exchange is elided and the
     // rewrite is ZERO-shuffle (each task reads one bucket's files and
@@ -104,22 +114,22 @@ object Bucketing {
     // the scan AFTER the aligned exchange was already elided, splitting
     // each bucket across tasks — measured: 4 waves × 4 buckets
     // recompact to 16 files instead of 4. The pin is scoped to a CLONED
-    // session (round-10 advice: setting it on the caller's session
-    // would silently change the plans of any query planning
-    // concurrently in that session): `newSession` shares the
-    // SparkContext and the catalog — so the rewrite sees `inTable` and
-    // `outTable` lands in the shared catalog — but carries its own
-    // SQLConf, and the pin dies with the clone.
+    // session, because setting it on the caller's session would
+    // silently change the plans of any query planning concurrently in
+    // that session: `newSession` shares the SparkContext and the
+    // catalog — so the rewrite sees `inTable` and `outTable` lands in
+    // the shared catalog — but carries its own SQLConf, and the pin
+    // dies with the clone.
     val ss = spark.newSession()
     // newSession() initializes its SQLConf from the SparkConf, NOT the
     // caller's live session — a runtime-set conf (AQE toggles, shuffle
     // partitions, broadcast threshold) would silently not apply to the
-    // rewrite (round-11 advice). Copy the caller's runtime SQL-conf
-    // overrides onto the clone first. Only MODIFIABLE keys are copied
-    // — static confs are identical by construction (shared
-    // SparkContext) — and a modifiable key that refuses to apply
-    // fails LOUDLY: swallowing it would re-introduce the exact
-    // silent-non-application bug this copy fixes (round-12 advice)
+    // rewrite. Copy the caller's runtime SQL-conf overrides onto the
+    // clone first. Only MODIFIABLE keys are copied — static confs are
+    // identical by construction (shared SparkContext) — and a
+    // modifiable key that refuses to apply fails LOUDLY: swallowing it
+    // would re-introduce the exact silent-non-application bug this
+    // copy fixes
     spark.conf.getAll.foreach { case (k, v) =>
       if (ss.conf.isModifiable(k) && !ss.conf.getOption(k).contains(v))
         ss.conf.set(k, v)
@@ -127,61 +137,8 @@ object Bucketing {
     ss.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val df = transform(ss.table(inTable))
       .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
-    writeBucketedKeys(df, outTable, spec.numBuckets, spec.bucketColumnNames,
-      spec.sortColumnNames, path)
+    write(df, outTable, spec.numBuckets, spec.bucketColumnNames)
   }
-
-  /** The full production fact layout: Hive-PARTITIONED on a pruning
-    * key (date/source) AND BUCKETED on a join key — the two physical
-    * levers compose, they don't compete. A predicate on the partition
-    * column prunes whole directories at planning time; within the
-    * surviving partitions every file still belongs to one hash bucket
-    * of the join key, so a join against a same-bucketed table plans
-    * with zero shuffle exchanges over just the pruned slice. At 100 TB
-    * this is the canonical fact-table shape: "this quarter's orders ⋈
-    * lineitem" reads 1/8 of the table AND skips both shuffles.
-    * q78 grades the composition; BucketingSpec asserts both plan
-    * properties at once (non-empty PartitionFilters, no Exchange
-    * under the join).
-    */
-  def writePartitionedBucketed(df: DataFrame, table: String,
-                               partitionCols: Seq[String], numBuckets: Int,
-                               bucketCol: String,
-                               sortCols: Seq[String] = Nil): Unit =
-    writePartitionedBucketedKeys(df, table, partitionCols, numBuckets,
-      Seq(bucketCol), sortCols)
-
-  /** [[writePartitionedBucketed]] with a COMPOSITE bucket key — the
-    * q78 fact layout applied to a LIFECYCLE INDEX (round 11): a stored
-    * band/segment index partitioned on its ingest key (date/wave) and
-    * bucketed on its probe-key tuple. Probes that scope the corpus by
-    * ingest time ("dedup against everything crawled before X") prune
-    * whole partition directories at planning time AND still join
-    * exchange-free off the bucketed scan within the surviving slice;
-    * per-partition stats stay additive, so the pruned slice's bucket
-    * stats are a keys-sized group-sum of the kept waves. Graded by
-    * `dedup_minhash_partitioned_probe`.
-    */
-  def writePartitionedBucketedKeys(df: DataFrame, table: String,
-                                   partitionCols: Seq[String], numBuckets: Int,
-                                   bucketCols: Seq[String],
-                                   sortCols: Seq[String] = Nil): Unit = {
-    require(partitionCols.nonEmpty,
-      "writePartitionedBucketedKeys: no partition columns")
-    require(bucketCols.nonEmpty,
-      "writePartitionedBucketedKeys: no bucket columns")
-    val w = df.write.mode("overwrite").format("parquet")
-      .partitionBy(partitionCols: _*)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
-
-  /** Read a bucketed table back (the catalog carries the bucket spec —
-    * a plain `read.parquet` of the files would lose it).
-    */
-  def table(spark: SparkSession, name: String): DataFrame =
-    spark.table(name)
 
   /** Count the visible data files under a catalog table's location —
     * the fragmentation meter [[compactBucketed]] exists to shrink

@@ -147,10 +147,10 @@ object DedupOps {
                             sets: DataFrame, idCol: String,
                             threshold: Double): DataFrame = {
     val verified = verifiedPairs(cands, sets, idCol)
-    // BOTH endpoints in ONE pass over the verified pairs (round 13,
-    // guide §1.2/§2.4): the union-of-two-selects form duplicated the
-    // whole verification subtree — banding, the bucket window, the
-    // pair join, and BOTH corpus shingle passes — once per branch
+    // BOTH endpoints in ONE pass over the verified pairs: the
+    // union-of-two-selects form duplicated the whole verification
+    // subtree — banding, the bucket window, the pair join, and BOTH
+    // corpus shingle passes — once per branch
     // (plan-visible: dedup_minhash scanned documents 9×). Exploding
     // (id_a, jacc), (id_b, jacc) emits the same two rows per pair off
     // one evaluation; aggregation is unchanged
@@ -562,7 +562,7 @@ object DedupOps {
     // standard conservative lower bound (intersections counted over the
     // pruned universe, sizes over the full sets).
     //
-    // Measured alternatives (round 2, sf0.1 local[32]): deriving sizes
+    // Measured alternatives (sf0.1 local[32]): deriving sizes
     // from the exploded postings + joining them back halves the pair
     // shuffle width but needs a SECOND shingle pass over the corpus —
     // 1.8s vs 1.4s here, and at 100 TB a second corpus scan is the
@@ -1167,7 +1167,7 @@ object DedupOps {
     * otherwise runs the whole map side on one task); at scale it is
     * a no-op.
     */
-  private def spanWindows(df: DataFrame, textCol: String, idCol: String,
+  private[graft] def spanWindows(df: DataFrame, textCol: String, idCol: String,
                           n: Int): DataFrame =
     Par.fanOut(
         df.select(col(idCol), split(col(textCol), " ").as("__ws"))
@@ -1230,9 +1230,9 @@ object DedupOps {
 
   /** Incremental span dedup of a new ingest batch against a corpus
     * snapshot's [[spanIndex]] — the ingest-vs-corpus symmetry the
-    * exact / MinHash / semantic dedup families already have (round-7
-    * verdict task 6). A batch window position is duplicated iff its
-    * digest's UNION occurrence count — snapshot `occ` plus the
+    * exact / MinHash / semantic dedup families already have. A batch
+    * window position is duplicated iff its digest's UNION occurrence
+    * count — snapshot `occ` plus the
     * batch's own count — reaches `minOcc`. Occurrence counting is
     * additive, so the output is EXACTLY batch [[spanDedup]] over
     * (corpus ∪ batch) restricted to batch docs (property-tested in

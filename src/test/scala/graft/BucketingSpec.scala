@@ -52,26 +52,20 @@ class BucketingSpec extends AnyFunSuite {
     assert(Queries.pathTag("a" * 200).length == 32)
     // order-independence: another suite (QueriesSpec's run-everything
     // test) may have built the tables in this shared JVM already —
-    // drop them so THIS test's first call exercises the build + sweep
+    // drop them so THIS test's first call exercises the build (the
+    // dead-pid sweep of the scratch it leaves is QueriesSpec's
+    // "scratch sweep" test)
     spark.sql(s"DROP TABLE IF EXISTS $oT")
     spark.sql(s"DROP TABLE IF EXISTS $lT")
-    // seed fake scratch: a dead JVM's dir must be swept by the build,
-    // a live (our own) pid's dir must survive
     // warehouse.dir is a file: URI — java.io.File needs the bare path
     val wh = spark.conf.get("spark.sql.warehouse.dir")
       .stripSuffix("/").stripPrefix("file:")
-    val deadDir = s"$wh/graft_tmp/q57b_fake_999999999"
-    val liveDir = s"$wh/graft_tmp/q57b_fake_$pid"
-    new java.io.File(deadDir).mkdirs()
-    new java.io.File(liveDir).mkdirs()
     try {
       // first call builds the external bucketed tables...
       val first = Queries.queryMap("q57b_bucketed_probe")(spark, d)
       val rows1 = first.collect()
       assert(rows1.nonEmpty)
       assert(spark.catalog.tableExists(oT) && spark.catalog.tableExists(lT))
-      assert(!new java.io.File(deadDir).exists(), "dead-pid scratch not swept")
-      assert(new java.io.File(liveDir).exists(), "live-pid scratch was swept")
       // ...the second call must REUSE them (build-if-missing contract):
       // drop-and-rebuild would refresh the table creation time
       val created = spark.sql(s"DESCRIBE TABLE EXTENDED $oT")
@@ -98,7 +92,6 @@ class BucketingSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $lT")
       graft.io.FsOps.rm(spark, s"$wh/graft_tmp/q57b_orders_${tag}_$pid")
       graft.io.FsOps.rm(spark, s"$wh/graft_tmp/q57b_lineitem_${tag}_$pid")
-      graft.io.FsOps.rm(spark, liveDir)
     }
   }
 

@@ -1409,10 +1409,10 @@ class OpsSpec extends AnyFunSuite {
     import graft.io.Bucketing
     val a = (1L to 200L).map(i => (i, s"p${i % 5}")).toDF("k", "tag")
     val b = (1L to 600L).map(i => (i % 200 + 1, i.toDouble)).toDF("k2", "v")
-    Bucketing.writeBucketed(a, "t_buck_a", 4, "k", Seq("k"))
-    Bucketing.writeBucketed(b, "t_buck_b", 4, "k2", Seq("k2"))
-    val joined = Bucketing.table(spark, "t_buck_a").hint("merge")
-      .join(Bucketing.table(spark, "t_buck_b"), $"k" === $"k2")
+    Bucketing.write(a, "t_buck_a", 4, Seq("k"))
+    Bucketing.write(b, "t_buck_b", 4, Seq("k2"))
+    val joined = spark.table("t_buck_a").hint("merge")
+      .join(spark.table("t_buck_b"), $"k" === $"k2")
       .groupBy($"tag").agg(sum($"v").as("sv"))
     assert(joined.count() == 5)
     val plan = joined.queryExecution.executedPlan.toString
@@ -3166,9 +3166,9 @@ class OpsSpec extends AnyFunSuite {
       def segOf(m: Int) = DedupOps.simhashSegmentIndex(
         DedupOps.simhashIndex(docs.filter($"doc_id" % 4 === m), "text", "doc_id"),
         "doc_id")
-      graft.io.Bucketing.writeBucketedKeys(segOf(0), tbl, 4, keys, keys)
+      graft.io.Bucketing.write(segOf(0), tbl, 4, keys)
       (1 to 3).foreach(i =>
-        graft.io.Bucketing.appendBucketedKeys(segOf(i), tbl, 4, keys, keys))
+        graft.io.Bucketing.appendBucketedKeys(segOf(i), tbl, 4, keys))
       val before = dataFiles(tbl)
       assert(before > 4, s"churn fixture produced only $before files")
       graft.io.Bucketing.compactBucketed(spark, tbl, cpt)
@@ -3198,6 +3198,14 @@ class OpsSpec extends AnyFunSuite {
         assert(scans.nonEmpty && scans.forall(_.bucketedScan),
           "compacted table no longer scans bucketed")
       } finally spark.conf.unset("spark.sql.adaptive.enabled")
+      // a table sorted on other columns than its bucket keys is refused,
+      // not silently re-sorted on the keys
+      segOf(0).write.bucketBy(4, "seg_idx").sortBy("doc_id")
+        .mode("overwrite").saveAsTable(tbl)
+      val err = intercept[IllegalArgumentException](
+        graft.io.Bucketing.compactBucketed(spark, tbl, cpt))
+      assert(err.getMessage.contains("[doc_id]") && err.getMessage.contains("[seg_idx]"),
+        err.getMessage)
     } finally
       Seq(tbl, cpt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -3220,10 +3228,10 @@ class OpsSpec extends AnyFunSuite {
     val statsDir = "/tmp/graft_test_mhband_stats"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         DedupOps.minhashIndex(corpus, "text", "doc_id"),
-        tbl, 4, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val bandIndex = graft.io.Bucketing.table(spark, tbl)
+        tbl, 4, Seq("band_idx", "band_hash"))
+      val bandIndex = spark.table(tbl)
       DedupOps.minhashBucketStats(bandIndex)
         .write.mode("overwrite").parquet(statsDir)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -3287,10 +3295,9 @@ class OpsSpec extends AnyFunSuite {
     try {
       val banded = DedupOps.minhashIndex(corpus, "text", "doc_id")
         .withColumn("ingest_wave", $"doc_id" % 3)
-      graft.io.Bucketing.writePartitionedBucketedKeys(banded, tbl,
-        Seq("ingest_wave"), 4, Seq("band_idx", "band_hash"),
-        Seq("band_idx", "band_hash"))
-      val pruned = graft.io.Bucketing.table(spark, tbl)
+      graft.io.Bucketing.write(banded, tbl, 4, Seq("band_idx", "band_hash"),
+        partitionBy = Seq("ingest_wave"))
+      val pruned = spark.table(tbl)
         .filter($"ingest_wave" < 2).drop("ingest_wave")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -3373,10 +3380,10 @@ class OpsSpec extends AnyFunSuite {
     val tbl = "graft_test_mhband_delta"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         DedupOps.minhashIndex(corpus, "text", "doc_id"), tbl, 4,
-        Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val base = graft.io.Bucketing.table(spark, tbl)
+        Seq("band_idx", "band_hash"))
+      val base = spark.table(tbl)
       val overlayAdds = DedupOps.minhashIndex(addDocs, "text", "doc_id")
       val tombs = delDocs.select($"doc_id")
       val stats = graft.streaming.FoldLaw.minhashBucketStats
@@ -3445,10 +3452,10 @@ class OpsSpec extends AnyFunSuite {
     val tbl = "graft_test_ivf_delta"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         SimOps.ivfIndex(corpus, "vec_id", "embedding", cb),
-        tbl, 4, Seq("cell"), Seq("cell"))
-      val base = graft.io.Bucketing.table(spark, tbl)
+        tbl, 4, Seq("cell"))
+      val base = spark.table(tbl)
       val overlayAdds = SimOps.ivfIndex(addVecs, "vec_id", "embedding", cb)
       val tombs = corpus.filter($"vec_id" % 10 === 7).select($"vec_id")
       val queries = e.filter($"vec_id" < 10 && $"vec_id" % 10 =!= 7)
@@ -3507,10 +3514,10 @@ class OpsSpec extends AnyFunSuite {
     val tbl2 = "graft_test_ivf_rc_gen2"
     Seq(tbl1, tbl2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     try {
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         SimOps.ivfIndex(corpus, "vec_id", "embedding", cb1),
-        tbl1, 4, Seq("cell"), Seq("cell"))
-      val gen1 = graft.io.Bucketing.table(spark, tbl1)
+        tbl1, 4, Seq("cell"))
+      val gen1 = spark.table(tbl1)
       val queries = e.filter($"vec_id" < 10 && $"vec_id" % 10 =!= 0)
       def gen1Probe() = SimOps.ivfTopKIndexed(queries, gen1,
         "vec_id", "embedding", cb1, k = 5).collect().map(_.toString).sorted.toSeq
@@ -3520,12 +3527,12 @@ class OpsSpec extends AnyFunSuite {
       // gen-2 rebuilt beside the serving generation
       val net = e.filter($"vec_id" % 10 =!= 7)
       val cb2 = SimOps.lowestIdCodebook(net, "vec_id", "embedding", 16)
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         SimOps.ivfIndex(net, "vec_id", "embedding", cb2),
-        tbl2, 4, Seq("cell"), Seq("cell"))
+        tbl2, 4, Seq("cell"))
       val cutQueries = e.filter($"vec_id" < 10 && $"vec_id" % 10 =!= 7)
       val cutover = SimOps.ivfTopKIndexed(cutQueries,
-        graft.io.Bucketing.table(spark, tbl2),
+        spark.table(tbl2),
         "vec_id", "embedding", cb2, k = 5).collect().map(_.toString).sorted.toSeq
       val oneShot = SimOps.ivfTopK(cutQueries, net, "vec_id", "embedding", 5,
         codebook = Some(cb2)).collect().map(_.toString).sorted.toSeq
@@ -3534,7 +3541,7 @@ class OpsSpec extends AnyFunSuite {
       // the old generation is UNDISTURBED: same answers, same files
       assert(gen1Probe() == servedBefore,
         "gen-1's probe answers changed during the gen-2 rebuild")
-      assert(graft.io.Bucketing.table(spark, tbl1).inputFiles.sorted.toSeq
+      assert(spark.table(tbl1).inputFiles.sorted.toSeq
         == filesBefore, "gen-1's files moved during the gen-2 rebuild")
     } finally Seq(tbl1, tbl2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -3553,10 +3560,10 @@ class OpsSpec extends AnyFunSuite {
     val tbl2 = "graft_test_mh_rc_gen2"
     Seq(tbl1, tbl2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     try {
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         DedupOps.minhashIndex(corpus, "text", "doc_id"),
-        tbl1, 4, Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val gen1 = graft.io.Bucketing.table(spark, tbl1)
+        tbl1, 4, Seq("band_idx", "band_hash"))
+      val gen1 = spark.table(tbl1)
       def gen1Probe() = DedupOps.minhashNearDupIndexed(batch, gen1, corpus,
         "text", "doc_id",
         bandStats = Some(DedupOps.minhashBucketStats(gen1)))
@@ -3570,9 +3577,9 @@ class OpsSpec extends AnyFunSuite {
       val netBands = gen1.join(delIds, Seq("doc_id"), "left_anti")
         .select($"doc_id", $"band_idx", $"band_hash")
         .unionByName(DedupOps.minhashIndex(addDocs, "text", "doc_id"))
-      graft.io.Bucketing.writeBucketedKeys(netBands, tbl2, 8,
-        Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash"))
-      val gen2 = graft.io.Bucketing.table(spark, tbl2)
+      graft.io.Bucketing.write(netBands, tbl2, 8,
+        Seq("band_idx", "band_hash"))
+      val gen2 = spark.table(tbl2)
       val netText = docs.filter($"doc_id" % 10 =!= 5 && $"doc_id" % 10 =!= 7)
       val cutover = DedupOps.minhashNearDupIndexed(batch, gen2, netText,
         "text", "doc_id",
@@ -3588,7 +3595,7 @@ class OpsSpec extends AnyFunSuite {
         "re-sharded fact rows != re-shingled index of the net corpus")
       assert(gen1Probe() == servedBefore,
         "gen-1's probe answers changed during the re-shard")
-      assert(graft.io.Bucketing.table(spark, tbl1).inputFiles.sorted.toSeq
+      assert(spark.table(tbl1).inputFiles.sorted.toSeq
         == filesBefore, "gen-1's files moved during the re-shard")
     } finally Seq(tbl1, tbl2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -3612,9 +3619,9 @@ class OpsSpec extends AnyFunSuite {
     val tbl = "graft_test_shseg_delta"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
-      graft.io.Bucketing.writeBucketedKeys(segOf(corpus), tbl, 4,
-        Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
-      val base = graft.io.Bucketing.table(spark, tbl)
+      graft.io.Bucketing.write(segOf(corpus), tbl, 4,
+        Seq("seg_idx", "seg_val"))
+      val base = spark.table(tbl)
       val overlayAdds = segOf(addDocs)
       val tombs = delDocs.select($"doc_id")
       val stats = graft.streaming.FoldLaw.simhashSegmentStats
@@ -3683,11 +3690,11 @@ class OpsSpec extends AnyFunSuite {
     val statsDir = "/tmp/graft_test_shseg_stats"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
-      graft.io.Bucketing.writeBucketedKeys(
+      graft.io.Bucketing.write(
         DedupOps.simhashSegmentIndex(
           DedupOps.simhashIndex(corpus, "text", "doc_id"), "doc_id"),
-        tbl, 4, Seq("seg_idx", "seg_val"), Seq("seg_idx", "seg_val"))
-      val segIndex = graft.io.Bucketing.table(spark, tbl)
+        tbl, 4, Seq("seg_idx", "seg_val"))
+      val segIndex = spark.table(tbl)
       DedupOps.simhashSegmentStats(segIndex)
         .write.mode("overwrite").parquet(statsDir)
       spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -12,9 +12,16 @@ class QueriesSpec extends AnyFunSuite {
   private val d = TestSpark.Sf0001
 
   test("every registered query runs and returns rows on sf0.001") {
+    def catalog = spark.catalog.listTables().collect().map(t => t.name -> t.isTemporary).toSet
     Queries.all.foreach { q =>
+      val before = catalog
       val n = q.fn(spark, d).count()
       assert(n > 0, s"${q.name} returned 0 rows")
+      // q57b keeps its two bucketed tables for the life of the JVM
+      val added = (catalog -- before).filterNot { case (t, _) =>
+        q.name == "q57b_bucketed_probe" && t.startsWith("graft_b57p_") }
+      assert(added.isEmpty && (before -- catalog).isEmpty,
+        s"${q.name} left the catalog changed: +$added −${before -- catalog}")
     }
   }
 
@@ -29,6 +36,21 @@ class QueriesSpec extends AnyFunSuite {
     assert(dir.isAbsolute && dir.toUri.getPath.startsWith("/"), dir.toString)
     val cwd = new java.io.File(System.getProperty("user.dir")).getAbsolutePath
     assert(!dir.toUri.getPath.startsWith(cwd), s"$dir is under $cwd")
+  }
+
+  test("the scratch sweep removes a dead pid's dirs and keeps a live pid's") {
+    val dead = { val p = new ProcessBuilder("true").start(); p.waitFor(); p.pid() }
+    val live = ProcessHandle.current().pid()
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/").stripPrefix("file:")
+    def dirs(suffix: String) = Seq(s"$wh/graft_tmp/sweep_probe_$suffix",
+      s"$wh/graft_tmp/sweep_probe_${suffix}_ckpt", s"$wh/graft_sweep_probe_$suffix")
+    val kept = dirs(live.toString) ++ dirs("3f2a-uuid")
+    (dirs(dead.toString) ++ kept).foreach(new java.io.File(_).mkdirs())
+    try {
+      Session.sweepDeadScratch(spark)
+      assert(dirs(dead.toString).forall(!new java.io.File(_).exists()), "dead-pid scratch kept")
+      assert(kept.forall(new java.io.File(_).exists()), "live or unsuffixed scratch swept")
+    } finally kept.foreach(graft.io.FsOps.rm(spark, _))
   }
 
   test("entry returns rows (driver t1 smoke)") {
@@ -158,6 +180,21 @@ class QueriesSpec extends AnyFunSuite {
     assert((tables & written).isEmpty, tables & written)
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     assert(written.forall(t => !new java.io.File(s"$wh/$t").exists()))
+    // the same for any scope body: a table and a sink view, then a throw
+    val feed = TestSpark.tmpDir("scope_feed")
+    all.select("doc_id").limit(5).write.mode("overwrite").parquet(feed)
+    var opened = Set.empty[String]
+    val err2 = intercept[IllegalStateException] {
+      QHelp.scratch(spark) { sc =>
+        graft.io.Bucketing.write(all.select("doc_id"), sc.table("qh_scope_throw"), 2, Seq("doc_id"))
+        sc.sink(spark.readStream.schema(spark.read.parquet(feed).schema).parquet(feed))
+        opened = tables -- before
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err2.getMessage == "body failed")
+    assert(opened.size == 2, opened)
+    assert((tables & opened).isEmpty, tables & opened)
   }
 
   test("DeltaIndex.resolved is base minus tombstones union adds, with and without tombstones") {
