@@ -425,9 +425,8 @@ private[graft] object QHelp {
       def signed(st: FoldLaw.Counted, docs: DataFrame, w: Long) =
         law.derive(docs).select(st.keys.map(col) ++ st.counts.map(lit(w).as(_)): _*)
       val base = write(law.derive(corpus), tag, 8)
-      val statsDir = tmpDir(s, s"${tag}_stats")
-      stats.collect { case ReplayedStats(st) =>
-        st.derive(base).write.mode("overwrite").parquet(statsDir)
+      val stored = stats.collect { case ReplayedStats(st) =>
+        FsOps.stage(st.derive(base), tmpDir(s, s"${tag}_stats"))
       }
       val statsStore = stats.collect { case FoldedStats(st) =>
         st.derive(base) -> st.foldSigned(b =>
@@ -440,7 +439,7 @@ private[graft] object QHelp {
         case ReplayedStats(st) =>
           // the feed's dels are the ids with id % 10 == 7
           val dels = src.filter(col(law.id) % 10 === 7).select(col(law.id), col(payload))
-          st.merge(st.delete(FsOps.readParquet(s, statsDir), st.derive(law.derive(dels))),
+          st.merge(st.delete(stored.get, st.derive(law.derive(dels))),
             st.derive(adds))
         case FoldedStats(_) => stores(1)._2
       }

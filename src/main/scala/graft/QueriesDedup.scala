@@ -1119,13 +1119,12 @@ private[graft] object QueriesDedup {
       scratch(s) { sc =>
         val bandIndex = Bucketing.write(DedupOps.minhashIndex(corpus, "text", "doc_id"),
           sc.table("mhband"), 8, Seq("band_idx", "band_hash"))
-        val statsDir = tmpDir(s, "d02b_stats")
-        DedupOps.minhashBucketStats(bandIndex)
-          .write.mode("overwrite").parquet(statsDir)
+        val stats = FsOps.stage(DedupOps.minhashBucketStats(bandIndex),
+          tmpDir(s, "d02b_stats"))
         DedupOps.minhashNearDupIndexed(
           all.filter(col("doc_id") % 10 === 0),
           bandIndex.hint("merge"), corpus, "text", "doc_id",
-          bandStats = Some(FsOps.readParquet(s, statsDir)))
+          bandStats = Some(stats))
       }.orderBy(col("doc_id"))
     },
     Some(minhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
@@ -1169,12 +1168,12 @@ private[graft] object QueriesDedup {
         // waves (additive law), and the wave predicate prunes stats
         // partition directories at planning time exactly as it prunes
         // the index's
-        val statsDir = tmpDir(s, "d02p_stats")
-        banded.groupBy(col("ingest_wave"), col("band_idx"), col("band_hash"))
-          .agg(count(lit(1)).as("bucket_n"))
-          .write.mode("overwrite").partitionBy("ingest_wave").parquet(statsDir)
+        val stats = FsOps.stage(
+          banded.groupBy(col("ingest_wave"), col("band_idx"), col("band_hash"))
+            .agg(count(lit(1)).as("bucket_n")),
+          tmpDir(s, "d02p_stats"), "ingest_wave")
         val prunedStats = FoldLaw.minhashBucketStats.sum(
-          FsOps.readParquet(s, statsDir).filter(col("ingest_wave") < 2))
+          stats.filter(col("ingest_wave") < 2))
         DedupOps.minhashNearDupIndexed(
           all.filter(col("doc_id") % 10 === 0),
           index.filter(col("ingest_wave") < 2).drop("ingest_wave").hint("merge"),
@@ -1207,11 +1206,8 @@ private[graft] object QueriesDedup {
     (s, d) => {
       val all = docs(s, d)
       // an older writer's state: signatures only, no provenance tag
-      val oldDir = tmpDir(s, "d03e_old")
-      DedupOps.simhashIndex(all.filter(col("doc_id") % 10 =!= 0),
-          "text", "doc_id")
-        .write.mode("overwrite").parquet(oldDir)
-      val stored = FsOps.readParquet(s, oldDir)
+      val stored = FsOps.stage(DedupOps.simhashIndex(
+        all.filter(col("doc_id") % 10 =!= 0), "text", "doc_id"), tmpDir(s, "d03e_old"))
       // the current code version indexes WITH the lang tag
       val batchTagged = DedupOps.simhashIndex(
           all.filter(col("doc_id") % 10 === 0), "text", "doc_id")
@@ -1420,13 +1416,12 @@ private[graft] object QueriesDedup {
           sc.table("shseg"), 8, Seq("seg_idx", "seg_val"))
         // stats stored at write time (one aggregate pass, amortized over
         // every later probe), read back keys-sized for the cap
-        val statsDir = tmpDir(s, "d03b_stats")
-        DedupOps.simhashSegmentStats(segIndex)
-          .write.mode("overwrite").parquet(statsDir)
+        val stats = FsOps.stage(DedupOps.simhashSegmentStats(segIndex),
+          tmpDir(s, "d03b_stats"))
         DedupOps.simhashNearDupSegIndexed(
           all.filter(col("doc_id") % 10 === 0),
           segIndex.hint("merge"), "text", "doc_id",
-          segStats = Some(FsOps.readParquet(s, statsDir)))
+          segStats = Some(stats))
       }.orderBy(col("doc_id"))
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 0", "doc_id % 10 = 0")),
@@ -1467,13 +1462,12 @@ private[graft] object QueriesDedup {
           df => df.join(all.filter(col("doc_id") % 10 === 5)
             .select(col("doc_id")), Seq("doc_id"), "left_anti"))
         val segIndex = s.table(cpt)
-        val statsDir = tmpDir(s, "d03c_stats")
-        DedupOps.simhashSegmentStats(segIndex)
-          .write.mode("overwrite").parquet(statsDir)
+        val stats = FsOps.stage(DedupOps.simhashSegmentStats(segIndex),
+          tmpDir(s, "d03c_stats"))
         DedupOps.simhashNearDupSegIndexed(
           all.filter(col("doc_id") % 10 === 0),
           segIndex.hint("merge"), "text", "doc_id",
-          segStats = Some(FsOps.readParquet(s, statsDir)))
+          segStats = Some(stats))
       }.orderBy(col("doc_id"))
     },
     Some(simhashIncrementalSql("doc_id % 10 <> 0 AND doc_id % 10 <> 5",

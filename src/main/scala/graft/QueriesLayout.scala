@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{FsOps, Tables}
 import graft.ops._
 import graft.QHelp._
 
@@ -206,7 +206,7 @@ private[graft] object QueriesLayout {
       Layout.writeSorted(
         li(s, d).select($"l_orderkey", $"l_quantity", $"l_extendedprice"),
         tmp, 8, Seq($"l_orderkey"))
-      s.read.parquet(tmp)
+      FsOps.readParquet(s, tmp)
         .filter($"l_orderkey".between(100, 999))
         .groupBy(($"l_orderkey" % 10).as("key_bucket"))
         .agg(count(lit(1)).as("n"),
@@ -241,7 +241,7 @@ private[graft] object QueriesLayout {
       Layout.ZOrder.writeZOrdered(
         li(s, d).select($"l_partkey", $"l_suppkey", $"l_quantity"),
         tmp, 8, "l_partkey", "l_suppkey")
-      s.read.parquet(tmp)
+      FsOps.readParquet(s, tmp)
         // box bounds valid at every sf (sf0.001 keys only span 0..199 x 0..9)
         .filter($"l_partkey".between(20, 150) && $"l_suppkey".between(1, 7))
         .groupBy(($"l_partkey" % 10).as("pk_bucket"))
@@ -311,7 +311,7 @@ private[graft] object QueriesLayout {
       val compacted = tmpDir(s, "q72_compacted")
       docs(s, d).repartition(64).write.mode("overwrite").parquet(frag)
       Layout.compact(s, frag, compacted, targetBytes = 8L * 1024 * 1024)
-      s.read.parquet(compacted)
+      FsOps.readParquet(s, compacted)
         .groupBy($"lang")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
         .orderBy($"lang")
@@ -351,7 +351,7 @@ private[graft] object QueriesLayout {
           .select($"o_orderkey", $"o_custkey", $"o_totalprice",
             $"o_month", $"o_orderstatus"),
         tmp, Seq("o_month"))
-      s.read.parquet(tmp)
+      FsOps.readParquet(s, tmp)
         .filter($"o_month".between("1996-01", "1996-12") &&
           $"o_orderstatus" === "O")
         .groupBy($"o_month")
@@ -394,7 +394,7 @@ private[graft] object QueriesLayout {
           .withColumn("o_month", date_format($"o_orderdate", "yyyy-MM"))
           .select($"o_orderkey", $"o_totalprice", $"o_orderstatus", $"o_month"),
         tmp, Seq("o_month"))
-      val fact = s.read.parquet(tmp)
+      val fact = FsOps.readParquet(s, tmp)
       // month dim with a year attribute — the filter lives HERE, never
       // on the fact; only the join can transfer it
       val dim = ord(s, d)

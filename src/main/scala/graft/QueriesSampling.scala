@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{FsOps, Tables}
 import graft.ops._
 import graft.QHelp._
 import graft.streaming.FoldLaw
@@ -521,7 +521,7 @@ private[graft] object QueriesSampling {
         .write.mode("overwrite").partitionBy("lang").parquet(frag)
       Layout.compactPartitioned(s, frag, compacted, Seq("lang"),
         targetBytes = 8L * 1024 * 1024)
-      s.read.parquet(compacted)
+      FsOps.readParquet(s, compacted)
         .filter($"lang" =!= "zz") // partition predicate over the new layout
         .groupBy($"lang")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
@@ -577,7 +577,7 @@ private[graft] object QueriesSampling {
     * boundaries instead of the exact-percentile buffer — the variant
     * q67/q79's docstrings promise for near-continuous 100 TB columns,
     * where exact `percentile` buffers every value per group (measured
-    * 18.9 s on the round-3 q67 fixture) and sketch-based
+    * 18.9 s on the q67 fixture) and sketch-based
     * `approx_percentile` is engine-specific and ungradeable. The
     * histogram quantile is pure deterministic arithmetic, so DuckDB
     * replays it BIT-FOR-BIT: the oracle mirrors the bucketing
@@ -640,8 +640,8 @@ private[graft] object QueriesSampling {
 
 
   /** q82 — deterministic KMV distinct-count sketch (LibOps.kmvDistinct,
-    * k=64): the gradeable distinct sketch (it retired q32's rows-only
-    * HLL in round 6) — per event type,
+    * k=64): the gradeable distinct sketch (it replaced q32's rows-only
+    * HLL) — per event type,
     * distinct users estimated from the 64 smallest md5-derived hashes
     * ((k−1)/h_(k)), with the EXACT count and the measured error
     * percentage in the same graded row (the q81 practice: the margin

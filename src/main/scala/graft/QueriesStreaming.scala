@@ -221,11 +221,10 @@ private[graft] object QueriesStreaming {
     "streaming_quality_parity",
     (s, d) => {
       import s.implicits._
-      import graft.streaming.StreamingOps
       val batch = docs(s, d).select($"doc_id", $"text")
       val stageDir = tmpDir(s, "stream_quality_docs")
       batch.coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val src = StreamingOps.docsStream(s, stageDir, FsOps.readParquet(s, stageDir).schema)
+      val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema).parquet(stageDir)
       val scored = TextOps.qualityModel(src)
         .select($"doc_id", $"score", $"keep")
       scratch(s)(_.sink(scored)).orderBy($"doc_id")
@@ -259,10 +258,9 @@ private[graft] object QueriesStreaming {
       val stageDir = tmpDir(s, "stream_sh_batch")
       all.filter($"doc_id" % 10 === 0).repartition(4)
         .write.mode("overwrite").parquet(stageDir)
-      val idxDir = tmpDir(s, "stream_sh_index")
-      DedupOps.simhashIndex(all.filter($"doc_id" % 10 =!= 0), "text", "doc_id")
-        .write.mode("overwrite").parquet(idxDir)
-      val index = FsOps.readParquet(s, idxDir)
+      val index = FsOps.stage(
+        DedupOps.simhashIndex(all.filter($"doc_id" % 10 =!= 0), "text", "doc_id"),
+        tmpDir(s, "stream_sh_index"))
       val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
       probeFold(src, tmpDir(s, "stream_sh_out")) { batch =>
@@ -298,10 +296,8 @@ private[graft] object QueriesStreaming {
       val stageDir = tmpDir(s, "stream_mh_batch")
       all.filter($"doc_id" % 10 === 0).repartition(4)
         .write.mode("overwrite").parquet(stageDir)
-      val idxDir = tmpDir(s, "stream_mh_index")
-      DedupOps.minhashIndex(corpus, "text", "doc_id")
-        .write.mode("overwrite").parquet(idxDir)
-      val index = FsOps.readParquet(s, idxDir)
+      val index = FsOps.stage(DedupOps.minhashIndex(corpus, "text", "doc_id"),
+        tmpDir(s, "stream_mh_index"))
       val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
       probeFold(src, tmpDir(s, "stream_mh_out")) { batch =>
@@ -334,10 +330,8 @@ private[graft] object QueriesStreaming {
       val stageDir = tmpDir(s, "stream_ivf_queries")
       e.filter($"vec_id" < 10).repartition(4)
         .write.mode("overwrite").parquet(stageDir)
-      val idxDir = tmpDir(s, "stream_ivf_index")
-      SimOps.ivfIndex(e, "vec_id", "embedding", cb)
-        .write.mode("overwrite").parquet(idxDir)
-      val index = FsOps.readParquet(s, idxDir)
+      val index = FsOps.stage(SimOps.ivfIndex(e, "vec_id", "embedding", cb),
+        tmpDir(s, "stream_ivf_index"))
       val src = s.readStream.schema(FsOps.readParquet(s, stageDir).schema)
         .option("maxFilesPerTrigger", "2").parquet(stageDir)
       probeFold(src, tmpDir(s, "stream_ivf_out")) { batch =>
@@ -497,10 +491,8 @@ private[graft] object QueriesStreaming {
       // ONE corpus banding pass for the two minhash seeds: staged
       // once, both seeds read the same band rows (lossless parquet
       // round-trip, deterministic banding)
-      val bandDir = tmpDir(s, "cap_mh_band")
-      DedupOps.minhashIndex(corpus, "text", "doc_id")
-        .write.mode("overwrite").parquet(bandDir)
-      val corpusBands = FsOps.readParquet(s, bandDir)
+      val corpusBands = FsOps.stage(DedupOps.minhashIndex(corpus, "text", "doc_id"),
+        tmpDir(s, "cap_mh_band"))
       val sigs = FoldLaw.simhashSignatures("text", "doc_id")
       val spans = FoldLaw.spanOccurrences("text", "doc_id")
       val evalCounts = FoldLaw.scoreCounts("score", "y")
@@ -713,10 +705,9 @@ private[graft] object QueriesStreaming {
     (s, d) => {
       import s.implicits._
       val all = docs(s, d)
-      val idxDir = tmpDir(s, "stream_ri_index")
-      DedupOps.simhashIndex(all.filter($"doc_id" % 10 =!= 0), "text", "doc_id")
-        .write.mode("overwrite").parquet(idxDir)
-      val index = FsOps.readParquet(s, idxDir)
+      val index = FsOps.stage(
+        DedupOps.simhashIndex(all.filter($"doc_id" % 10 =!= 0), "text", "doc_id"),
+        tmpDir(s, "stream_ri_index"))
       val outDir = tmpDir(s, "stream_ri_out")
       stagedLegs(s, tmpDir(s, "stream_ri_batch"),
           all.filter($"doc_id" % 20 === 0), all.filter($"doc_id" % 20 === 10)) {

@@ -74,6 +74,19 @@ object FsOps {
     spark.read.schema(schema).parquet(dirs: _*)
   }
 
+  /** Write `df` to scratch parquet and read it back: the lineage cut and
+    * staged load every multi-pass query uses. Overwrites `dir` (with
+    * Hive partitioning on `partitionBy` when given) and returns
+    * [[readParquet]] of it, so the read-back takes its schema from the
+    * footer and launches no job beyond the write's. The frame reads
+    * `dir` until it is overwritten: a caller keeps one live result per
+    * dir.
+    */
+  def stage(df: DataFrame, dir: String, partitionBy: String*): DataFrame = {
+    df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dir)
+    readParquet(df.sparkSession, dir)
+  }
+
   /** The first visible data file directly under `dir`, else under its
     * first `col=value` partition dir that has one. */
   private def firstDataFile(spark: SparkSession, dir: Path): Option[Path] = {

@@ -179,18 +179,6 @@ object StreamingOps {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Generic schema-pinned parquet file stream — the DOCUMENT-corpus
-    * ingestion shape (vs `eventsStream`, which additionally normalizes
-    * an event-time column this stream does not have). Row-local
-    * curation ops (quality models, language ID, fingerprinting,
-    * redaction) are stateless transforms, so the exact TextOps plans
-    * run unchanged on this stream: batch/streaming parity by
-    * construction, no watermark, no state store.
-    */
-  def docsStream(spark: SparkSession, dir: String,
-                 schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
-
   /** Stream-stream interval join: each click joined to the same user's
     * purchases within `intervalHours` AFTER the click. Watermarks on
     * BOTH sides bound the join state: a buffered click can be evicted

@@ -84,6 +84,37 @@ class IoFunctionsSpec extends AnyFunSuite {
     FsOps.rm(spark, tmp)
   }
 
+  test("stage writes a frame and reads it back as spark.read.parquet infers it, with no read job") {
+    val tmp = TestSpark.tmpDir("stage")
+    def same(staged: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+      val inferred = spark.read.parquet(dir)
+      assert(staged.schema == inferred.schema, s"schema differs under $dir")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(staged) == rows(inferred), s"rows differ under $dir")
+    }
+    val df = spark.range(9).select($"id", ($"id" % 3).as("wave"), ($"id" * 0.5).as("v"))
+    same(FsOps.stage(df, s"$tmp/flat"), s"$tmp/flat")
+    same(FsOps.stage(df, s"$tmp/parted", "wave"), s"$tmp/parted")
+    assert(FsOps.ls(spark, s"$tmp/parted").map(_.split('/').last).filter(_.startsWith("wave="))
+      .sorted == Seq("wave=0", "wave=1", "wave=2"))
+    // staging again into the same dir replaces the earlier contents
+    val again = FsOps.stage(spark.range(2).select(($"id" + 10).as("k")), s"$tmp/flat")
+    same(again, s"$tmp/flat")
+    assert(again.columns.toSeq == Seq("k"))
+    assert(again.collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L))
+    // the read-back is a footer read: as many jobs as the bare write
+    def jobs(body: => Unit): Int =
+      org.apache.spark.TestBus.jobsDuring(spark.sparkContext)(body)._2
+    for (parts <- Seq(Nil, Seq("wave"))) {
+      val written = jobs(df.write.mode("overwrite").partitionBy(parts: _*)
+        .parquet(s"$tmp/plain"))
+      val staged = jobs(FsOps.stage(df, s"$tmp/staged", parts: _*))
+      assert(staged == written, s"partitionBy $parts: stage ran $staged jobs, the write $written")
+    }
+    FsOps.rm(spark, tmp)
+  }
+
   test("readParquet over dirs with columns in different orders reads them by name") {
     val tmp = TestSpark.tmpDir("readpq_order")
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$tmp/a")

@@ -558,36 +558,37 @@ class OpsSpec extends AnyFunSuite {
     graft.io.FsOps.rm(spark, dir)
   }
 
-  test("GraphOps bare calls stage by default: final plan is one scan of scratch parquet") {
-    // round-7 verdict task 3: the measured 192-scan unstaged lineage
-    // blowup must be unreachable by accident. A bare call (no
-    // stageDir) now auto-derives a warehouse-rooted scratch dir, so
-    // the returned frame is a plain read of the last staged round —
-    // one parquet Relation, not a 2^iters join chain.
-    // one logical leaf = one scan (the path only prints in the
-    // physical plan's FileScan Location, so check it there)
-    def stagedScan(df: org.apache.spark.sql.DataFrame, tag: String): String = {
+  test("GraphOps stages every round under the caller's stageDir") {
+    // the measured 192-scan unstaged lineage blowup must be
+    // unreachable: every op takes a required stageDir, so the returned
+    // frame is a plain read of the last staged round — one parquet
+    // Relation, not a 2^iters join chain — and it reads the caller's
+    // dir, which holds exactly the subdirs the op's scaladoc lists
+    def stagedScan(df: org.apache.spark.sql.DataFrame, dir: String,
+                   last: String, subdirs: Set[String]): Unit = {
       assert(df.queryExecution.optimizedPlan.collectLeaves().size == 1,
-        s"$tag: bare call must return a single staged-parquet scan")
-      val phys = df.queryExecution.executedPlan.toString
-      val loc = phys.linesIterator.find(_.contains(s"graft_tmp/graph_$tag"))
-      assert(loc.isDefined,
-        s"$tag: plan must scan the auto-derived scratch dir:\n${phys.take(1500)}")
-      loc.get
+        s"$dir: the result must be a single staged-parquet scan")
+      val roots = df.queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.map(_.toUri.getPath)
+      }.flatten
+      assert(roots == Seq(s"$dir/$last"), s"$dir: scan reads $roots")
+      assert(new java.io.File(dir).list().toSet == subdirs)
     }
     val edges = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L),
       ("a", "c", 1L)).toDF("src", "dst", "w")
-    val pr = GraphOps.pageRank(edges, "src", "dst", "w", iters = 3)
-    val prLoc = stagedScan(pr, "pagerank")
+    val prDir = TestSpark.tmpDir("graph_pr")
+    val pr = GraphOps.pageRank(edges, "src", "dst", "w", iters = 3, stageDir = prDir)
+    stagedScan(pr, prDir, "r3", Set("edges", "r0", "r1", "r2", "r3"))
+    // 1-2-3 and 5-6 converge after two changing rounds: the third
+    // changes nothing, so lp3 is the last round staged of the four
     val lpEdges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
-    val lp = GraphOps.minLabelPropagate(lpEdges, "a", "b", iters = 4)
-    stagedScan(lp, "labelprop")
-    // and two bare calls never alias each other's scratch (the
-    // per-JVM counter): the first result stays readable and correct
-    // after the second call ran
-    val pr2 = GraphOps.pageRank(edges.limit(2), "src", "dst", "w", iters = 1)
-    assert(stagedScan(pr2, "pagerank") != prLoc)
+    val lpDir = TestSpark.tmpDir("graph_lp")
+    val lp = GraphOps.minLabelPropagate(lpEdges, "a", "b", iters = 4, stageDir = lpDir)
+    stagedScan(lp, lpDir, "lp3", Set("sym_edges", "lp0", "lp1", "lp2", "lp3"))
     assert(pr.collect().map(_.getLong(1)).sum > 0L)
+    assert(lp.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
   test("labelConvergenceAudit: zeros exactly from convergence; nonzero while moving") {
@@ -597,7 +598,8 @@ class OpsSpec extends AnyFunSuite {
     // trailing-zeros = measured-margin contract the graded
     // graph_components_audit relies on.
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
-    val audit = GraphOps.labelConvergenceAudit(path, "a", "b", iters = 6)
+    val audit = GraphOps.labelConvergenceAudit(path, "a", "b", iters = 6,
+        stageDir = TestSpark.tmpDir("lp_audit"))
       .orderBy("round").collect().map(r => (r.getInt(0), r.getLong(1)))
     // round 1: nodes 2..5 all drop to their smaller neighbor = 4
     // changes; each later round one fewer node still moves

@@ -734,7 +734,8 @@ class PropertySpec extends AnyFunSuite {
     samples(edgeGen, 5).filter(_.nonEmpty).foreach { raw =>
       val df = raw.map { case (a, b, w) => (s"n$a", s"n$b", w.toLong) }
         .toDF("src", "dst", "w")
-      val got = GraphOps.pageRank(df, "src", "dst", "w", iters = 3)
+      val got = GraphOps.pageRank(df, "src", "dst", "w", iters = 3,
+          stageDir = TestSpark.tmpDir("pr_bare"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       val ew = raw.groupBy(t => (s"n${t._1}", s"n${t._2}"))
         .map { case ((s, d), ts) => (s, d, BigInt(ts.map(_._3.toLong).sum)) }.toSeq
@@ -758,13 +759,13 @@ class PropertySpec extends AnyFunSuite {
       val mass = got.values.map(BigInt(_)).sum
       assert((mass - S).abs <= nodes.size * 2 + ew.size,
         s"mass $mass drifted from $S")
-      // explicit stageDir (the graded configuration) must equal the
-      // auto-staged default above — both go through the parquet
-      // round-trip since round 8 (the unstaged path is unreachable);
-      // the BigInt reference is what pins the round-trip's VALUES
+      // a second call staged under its own dir must equal the first —
+      // both go through the parquet round-trip (the unstaged path is
+      // unreachable); the BigInt reference is what pins the
+      // round-trip's VALUES
       val dir = TestSpark.tmpDir("pr_stage")
       val staged = GraphOps.pageRank(df, "src", "dst", "w", iters = 3,
-          stageDir = Some(dir))
+          stageDir = dir)
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(staged == expect)
     }
@@ -856,7 +857,8 @@ class PropertySpec extends AnyFunSuite {
         l
       }
       for (k <- Seq(1, 3)) {
-        val got = GraphOps.minLabelPropagate(df, "a", "b", iters = k)
+        val got = GraphOps.minLabelPropagate(df, "a", "b", iters = k,
+            stageDir = TestSpark.tmpDir("lp_k"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
         assert(got == propagate(k), s"k=$k edges=$raw")
       }
@@ -865,7 +867,7 @@ class PropertySpec extends AnyFunSuite {
       // round references its predecessor twice), unusable past k ~ 5
       val dir = TestSpark.tmpDir("lp_stage")
       val conv = GraphOps.minLabelPropagate(df, "a", "b",
-          iters = nodes.size, stageDir = Some(dir))
+          iters = nodes.size, stageDir = dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       def ccOf(start: Long): Long = {
         var seen = Set(start); var frontier = Set(start)
@@ -933,7 +935,8 @@ class PropertySpec extends AnyFunSuite {
         l = nl
         changed
       }
-      val got = GraphOps.labelConvergenceAudit(df, "a", "b", iters = 5)
+      val got = GraphOps.labelConvergenceAudit(df, "a", "b", iters = 5,
+          stageDir = TestSpark.tmpDir("lp_audit"))
         .orderBy(col("round")).collect().map(_.getLong(1)).toSeq
       assert(got == expect, s"edges=$raw")
       // monotone convergence: zeros only as a suffix
@@ -957,9 +960,10 @@ class PropertySpec extends AnyFunSuite {
       val oldE = oldRaw.map(_._1); val newE = newRaw.map(_._1)
       if (oldE.nonEmpty && newE.nonEmpty) {
         val k = 12
-        val snap = GraphOps.minLabelPropagate(oldE.toDF("a", "b"), "a", "b", k)
+        val snap = GraphOps.minLabelPropagate(oldE.toDF("a", "b"), "a", "b", k,
+          TestSpark.tmpDir("cc_snap"))
         val got = GraphOps.componentsIncremental(snap, newE.toDF("a", "b"),
-            "a", "b", k)
+            "a", "b", k, TestSpark.tmpDir("cc_inc"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
         // brute-force CC of the union over ALL touched nodes
         val union = oldE ++ newE
@@ -998,12 +1002,13 @@ class PropertySpec extends AnyFunSuite {
         val k = 14
         def labs(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
           df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        val snap = GraphOps.minLabelPropagate(oldE.toDF("a", "b"), "a", "b", k)
+        def dir() = TestSpark.tmpDir("cc_chain")
+        val snap = GraphOps.minLabelPropagate(oldE.toDF("a", "b"), "a", "b", k, dir())
         val chained = labs(GraphOps.componentsIncremental(
-          GraphOps.componentsIncremental(snap, b1.toDF("a", "b"), "a", "b", k),
-          b2.toDF("a", "b"), "a", "b", k))
+          GraphOps.componentsIncremental(snap, b1.toDF("a", "b"), "a", "b", k, dir()),
+          b2.toDF("a", "b"), "a", "b", k, dir()))
         val oneFold = labs(GraphOps.componentsIncremental(
-          snap, (b1 ++ b2).toDF("a", "b"), "a", "b", k))
+          snap, (b1 ++ b2).toDF("a", "b"), "a", "b", k, dir()))
         assert(chained == oneFold, s"chained folds != single fold of the union")
         val union = oldE ++ b1 ++ b2
         val nbrs = (union ++ union.map(_.swap)).groupBy(_._1)
